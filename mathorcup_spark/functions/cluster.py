@@ -19,12 +19,10 @@ Each half-round is one `groupBy(node).min()` shuffle plus one hash
 equi-join — no windows, no driver-side graph state. Convergence is
 O(log n) rounds even for path graphs (proved in the paper; near-dup
 clusters are near-cliques from shared LSH buckets, so 2-3 rounds in
-practice). Per round the iterate is `localCheckpoint`ed to truncate
-lineage; checkpoint blocks of superseded rounds are reclaimed lazily
-by the ContextCleaner once their RDDs fall out of scope (the explicit
-``unpersist()`` only clears CacheManager entries — bounded residue,
-since the edge set shrinks toward the star forest each round). The
-only driver-side value is the fixpoint signature (edge count +
+practice). The rounds run through ``operators.graph.supersteps`` in
+fixpoint mode, which lineage-truncates every round and raises if the
+edge set is not a fixpoint within the round budget. The only
+driver-side value is the fixpoint signature (edge count +
 order-independent hash sum), so driver memory is O(1) at any corpus
 size.
 
@@ -58,69 +56,25 @@ def _canon(e: DataFrame) -> DataFrame:
     )
 
 
-def _signature(e: DataFrame) -> tuple[int, int]:
-    """Order-independent fixpoint signature: (|E|, sum of edge hashes).
-
-    The hash sum accumulates in decimal(38,0) — a long sum of 64-bit
-    hashes overflows after a handful of edges under ANSI mode.
-    """
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"])
+# Star rounds until the fixpoint: O(log n) for any graph (2-3 for
+# near-clique near-dup graphs); a graph that needs more raises.
+_CC_ROUNDS = 25
 
 
-def connected_components(
-    edges: DataFrame, max_rounds: int = 25, fixed_rounds: int | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, comp) for every node appearing in ``edges``; ``comp`` is
     the minimum node id of the component. Alternating large-star /
-    small-star rounds until the edge set is a fixpoint (star forest).
+    small-star rounds until the edge set is a fixpoint (star forest);
+    raises if that takes more than ``_CC_ROUNDS`` rounds, since a
+    non-converged edge set would split components."""
+    # imported here so the registry keeps its module registration order
+    from ..operators.graph import supersteps
 
-    ``fixed_rounds`` skips the per-round fixpoint probe (each probe
-    is one O(1)-rows-but-full-scan job) and runs exactly that many
-    rounds — for callers who KNOW their input converges fast
-    (LSH-bucket near-dup graphs are near-cliques: 2-3 rounds). The
-    result is correct only if the input truly converges within the
-    given rounds; when unsure, leave it None and pay the probes.
-    """
-    # eager=False: the signature action right after materializes the
-    # checkpoint anyway — one job per round instead of two.
     e = _canon(edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")))
-    e = e.localCheckpoint(eager=False)
-    if fixed_rounds is not None:
-        for _ in range(fixed_rounds):
-            e = _star_round(e).localCheckpoint(eager=False)
-        # One cheap probe turns a silent wrong answer into a loud
-        # failure: if the edge set is not yet a star forest, one more
-        # round would still change it and the assignment below would
-        # split components (round-4 ADVICE).
-        if _signature(_star_round(e)) != _signature(e):
-            raise ValueError(
-                f"connected_components: edge set not converged after "
-                f"fixed_rounds={fixed_rounds}; pass fixed_rounds=None "
-                f"(probed fixpoint) or raise the round count"
-            )
-        return _star_assign(e)
-    sig = _signature(e)
-    for _ in range(max_rounds):
-        nxt = _star_round(e).localCheckpoint(eager=False)
-        nsig = _signature(nxt)
-        # best-effort: clears CacheManager entries; the checkpoint's
-        # RDD blocks are reclaimed lazily by the ContextCleaner when
-        # the superseded DataFrame goes out of scope below.
-        e.unpersist()
-        e = nxt
-        if nsig == sig:
-            break
-        sig = nsig
-    return _star_assign(e)
+    return _star_assign(supersteps(e, _star_round, _CC_ROUNDS, fixpoint=True))
 
 
-def _star_round(e: DataFrame) -> DataFrame:
+def _star_round(e: DataFrame, _i: int) -> DataFrame:
     """One large-star + small-star half-round pair over edge set ``e``."""
     # large-star: over the bidirectional adjacency, attach each
     # node's LARGER neighbors to min(neighborhood ∪ {self}).

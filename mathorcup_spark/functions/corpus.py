@@ -672,10 +672,6 @@ def _register_corpus_v5() -> None:
             got = box.get("got")
             want = (n0 + n1 + n2, c0 + c1 + c2)
             if "err" in box or got != want:
-                # the consume result is discarded on drift — release
-                # its checkpoint blocks instead of pinning them until
-                # GC (ADVICE r11)
-                result.unpersist()
                 if "err" in box:
                     raise box["err"]
                 raise RuntimeError(

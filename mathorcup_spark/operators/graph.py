@@ -18,6 +18,8 @@ in one DAG (SURVEY §4.2 decision 1).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -481,9 +483,11 @@ def _pagerank_oracle() -> str:
     "(namespaced string node ids, both edge directions). Each "
     "iteration is one hash join of the edge list to the current "
     "ranks plus one groupBy(dst) — the canonical distributed "
-    "PageRank step; iterations are UNROLLED into the plan (no "
-    "driver-side loop state), so the whole computation is one "
-    "declarative DAG Catalyst can pipeline. Neighbor contributions "
+    "PageRank step, run as a supersteps round: the step reads its "
+    "ranks once, so the rounds stay unrolled in one declarative DAG "
+    "Catalyst can pipeline (the helper cuts lineage only for state "
+    "read more than once or chains past _PR_UNROLL_MAX rounds). "
+    "Neighbor contributions "
     "accumulate through decimal(20,18) so the per-node sum is exact "
     "and order-independent — bit-identical to the oracle's "
     "single-threaded sum at any partitioning, which is what makes a "
@@ -492,57 +496,101 @@ def _pagerank_oracle() -> str:
     tags=("graph", "pagerank", "G4"),
 )
 def g_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pagerank(None, iters=_PR_ITERS, edges=_bipartite_edges(spark, sf_dir))
+    return pagerank(_bipartite_edges(spark, sf_dir))
 
 
-# Unroll-vs-checkpoint crossover: up to this many iterations the
-# rounds are unrolled into ONE declarative DAG (Catalyst pipelines
-# them; nothing to re-analyze per action). Past it, plan depth grows
-# linearly (2 joins + 1 aggregate per round) and Catalyst
-# analysis/optimization time blows up super-linearly around ~20
-# joins deep — so each round is lineage-truncated with a lazy
-# localCheckpoint instead (the cluster.py:102 discipline): the
-# analyzer only ever sees one round's plan, execution still runs
-# every round exactly once when the final action fires.
+# --- supersteps: the one round loop of the iterative graph family ----------
+
+# Up to this many rounds a step that reads its state once is unrolled
+# into ONE declarative DAG (Catalyst pipelines it; nothing to
+# re-analyze per action). Past it, plan depth grows linearly and
+# Catalyst analysis/optimization time blows up super-linearly around
+# ~20 joins deep, so every round is lineage-truncated instead.
 _PR_UNROLL_MAX = 8
+_STATE_ALIAS = "superstep_state"
 
 
-def pagerank(
-    pairs: DataFrame | None,
-    iters: int = _PR_ITERS,
-    damping: float = _PR_D,
-    unroll_max: int = _PR_UNROLL_MAX,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """(node, pagerank) after ``iters`` rounds over the undirected
-    pair list ``pairs`` (columns a, b). The library entry point behind
-    ``g_pagerank_fixed`` — parameterized iteration count with a
-    bounded-plan-depth guarantee (tests/test_properties.py runs 2 and
-    20 rounds and asserts the 20-round plan stays one round deep).
+def _signature(df: DataFrame) -> tuple[int, int]:
+    """Order-independent fixpoint signature: (row count, sum of the
+    rows' xxhash64) — one O(1)-row job, driver state O(1) at any size.
 
-    Pass a pre-built doubled ``edges`` (src, dst) — e.g. the bucketed
-    `_bipartite_edges` table — to skip the doubling + checkpoint; a
-    src-bucketed edge table feeds every iteration's contrib join
-    pre-partitioned.
+    A long sum of 64-bit hashes overflows after a handful of rows
+    (an error under ANSI mode), and a decimal(38,0) sum pays
+    BigDecimal arithmetic per row. So the hash is summed as its
+    signed high and unsigned low 32-bit halves, two long sums exact
+    below 2^31 rows, and recombined exactly on the driver.
     """
-    if edges is None:
-        # The edge list is referenced ~3x per iteration (contrib join,
-        # degree, node domain); localCheckpoint materializes the
-        # distinct once instead of re-running the source scan + dedup
-        # shuffle per reference (measured 13.4s -> ~2s at sf0.01).
-        # Lazy: the first action materializes it.
-        pairs = pairs.localCheckpoint(eager=False)
-        edges = pairs.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).unionAll(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    h = F.xxhash64(*df.columns)
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.shiftright(h, 32)), F.lit(0)).alias("hi"),
+        F.coalesce(F.sum(h.bitwiseAND(F.lit(0xFFFFFFFF))), F.lit(0)).alias("lo"),
+    ).first()
+    return int(row["n"]), (int(row["hi"]) << 32) + int(row["lo"])
+
+
+def supersteps(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    fixpoint: bool = False,
+) -> DataFrame:
+    """``state = step(state, i)`` for rounds ``i = 0 .. rounds-1`` —
+    the Pregel superstep loop (Pregelix: one join of vertex state with
+    messages, then a combining group-by) every iterative graph query
+    runs through.
+
+    Lineage rule, the only place it lives: a frame is truncated with
+    a lazy ``localCheckpoint`` only where it is read more than once,
+    or where an unrolled chain would pass ``_PR_UNROLL_MAX`` rounds.
+    The read count comes from round 0's analyzed plan, with the state
+    aliased: a step that re-reads its state (a self-join, an
+    anti-join against it, a normalizing total) would otherwise
+    re-run its whole lineage once per read, round after round. When
+    the state is re-read, the initial state and every round's output
+    are cut; when only the round count is too deep, every output is.
+    Otherwise the rounds stay unrolled in one plan.
+
+    ``fixpoint``: stop at the first round whose output has its
+    input's :func:`_signature` and return that output; raise if no
+    such round comes within ``rounds``. The probe reads each state
+    besides the step, so fixpoint rounds are always cut.
+    """
+    if fixpoint:
+        reread = True
+    else:
+        nxt = step(state.alias(_STATE_ALIAS), 0)
+        plan = nxt._jdf.queryExecution().analyzed().toString()
+        reread = plan.count(f"SubqueryAlias {_STATE_ALIAS}") > 1
+    if reread:
+        state = state.localCheckpoint(eager=False)
+        nxt = step(state, 0)
+    cut = reread or rounds > _PR_UNROLL_MAX
+    sig = _signature(state) if fixpoint else None
+    for i in range(rounds):
+        if i:
+            nxt = step(state, i)
+        state = nxt.localCheckpoint(eager=False) if cut else nxt
+        if fixpoint:
+            prev, sig = sig, _signature(state)
+            if sig == prev:
+                return state
+    if fixpoint:
+        raise RuntimeError(
+            f"{step.__qualname__}: not converged within {rounds} rounds"
+        )
+    return state
+
+
+def _pagerank_round(edges: DataFrame, restart):
+    """One PageRank superstep over the doubled edge list ``edges``
+    (src, dst): every node sends pr/deg to its neighbors, summed
+    exactly through decimal(20,18); ``restart`` turns the per-node
+    sums (node, s) into the new ranks (node, pr) — the uniform 1/N
+    teleport or personalized PageRank's per-node seed mass."""
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    nn = nodes.agg(F.count("*").alias("n"))
-    pr = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("pr")
-    )
-    checkpoint_rounds = iters > unroll_max
-    for _ in range(iters):
+
+    def step(pr: DataFrame, _i: int) -> DataFrame:
         contrib = (
             edges.join(pr.withColumnRenamed("node", "src"), "src")
             .join(deg, "src")
@@ -551,19 +599,33 @@ def pagerank(
                 (F.col("pr") / F.col("deg")).cast(_PR_DEC).alias("c"),
             )
         )
-        pr = (
-            contrib.groupBy("node")
-            .agg(F.sum("c").cast("double").alias("s"))
-            .crossJoin(F.broadcast(nn))
-            .select(
-                "node",
-                (
-                    (1 - damping) / F.col("n") + F.lit(damping) * F.col("s")
-                ).alias("pr"),
-            )
+        sums = contrib.groupBy("node").agg(F.sum("c").cast("double").alias("s"))
+        return restart(sums)
+
+    return step
+
+
+def pagerank(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
+    """(node, pagerank) after ``iters`` rounds over the doubled edge
+    list ``edges`` (src, dst) — e.g. the src-bucketed
+    `_bipartite_edges` table, which feeds every round's contrib join
+    pre-partitioned. The library entry point behind
+    ``g_pagerank_fixed``; plan depth stays bounded at any ``iters``
+    (the supersteps rule; tests/test_properties.py runs 20 rounds).
+    """
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    nn = nodes.agg(F.count("*").alias("n"))
+    pr = nodes.crossJoin(F.broadcast(nn)).select(
+        "node", (F.lit(1.0) / F.col("n")).alias("pr")
+    )
+
+    def restart(s: DataFrame) -> DataFrame:
+        return s.crossJoin(F.broadcast(nn)).select(
+            "node",
+            ((1 - _PR_D) / F.col("n") + F.lit(_PR_D) * F.col("s")).alias("pr"),
         )
-        if checkpoint_rounds:
-            pr = pr.localCheckpoint(eager=False)
+
+    pr = supersteps(pr, _pagerank_round(edges, restart), iters)
     return pr.select("node", F.round("pr", 6).alias("pagerank"))
 
 
@@ -876,7 +938,7 @@ def g_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- k-core decomposition (fixed peel rounds, fixpoint-asserted) -----------
 
 _KCORE_OFFSET = 10  # K = min_degree + offset (graph-derived, scale-free)
-_KCORE_ROUNDS = 4  # unrolled peel rounds; fixpoint asserted at runtime
+_KCORE_ROUNDS = 4  # the oracle's peel rounds; fixpoint asserted at runtime
 
 
 def _kcore_oracle() -> str:
@@ -924,13 +986,14 @@ def _kcore_oracle() -> str:
     "repeat until stable; K = min_degree + "
     f"{_KCORE_OFFSET}, derived from the graph itself so the query "
     "is scale-free across SFs). Each round is one degree aggregate "
-    "+ two semi-join filters, lazily localCheckpointed so the plan "
-    "stays linear in rounds (the g_pagerank_fixed discipline); "
-    f"{_KCORE_ROUNDS} unrolled rounds with a runtime FIXPOINT PROBE "
-    "— one extra peel round whose edge count must equal the last "
-    "round's, else the query raises instead of returning a "
-    "non-converged core (the connected_components fixed-rounds "
-    "lesson: silent wrong answers become loud failures). The oracle "
+    "+ two semi-join filters, run as supersteps rounds in fixpoint "
+    "mode: the peel stops at the first round that leaves the edge "
+    "set's signature unchanged, and raises if none comes within "
+    f"{_KCORE_ROUNDS} peels plus the proving no-op round, instead of "
+    "returning a non-converged core (silent wrong answers become "
+    "loud failures). Each round's edge set is read by the next peel "
+    "and the fixpoint probe, so the helper lineage-truncates every "
+    "round. The oracle "
     "unrolls the same rounds as chained CTEs. Output: (node, "
     "core_degree) for every node in the K-core.",
     tags=("graph", "kcore", "iterative"),
@@ -950,48 +1013,20 @@ def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
 
-    def peel(e: DataFrame) -> DataFrame:
+    def peel(e: DataFrame, _i: int) -> DataFrame:
         keep = degrees(e).filter(F.col("d") >= k).select("p")
         return (
             e.join(keep.withColumnRenamed("p", "p1"), "p1")
             .join(keep.withColumnRenamed("p", "p2"), "p2")
             .select("p1", "p2")
-            .localCheckpoint(eager=False)
         )
 
-    # peel with a per-round edge-count probe: peel only removes
-    # edges, so an unchanged count means an identical edge set and
-    # every later round is the identity — early exit yields exactly
-    # the fixed-round oracle's result while skipping its no-op tail
-    # (observed: fixpoint in 2 rounds at every SF; the extra rounds
-    # cost a full shuffle pass each). The probe doubles as the
-    # convergence assert: never reaching a no-op round within
-    # _KCORE_ROUNDS raises instead of returning a non-converged core.
-    e = edges
-    n_prev = e.count()
-    converged = False
-    for _r in range(_KCORE_ROUNDS):
-        e = peel(e)
-        n = e.count()
-        if n == n_prev:
-            converged = True
-            break
-        n_prev = n
-    if not converged:
-        # boundary probe: the loop observes convergence only via a
-        # no-op round INSIDE the budget; if round _KCORE_ROUNDS itself
-        # landed exactly on the fixpoint, one extra probe peel is the
-        # no-op that proves it (the connected_components fixed_rounds
-        # probe pattern) — raising here would reject a correct result
-        e_probe = peel(e)
-        if e_probe.count() == n_prev:
-            converged = True
-            e = e_probe
-    if not converged:
-        raise RuntimeError(
-            f"g_kcore: not converged within {_KCORE_ROUNDS} rounds "
-            f"(still removing edges at {n_prev}); raise _KCORE_ROUNDS"
-        )
+    # peel to the fixpoint (observed: 2 rounds at every SF) instead of
+    # paying the oracle's no-op tail; the budget counts the no-op round
+    # that proves it, so a core reached in _KCORE_ROUNDS peels is
+    # accepted and anything slower raises instead of returning a
+    # non-converged core
+    e = supersteps(edges, peel, _KCORE_ROUNDS + 1, fixpoint=True)
     return degrees(e).select(
         F.col("p").alias("node"), F.col("d").cast("long").alias("core_degree")
     )
@@ -999,8 +1034,7 @@ def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # BFS frontier expansion: 4 hops covers this co-purchase graph's
 # diameter from the seed set; each round is one edges-join + one
-# anti-join against the known set, lineage-truncated per round (the
-# cluster.py:102 / pagerank discipline).
+# anti-join against the known set.
 _BFS_HOPS = 4
 
 
@@ -1033,9 +1067,12 @@ _BFS_HOPS = 4
     "pattern: each round joins the current frontier to the edge "
     "list (one shuffle on the join key), anti-joins away nodes "
     "already labeled (min-distance semantics for free: a node is "
-    "labeled the first round it appears), and lineage-truncates "
-    "with a lazy localCheckpoint so the analyzer only ever sees one "
-    "round's plan. Frontier size is bounded by the node set, never "
+    "labeled the first round it appears). The rounds run as "
+    "supersteps over ONE labeled-set frame (the frontier is its "
+    "last hop); each round reads that frame three times (frontier, "
+    "anti-join, union), so the helper's rule lineage-truncates it "
+    "once per round and the analyzer only ever sees one round's "
+    "plan. Frontier size is bounded by the node set, never "
     "the edge set, so per-round cost is one edge-list hash join at "
     "any scale. Oracle: DuckDB recursive CTE over the identical "
     "edge construction, min(d) per reached node.",
@@ -1049,19 +1086,22 @@ def g_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(F.col("src").alias("node"), F.lit(0).alias("d"))
     )
-    dist = seeds.localCheckpoint(eager=False)
-    frontier = dist
-    for hop in range(1, _BFS_HOPS + 1):
+
+    def expand(dist: DataFrame, hop: int) -> DataFrame:
+        # the frontier is the set labeled last round; a node is
+        # labeled the first round it is reached (min-distance)
+        frontier = dist.filter(F.col("d") == hop)
         reached = (
             frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"))
             .distinct()
         )
         new = reached.join(dist.select("node"), "node", "left_anti").select(
-            "node", F.lit(hop).alias("d")
-        ).localCheckpoint(eager=False)
-        dist = dist.unionByName(new).localCheckpoint(eager=False)
-        frontier = new
+            "node", F.lit(hop + 1).alias("d")
+        )
+        return dist.unionByName(new)
+
+    dist = supersteps(seeds, expand, _BFS_HOPS)
     return dist.select(
         F.col("node").cast("long").alias("node"),
         F.col("d").cast("long").alias("dist"),
@@ -1126,9 +1166,11 @@ def _lpa_oracle() -> str:
     "famously order-sensitive algorithm hash-verifiable "
     "cross-engine). One round = one edge-list hash join to the "
     "current labels + one (node,label) count + one per-node top-1 "
-    "window — all shuffles keyed on node ids, the distributed LPA "
-    "step; rounds are lineage-truncated with lazy localCheckpoints "
-    "(the pagerank discipline) so plan depth stays constant. "
+    "argmax aggregate — all shuffles keyed on node ids, the "
+    "distributed LPA step. Rounds run through supersteps: each reads "
+    "its labels once, so the rounds stay unrolled in one plan (the "
+    "helper cuts lineage only for state read more than once or "
+    "chains past _PR_UNROLL_MAX rounds). "
     "Fixed rounds = the bounded-iteration posture: production LPA "
     "runs a small constant round budget rather than chasing an "
     "unstable fixpoint.",
@@ -1176,7 +1218,9 @@ def _lpa_core(spark: SparkSession, sf_dir: str):
             F.col("src").alias("node"), F.col("src").alias("label")
         )
     )
-    for _ in range(_LPA_ROUNDS):
+
+    def step(labels: DataFrame, _i: int) -> DataFrame:
+        # each node adopts its neighbors' most frequent label
         nbr = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("v"), "label"
         )
@@ -1189,15 +1233,13 @@ def _lpa_core(spark: SparkSession, sf_dir: str):
         # max shrinks the exchange). The struct key is unique per
         # (v,label), so the argmax is well-defined and bit-identical
         # to the window's rn=1 row.
-        labels = (
-            cnt.groupBy(F.col("v").alias("node"))
-            .agg(
-                F.max_by(
-                    "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
-                ).alias("label")
-            )
-            .localCheckpoint(eager=False)
+        return cnt.groupBy(F.col("v").alias("node")).agg(
+            F.max_by(
+                "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
+            ).alias("label")
         )
+
+    labels = supersteps(labels, step, _LPA_ROUNDS)
     return edges, labels.select(
         F.col("node").cast("long").alias("node"),
         F.col("label").cast("long").alias("label"),
@@ -1444,8 +1486,10 @@ def _modularity_oracle() -> str:
     "random (Q > 0) and by how much; per-community rows carry the "
     "audit (size, internal directed edges, degree mass, q_term) "
     "with the global Q repeated on every row. Reuses the shared "
-    "_lpa_core labels (same fixed-round deterministic contract), "
-    "then: one m2 count, one degree agg on src, one "
+    "_lpa_core labels (same fixed-round deterministic contract, "
+    "rounds unrolled) and lineage-truncates them once, since they "
+    "are read three times below; then: one m2 count, one degree "
+    "agg on src, one "
     "double-label-join intra-edge count keyed on node ids, one "
     "label agg — every shuffle on node/label keys. The q_term "
     "doubles are identical IEEE arithmetic; the global sum "
@@ -1458,6 +1502,9 @@ def _modularity_oracle() -> str:
 )
 def g_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, labels = _lpa_core(spark, sf_dir)
+    # the unrolled LPA labels are read three times below (both ends
+    # of the intra-edge join, the community agg): cut them once
+    labels = labels.localCheckpoint(eager=False)
     m2 = edges.agg(F.count(F.lit(1)).cast("long").alias("m2"))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
@@ -1853,9 +1900,11 @@ def _ppr_oracle() -> str:
     "with-restart scoring behind 'similar items to THIS set' "
     "recommendations and seed-expansion community detection, which "
     "uniform PageRank cannot express (its scores are query-"
-    "independent). Implementation is g_pagerank_fixed's unrolled "
-    "join+groupBy iteration with ONE change: the per-node teleport "
-    "term (1-d)*tele(v) joins a precomputed teleport frame rather "
+    "independent). Implementation is g_pagerank_fixed's supersteps "
+    "round (unrolled: it reads its ranks once) with ONE change: the "
+    "per-node teleport term (1-d)*tele(v) joins a precomputed "
+    "teleport frame, lineage-truncated once since every round reads "
+    "it, rather "
     "than broadcasting the scalar 1/N — seeds carry 1/|S|, everyone "
     "else 0, and pr0 = tele so walk mass starts at the seeds. "
     "Neighbor contributions accumulate through decimal(20,18) "
@@ -1869,11 +1918,11 @@ def _ppr_oracle() -> str:
 )
 def g_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _bipartite_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     ns = nodes.filter(F.col("node") % _PPR_SEED_MOD == 0).agg(
         F.count("*").alias("n")
     )
+    # read by the initial ranks and by every round's restart: cut once
     tele = nodes.crossJoin(F.broadcast(ns)).select(
         "node",
         F.when(
@@ -1882,28 +1931,17 @@ def g_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("tv"),
     ).localCheckpoint(eager=False)
+
+    def restart(s: DataFrame) -> DataFrame:
+        return s.join(tele, "node").select(
+            "node",
+            (
+                F.lit(1 - _PR_D) * F.col("tv") + F.lit(_PR_D) * F.col("s")
+            ).alias("pr"),
+        )
+
     pr = tele.select("node", F.col("tv").alias("pr"))
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(pr.withColumnRenamed("node", "src"), "src")
-            .join(deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("pr") / F.col("deg")).cast(_PR_DEC).alias("c"),
-            )
-        )
-        pr = (
-            contrib.groupBy("node")
-            .agg(F.sum("c").cast("double").alias("s"))
-            .join(tele, "node")
-            .select(
-                "node",
-                (
-                    F.lit(1 - _PR_D) * F.col("tv")
-                    + F.lit(_PR_D) * F.col("s")
-                ).alias("pr"),
-            )
-        )
+    pr = supersteps(pr, _pagerank_round(edges, restart), _PR_ITERS)
     return pr.select("node", F.round("pr", 6).alias("ppr"))
 
 
@@ -1970,9 +2008,11 @@ def _hits_oracle() -> str:
     "to the current score frame + one keyed aggregate; L1 "
     "normalization replaces the textbook L2 so every floating step "
     "is either an exact decimal accumulation or a per-row IEEE "
-    "division — bit-identical on both engines (sqrt is not). The "
-    "edge list is localCheckpointed once and reused by all "
-    "iterations (same discipline as g_pagerank_fixed); per-edge "
+    "division — bit-identical on both engines (sqrt is not). "
+    "Iterations run through supersteps over one (node, kind, score) "
+    "frame; each L1 total re-reads its round's raw scores, so the "
+    "state is read more than once per round and the helper's rule "
+    "lineage-truncates every iteration; per-edge "
     "contributions accumulate in DECIMAL(20,18), round totals in "
     "DECIMAL(28,12), so the value hash is exact. Oracle replays "
     "the identical lockstep recursion as chained CTEs. At 100 TB "
@@ -1999,9 +2039,12 @@ def g_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             raw.columns[0], (F.col(val) / F.col("t")).alias(out)
         )
 
-    hub = pairs.select("s").distinct().select("s", F.lit(1.0).alias("h"))
-    auth = None
-    for _ in range(_HITS_ITERS):
+    def step(scores: DataFrame, _i: int) -> DataFrame:
+        # hubs -> L1-normalized authorities -> L1-normalized hubs; the
+        # frame carries both kinds (their node ids are disjoint)
+        hub = scores.filter(F.col("kind") == "hub").select(
+            F.col("node").alias("s"), F.col("score").alias("h")
+        )
         araw = (
             pairs.join(hub, "s")
             .groupBy("p")
@@ -2014,17 +2057,23 @@ def g_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.col("a").cast(_HITS_DEC_C)).cast("double").alias("hr"))
         )
         hub = l1_normalize(hraw, "hr", "h")
-    hubs = hub.select(
-        F.col("s").alias("node"),
-        F.lit("hub").alias("kind"),
-        F.round("h", 6).alias("score"),
+        hubs = hub.select(
+            F.col("s").alias("node"),
+            F.lit("hub").alias("kind"),
+            F.col("h").alias("score"),
+        )
+        auths = auth.select(
+            F.col("p").alias("node"),
+            F.lit("auth").alias("kind"),
+            F.col("a").alias("score"),
+        )
+        return hubs.unionAll(auths)
+
+    scores = pairs.select(F.col("s").alias("node")).distinct().select(
+        "node", F.lit("hub").alias("kind"), F.lit(1.0).alias("score")
     )
-    auths = auth.select(
-        F.col("p").alias("node"),
-        F.lit("auth").alias("kind"),
-        F.round("a", 6).alias("score"),
-    )
-    return hubs.unionAll(auths)
+    scores = supersteps(scores, step, _HITS_ITERS)
+    return scores.select("node", "kind", F.round("score", 6).alias("score"))
 
 
 @register(

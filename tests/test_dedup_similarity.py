@@ -173,22 +173,3 @@ class TestBucketCap:
             assert r["max_bucket"] >= 60
             assert r["n_capped"] >= 1
             assert r["docs_in_capped"] >= 60
-
-
-def test_cc_fixed_rounds_matches_fixpoint(spark):
-    """fixed_rounds=3 (the documented near-clique budget) must
-    reproduce the fixpoint components on the real near-dup graph."""
-    from pyspark.sql import functions as F
-
-    from mathorcup_spark.functions.cluster import (
-        NEARDUP_JACCARD,
-        connected_components,
-    )
-    from mathorcup_spark.functions.dedup import MAX_BUCKET, rescored_pairs
-
-    edges = rescored_pairs(
-        spark, "/root/testdata/sf0.001", max_bucket=MAX_BUCKET
-    ).where(F.col("jaccard") >= NEARDUP_JACCARD)
-    want = sorted(map(tuple, connected_components(edges).collect()))
-    got = sorted(map(tuple, connected_components(edges, fixed_rounds=3).collect()))
-    assert got == want

@@ -276,37 +276,94 @@ def test_feature_hash_bucket_domain(spark):
         assert r.n_collisions == r.n_values - 1 >= 0
 
 
+class TestSuperstepsRule:
+    """The supersteps lineage rule (operators/graph.py): a state read
+    once per round stays unrolled up to _PR_UNROLL_MAX rounds and is
+    cut every round past it; a state read more than once is cut every
+    round. Either way the values are the plain loop's and the final
+    analyzed plan is at most one round deep."""
+
+    @staticmethod
+    def _aggregates(df):
+        return df._jdf.queryExecution().analyzed().toString().count("Aggregate")
+
+    def test_single_read_past_unroll_max(self, spark):
+        from pyspark.sql import functions as F
+
+        from mathorcup_spark.operators.graph import _PR_UNROLL_MAX, supersteps
+
+        rounds = _PR_UNROLL_MAX + 2
+
+        def step(state, i):  # one Aggregate, one read of the state
+            return state.groupBy("k").agg((F.sum("x") * 2 + i).alias("x"))
+
+        state = spark.createDataFrame([(k, k) for k in range(5)], "k long, x long")
+        out = supersteps(state, step, rounds)
+        want = {}
+        for k in range(5):
+            x = k
+            for i in range(rounds):
+                x = x * 2 + i
+            want[k] = x
+        assert {r.k: r.x for r in out.collect()} == want
+        assert self._aggregates(out) <= 1
+
+    def test_double_read_cut_every_round(self, spark):
+        from pyspark.sql import functions as F
+
+        from mathorcup_spark.operators.graph import supersteps
+
+        def step(state, _i):  # self-join: the state is read twice
+            other = state.select("k", F.col("x").alias("y"))
+            return state.join(other, "k").groupBy("k").agg(
+                F.sum(F.col("x") + F.col("y")).alias("x")
+            )
+
+        state = spark.createDataFrame(
+            [(k, k + 1) for k in range(5)], "k long, x long"
+        )
+        out = supersteps(state, step, 3)
+        want = {}
+        for k in range(5):
+            x = k + 1
+            for _ in range(3):
+                x = x + x
+            want[k] = x
+        assert {r.k: r.x for r in out.collect()} == want
+        assert self._aggregates(out) <= 1
+
+    def test_fixpoint_not_converged_raises(self, spark):
+        """A non-converged connected-components edge set would split
+        components, so the fixpoint mode raises instead of returning
+        it: a 64-node path graph cannot reach its star forest in one
+        round (round-4 ADVICE)."""
+        import pytest
+
+        from mathorcup_spark.functions.cluster import _canon, _star_round
+        from mathorcup_spark.operators.graph import supersteps
+
+        n = 64  # path 0-1-2-...-63: deep diameter
+        e = _canon(
+            spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "u LONG, v LONG")
+        )
+        with pytest.raises(RuntimeError, match="not converged within 1 rounds"):
+            supersteps(e, _star_round, 1, fixpoint=True)
+        # with enough rounds the same input converges to the star at 0
+        star = supersteps(e, _star_round, 25, fixpoint=True)
+        assert {(r.u, r.v) for r in star.collect()} == {(0, i) for i in range(1, n)}
+
+
 class TestPagerankIterationGuard:
     """Past _PR_UNROLL_MAX rounds the pagerank library function must
     switch from plan unrolling to per-round lineage truncation —
     plan depth stays one round deep at ANY iteration count (judge
     round-3 item 5)."""
 
-    def _pairs(self, spark):
-        from mathorcup_spark.catalog import load
-        from pyspark.sql import functions as F
-
-        li = load(spark, "/root/testdata/sf0.001", "lineitem")
-        return li.select(
-            (2 * F.col("l_suppkey")).alias("a"),
-            (2 * F.col("l_partkey") + 1).alias("b"),
-        ).distinct()
-
-    def test_checkpointed_rounds_match_unrolled(self, spark):
-        from mathorcup_spark.operators.graph import pagerank
-
-        pairs = self._pairs(spark)
-        unrolled = pagerank(pairs, iters=2)
-        checkpointed = pagerank(pairs, iters=2, unroll_max=0)
-        assert sorted(map(tuple, unrolled.collect())) == sorted(
-            map(tuple, checkpointed.collect())
-        )
-
     def test_twenty_rounds_bounded_plan_depth(self, spark):
-        from mathorcup_spark.operators.graph import pagerank
+        from mathorcup_spark.operators.graph import _bipartite_edges, pagerank
 
-        pairs = self._pairs(spark)
-        pr20 = pagerank(pairs, iters=20)
+        edges = _bipartite_edges(spark, "/root/testdata/sf0.001")
+        pr20 = pagerank(edges, iters=20)
         # lineage truncation: the analyzed plan of the result shows at
         # most ONE round of joins (2 per round) — not 40
         plan = pr20._jdf.queryExecution().analyzed().toString()
@@ -316,24 +373,3 @@ class TestPagerankIterationGuard:
         # ranks are a probability distribution: sums to ~1
         total = sum(r["pagerank"] for r in rows)
         assert abs(total - 1.0) < 1e-3
-
-
-def test_fixed_rounds_unconverged_raises(spark):
-    """fixed_rounds must fail loudly (not silently mis-cluster) when
-    the edge set has not reached the star-forest fixpoint — a long
-    path graph needs more than one round (round-4 ADVICE)."""
-    import pytest
-
-    from mathorcup_spark.functions.cluster import connected_components
-
-    n = 64  # path 0-1-2-...-63: deep diameter, 1 round cannot converge
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a LONG, doc_b LONG"
-    )
-    with pytest.raises(ValueError, match="not converged"):
-        connected_components(edges, fixed_rounds=1)
-    # with enough rounds the same input is accepted and correct
-    out = connected_components(edges, fixed_rounds=8)
-    assert {(r["node"], r["comp"]) for r in out.collect()} == {
-        (i, 0) for i in range(n)
-    }

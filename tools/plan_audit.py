@@ -162,7 +162,8 @@ EXPECT: dict[str, dict] = {
     # blocked equi-join candidates + constant-bounded 64x64 DP/pair
     "d_fuzzy_pairs": {},
     # the node-count scalar is a 1-row broadcast per iteration — the
-    # scalar-subquery plan; edges live behind a localCheckpoint
+    # scalar-subquery plan; the 3 rounds are unrolled (supersteps:
+    # the ranks are read once per round) over the bucketed edges
     "g_pagerank_fixed": {"bnlj_ok": True, "bucketed": "mcs_bip_"},
     # filter→dedup→mixture→pack composition: the source-count scalar
     # is the 1-row broadcast; packing adds one range exchange
@@ -187,9 +188,9 @@ EXPECT: dict[str, dict] = {
     # aggregate broadcast (scalar-subquery plan, BNLJ over one row)
     "car_pipeline_e2e": {"bnlj_ok": True},
     # final cluster assembly: documents left-joined to the CC fixpoint
-    # (a localCheckpointed star edge set — the iterations themselves
-    # are lineage-truncated and audited by their own shape: two
-    # groupBy-min shuffles per round) plus the cluster-size join
+    # (a localCheckpointed star edge set — supersteps fixpoint rounds
+    # are lineage-truncated: two groupBy-min shuffles per round) plus
+    # the cluster-size join
     "d_dedup_clusters": {},
     # per-node triangle membership: same oriented wedge join as
     # g_triangle_count plus one groupBy on node and a left join back
@@ -207,11 +208,10 @@ EXPECT: dict[str, dict] = {
     "ev_rfm_scores": {"bnlj_ok": True},
     "d_span_dedup": {},
     "a_approx_quantile_sketch": {},
-    # peel rounds are lineage-truncated localCheckpoints (audited by
-    # their own shape: one degree agg + two semi-joins per round);
-    # the final plan is the degree aggregate over the converged core
-    # (bucketed mcs_cp_ scan feeds the FIRST peel round, which is
-    # lineage-truncated — not visible in the final formatted plan)
+    # peel rounds are supersteps fixpoint rounds, lineage-truncated
+    # (one degree agg + two semi-joins per round); the final plan is
+    # the degree aggregate over the converged core (the bucketed
+    # mcs_cp_ scan feeds the cut initial state — not visible here)
     "g_kcore": {},
     # CDC diff: one full-outer hash join on the business key
     "lake_snapshot_diff": {},
@@ -219,10 +219,10 @@ EXPECT: dict[str, dict] = {
     "lake_scd2_merge": {},
     # grid join + fill window share the user_id shuffle key
     "ts_resample_ffill": {},
-    # frontier rounds are lineage-truncated localCheckpoints (each
-    # round: one edges hash join + one anti-join); final plan unions
-    # the per-hop checkpointed label sets
-    # (bucketed mcs_bip_ scan feeds each checkpointed frontier round)
+    # frontier rounds are supersteps rounds over one labeled-set frame
+    # read three times per round, so each round is lineage-truncated
+    # (one edges hash join + one anti-join); the final plan is the
+    # last round's checkpoint scan
     "g_bfs_distance": {},
     # top-40 ranking window is global BUT post-aggregation over the
     # bounded pair domain (alphabet^2 rows) — O(1) at any corpus size
@@ -232,11 +232,11 @@ EXPECT: dict[str, dict] = {
     # explode-to-chars then two doc_id-keyed aggregates + one doc_id
     # equi-join — embarrassingly parallel over documents
     "t_char_entropy": {},
-    # LPA rounds are lineage-truncated localCheckpoints (per round:
-    # one edge-labels hash join, one (node,label) count, one per-node
-    # top-1 window partitioned by node — never single-partition)
-    # (bucketed mcs_bip_ scan feeds each checkpointed LPA round)
-    "g_label_propagation": {},
+    # LPA rounds are unrolled supersteps rounds (the labels are read
+    # once per round; per round: one edge-labels hash join, one
+    # (node,label) count, one per-node max_by aggregate keyed on node
+    # — never single-partition), all over the bucketed edge scan
+    "g_label_propagation": {"bucketed": "mcs_bip_"},
     # per-group p05/p95 cuts broadcast back over the fact side
     "a_winsorize": {"broadcast": 1},
     # the query self-asserts its own plan property (zero Exchange on
@@ -336,9 +336,10 @@ EXPECT: dict[str, dict] = {
     # latest-version window partitions by key over bounded rows;
     # table-max is a 1-row broadcast crossJoin
     "lake_vacuum_plan": {"bnlj_ok": True},
-    # LPA rounds are checkpointed (pagerank discipline) but the
-    # modularity joins/windows downstream are fully visible, so the
-    # generic checks run (judge r6 ADVICE removed the short-circuit);
+    # the unrolled LPA labels are checkpointed once (read three
+    # times) but the modularity joins/windows downstream are fully
+    # visible, so the generic checks run (judge r6 ADVICE removed
+    # the short-circuit);
     # the global-Q window runs on the bounded community domain; m2
     # is a 1-row broadcast crossJoin
     "g_community_modularity": {"bnlj_ok": True,
@@ -381,7 +382,7 @@ EXPECT: dict[str, dict] = {
     # the cell selection is ids.dense_ids (range-partitioned)
     "sim_ivf_pq_rerank_qcells": {"bnlj_ok": True},
     # teleport-frame join replaces g_pagerank_fixed's 1-row scalar
-    # broadcast; same unrolled iteration shape otherwise
+    # broadcast; same unrolled supersteps rounds otherwise
     "g_personalized_pagerank": {"bnlj_ok": True, "bucketed": "mcs_bip_"},
     # the two-scalar totals row joins conditionlessly onto the
     # 64-bucket histogram (1-row BNLJ); the log-ratio frame then
@@ -402,9 +403,10 @@ EXPECT: dict[str, dict] = {
     # top-K vocabulary broadcast-semi-joins the presence rows; 1-row
     # doc-count scalar is a BNLJ
     "t_pmi_cooccur": {"bnlj_ok": True, "broadcast": 1},
-    # per-iteration 1-row L1-total crossJoins (BNLJ) — the pagerank
-    # scalar-broadcast shape, twice per round
-    "g_hits_scores": {"bnlj_ok": True, "bucketed": "mcs_bip_"},
+    # each L1 total re-reads its round's raw scores, so supersteps
+    # lineage-truncates every iteration: the final plan is the last
+    # round's checkpoint scan (rounds: two 1-row L1-total BNLJs each)
+    "g_hits_scores": {},
     # per-type mean frame broadcasts back onto the event stream;
     # both windows share one (event_type; ts, event_id) sort
     "ev_cusum_changepoint": {"broadcast": 1},
@@ -636,34 +638,6 @@ def audit_executed_plans(spark, qs) -> tuple[list[str], dict[str, list[str]]]:
 
             return bpe_pair_counts_of(bpe_vocab_from(spark, SF_DIR))
 
-        def _lpa_round_stage():
-            # one LPA round over the bucketed bipartite edges — the
-            # hot per-iteration stage; the registered query's final
-            # frame is a checkpointed-RDD scan (lineage truncated per
-            # round), which AQE never wraps
-            from pyspark.sql import Window as W
-            from pyspark.sql import functions as F
-
-            from mathorcup_spark.operators.graph import _bipartite_edges
-
-            edges = _bipartite_edges(spark, SF_DIR)
-            labels = edges.select("src").distinct().select(
-                F.col("src").alias("node"), F.col("src").alias("label")
-            )
-            nbr = edges.join(labels, edges.src == labels.node).select(
-                F.col("dst").alias("v"), "label"
-            )
-            cnt = nbr.groupBy("v", "label").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            w = W.partitionBy("v").orderBy(
-                F.col("cnt").desc(), F.col("label")
-            )
-            return (
-                cnt.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-            )
-
         _EXEC_SUBSTITUTES = {
             "corpus_pipeline_v5": ("verdict consumer", _verdict_consumer),
             "corpus_pipeline_v4": ("verdict consumer", _verdict_consumer),
@@ -683,7 +657,6 @@ def audit_executed_plans(spark, qs) -> tuple[list[str], dict[str, list[str]]]:
             # internal); the Spark-plan half is the ratings build +
             # the bounded recommendForUserSubset scoring frame
             "ml_als_recommend": ("ALS ratings + scoring", _als_scoring),
-            "g_label_propagation": ("LPA round", _lpa_round_stage),
             # runtime is KMeans + codebook fits + the self-asserted
             # recall measurement; the Spark-plan half is the same
             # ADC+rescore pipeline the deterministic face runs
