@@ -8,9 +8,11 @@ on every run.
 
 Protocol (round-4 bench methodology):
 
-- Each query is executed with a count()-style full materialization so
-  the whole plan runs. Before timing, every query is executed once at
-  sf0.001: the generated whole-stage-codegen source is identical
+- Each query is run to its complete result: a ``noop``-sink write of
+  the DataFrame, the action perfbench times (``count()`` lets Catalyst
+  prune the plan to what a count needs — perfbench/COUNT_REBASELINE.md).
+  Before timing, every query is run once at sf0.001 with the same
+  action: the generated whole-stage-codegen source is identical
   across scale factors, so this warms Spark's codegen cache and the
   JVM JIT, and the timed numbers measure execution throughput rather
   than first-compile latency.
@@ -31,10 +33,14 @@ Protocol (round-4 bench methodology):
 Round-9 additions (judge r8 items 5 and 8):
 
 - **Executor CPU time per query** (``cpu_median`` next to the wall
-  median): summed task executorCpuTime deltas from Spark's stage
-  metrics REST API around each timed run. Wall medians on a shared VM
-  carry 10-40% noise; CPU time separates a real plan regression
-  (CPU up) from a noisy neighbor (wall up, CPU flat).
+  median): every timed run is its own job group
+  (``bench:<query>:<pass>``), and ``perfbench/sparkstats.SparkStats``
+  sums the executor CPU of that group's stages from the driver's
+  in-process status store, so the session's UI stays off. The same
+  read gives the last pass's jobs, stages, tasks, shuffle, spill and
+  GC. Wall medians on a shared VM carry 10-40% noise; CPU time
+  separates a real plan regression (CPU up) from a noisy neighbor
+  (wall up, CPU flat).
 - **Variant split**: headline entries that re-execute another
   headline entry's plan (pipeline versions v2-v4 superseded by v5,
   member stages of composed e2e queries) are still measured and
@@ -69,6 +75,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from mathorcup_spark import registry  # noqa: E402
 from mathorcup_spark.session import get_spark  # noqa: E402
+from perfbench.sparkstats import SparkStats  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -224,6 +231,9 @@ HEADLINE = [
 
 WARMUP_SF_DIR = "/root/testdata/sf0.001"
 N_PASSES = 3
+# the timed action, recorded in the headline: the regression gate only
+# diffs against a prior headline timed with the same action
+ACTION = "noop"
 
 # Queries whose medians go on the PRINTED one-line JSON (judge r11
 # item 1). The driver diffs the line's `queries` dict across rounds,
@@ -237,7 +247,13 @@ N_PASSES = 3
 # contract allows adding entries, never removing). All other headline
 # queries are still timed, still in `value`, and fully reported in
 # BENCH_HEADLINE.json. Worst case (every query at 99.9 s) the line is
-# 1947 chars < 1950 — asserted by tests/test_plans.py.
+# 1947 chars < 1950 — asserted by tests/test_plans.py against the real
+# _line. The line's top-level keys are exactly metric, value, unit,
+# queries, sf. The round-10 keys variants_excluded_sec and
+# headline_file stay dropped: restoring them (~60 chars) would put the
+# worst case past the cap, and BENCH_HEADLINE.json holds that data
+# (variants_total_sec). For the same reason `cpus` and
+# `calibration_sec` are in BENCH_HEADLINE.json, not on the line.
 PRINTED_QUERIES = frozenset({
     "a_chi2_independence", "a_dedup_rows", "a_frequent_pairs",
     "a_ks_drift", "corpus_pipeline_v2", "corpus_pipeline_v3",
@@ -297,43 +313,44 @@ VARIANT_OF = {
 }
 
 
-def _cpu_since_ns(spark, epoch_ms: float) -> int | None:
-    """Executor CPU time (ns) of completed stages SUBMITTED at or
-    after ``epoch_ms``, from the UI REST API (judge r8 item 5: CPU
-    next to wall separates real regressions from VM noise). Summing a
-    window — not a cumulative total — keeps the number correct under
-    the UI's bounded stage retention (default ~1000): only the
-    current query's stages need to be retained, and they always are.
-    None if the UI is off or the endpoint fails."""
-    import datetime as dt
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return None
-    app_id = spark.sparkContext.applicationId
+def run_group(spark, stats, group: str, thunk):
+    """Run ``thunk()`` under job group ``group``; return its result, its
+    wall seconds and the ``StageTotals`` of the jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
     try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=15,
-        ) as r:
-            stages = json.load(r)
-        total = 0
-        for s in stages:
-            sub = s.get("submissionTime")
-            if not sub:
-                continue
-            # %Z consumes the literal "GMT" but leaves the datetime
-            # naive — pin UTC explicitly or .timestamp() would apply
-            # the local zone
-            ts = dt.datetime.strptime(
-                sub, "%Y-%m-%dT%H:%M:%S.%f%Z"
-            ).replace(tzinfo=dt.timezone.utc)
-            if ts.timestamp() * 1000 >= epoch_ms - 5:
-                total += s.get("executorCpuTime", 0)
-        return total
-    except Exception:
-        return None
+        t0 = time.perf_counter()
+        out = thunk()
+        wall = time.perf_counter() - t0
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status store is filled by the listener bus; drain it so the
+    # last tasks' metrics are in before they are read
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, wall, stats.stage_totals(stats.jobs_for([group]))
+
+
+def full_result(df) -> None:
+    """Compute every column of every row of ``df`` (a ``noop``-sink
+    write; ``count()`` would let Catalyst prune the plan)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, stats, fn, sf_dir: str, group: str) -> dict:
+    """Wall seconds and executor metrics of one run of query ``fn`` at
+    ``sf_dir`` to its full result, under job group ``group``."""
+    _, wall, t = run_group(spark, stats, group, lambda: full_result(fn(spark, sf_dir)))
+    return {
+        "wall": round(wall, 3),
+        "cpu": round(t.exec_cpu_s, 3),
+        "jobs": t.jobs,
+        "stages": t.stages,
+        "tasks": t.tasks,
+        "shuffle_read_mb": round(t.shuffle_read_mb, 3),
+        "shuffle_write_mb": round(t.shuffle_write_mb, 3),
+        "spill_mb": round(t.spill_mb, 3),
+        "gc_s": round(t.gc_s, 3),
+    }
 
 
 def _build_graph_caches(spark) -> float:
@@ -693,6 +710,26 @@ def _ingest_bench(spark) -> list[dict]:
     return results
 
 
+def _line(value: float, queries: dict, sf: float) -> str:
+    """The printed one-line JSON. It stays under the driver's ~2000-char
+    stdout-tail capture: compact separators, 1-decimal per-query
+    medians, the PINNED name set (see PRINTED_QUERIES — stable across
+    rounds by construction), and NO embedded headline copy (the
+    full-precision headline for every query lives in the committed
+    BENCH_HEADLINE.json). A >2000-char line gets its HEAD truncated by
+    the tail capture and parses as null."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": value,
+            "unit": "sec",
+            "queries": queries,
+            "sf": sf,
+        },
+        separators=(",", ":"),
+    )
+
+
 def main() -> None:
     # -Xlog:disable silences JVM unified logging, which writes
     # "[warning][gc,alloc] ..." lines to STDOUT under memory pressure;
@@ -701,19 +738,14 @@ def main() -> None:
     # head. Spark's own log4j output (stderr) is unaffected.
     spark = get_spark(
         "mathorcup_spark_bench",
-        extra_conf={
-            "spark.driver.extraJavaOptions": "-Xlog:disable",
-            # UI back on for this process only: the stage-metrics REST
-            # API is where per-query executor CPU time comes from
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
-        },
+        extra_conf={"spark.driver.extraJavaOptions": "-Xlog:disable"},
     )
+    stats = SparkStats(spark)
     qs = registry.queries()
     names = [n for n in HEADLINE if n in qs]
     for name in names:  # codegen/JIT warmup on tiny data
         print(f"[bench] warmup {name}", file=sys.stderr, flush=True)
-        qs[name](spark, WARMUP_SF_DIR).count()
+        time_query(spark, stats, qs[name], WARMUP_SF_DIR, f"bench:{name}:warmup")
     edge_cache_build_sec = _build_graph_caches(spark)
     fit_cache_build_sec = _build_fit_caches(spark)
     sig_cache_build_sec = _build_sig_caches(spark)
@@ -723,35 +755,25 @@ def main() -> None:
     # pause lands on a different query each pass, then per-query
     # median — robust to one-off stalls in either direction, unlike
     # min (optimistic) or a single run (judge round-3 item 2).
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    cpu_samples: dict[str, list[float]] = {n: [] for n in names}
-    for _pass in range(N_PASSES):
+    runs: dict[str, list[dict]] = {n: [] for n in names}
+    for _pass in range(1, N_PASSES + 1):
         for name in names:
-            print(
-                f"[bench] pass {_pass + 1} {name}", file=sys.stderr, flush=True
+            print(f"[bench] pass {_pass} {name}", file=sys.stderr, flush=True)
+            runs[name].append(
+                time_query(spark, stats, qs[name], SF_DIR, f"bench:{name}:{_pass}")
             )
-            t0_epoch_ms = time.time() * 1000
-            t0 = time.perf_counter()
-            df = qs[name](spark, SF_DIR)
-            df.count()
-            samples[name].append(round(time.perf_counter() - t0, 3))
-            cpu = _cpu_since_ns(spark, t0_epoch_ms)
-            if cpu is not None:
-                cpu_samples[name].append(round(cpu / 1e9, 3))
 
-    per_query = {
-        n: {
-            "median": round(statistics.median(s), 3),
-            "min": min(s),
-            "max": max(s),
-            **(
-                {"cpu_median": round(statistics.median(cpu_samples[n]), 3)}
-                if cpu_samples[n]
-                else {}
-            ),
+    per_query = {}
+    for n, rs in runs.items():
+        walls = [r["wall"] for r in rs]
+        per_query[n] = {
+            "median": round(statistics.median(walls), 3),
+            "min": min(walls),
+            "max": max(walls),
+            "cpu_median": round(statistics.median(r["cpu"] for r in rs), 3),
+            # the last pass's job / stage / shuffle record
+            **{k: v for k, v in rs[-1].items() if k not in ("wall", "cpu")},
         }
-        for n, s in samples.items()
-    }
     timings = {n: per_query[n]["median"] for n in names}
     # all four streaming loops: the windowed-agg micro-bench plus the
     # three persisted-index ingest loops (judge r7 item 5)
@@ -760,6 +782,7 @@ def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     engine = {n: t for n, t in timings.items() if n not in VARIANT_OF}
     variants = {n: t for n, t in timings.items() if n in VARIANT_OF}
+    total = round(sum(engine.values()), 3)
 
     # Self-adjudicating regression gate (judge r10 item 6): diff this
     # run against the PRIOR committed BENCH_HEADLINE.json before
@@ -788,7 +811,12 @@ def main() -> None:
                 round(calibration_sec / prior_cal, 3) if prior_cal else None
             ),
         }
-        if float(prior.get("sf", -1)) == float(sf):
+        prior_action = prior.get("action", "count")
+        if prior_action != ACTION:
+            regressions["vs"] = (
+                f"prior headline timed with {prior_action}, not {ACTION}; no diff"
+            )
+        elif float(prior.get("sf", -1)) == float(sf):
             regressions["vs"] = {
                 "sf": prior.get("sf"),
                 "total_median_sec": prior.get("total_median_sec"),
@@ -801,7 +829,7 @@ def main() -> None:
                 if wall_ratio <= 1.30 or per_query[n]["median"] < 0.5:
                     continue  # sub-0.5s walls are all jitter
                 old_cpu = old.get("cpu_median")
-                new_cpu = per_query[n].get("cpu_median")
+                new_cpu = per_query[n]["cpu_median"]
                 if old_cpu and new_cpu:
                     cpu_ratio = new_cpu / old_cpu
                     verdict = (
@@ -832,15 +860,19 @@ def main() -> None:
         regressions["vs"] = f"no prior headline ({type(exc).__name__})"
 
     headline = {
-        "protocol": f"median-of-{N_PASSES} per query, "
-        "codegen-warmed at sf0.001, full-set rotation per pass; "
-        "per-query cpu_median = executor CPU sec (stage-metrics "
-        "deltas); total counts each underlying plan once — "
+        "protocol": f"median-of-{N_PASSES} per query, each run to its full "
+        "result (noop sink), codegen-warmed at sf0.001 with the same "
+        "action, full-set rotation per pass; per-query cpu_median = "
+        "executor CPU sec of the run's job group (status store); the "
+        "other counters are the last pass's; total counts each "
+        "underlying plan once — "
         "superseded pipeline versions / re-run member stages are "
         "measured under variants_per_query, excluded from the total",
         "sf": float(sf),
+        "action": ACTION,
+        "cpus": spark.sparkContext.defaultParallelism,
         "n_queries": len(engine),
-        "total_median_sec": round(sum(engine.values()), 3),
+        "total_median_sec": total,
         "edge_cache_build_sec": edge_cache_build_sec,
         "fit_cache_build_sec": fit_cache_build_sec,
         "sig_cache_build_sec": sig_cache_build_sec,
@@ -862,29 +894,10 @@ def main() -> None:
     (Path(__file__).resolve().parent / "BENCH_HEADLINE.json").write_text(
         json.dumps(headline, indent=1) + "\n"
     )
-    # Keep the printed line under the driver's ~2000-char stdout-tail
-    # capture: compact separators, 1-decimal per-query medians, the
-    # PINNED name set (see PRINTED_QUERIES — stable across rounds by
-    # construction), and NO embedded headline copy (the full-precision
-    # headline for every query lives in the committed
-    # BENCH_HEADLINE.json above). A >2000-char line gets its HEAD
-    # truncated by the tail capture and parses as null.
-    def _line(q: dict) -> str:
-        return json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": round(sum(engine.values()), 3),
-                "unit": "sec",
-                "queries": q,
-                "sf": float(sf),
-            },
-            separators=(",", ":"),
-        )
-
     printed = {
         n: round(t, 1) for n, t in timings.items() if n in PRINTED_QUERIES
     }
-    line = _line(printed)
+    line = _line(total, printed, float(sf))
     if len(line) > 1950:
         # Emergency only — unreachable below 99.9 s/query (worst-case
         # pinned line is 1947 chars). Popping would reintroduce the
@@ -893,7 +906,7 @@ def main() -> None:
         q = sorted(printed.items(), key=lambda kv: -kv[1])
         while len(line) > 1950 and q:
             q.pop()
-            line = _line(dict(q))
+            line = _line(total, dict(q), float(sf))
     print(line)
 
 

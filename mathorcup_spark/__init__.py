@@ -14,6 +14,7 @@ Package layout (SURVEY.md section numbers in parentheses):
 - ``session``    — tuned SparkSession builder
 - ``catalog``    — testdata table catalog + schema registry (§1)
 - ``registry``   — query registry powering ``__spark_entry__.py``
+- ``oracle``     — DuckDB oracle views + the one result comparator
 - ``operators/`` — relational / sampling / graph operators (§2.2-2.6, 2.9-2.10)
 - ``functions/`` — scalar, cleaning, text, dedup, similarity (§2.7-2.8, 2.13)
 - ``sources/``   — scans & sinks incl. headerless/ragged TSV (§2.1)

@@ -6,44 +6,18 @@ count, column names, and (order-insensitively, doubles rounded to
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
-from mathorcup_spark import registry
+from mathorcup_spark import oracle, registry
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle.connect(SF_DIR)
     yield con
     con.close()
-
-
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    if isinstance(v, list):
-        return tuple(_norm_cell(x) for x in v)
-    return v
-
-
-def _norm_rows(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in idx) for r in rows]
-    return sorted(out, key=repr)
 
 
 def _params():
@@ -55,16 +29,9 @@ def _params():
 def test_query_matches_oracle(spark, duck, name):
     q = registry.REGISTRY[name]
     sdf = q.fn(spark, SF_DIR)
-    scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(q.oracle)
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-
-    assert sorted(scols) == sorted(dcols), f"{name}: column names differ"
-    assert len(srows) == len(drows), f"{name}: row count {len(srows)} vs {len(drows)}"
-    assert _norm_rows(scols, srows) == _norm_rows(dcols, drows), f"{name}: values differ"
+    rec = oracle.compare(sdf.columns, srows, *oracle.run(duck, q.oracle))
+    assert rec["hash_match"], f"{name}: {rec}"
 
 
 def test_all_oracle_keys_have_queries():

@@ -157,19 +157,29 @@ def test_bench_printed_line_is_pinned_and_fits():
     the driver's ~1950-char stdout-tail cap, so the emergency
     truncation loop — which would reintroduce timing-dependent churn —
     can never fire at sane query times."""
-    import json as _json
-
     import bench
 
     assert bench.PRINTED_QUERIES <= set(bench.HEADLINE)
-    worst = _json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": 9999.999,
-            "unit": "sec",
-            "queries": {n: 99.9 for n in sorted(bench.PRINTED_QUERIES)},
-            "sf": 0.1,
-        },
-        separators=(",", ":"),
+    worst = bench._line(
+        9999.999, {n: 99.9 for n in sorted(bench.PRINTED_QUERIES)}, 0.1
     )
     assert len(worst) <= 1950, len(worst)
+
+
+def test_bench_times_full_result_from_status_store(spark):
+    """bench.py's per-query timing runs the query to its full result
+    and reads executor CPU and job counts from the status store, so it
+    works in a session with the UI off (as the test session is)."""
+    import bench
+    from perfbench.sparkstats import SparkStats
+
+    assert spark.sparkContext.uiWebUrl is None
+    r = bench.time_query(
+        spark,
+        SparkStats(spark),
+        registry.queries()["tpch_q1_pricing_summary"],
+        SF_DIR,
+        "test:bench:tpch_q1_pricing_summary",
+    )
+    assert r["cpu"] > 0
+    assert r["jobs"] >= 1

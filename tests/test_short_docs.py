@@ -11,12 +11,10 @@ documents and asserts Spark == DuckDB for every shingle consumer.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
 
-from mathorcup_spark import registry
+from mathorcup_spark import oracle, registry
 
 # (doc_id, text, lang, source, n_chars) — doc_id % 100 == 0 plays the
 # eval slice in t_contamination_screen. Includes: empty text, 1-4 word
@@ -73,37 +71,14 @@ def duck_short(short_dir):
     con.close()
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    return v
-
-
-def _norm(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        [tuple(_norm_cell(r[i]) for i in idx) for r in rows], key=repr
-    )
-
-
 @pytest.mark.parametrize("name", _QUERIES)
 def test_short_doc_parity(spark, duck_short, short_dir, name):
     registry._bootstrap()
     q = registry.REGISTRY[name]
     sdf = q.fn(spark, short_dir)
     srows = [tuple(r) for r in sdf.collect()]
-    res = duck_short.execute(q.oracle)
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(dcols), f"{name}: columns differ"
-    assert len(srows) == len(drows), (
-        f"{name}: row count {len(srows)} vs {len(drows)}"
-    )
-    assert _norm(sdf.columns, srows) == _norm(dcols, drows), (
-        f"{name}: values differ"
-    )
+    rec = oracle.compare(sdf.columns, srows, *oracle.run(duck_short, q.oracle))
+    assert rec["hash_match"], f"{name}: {rec}"
 
 
 def test_contamination_short_docs_survive(spark, short_dir):

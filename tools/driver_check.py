@@ -1,170 +1,152 @@
-"""Simulate the correctness driver: run the EXACT driver surface
-(__spark_entry__.queries() / oracle_sql()) on Spark and DuckDB at a
-given SF dir (default sf0.01, the driver's SF) and compare row count,
-column names, and order-insensitive value hash — the same three
-signals CORRECTNESS_r{N}.json records.
+"""Simulate the correctness driver: run queries on Spark and DuckDB and
+compare row count, column names, and order-insensitive value hash —
+the same three signals CORRECTNESS_r{N}.json records
+(``mathorcup_spark.oracle.compare``). A mismatch also prints a sample
+of the rows found on only one side.
 
-Usage: python tools/driver_check.py [sf_dir] [--all] [--json PATH]
-With --all, checks the FULL fine-grained registry instead of the
-50-query driver surface — a broader soak that catches
-scale-factor-dependent logic the sf0.001 pytest suite could hide.
-With --json PATH, additionally writes a machine-checkable artifact
-(per-query rows/cols/hash booleans, sf dir, registry fingerprint) so
-the full-registry soak claim is diffable evidence in-repo (judge r10
-item 7: the "252/252 at sf0.01 and sf0.1" claim was README prose a
-judge had to re-run to audit) — commit it as SOAK_r{N}.json.
+Usage: python tools/driver_check.py [name ...] [--sf DIR ...] [--all]
+                                    [--json PATH]
+By default it checks the EXACT driver surface
+(__spark_entry__.queries() / oracle_sql()) at sf0.01, the driver's SF.
+Named queries are looked up in the full registry, so a new operator can
+be checked in seconds; --all checks the full fine-grained registry, a
+broader soak that catches scale-factor-dependent logic the sf0.001
+pytest suite could hide. --sf may be repeated to check every query at
+several scale factors. With --json PATH, additionally writes a
+machine-checkable artifact (per-query rows/cols/hash booleans, sf dir,
+registry fingerprint) — commit it as SOAK_r{N}.json.
 Prints one line per query and a final summary; exit 1 on any mismatch.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
-import math
 import sys
 import time
 from pathlib import Path
 
-import duckdb
-
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from mathorcup_spark import oracle  # noqa: E402
+# perfbench/checks.py imports the normaliser under this name
+from mathorcup_spark.oracle import norm_rows as _norm_rows  # noqa: E402,F401
 from mathorcup_spark.session import get_spark  # noqa: E402
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+DEFAULT_SF = "/root/testdata/sf0.01"
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    if isinstance(v, list):
-        return tuple(_norm_cell(x) for x in v)
-    return v
-
-
-def _norm_rows(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in idx) for r in rows]
-    return sorted(out, key=repr)
+def _check(spark, duck, fn, sql, sf_dir) -> dict:
+    """One query's record: an ``err``, a rows-only count, or the
+    oracle comparison."""
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as exc:  # pragma: no cover - diagnostic path
+        return {"err": f"spark: {exc!r}"[:200]}
+    if sql is None:
+        # the real driver's rows-only smoke check requires rows > 0
+        return {"rows_only": True, "spark_rows": len(srows)}
+    try:
+        ocols, orows = oracle.run(duck, sql)
+    except Exception as exc:  # pragma: no cover - diagnostic path
+        return {"err": f"oracle: {exc!r}"[:200]}
+    return oracle.compare(scols, srows, ocols, orows)
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    json_out = None
-    if "--json" in args:
-        i = args.index("--json")
-        json_out = args[i + 1]
-        args = args[:i] + args[i + 2 :]
-    argv = [a for a in args if a != "--all"]
-    full = "--all" in args
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    if full:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="query names (default: driver surface)")
+    ap.add_argument(
+        "--sf", action="append", dest="sfs", metavar="DIR",
+        help=f"testdata dir, repeatable (default {DEFAULT_SF})",
+    )
+    ap.add_argument("--all", action="store_true", help="check the full registry")
+    ap.add_argument("--json", metavar="PATH", help="also write a JSON artifact")
+    args = ap.parse_args()
+    sfs = args.sfs or [DEFAULT_SF]
+    if args.names or args.all:
         from mathorcup_spark import registry
 
         qs = registry.queries()
         oracles = registry.oracles()
+        unknown = [n for n in args.names if n not in qs]
+        if unknown:
+            print(f"unknown queries: {unknown}")
+            return 1
+        if args.names:
+            qs = {n: qs[n] for n in args.names}
     else:
         import __spark_entry__ as entry
 
         qs = entry.queries()
         oracles = entry.oracle_sql()
     spark = get_spark()
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
 
     failures: list[str] = []
     records: dict[str, dict] = {}
-    for name, fn in qs.items():
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:  # pragma: no cover - diagnostic path
-            print(f"FAIL {name}: spark error {exc!r}")
-            failures.append(name)
-            records[name] = {"err": f"spark: {exc!r}"[:200]}
-            continue
-        if name not in oracles:
-            # the real driver's rows-only smoke check requires rows > 0
-            if len(srows) == 0:
-                print(f"FAIL {name}: rows-only returned 0 rows")
-                failures.append(name)
-                records[name] = {"rows_only": True, "spark_rows": 0}
-            else:
+    for sf_dir in sfs:
+        duck = oracle.connect(sf_dir)
+        for name, fn in qs.items():
+            key = name if len(sfs) == 1 else f"{name}@{sf_dir}"
+            t0 = time.time()
+            rec = _check(spark, duck, fn, oracles.get(name), sf_dir)
+            sec = time.time() - t0
+            if "err" in rec:
+                ok = False
+                print(f"FAIL {key}: {rec['err']}")
+            elif rec.get("rows_only"):
+                ok = rec["spark_rows"] > 0
                 print(
-                    f"ran  {name}: rows-only, {len(srows)} rows"
-                    f" ({time.time()-t0:.1f}s)"
+                    f"{'ran ' if ok else 'FAIL'} {key}: rows-only,"
+                    f" {rec['spark_rows']} rows ({sec:.1f}s)"
                 )
-                records[name] = {
-                    "rows_only": True,
-                    "spark_rows": len(srows),
-                }
-            continue
-        try:
-            res = duck.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-        except Exception as exc:  # pragma: no cover - diagnostic path
-            print(f"FAIL {name}: oracle error {exc!r}")
-            failures.append(name)
-            records[name] = {"err": f"oracle: {exc!r}"[:200]}
-            continue
-        ok_cols = sorted(scols) == sorted(dcols)
-        ok_rows = len(srows) == len(drows)
-        # value comparison is only meaningful when cols/rows line up;
-        # report it as "skipped" (not false) when short-circuited so
-        # the three signals stay independent in the output
-        ok_vals = (
-            _norm_rows(scols, srows) == _norm_rows(dcols, drows)
-            if (ok_cols and ok_rows)
-            else None
-        )
-        status = "pass" if (ok_cols and ok_rows and ok_vals) else "FAIL"
-        hash_str = "skipped" if ok_vals is None else str(ok_vals)
-        print(
-            f"{status} {name}: rows {len(srows)}/{len(drows)}"
-            f" cols={ok_cols} hash={hash_str} ({time.time()-t0:.1f}s)"
-        )
-        if status == "FAIL":
-            failures.append(name)
-        records[name] = {
-            "rows_match": ok_rows,
-            "cols_match": ok_cols,
-            "hash_match": ok_vals,
-            "spark_rows": len(srows),
-            "oracle_rows": len(drows),
-            "sec": round(time.time() - t0, 1),
-        }
-
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} pass; failures: {failures}")
-    if json_out:
+            else:
+                ok = bool(rec["hash_match"])
+                # "skipped" (not False) when cols/rows already differ,
+                # so the three signals stay independent in the output
+                h = rec["hash_match"]
+                print(
+                    f"{'pass' if ok else 'FAIL'} {key}:"
+                    f" rows {rec['spark_rows']}/{rec['oracle_rows']}"
+                    f" cols={rec['cols_match']}"
+                    f" hash={'skipped' if h is None else h} ({sec:.1f}s)"
+                )
+                for side in ("only_spark", "only_oracle"):
+                    for row in rec.get(side, []):
+                        print(f"    {side}: {row!r}"[:300])
+                rec["sec"] = round(sec, 1)
+            if not ok:
+                failures.append(key)
+            records[key] = rec
+    n = len(records)
+    print(f"\n{n - len(failures)}/{n} pass; failures: {failures}")
+    if args.json:
         # registry fingerprint: the sorted query-name list hashed, so
         # a soak artifact is tied to the exact registry it attests
         fp = hashlib.sha256("\n".join(sorted(qs)).encode()).hexdigest()[:16]
-        Path(json_out).write_text(
+        Path(args.json).write_text(
             json.dumps(
                 {
-                    "sf_dir": sf_dir,
-                    "surface": "full-registry" if full else "driver",
-                    "n_queries": len(qs),
-                    "n_pass": len(qs) - len(failures),
+                    "sf_dir": sfs[0] if len(sfs) == 1 else sfs,
+                    "surface": (
+                        "full-registry" if args.all
+                        else "named" if args.names else "driver"
+                    ),
+                    "n_queries": n,
+                    "n_pass": n - len(failures),
                     "failures": failures,
                     "registry_fingerprint": fp,
                     "queries": records,
                 },
                 indent=1,
+                default=str,
             )
             + "\n"
         )
-        print(f"wrote {json_out}")
+        print(f"wrote {args.json}")
     return 1 if failures else 0
 
 

@@ -1,168 +1,117 @@
-"""Profile named registry queries: per-query wall + executor CPU,
-per-stage breakdown from the UI REST API, and the formatted physical
-plan written to plans/r12/<query>_<tag>.txt (guide §1: measure first,
+"""Profile named registry queries: per-query wall + executor CPU, a
+per-stage breakdown from the Spark status store, and optionally the
+formatted physical plan of each query (guide §1: measure first,
 capture .explain("formatted"), label jobs).
 
 Usage:
-  python tools/query_profile.py q1 [q2 ...] [--sf DIR] [--tag before]
-          [--passes N] [--no-plan]
+  python tools/query_profile.py q1 [q2 ...] [--sf DIR] [--passes N]
+          [--plans DIR] [--details]
 
-Timed action is the query's bench action (.count(), matching bench.py
-methodology) unless --noop is given, which uses the noop sink
-(guide §1.4) to force every column of every row.
+Each pass runs the query to its full result (a noop-sink write, as
+bench.py times it) under its own job group ``profile:<query>:<pass>``;
+the stage rows are the last pass's. --plans DIR writes each query's
+formatted plan to DIR/<query>.txt; --details adds the engine call
+sites of each stage.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import sys
-import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from bench import WARMUP_SF_DIR, full_result, run_group  # noqa: E402
 from mathorcup_spark import registry  # noqa: E402
 from mathorcup_spark.session import get_spark  # noqa: E402
+from perfbench.sparkstats import SparkStats  # noqa: E402
 
-WARMUP_SF_DIR = "/root/testdata/sf0.001"
 
-
-def _stages_since(spark, epoch_ms: float, details: bool = False) -> list[dict]:
-    import datetime as dt
-
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app_id}/stages?status=complete"
-        + ("&details=true" if details else ""),
-        timeout=15,
-    ) as r:
-        stages = json.load(r)
-    out = []
-    for s in stages:
-        sub = s.get("submissionTime")
-        if not sub:
+def _stage_rows(stats, stage_ids, details: bool) -> list[dict]:
+    """One row per stage that ran, most executor CPU first."""
+    rows = []
+    for sid in sorted(stage_ids):
+        try:
+            s = stats.store.lastStageAttempt(sid)
+        except Exception:  # py4j wraps NoSuchElementException: never ran
             continue
-        ts = dt.datetime.strptime(sub, "%Y-%m-%dT%H:%M:%S.%f%Z").replace(
-            tzinfo=dt.timezone.utc
-        )
-        if ts.timestamp() * 1000 >= epoch_ms - 5:
-            out.append(s)
-    return out
+        if str(s.status()) == "SKIPPED":
+            continue
+        row = {
+            "stage": sid,
+            "name": s.name()[:80],
+            "cpu_s": round(s.executorCpuTime() / 1e9, 3),
+            "run_ms": s.executorRunTime(),
+            "tasks": s.numCompleteTasks(),
+            "in_rec": s.inputRecords(),
+            "sh_r_rec": s.shuffleReadRecords(),
+            "sh_w_rec": s.shuffleWriteRecords(),
+            "sh_w_b": s.shuffleWriteBytes(),
+        }
+        if details:
+            row["details"] = "\n".join(
+                ln for ln in s.details().splitlines() if "mathorcup" in ln
+            )[:400]
+        rows.append(row)
+    return sorted(rows, key=lambda r: -r["cpu_s"])
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    sf_dir = "/root/testdata/sf0.1"
-    tag = None
-    passes = 1
-    write_plan = True
-    noop = False
-    want_details = False
-    names: list[str] = []
-    it = iter(args)
-    for a in it:
-        if a == "--sf":
-            sf_dir = next(it)
-        elif a == "--tag":
-            tag = next(it)
-        elif a == "--passes":
-            passes = int(next(it))
-        elif a == "--no-plan":
-            write_plan = False
-        elif a == "--noop":
-            noop = True
-        elif a == "--details":
-            want_details = True
-        else:
-            names.append(a)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="+", help="registered query names")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1", metavar="DIR")
+    ap.add_argument("--passes", type=int, default=1)
+    ap.add_argument("--plans", metavar="DIR", help="write formatted plans here")
+    ap.add_argument("--details", action="store_true", help="stage call sites")
+    args = ap.parse_args()
+    if args.passes < 1:
+        ap.error("--passes must be at least 1")
     qs = registry.queries()
-    unknown = [n for n in names if n not in qs]
+    unknown = [n for n in args.names if n not in qs]
     if unknown:
         print(f"unknown queries: {unknown}")
         return 1
-    spark = get_spark(
-        "query_profile",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0"},
-    )
-    plan_dir = Path(__file__).resolve().parents[1] / "plans" / "r12"
-    plan_dir.mkdir(parents=True, exist_ok=True)
+    spark = get_spark("query_profile")
+    stats = SparkStats(spark)
 
-    for name in names:
+    def run(name, sf_dir, group):
+        return run_group(spark, stats, group, lambda: full_result(qs[name](spark, sf_dir)))
+
+    for name in args.names:
         # codegen/JIT warmup at tiny scale, matching bench.py
-        qs[name](spark, WARMUP_SF_DIR).count()
+        run(name, WARMUP_SF_DIR, f"profile:{name}:warmup")
         # untimed pre-run at sf_dir: pays the one-time derived-table
         # cache builds (edge/fit/sig lake tables) exactly like
         # bench.py's explicit pre-build, so timed passes measure the
         # steady state the bench reports
-        qs[name](spark, sf_dir).count()
+        run(name, args.sf, f"profile:{name}:prerun")
 
     results = {}
-    for name in names:
-        walls, cpus, stage_rows = [], [], []
-        for p in range(passes):
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0_ms = time.time() * 1000
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            if noop:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
-            wall = time.perf_counter() - t0
-            spark.sparkContext.setJobDescription(None)
-            stages = _stages_since(spark, t0_ms, details=want_details)
-            cpu = sum(s.get("executorCpuTime", 0) for s in stages) / 1e9
-            walls.append(wall)
-            cpus.append(cpu)
-            if p == passes - 1:
-                stage_rows = sorted(
-                    (
-                        {
-                            "stage": s["stageId"],
-                            "name": s.get("name", "")[:80],
-                            "cpu_s": round(s.get("executorCpuTime", 0) / 1e9, 3),
-                            "run_ms": s.get("executorRunTime", 0),
-                            "tasks": s.get("numCompleteTasks", 0),
-                            "in_rec": s.get("inputRecords", 0),
-                            "sh_r_rec": s.get("shuffleReadRecords", 0),
-                            "sh_w_rec": s.get("shuffleWriteRecords", 0),
-                            "sh_w_b": s.get("shuffleWriteBytes", 0),
-                            "desc": (s.get("description") or "")[:40],
-                            "details": "\n".join(
-                                ln
-                                for ln in (s.get("details") or "").splitlines()
-                                if "mathorcup" in ln or "bench" in ln
-                            )[:400],
-                        }
-                        for s in stages
-                    ),
-                    key=lambda r: -r["cpu_s"],
+    for name in args.names:
+        walls, cpus = [], []
+        for p in range(1, args.passes + 1):
+            _, wall, t = run(name, args.sf, f"profile:{name}:{p}")
+            walls.append(round(wall, 3))
+            cpus.append(round(t.exec_cpu_s, 3))
+        stage_rows = _stage_rows(stats, t.stage_ids, args.details)
+        if args.plans:
+            plan_dir = Path(args.plans)
+            plan_dir.mkdir(parents=True, exist_ok=True)
+            plan = qs[name](spark, args.sf)._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
                 )
-        if write_plan and tag:
-            try:
-                plan = qs[name](spark, sf_dir)._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                )
-            except Exception:
-                import io
-                from contextlib import redirect_stdout
-
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    qs[name](spark, sf_dir).explain("formatted")
-                plan = buf.getvalue()
-            (plan_dir / f"{name}_{tag}.txt").write_text(plan)
+            )
+            (plan_dir / f"{name}.txt").write_text(plan)
         results[name] = {
-            "wall": [round(w, 3) for w in walls],
-            "cpu": [round(c, 3) for c in cpus],
+            "wall": walls,
+            "cpu": cpus,
             "n_stages": len(stage_rows),
             "top_stages": stage_rows[:14],
         }
-        print(f"\n=== {name}  wall={results[name]['wall']} cpu={results[name]['cpu']} stages={len(stage_rows)}")
+        print(f"\n=== {name}  wall={walls} cpu={cpus} stages={len(stage_rows)}")
         for r in stage_rows[:14]:
             print(
                 f"  st{r['stage']:>4} cpu={r['cpu_s']:7.2f}s run={r['run_ms']:>7}ms "

@@ -12,24 +12,22 @@ import json
 import shutil
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import _cpu_since_ns  # noqa: E402
+from bench import full_result, run_group  # noqa: E402
 from mathorcup_spark.catalog import load  # noqa: E402
 from mathorcup_spark.session import get_spark  # noqa: E402
+from perfbench.sparkstats import SparkStats  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(
-        "v5_stage_profile",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0"},
-    )
+    spark = get_spark("v5_stage_profile")
+    stats = SparkStats(spark)
     from mathorcup_spark.functions.corpus import consume_verdicts
     from mathorcup_spark.sources.verdicts import (
         append_to_verdict_table,
@@ -47,15 +45,8 @@ def main() -> None:
     stages: dict[str, dict] = {}
 
     def timed(name, fn):
-        t0e = time.time() * 1000
-        t0 = time.perf_counter()
-        r = fn()
-        wall = time.perf_counter() - t0
-        cpu = _cpu_since_ns(spark, t0e)
-        stages[name] = {
-            "wall_sec": round(wall, 3),
-            "cpu_sec": round(cpu / 1e9, 3) if cpu is not None else None,
-        }
+        r, wall, t = run_group(spark, stats, f"v5_profile:{name}", fn)
+        stages[name] = {"wall_sec": round(wall, 3), "cpu_sec": round(t.exec_cpu_s, 3)}
         return r
 
     try:
@@ -90,7 +81,7 @@ def main() -> None:
             n0c0[0] + n1c1[0] + n2c2[0],
             n0c0[1] + n1c1[1] + n2c2[1],
         ), "roundtrip signature mismatch"
-        timed("consume", lambda: consume_verdicts(spark, maintained).count())
+        timed("consume", lambda: full_result(consume_verdicts(spark, maintained)))
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
