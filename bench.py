@@ -224,7 +224,7 @@ HEADLINE = [
     # d_incremental_index_dedup is deliberately NOT a headline: ~90%
     # of its runtime is the one-time index BACKFILL (write of the
     # partitioned band/shingle layouts), which would distort the
-    # recurring-cost total. Its perf signal is tools/mh_index_soak.py
+    # recurring-cost total. Its perf signal is `tools/soak.py index`
     # (probe cost flat across 100x index growth — SCALING.md).
 ]
 
@@ -390,15 +390,15 @@ def _build_fit_caches(spark) -> float:
 
     from mathorcup_spark.ml.pipelines import cached_als_ratings
 
-    t0 = time.perf_counter()
     n = int(load(spark, SF_DIR, "embeddings").count())
+    t0 = time.perf_counter()
     for k in {K_CENTROIDS, semdedup_k(n)}:
         cached_unit_centroids(spark, SF_DIR, k)
     cached_raw_centroids(spark, SF_DIR, ivfpq_k(n))
     cached_residual_codebooks(spark, SF_DIR, ivfpq_k(n))
     cached_pq_codebooks(spark, SF_DIR)
     cached_semdedup_det(spark, SF_DIR)
-    cached_als_ratings(spark, SF_DIR).count()
+    cached_als_ratings(spark, SF_DIR)
     return round(time.perf_counter() - t0, 3)
 
 
@@ -501,18 +501,21 @@ def _ingest_bench(spark) -> list[dict]:
     loop's probe-then-append rows/s through a real readStream so the
     batch-bounded-append claim carries a throughput number, not just
     a flat-cost soak. Timed region = the streaming run only (initial
-    store builds and arrival materialization excluded); correctness
-    assertions are deliberately absent here — they'd bill one-shot
-    rebuild time to the ingest loop."""
+    store builds and arrival materialization excluded); each probe runs
+    to its full result (noop sink); correctness assertions are
+    deliberately absent here — they'd bill one-shot rebuild time to
+    the ingest loop."""
     from pyspark.sql import functions as F
 
     from mathorcup_spark.catalog import load
+    from mathorcup_spark.functions.dedup import _banded_sigs, shingles_from
     from mathorcup_spark.sources.ann_index import (
         append_to_lsh_index,
         query_lsh_index,
         write_lsh_index,
     )
     from mathorcup_spark.sources.minhash_index import (
+        _pb,
         append_to_minhash_index,
         probe_minhash_index,
         write_minhash_index,
@@ -525,7 +528,7 @@ def _ingest_bench(spark) -> list[dict]:
     results: list[dict] = []
     work = tempfile.mkdtemp(prefix="bench_ingest_")
 
-    def _run_loop(query, arrivals_df, init, ingest, n_rows, ckpt, n_files=4):
+    def _run_loop(query, arrivals_df, init, ingest, n_rows, n_files=4):
         arrivals = os.path.join(work, f"{query}_arrivals")
         arrivals_df.repartition(n_files).write.mode("overwrite").parquet(
             arrivals
@@ -538,13 +541,13 @@ def _ingest_bench(spark) -> list[dict]:
             .option("maxFilesPerTrigger", 1)
             .parquet(arrivals)
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", os.path.join(work, ckpt))
+            .option("checkpointLocation", os.path.join(work, f"{query}_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
         elapsed = time.perf_counter() - t0
-        entry = {
+        return {
             "query": query,
             "mode": "readStream -> foreachBatch probe+append, "
             f"Trigger.AvailableNow, {n_files} micro-batches",
@@ -553,56 +556,62 @@ def _ingest_bench(spark) -> list[dict]:
             "rows_per_sec": round(n_rows / elapsed, 1),
             # the dominant term is FIXED cost per micro-batch
             # (probe join + partitioned append), not per-row work
-            # — tools/mh_append_soak.py shows it flat vs index
-            # size; rows/s scales with batch size, so production
+            # — `tools/soak.py index` shows it flat vs index size;
+            # rows/s scales with batch size, so production
             # throughput = batch_rows / sec_per_batch
             "n_batches": n_files,
             "batch_rows": round(n_rows / n_files),
             "sec_per_batch": round(elapsed / n_files, 2),
         }
-        results.append(entry)
-        return entry
+
+    def _split(df, key):
+        """(initial 3/5 of the ``key`` range, the rest, rows in the rest)"""
+        t = int(df.agg(F.expr(f"(max({key}) * 3) div 5")).first()[0])
+        rest = df.filter(F.col(key) >= t)
+        return df.filter(F.col(key) < t), rest, int(rest.count())
+
+    # seconds per stage of the MinHash ingest body, summed over batches
+    stages: dict[str, float] = {}
+
+    def _lap(stage, t0):
+        now = time.perf_counter()
+        stages[stage] = stages.get(stage, 0.0) + now - t0
+        return now
+
+    def mh_loop(query, initial, rest, n_rows, n_files=4):
+        live = os.path.join(work, f"{query}_index")
+
+        def mh_ingest(batch_df, batch_id):
+            t0 = time.perf_counter()
+            batch = batch_df.localCheckpoint(eager=True)
+            t0 = _lap("materialize", t0)
+            # one signature build per batch, shared by probe + append
+            sh = shingles_from(spark, batch).localCheckpoint(eager=True)
+            banded = (
+                _banded_sigs(sh).withColumn("pb", _pb()).localCheckpoint(eager=True)
+            )
+            t0 = _lap("signature", t0)
+            full_result(
+                probe_minhash_index(spark, live, batch, sh_new=sh, banded_new=banded)
+            )
+            t0 = _lap("probe", t0)
+            append_to_minhash_index(spark, live, batch, sh=sh, banded=banded)
+            _lap("append", t0)
+
+        stages.clear()
+        return _run_loop(
+            query,
+            rest,
+            lambda: write_minhash_index(spark, initial, live),
+            mh_ingest,
+            n_rows,
+            n_files=n_files,
+        )
 
     try:
-        docs = load(spark, SF_DIR, "documents")
-        t = int(docs.agg(F.expr("(max(doc_id) * 3) div 5")).first()[0])
-        d_initial = docs.filter(F.col("doc_id") < t)
-        d_rest = docs.filter(F.col("doc_id") >= t)
-        n_rest = int(d_rest.count())
-
-        mh_live = os.path.join(work, "mh_live")
-
-        def mh_ingest(batch_df, batch_id, index_dir=None):
-            from mathorcup_spark.functions.dedup import (
-                _banded_sigs,
-                shingles_from,
-            )
-            from mathorcup_spark.sources.minhash_index import _pb
-
-            index_dir = index_dir or mh_live
-            batch = batch_df.localCheckpoint(eager=True)
-            # one signature build per batch, shared by probe + append
-            sh = shingles_from(spark, batch).localCheckpoint(eager=False)
-            banded = (
-                _banded_sigs(sh)
-                .withColumn("pb", _pb())
-                .localCheckpoint(eager=False)
-            )
-            probe_minhash_index(
-                spark, index_dir, batch, sh_new=sh, banded_new=banded
-            ).count()
-            append_to_minhash_index(
-                spark, index_dir, batch, sh=sh, banded=banded
-            )
-
-        mid = _run_loop(
-            "st_minhash_ingest",
-            d_rest,
-            lambda: write_minhash_index(spark, d_initial, mh_live),
-            mh_ingest,
-            n_rest,
-            "mh_ckpt",
-        )
+        d_initial, d_rest, n_rest = _split(load(spark, SF_DIR, "documents"), "doc_id")
+        mid = mh_loop("st_minhash_ingest", d_initial, d_rest, n_rest)
+        results.append(mid)
 
         # batch-size sweep (judge r9 item 2): same arrival set split
         # into 8 / 4 / 1 micro-batches against a FRESH copy of the
@@ -611,27 +620,10 @@ def _ingest_bench(spark) -> list[dict]:
         # banded append), so rows/s should rise ~linearly with batch
         # size; production throughput = batch_rows / sec_per_batch at
         # the deployment's batch size, not the fixture's.
-        sweep = []
-        for n_files in (8, 1):
-            live = os.path.join(work, f"mh_sweep_{n_files}")
-            sweep.append(
-                _run_loop(
-                    f"st_minhash_ingest_b{n_files}",
-                    d_rest,
-                    lambda live=live: write_minhash_index(
-                        spark, d_initial, live
-                    ),
-                    lambda bdf, bid, live=live: mh_ingest(
-                        bdf, bid, index_dir=live
-                    ),
-                    n_rest,
-                    f"mh_sweep_ckpt_{n_files}",
-                    n_files=n_files,
-                )
-            )
-        results[:] = [r for r in results if not r["query"].startswith(
-            "st_minhash_ingest_b"
-        )]
+        sweep = [
+            mh_loop(f"st_minhash_ingest_b{n}", d_initial, d_rest, n_rest, n)
+            for n in (8, 1)
+        ]
         points = sorted(sweep + [mid], key=lambda r: r["batch_rows"])
         results.append(
             {
@@ -650,25 +642,22 @@ def _ingest_bench(spark) -> list[dict]:
             }
         )
 
-        emb = load(spark, SF_DIR, "embeddings")
-        te = int(emb.agg(F.expr("(max(vec_id) * 3) div 5")).first()[0])
-        e_initial = emb.filter(F.col("vec_id") < te)
-        e_rest = emb.filter(F.col("vec_id") >= te)
-        n_erest = int(e_rest.count())
+        e_initial, e_rest, n_erest = _split(load(spark, SF_DIR, "embeddings"), "vec_id")
         ann_live = os.path.join(work, "ann_live")
 
         def ann_ingest(batch_df, batch_id):
             batch = batch_df.localCheckpoint(eager=True)
-            query_lsh_index(spark, ann_live, batch, k=1 << 30).count()
+            full_result(query_lsh_index(spark, ann_live, batch, k=1 << 30))
             append_to_lsh_index(batch, ann_live)
 
-        _run_loop(
-            "st_ann_ingest",
-            e_rest,
-            lambda: write_lsh_index(e_initial, ann_live),
-            ann_ingest,
-            n_erest,
-            "ann_ckpt",
+        results.append(
+            _run_loop(
+                "st_ann_ingest",
+                e_rest,
+                lambda: write_lsh_index(e_initial, ann_live),
+                ann_ingest,
+                n_erest,
+            )
         )
 
         v_live = os.path.join(work, "v_live")
@@ -678,33 +667,50 @@ def _ingest_bench(spark) -> list[dict]:
                 spark, v_live, batch_df.localCheckpoint(eager=True)
             )
 
-        _run_loop(
-            "st_verdict_ingest",
-            d_rest,
-            lambda: create_verdict_table(spark, d_initial, v_live),
-            v_ingest,
-            n_rest,
-            "v_ckpt",
+        results.append(
+            _run_loop(
+                "st_verdict_ingest",
+                d_rest,
+                lambda: create_verdict_table(spark, d_initial, v_live),
+                v_ingest,
+                n_rest,
+            )
         )
 
         # production-regime plateau point (judge r10 item 1): one
-        # >= 1e5-row batch against a warm index, per-stage breakdown
-        # + isolated per-batch fixed cost. Skipped gracefully when
-        # the scaled corpus is absent (driver machines without
-        # .data/sf10).
-        from tools.ingest_plateau import run_plateau
-
-        plateau = run_plateau(
-            spark,
-            str(
-                Path(__file__).resolve().parent
-                / ".data"
-                / "sf10"
-                / "documents.parquet"
-            ),
-        )
-        if plateau:
-            results.append(plateau)
+        # >= 1e5-row batch against a warm index, with the per-stage
+        # split, and the per-batch fixed cost isolated by re-running
+        # the same arrivals as two micro-batches (fixed ~= t(2) -
+        # t(1)). Skipped when the x10 corpus .data/sf10 (tools/
+        # gen_scaled.py) is absent or under 1e5 documents.
+        plateau_docs = Path(__file__).resolve().parent / ".data/sf10/documents.parquet"
+        if plateau_docs.exists():
+            p_docs = spark.read.parquet(str(plateau_docs)).select("doc_id", "text")
+            if p_docs.count() >= 100_000:
+                p_initial, p_rest, n_prest = _split(p_docs, "doc_id")
+                one = mh_loop("st_minhash_ingest_plateau_b1", p_initial, p_rest, n_prest, 1)
+                stages_one = dict(stages)
+                two = mh_loop("st_minhash_ingest_plateau_b2", p_initial, p_rest, n_prest, 2)
+                one_s, two_s = one["elapsed_sec"], two["elapsed_sec"]
+                fixed = max(0.0, two_s - one_s)  # cost of one extra batch barrier
+                results.append(
+                    {
+                        "query": "st_minhash_ingest_plateau",
+                        "mode": "readStream -> foreachBatch probe+append against a "
+                        "warm index of the first 3/5 of the corpus; one "
+                        "production-size batch, per-stage timers inside the "
+                        "batch; fixed cost = t(2 batches) - t(1 batch) on "
+                        "identical arrivals",
+                        "input_rows": n_prest,
+                        "batch_rows": n_prest,
+                        "elapsed_sec": one_s,
+                        "rows_per_sec": one["rows_per_sec"],
+                        "stages_sec": {k: round(v, 2) for k, v in stages_one.items()},
+                        "fixed_cost_sec_per_batch": round(fixed, 2),
+                        "fixed_cost_share": round(fixed / one_s, 4),
+                        "two_batch_elapsed_sec": two_s,
+                    }
+                )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return results

@@ -581,14 +581,14 @@ def _register_corpus_v5() -> None:
         "wrote (verdict_sig is additive over disjoint row sets; "
         "raises on drift). The heavier maintained == one-shot-"
         "rebuild counterfactual runs in tests/test_verdict_table.py "
-        "and tools/verdict_append_soak.py instead of on every "
+        "and `tools/soak.py verdict` instead of on every "
         "invocation (judge r6 item 8: the rebuild was 2x the row's "
         "bench cost and is evidence, not operator). The oracle is "
         "the full v3 pipeline with the eval slice restricted to the "
         "initial corpus -- so incremental maintenance is STILL hash-"
         "verified end-to-end against DuckDB, not just self-"
         "consistent. Per-batch cost is a function of batch size, "
-        "not corpus size (measured: tools/verdict_append_soak.py, "
+        "not corpus size (measured: `tools/soak.py verdict`, "
         "SCALING.md section incremental verdict maintenance).",
         tags=("text", "dedup", "sampling", "pack", "pipeline",
               "verdict", "incremental", "e2e"),
@@ -640,7 +640,7 @@ def _register_corpus_v5() -> None:
             # of what the three maintenance ops wrote (verdict_sig is
             # additive over disjoint row sets). The heavier
             # maintained == one-shot-rebuild counterfactual lives in
-            # tests/test_verdict_table.py + tools/verdict_append_soak.py.
+            # tests/test_verdict_table.py + `tools/soak.py verdict`.
             #
             # Round-11: the signature scan and the consume
             # materialization are independent reads of the same

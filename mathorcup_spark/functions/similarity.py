@@ -1344,7 +1344,7 @@ def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # spuriously (late-vs-late pairs unscored). At the committed SFs the
 # cap and window do not bind, so the capped face equals
 # d_semantic_dedup exactly; they bind on the soak corpora
-# (tools/heavy_decade_soak.py), where the tradeoff is measured.
+# (`tools/soak.py decade`), where the tradeoff is measured.
 SEMDEDUP_K_CAP = 64
 SEMDEDUP_PAIR_WINDOW = 512
 
@@ -1507,7 +1507,7 @@ def learned_centroids(
     "subsamples past SEMDEDUP_FIT_MAX by deterministic id stride "
     "(assignment still covers every vector); the agreement join is "
     "one narrow N-row equi-join. The round-9 second-decade probe "
-    "(tools/heavy_decade_soak.py) is what exposed the fixed-k "
+    "(`tools/soak.py decade`) is what exposed the fixed-k "
     "quadratic this replaces.",
     tags=("dedup", "similarity", "embedding", "semantic", "ml"),
 )
@@ -2654,7 +2654,7 @@ def _register_ivf_pq_rerank_qcells() -> None:
         "growing with the corpus, probes = ceil(k/4) — so the hash-"
         "verifiable face keeps nonzero recall at EVERY scale where "
         "the first-8-cell fixture decays to 0.00 "
-        "(tools/rerank_recall_soak.py measures both). Seedless and "
+        "(`tools/soak.py recall` measures both). Seedless and "
         "DuckDB-replayable end to end: the oracle re-derives k, the "
         "probe count, the quantile ranks (integer arithmetic), and "
         "every downstream stage. sim_ivf_pq_rerank stays registered "
@@ -2720,7 +2720,7 @@ def _register_ivf_pq_rerank() -> None:
         "Recall can only improve: the true neighbors present in the "
         "shortlist sort to the front by construction, so "
         "recall@5(rerank) >= recall@5(raw ADC) per query — "
-        "tests/test_round9_ops.py pins both the measured floor and "
+        "tests/test_dedup_similarity.py pins both the measured floor and "
         "the dominance. Scale: the rescore joins |Q| x "
         f"{RERANK_M} shortlist rows back to the vector table on "
         "vec_id — a keyed equi-join bounded by the shortlist, "

@@ -1208,6 +1208,17 @@ def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize_derived(spark, "bip", sf_dir, ("edges",), _build)["edges"]
 
 
+def _lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous LPA round: each node adopts its neighbors' most
+    frequent label, the smallest label on ties."""
+    nbr = edges.join(labels, edges.src == labels.node).select(
+        F.col("dst").alias("node"), "label"
+    )
+    return nbr.groupBy("node").agg(
+        F.mode("label", deterministic=True).alias("label")
+    )
+
+
 def _lpa_core(spark: SparkSession, sf_dir: str):
     """(edges, labels) for the bipartite part<->supplier LPA — the
     shared construction behind g_label_propagation and
@@ -1218,28 +1229,9 @@ def _lpa_core(spark: SparkSession, sf_dir: str):
             F.col("src").alias("node"), F.col("src").alias("label")
         )
     )
-
-    def step(labels: DataFrame, _i: int) -> DataFrame:
-        # each node adopts its neighbors' most frequent label
-        nbr = edges.join(labels, edges.src == labels.node).select(
-            F.col("dst").alias("v"), "label"
-        )
-        cnt = nbr.groupBy("v", "label").agg(F.count(F.lit(1)).alias("cnt"))
-        # winner per v = highest count, smallest label on ties —
-        # formerly a row_number window (exchange on v + SORT of the
-        # (v,label) counts); max_by over the (cnt, -label) struct
-        # picks the identical row via an ordinary hash aggregate
-        # (round 11, guide §2.4: no sort, and the map-side partial
-        # max shrinks the exchange). The struct key is unique per
-        # (v,label), so the argmax is well-defined and bit-identical
-        # to the window's rn=1 row.
-        return cnt.groupBy(F.col("v").alias("node")).agg(
-            F.max_by(
-                "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
-            ).alias("label")
-        )
-
-    labels = supersteps(labels, step, _LPA_ROUNDS)
+    labels = supersteps(
+        labels, lambda state, _i: _lpa_round(edges, state), _LPA_ROUNDS
+    )
     return edges, labels.select(
         F.col("node").cast("long").alias("node"),
         F.col("label").cast("long").alias("label"),

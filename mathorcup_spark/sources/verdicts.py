@@ -114,14 +114,14 @@ def read_verdict_table(spark: SparkSession, verdict_dir: str) -> DataFrame:
 # hashes, so the two downstream anti-joins broadcast a batch-bounded
 # frame. Per-batch cost is bounded by batch size + the probed store
 # partitions, NOT by corpus size — measured in
-# tools/verdict_append_soak.py / SCALING.md § incremental verdict
+# `tools/soak.py verdict` / SCALING.md § incremental verdict
 # maintenance.
 #
 # Append-order contract: batches must arrive in ascending doc_id
 # ranges (the ingest pattern everywhere else in this repo). The
 # maintained table then equals a one-shot ``build_verdicts_frozen``
 # over the full corpus bit-for-bit — asserted in
-# tests/test_verdict_table.py and tools/verdict_append_soak.py;
+# tests/test_verdict_table.py;
 # corpus_pipeline_v5 asserts the cheaper disk-roundtrip invariant
 # (read-back checksum == the additive checksum of everything the
 # maintenance ops wrote) so the registered row does not re-run the

@@ -5,16 +5,21 @@ lineitem bucketed on the order key, join them, and assert the
 physical plan contains no Exchange operator — the join runs entirely
 map-side at any scale because both inputs already satisfy the
 required hash distribution.
+
+The lake-maintenance queries are checked here too: the change classes
+of a snapshot diff and the version chains of an SCD2 merge.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+from collections import defaultdict
 
 from pyspark.sql import functions as F
 
 from mathorcup_spark.catalog import load
+from mathorcup_spark.registry import queries
 from mathorcup_spark.sources.layout import read_table, write_bucketed
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -126,3 +131,38 @@ def test_materialize_derived_builds_once_and_elides_wedge_exchange(spark):
     other = "/root/testdata/sf0.01"
     materialize_derived(spark, "layout_test", other, ("t",), lambda: builds())
     assert calls["n"] == 2
+
+
+def test_snapshot_diff_change_classes(spark):
+    rows = queries()["lake_snapshot_diff"](spark, SF_DIR).collect()
+    assert rows
+    for r in rows:
+        k = r["c_custkey"]
+        if r["change_type"] == "insert":
+            assert k % 10 == 3 and r["old_acctbal"] is None
+        elif r["change_type"] == "delete":
+            assert k % 10 == 7 and r["new_acctbal"] is None
+        else:
+            assert r["change_type"] == "update"
+            assert k % 7 == 0 and k % 10 not in (3, 7)
+            assert abs(r["new_acctbal"] - r["old_acctbal"] - 100) < 1e-9
+
+
+def test_scd2_merge_version_chains(spark):
+    rows = queries()["lake_scd2_merge"](spark, SF_DIR).collect()
+    by_key = defaultdict(list)
+    for r in rows:
+        by_key[r["c_custkey"]].append(r)
+    assert by_key
+    for k, vers in by_key.items():
+        current = [v for v in vers if v["is_current"] == 1]
+        assert len(current) == 1, f"key {k}: exactly one current version"
+        assert current[0]["eff_to"] is None
+        if k % 5 == 0:
+            assert len(vers) == 2
+            closed = next(v for v in vers if v["is_current"] == 0)
+            # the closed version ends exactly where the new one starts
+            assert str(closed["eff_to"]) == str(current[0]["eff_from"])
+            assert abs(current[0]["acctbal"] - closed["acctbal"] - 50) < 1e-9
+        else:
+            assert len(vers) == 1

@@ -1,25 +1,12 @@
-"""Round-12 optimization internals: the packed 64-bit wedge key and
-its envelope guard (graph.py), and the Spark-side centroid subsample
-of two_level_assign."""
+"""Round-12 packed 64-bit wedge key (graph.py): pack/unpack roundtrip
+over the full 32-bit id envelope. The other packed-key tests live in
+test_graph.py."""
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
+from pyspark.sql import functions as F
 
-import pytest
-
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from mathorcup_spark.operators.graph import (  # noqa: E402
-    _UV_MASK,
-    _pack_uv,
-    _unpack_uv,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
+from mathorcup_spark.operators.graph import _pack_uv, _unpack_uv
 
 
 def test_pack_uv_roundtrip_including_wrap(spark):
@@ -48,58 +35,3 @@ def test_pack_uv_roundtrip_including_wrap(spark):
         assert (r["u2"], r["v2"]) == (r["u"], r["v"]), r
     # injectivity across the test pairs
     assert len({r["uv"] for r in out}) == len(pairs)
-
-
-def test_pack_uv_distinct_from_two_col_grouping(spark):
-    """Grouping by the packed key partitions rows exactly like the
-    two-column key it replaced."""
-    rows = [(1, 2), (1, 2), (1, 3), (2, 1), (2**31, 5), (2**31, 5)]
-    df = spark.createDataFrame(rows, "u LONG, v LONG")
-    packed = (
-        df.groupBy(_pack_uv(F.col("u"), F.col("v")).alias("uv"))
-        .count()
-        .collect()
-    )
-    plain = df.groupBy("u", "v").count().collect()
-    uq, vq = _unpack_uv()
-    unpacked = {
-        ((r["uv"] >> 32) & _UV_MASK, r["uv"] & _UV_MASK): r["count"]
-        for r in packed
-    }
-    assert unpacked == {(r["u"], r["v"]): r["count"] for r in plain}
-
-
-def test_pack_envelope_guard_raises_past_32_bits(spark):
-    """The cache build's assert_true guard fires for ids past 2^32
-    instead of letting packed keys collide silently."""
-    df = spark.createDataFrame([(2**32 + 1, 1)], "src LONG, dst LONG")
-    guarded = df.where(
-        F.assert_true(
-            (F.col("src") >= 0)
-            & (F.col("src") <= _UV_MASK)
-            & (F.col("dst") >= 0)
-            & (F.col("dst") <= _UV_MASK),
-            F.lit("node id exceeds the 32-bit _pack_uv envelope"),
-        ).isNull()
-    )
-    with pytest.raises(Exception, match="32-bit _pack_uv envelope"):
-        guarded.collect()
-
-
-def test_two_level_assign_k_param_matches_counted(spark):
-    """two_level_assign(k=...) short-circuits the count job; passing
-    the true k must give the identical assignment as omitting it."""
-    from mathorcup_spark.catalog import load
-    from mathorcup_spark.functions.similarity import (
-        learned_centroids,
-        two_level_assign,
-        unit_embeddings,
-    )
-
-    unit = unit_embeddings(load(spark, SF_DIR, "embeddings"))
-    cents = learned_centroids(spark, unit, k=8)
-    a = two_level_assign(spark, unit, cents).orderBy("vec_id").collect()
-    b = two_level_assign(spark, unit, cents, k=8).orderBy("vec_id").collect()
-    assert [(r["vec_id"], r["cent_id"]) for r in a] == [
-        (r["vec_id"], r["cent_id"]) for r in b
-    ]

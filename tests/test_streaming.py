@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mathorcup_spark import registry
 from mathorcup_spark.streaming import windows as sw
 
 SF = "/root/testdata/sf0.001"
@@ -380,3 +381,23 @@ def test_streaming_dedup_checkpoint_restart_matches_batch(
         .count()
     )
     assert recurring > 0, "feed split produced no cross-restart duplicates"
+
+
+def test_st_stateful_suite_self_asserts(spark):
+    """The suite raises on any stream/batch mismatch; a green return
+    must carry match=1 on every check."""
+    registry._bootstrap()
+    rows = registry.REGISTRY["st_stateful_suite"].fn(spark, SF).collect()
+    assert {r["check"] for r in rows} == {
+        "apply_in_pandas_with_state",
+        "tumbling_readstream",
+        "checkpoint_restart",
+        "index_ingest_convergence",
+        "index_ingest_probe_parity",
+        "ann_ingest_convergence",
+        "ann_ingest_probe_parity",
+        "stream_stream_join",
+        "verdict_ingest_maintenance",
+        "ewma_stateful_restatement",
+    }
+    assert all(r["match"] == 1 and r["n_mismatch"] == 0 for r in rows)

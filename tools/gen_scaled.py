@@ -30,12 +30,8 @@ from mathorcup_spark.catalog import load
 from mathorcup_spark.session import get_spark
 
 
-def main() -> None:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else ".data/sf1"
-    n = int(sys.argv[3]) if len(sys.argv) > 3 else 10
-    spark = get_spark("gen_scaled")
-
+def build(spark, src: str, out: str, n: int) -> None:
+    """Write the ``n``-copy key-shifted replica of ``src`` under ``out``."""
     # stride = max + 1: shifting by max alone collides the boundary
     # key of each copy with the next copy's first key (one duplicate
     # id per copy — 9 dup vec_ids at x10, caught by
@@ -99,6 +95,14 @@ def main() -> None:
         ),
     )
     replicate("embeddings", {"vec_id": "vec"})
+
+
+def main() -> None:
+    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    out = sys.argv[2] if len(sys.argv) > 2 else ".data/sf1"
+    n = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+    spark = get_spark("gen_scaled")
+    build(spark, src, out, n)
     spark.stop()
 
 
