@@ -22,7 +22,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import DEC, REGISTRY, register
+from ..registry import DEC, REGISTRY, check_rows, oracle_checks, register
 from ..session import local_rows
 
 # Multi-table LSH: single-table sign-LSH has poor recall on weakly
@@ -493,6 +493,10 @@ def _register_lsh_index_ann() -> None:
 _register_lsh_index_ann()
 
 
+# n_keys SQL of the learned-index check rows: query batch, corpus
+_SQL_N_QUERIES = "(SELECT count(*) FROM embeddings WHERE vec_id < 10)"
+_SQL_N_CORPUS = "(SELECT count(*) FROM embeddings)"
+
 # canonical |embeddings| where the kmeans-vs-disjoint margin was
 # measured (sf0.001/sf0.01 share 500; sf0.1 is 2000) — see the
 # kmeans_ge_disjoint_seeding comment below
@@ -501,17 +505,11 @@ _KMEANS_MEASURED_N = {500, 2000}
 
 @register(
     "ml_kmeans_ivf_ann",
-    oracle=f"""
-    SELECT 'kmeans_recall_floor' AS "check",
-           CAST((SELECT count(*) FROM embeddings WHERE vec_id < 10)
-             AS BIGINT) AS n_keys,
-           CAST(0 AS BIGINT) AS n_mismatch, CAST(1 AS BIGINT) AS ok
-    UNION ALL
-    SELECT 'kmeans_ge_disjoint_seeding', {K_CENTROIDS}, 0, 1
-    UNION ALL
-    SELECT 'seeded_anchor_floor',
-           (SELECT CAST(count(*) AS BIGINT) FROM embeddings), 0, 1
-    """,
+    oracle=oracle_checks([
+        ("kmeans_recall_floor", _SQL_N_QUERIES),
+        ("kmeans_ge_disjoint_seeding", str(K_CENTROIDS)),
+        ("seeded_anchor_floor", _SQL_N_CORPUS),
+    ]),
     doc="The production IVF index: MLlib KMeans centroids feeding the "
     "SAME inverted-file probe as sim_ivf_ann (_ivf_topk — only the "
     "cents frame changes, exactly the swap sim_ivf_ann's doc "
@@ -520,7 +518,7 @@ _KMEANS_MEASURED_N = {500, 2000}
     "actual cluster structure, so their cells are tighter and the "
     "2-probe recall should match or beat the seeded variant's. "
     "Output is the measurement as driver-verified check rows "
-    "(HASH-green via the st_stateful self-asserted pattern, judge "
+    "(HASH-green through the registry's check-row primitive, judge "
     "r6 item 1): the fn computes recall@5 against the exact "
     "sim_cosine_topk baseline for 'kmeans_ivf', 'seeded_ivf', and "
     "'seeded_ivf_disjoint', then RAISES unless kmeans recall ≥ 0.25 "
@@ -603,11 +601,12 @@ def ml_kmeans_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(fair_recall)
         .collect()
     }
+    slack = 0.02 if n_corpus in _KMEANS_MEASURED_N else 0.15
     checks = [
         (
             "kmeans_recall_floor",
             n_queries,
-            recalls["kmeans_ivf"] >= 0.25,
+            {"kmeans_ivf >= 0.25": recalls["kmeans_ivf"] >= 0.25},
         ),
         (
             # learned centroids must not LOSE to arbitrary seeding —
@@ -630,25 +629,20 @@ def ml_kmeans_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             # floor; the 0.25 absolute recall floor applies always.
             "kmeans_ge_disjoint_seeding",
             K_CENTROIDS,
-            recalls["kmeans_ivf"]
-            >= recalls["seeded_ivf_disjoint"]
-            - (0.02 if n_corpus in _KMEANS_MEASURED_N else 0.15),
+            {
+                f"kmeans_ivf >= seeded_ivf_disjoint - {slack}": (
+                    recalls["kmeans_ivf"]
+                    >= recalls["seeded_ivf_disjoint"] - slack
+                )
+            },
         ),
         (
             "seeded_anchor_floor",
             n_corpus,
-            recalls["seeded_ivf"] >= 0.5,
+            {"seeded_ivf >= 0.5": recalls["seeded_ivf"] >= 0.5},
         ),
     ]
-    fails = [c for c, _, ok in checks if not ok]
-    if fails:
-        raise RuntimeError(
-            f"ml_kmeans_ivf_ann recall checks failed {fails}: {recalls}"
-        )
-    return local_rows(spark,
-        [(c, n, 0, 1) for c, n, _ in checks],
-        "check string, n_keys long, n_mismatch long, ok long",
-    )
+    return check_rows(spark, "ml_kmeans_ivf_ann", checks, recalls)
 
 
 @register(
@@ -1464,18 +1458,12 @@ def learned_centroids(
 
 @register(
     "d_semantic_dedup_learned",
-    oracle=f"""
-    SELECT 'all_assigned' AS "check",
-           (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_keys,
-           CAST(0 AS BIGINT) AS n_mismatch, CAST(1 AS BIGINT) AS ok
-    UNION ALL
-    SELECT 'survivors_cover_clusters', {_SEMDEDUP_K_SQL}, 0, 1
-    UNION ALL
-    SELECT 'survivor_agreement_floor',
-           (SELECT count(*) FROM embeddings), 0, 1
-    UNION ALL
-    SELECT 'dup_cos_ge_tau', {int(SEMDEDUP_TAU * 100)}, 0, 1
-    """,
+    oracle=oracle_checks([
+        ("all_assigned", _SQL_N_CORPUS),
+        ("survivors_cover_clusters", _SEMDEDUP_K_SQL),
+        ("survivor_agreement_floor", _SQL_N_CORPUS),
+        ("dup_cos_ge_tau", str(int(SEMDEDUP_TAU * 100))),
+    ]),
     doc="SemDeDup with LEARNED centroids (judge r7 item 2) — the "
     "production face of d_semantic_dedup: spherical MLlib KMeans "
     "(seed 42, centers re-normalized onto the sphere) swapped into "
@@ -1488,9 +1476,9 @@ def learned_centroids(
     "locate in the same cell far more often than under arbitrary "
     "first-K seeding (measured: 2000-vector sf0.1 finds 916 dups "
     "learned vs 759 seeded). A seeded fit is not SQL-replayable, "
-    "so the driver row is the st_stateful self-asserted check-row "
-    "pattern: the fn RAISES unless (a) every vector is assigned "
-    "exactly once (all_assigned: |asg| == |embeddings|), (b) each "
+    "so the driver row is a self-asserted check row (the "
+    "registry's check-row primitive): the fn RAISES unless (a) "
+    "every vector is assigned exactly once (all_assigned: |asg| == |embeddings|), (b) each "
     "non-empty cluster's earliest member survives and survivor "
     "count stays within [clusters_used, N] (survivors_cover_"
     "clusters), (c) the survivor verdict agrees with the fully "
@@ -1571,41 +1559,26 @@ def d_semantic_dedup_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     first_per_cluster_surv = int(stats["first_surv_bad"] or 0)
     checks = [
-        (
-            "all_assigned",
-            n_corpus,
-            int(stats["n_assigned"]) == n_corpus
-            and int(stats["n_distinct"]) == n_corpus,
-        ),
-        (
-            "survivors_cover_clusters",
-            k,
-            first_per_cluster_surv == 0
-            and int(stats["k_used"])
+        ("all_assigned", n_corpus, {
+            "n_assigned == N": int(stats["n_assigned"]) == n_corpus,
+            "n_distinct == N": int(stats["n_distinct"]) == n_corpus,
+        }),
+        ("survivors_cover_clusters", k, {
+            "first_surv_bad == 0": first_per_cluster_surv == 0,
+            "k_used <= survivors <= N": int(stats["k_used"])
             <= int(stats["survivors"])
             <= n_corpus,
-        ),
-        (
-            "survivor_agreement_floor",
-            n_corpus,
-            float(stats["agree"]) >= 0.5,
-        ),
-        (
-            "dup_cos_ge_tau",
-            int(SEMDEDUP_TAU * 100),
-            int(stats["n_dups"]) == 0
+        }),
+        ("survivor_agreement_floor", n_corpus, {
+            "agree >= 0.5": float(stats["agree"]) >= 0.5,
+        }),
+        ("dup_cos_ge_tau", int(SEMDEDUP_TAU * 100), {
+            "min_dup_cos >= tau": int(stats["n_dups"]) == 0
             or float(stats["min_dup_cos"]) >= SEMDEDUP_TAU,
-        ),
+        }),
     ]
-    fails = [c for c, _, ok in checks if not ok]
-    if fails:
-        raise RuntimeError(
-            f"d_semantic_dedup_learned checks failed {fails}: "
-            f"{stats.asDict()}"
-        )
-    return local_rows(spark,
-        [(c, n, 0, 1) for c, n, _ in checks],
-        "check string, n_keys long, n_mismatch long, ok long",
+    return check_rows(
+        spark, "d_semantic_dedup_learned", checks, stats.asDict()
     )
 
 
@@ -1970,15 +1943,11 @@ def cached_residual_codebooks(
 
 @register(
     "sim_pq_quantize_learned",
-    oracle=f"""
-    SELECT 'all_coded' AS "check",
-           (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_keys,
-           CAST(0 AS BIGINT) AS n_mismatch, CAST(1 AS BIGINT) AS ok
-    UNION ALL
-    SELECT 'learned_beats_first_k', {PQ_M * PQ_K}, 0, 1
-    UNION ALL
-    SELECT 'code_range', {PQ_K}, 0, 1
-    """,
+    oracle=oracle_checks([
+        ("all_coded", _SQL_N_CORPUS),
+        ("learned_beats_first_k", str(PQ_M * PQ_K)),
+        ("code_range", str(PQ_K)),
+    ]),
     doc="Product quantization with LEARNED per-subspace codebooks "
     "(judge r7 missing #1, PQ half) — the production face of "
     "sim_pq_quantize: 8 independent KMeans fits (one per subspace, "
@@ -2021,27 +1990,18 @@ def sim_pq_quantize_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     det_rmse = float(det.agg(F.avg("recon_rmse")).first()[0])
     checks = [
-        ("all_coded", n_corpus, int(ls["n"]) == n_corpus),
-        (
-            "learned_beats_first_k",
-            PQ_M * PQ_K,
-            float(ls["rmse"]) <= det_rmse + 0.02,
-        ),
-        (
-            "code_range",
-            PQ_K,
-            0 <= int(ls["lo"]) and int(ls["hi"]) < PQ_K ** PQ_M,
-        ),
+        ("all_coded", n_corpus, {"n == N": int(ls["n"]) == n_corpus}),
+        ("learned_beats_first_k", PQ_M * PQ_K, {
+            "rmse <= det_rmse + 0.02": float(ls["rmse"]) <= det_rmse + 0.02,
+        }),
+        ("code_range", PQ_K, {
+            "0 <= lo and hi < K^M": 0 <= int(ls["lo"])
+            and int(ls["hi"]) < PQ_K ** PQ_M,
+        }),
     ]
-    fails = [c for c, _, ok in checks if not ok]
-    if fails:
-        raise RuntimeError(
-            f"sim_pq_quantize_learned checks failed {fails}: "
-            f"learned_rmse={ls['rmse']}, det_rmse={det_rmse}"
-        )
-    return local_rows(spark,
-        [(c, n, 0, 1) for c, n, _ in checks],
-        "check string, n_keys long, n_mismatch long, ok long",
+    return check_rows(
+        spark, "sim_pq_quantize_learned", checks,
+        {**ls.asDict(), "det_rmse": det_rmse},
     )
 
 
@@ -2462,15 +2422,10 @@ def _exact_l2_top5(v: DataFrame) -> DataFrame:
 def _register_ivf_pq_rerank_learned() -> None:
     @register(
         "sim_ivf_pq_rerank_learned",
-        oracle="""
-        SELECT 'rerank_dominates_adc' AS "check",
-               (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-                WHERE vec_id < 10) AS n_keys,
-               CAST(0 AS BIGINT) AS n_mismatch, CAST(1 AS BIGINT) AS ok
-        UNION ALL
-        SELECT 'rerank_recall_floor',
-               (SELECT CAST(count(*) AS BIGINT) FROM embeddings), 0, 1
-        """,
+        oracle=oracle_checks([
+            ("rerank_dominates_adc", _SQL_N_QUERIES),
+            ("rerank_recall_floor", _SQL_N_CORPUS),
+        ]),
         doc="The PRODUCTION two-stage IVF-PQ ANN (judge r8 item 7, "
         "quality face): learned coarse cells (MLlib KMeans on the "
         "raw vectors, k = ivfpq_k(N) growing with the corpus so cell "
@@ -2577,22 +2532,15 @@ def _register_ivf_pq_rerank_learned() -> None:
         rr_hits = int(cnts["rr_hits"] or 0)
         n_queries = int(cnts["n_queries"] or 0)
         checks = [
-            ("rerank_dominates_adc", n_queries, rr_hits >= adc_hits),
-            (
-                "rerank_recall_floor",
-                n_corpus,
-                rr_hits / n_truth >= 0.4,
-            ),
+            ("rerank_dominates_adc", n_queries, {
+                "rr_hits >= adc_hits": rr_hits >= adc_hits,
+            }),
+            ("rerank_recall_floor", n_corpus, {
+                "rr_hits / n_truth >= 0.4": rr_hits / n_truth >= 0.4,
+            }),
         ]
-        fails = [c for c, _, ok in checks if not ok]
-        if fails:
-            raise RuntimeError(
-                f"sim_ivf_pq_rerank_learned checks failed {fails}: "
-                f"adc={adc_hits}/{n_truth} rerank={rr_hits}/{n_truth}"
-            )
-        return local_rows(spark,
-            [(c, n, 0, 1) for c, n, _ in checks],
-            "check string, n_keys long, n_mismatch long, ok long",
+        return check_rows(
+            spark, "sim_ivf_pq_rerank_learned", checks, cnts.asDict()
         )
 
 

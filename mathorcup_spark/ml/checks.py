@@ -1,56 +1,45 @@
-"""Self-asserted check-row queries for the MLlib fits (judge r8
-item 3: the registry's last rows-only entries become oracle-covered).
+"""Self-asserted check-row queries for the MLlib fits.
 
 A seeded MLlib fit has no cross-engine value oracle — DuckDB cannot
-re-run Word2Vec — so each fit is verified the way ``ml_pipeline_suite``
-already verifies it for the driver surface (the st_stateful
-self-asserted-check-row pattern): the query runs the FULL pipeline
-(``mathorcup_spark.ml.pipelines`` keeps the natural-output functions
-as the user-facing library API), asserts its quality/consistency
-invariants, RAISES on any violation, and returns one
-``(check, n_keys, n_mismatch, ok)`` row whose ``n_keys`` the DuckDB
-oracle re-derives INDEPENDENTLY from the source tables and whose
-``ok`` it pins to 1 — a drifted or broken fit cannot stay green.
+re-run Word2Vec — so each fit is a member check: it runs the FULL
+pipeline (``mathorcup_spark.ml.pipelines`` keeps the natural-output
+functions as the user-facing library API) and returns ``(n_keys,
+{condition: held})`` for its quality/consistency invariants. The
+registry's check-row primitive (``registry.register_check`` /
+``check_rows`` / ``oracle_checks``) turns that into one ``(check,
+n_keys, n_mismatch, ok)`` row: the query RAISES on any violated
+condition, and the DuckDB oracle re-derives ``n_keys`` INDEPENDENTLY
+from the source tables and pins ``ok`` to 1 — a drifted or broken fit
+cannot stay green.
 
 ``ml_pipeline_suite`` (operators/suites.py) composes the same member
-checks into one driver row; the logic lives here once.
+checks, and their ``n_keys`` SQL from ``MEMBER_CHECKS``, into one
+driver row; the logic lives here once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import register
+from ..registry import register_check
 from . import pipelines as P
-from ..session import local_rows
 
-_CHECK_SCHEMA = "check string, n_keys long, n_mismatch long, ok long"
-
-# n_keys re-derivations shared by the per-query oracles and the suite
-_SQL_JC = (
-    "(SELECT CAST(count(*) AS BIGINT) FROM lineitem"
-    " JOIN part ON l_partkey = p_partkey)"
-)
+# n_keys re-derivations (scalar SQL) shared by the per-query oracles
+# and ml_pipeline_suite's
+_SQL_JC = "(SELECT count(*) FROM lineitem JOIN part ON l_partkey = p_partkey)"
 _SQL_VOCAB = (
-    "(SELECT CAST((SELECT count(DISTINCT p_brand) FROM part)"
+    "((SELECT count(DISTINCT p_brand) FROM part)"
     " + (SELECT count(DISTINCT p_type) FROM part)"
-    " + (SELECT count(DISTINCT p_size) FROM part) AS BIGINT))"
+    " + (SELECT count(DISTINCT p_size) FROM part))"
 )
-_SQL_CUST = "(SELECT CAST(count(*) AS BIGINT) FROM customer)"
+_SQL_CUST = "(SELECT count(*) FROM customer)"
 _SQL_ALS = (
-    "(SELECT CAST(least(count(DISTINCT o_custkey), 100) * 3 AS BIGINT)"
+    "(SELECT least(count(DISTINCT o_custkey), 100) * 3"
     " FROM orders JOIN lineitem ON l_orderkey = o_orderkey)"
 )
-
-
-def _check_oracle(name: str, n_keys_sql: str) -> str:
-    return (
-        f"SELECT '{name}' AS \"check\", {n_keys_sql} AS n_keys, "
-        "CAST(0 AS BIGINT) AS n_mismatch, CAST(1 AS BIGINT) AS ok"
-    )
 
 
 def _jc(spark: SparkSession, sf_dir: str) -> int:
@@ -248,7 +237,7 @@ def check_als_recommender(
     }
 
 
-# --- registered check-row queries --------------------------------------------
+# --- member table + registered check-row queries ---------------------------
 
 MEMBER_CHECKS = {
     "word2vec": (check_word2vec, _SQL_VOCAB),
@@ -256,39 +245,15 @@ MEMBER_CHECKS = {
     "logreg_classifier": (check_logreg_classifier, _SQL_JC),
     "multitask_bundle": (check_multitask_bundle, _SQL_JC),
     "scaler": (check_scaler, _SQL_CUST),
-    "train_val_select": (check_train_val_select, "CAST(2 AS BIGINT)"),
-    "checkpoint_roundtrip": (
-        check_checkpoint_roundtrip,
-        "CAST(1 AS BIGINT)",
-    ),
+    "train_val_select": (check_train_val_select, "2"),
+    "checkpoint_roundtrip": (check_checkpoint_roundtrip, "1"),
     "als_recommender": (check_als_recommender, _SQL_ALS),
 }
 
 
-def _check_row(
-    spark: SparkSession, name: str, n_keys: int, conds: dict
-) -> DataFrame:
-    bad = [k for k, v in conds.items() if not v]
-    if bad:
-        raise RuntimeError(f"{name} check failures: {bad}")
-    return local_rows(spark, [(name, int(n_keys), 0, 1)], _CHECK_SCHEMA)
-
-
-def _register_check(query_name: str, member: str, doc: str, tags: tuple):
-    fn_check, n_keys_sql = MEMBER_CHECKS[member]
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        n_keys, conds = fn_check(spark, sf_dir)
-        return _check_row(spark, member, n_keys, conds)
-
-    fn.__name__ = query_name
-    register(query_name, oracle=_check_oracle(member, n_keys_sql),
-             doc=doc, tags=tags)(fn)
-
-
 _CHECK_DOC_TAIL = (
-    " HASH-verified via the self-asserted check-row pattern (judge r8 "
-    "item 3): the full pipeline runs (natural-output API: "
+    " HASH-verified through the registry's check-row primitive "
+    "(register_check): the full pipeline runs (natural-output API: "
     "mathorcup_spark.ml.pipelines), the fn RAISES unless the "
     "invariants hold, and the returned (check, n_keys, n_mismatch, "
     "ok) row is pinned by a DuckDB oracle that re-derives n_keys "
@@ -296,8 +261,9 @@ _CHECK_DOC_TAIL = (
     "composed into ml_pipeline_suite's driver row."
 )
 
-_register_check(
+register_check(
     "ml_word2vec_embeddings", "word2vec",
+    *MEMBER_CHECKS["word2vec"],
     "M1: entity-embedding pretraining — the reference pretrains RGCN "
     "embeddings on the attribute co-occurrence graph "
     "(preprocess.py:25-91); the idiomatic-Spark analog is Word2Vec "
@@ -308,8 +274,9 @@ _register_check(
     + _CHECK_DOC_TAIL,
     ("M1", "ml"),
 )
-_register_check(
+register_check(
     "ml_gbt_price_regression", "gbt_regression",
+    *MEMBER_CHECKS["gbt_regression"],
     "M2: tabular price regression — reference IGANN/TEIGANN MLP "
     "(first.py:21-117) as Pipeline(StringIndexer, VectorAssembler, "
     "GBTRegressor); per-row predictions via "
@@ -319,8 +286,9 @@ _register_check(
     + _CHECK_DOC_TAIL,
     ("M2", "M7", "ml"),
 )
-_register_check(
+register_check(
     "ml_logreg_sold_classifier", "logreg_classifier",
+    *MEMBER_CHECKS["logreg_classifier"],
     "M3: binary sale-probability classifier — reference "
     "TEIGANNClassifier (second.py:18-76) as LogisticRegression on "
     "the shared features (label: item returned). Invariants: "
@@ -328,8 +296,9 @@ _register_check(
     "labels in {0,1}, nonempty proper split." + _CHECK_DOC_TAIL,
     ("M3", "ml"),
 )
-_register_check(
+register_check(
     "ml_multitask_bundle", "multitask_bundle",
+    *MEMBER_CHECKS["multitask_bundle"],
     "M4: multi-task deal prediction — reference TabNet jointly "
     "predicts sale year/month/day (classification) + price "
     "(regression) (second.py:78-117); here 2 classifiers + 1 "
@@ -339,8 +308,9 @@ _register_check(
     "prices finite, nonempty proper split." + _CHECK_DOC_TAIL,
     ("M4", "M5", "ml"),
 )
-_register_check(
+register_check(
     "ml_scaler_fit_transform", "scaler",
+    *MEMBER_CHECKS["scaler"],
     "M6: normalization as fit/transform — reference per-column "
     "std/maxmin loops with params reused at inference "
     "(src/data.py:107-125); MLlib StandardScaler + MinMaxScaler on "
@@ -350,8 +320,9 @@ _register_check(
     "a_normalize_roundtrip." + _CHECK_DOC_TAIL,
     ("M6", "ml"),
 )
-_register_check(
+register_check(
     "ml_train_validation_select", "train_val_select",
+    *MEMBER_CHECKS["train_val_select"],
     "M7: model selection — the reference keeps the best checkpoint "
     "by validation metric (first.py:79-85); MLlib "
     "TrainValidationSplit over a GBT depth grid, RMSE objective. "
@@ -359,8 +330,9 @@ _register_check(
     "the RMSE argmin." + _CHECK_DOC_TAIL,
     ("M7", "W3", "ml"),
 )
-_register_check(
+register_check(
     "ml_checkpoint_roundtrip", "checkpoint_roundtrip",
+    *MEMBER_CHECKS["checkpoint_roundtrip"],
     "S9: model checkpoint save/load roundtrip — the reference "
     "persists torch checkpoints and reloads them for inference "
     "(first.py:80-81,120); the MLlib analog is PipelineModel.save → "
@@ -372,8 +344,9 @@ _register_check(
     + _CHECK_DOC_TAIL,
     ("S9", "ml"),
 )
-_register_check(
+register_check(
     "ml_als_recommend", "als_recommender",
+    *MEMBER_CHECKS["als_recommender"],
     "Collaborative-filtering recommender: ALS matrix factorization "
     "(rank 8, 5 iterations, seeded) on the customer x part purchase-"
     "quantity matrix, then top-3 recommendations for the 100 "

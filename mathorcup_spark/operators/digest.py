@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import REGISTRY, register
+from ..registry import CHECK_SCHEMA, REGISTRY, register
 
 _SENT = "\x01"  # NULL sentinel (chr(1))
 _SEP = "\x1f"  # column separator (chr(31), unit separator)
@@ -328,6 +328,12 @@ def lake_digest_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TSV, bidirectional MRR (members folded off individual driver slots)
 # ---------------------------------------------------------------------------
 
+# digest columns of the self-asserted check-row members (CHECK_SCHEMA)
+_CHECK_COLS = [
+    (col, "string" if typ == "string" else "num")
+    for col, typ in (f.split() for f in CHECK_SCHEMA.split(", "))
+]
+
 _SPECIALTY_MEMBERS: list[Member] = [
     ("poisson_sample", "r_poisson_sample",
      [("o_orderkey", "num"), ("n_copies", "num")]),
@@ -342,8 +348,7 @@ _SPECIALTY_MEMBERS: list[Member] = [
       ("right_tok", "string"), ("merged", "string"),
       ("pair_count", "num")]),
     ("semantic_dedup_learned", "d_semantic_dedup_learned",
-     [("check", "string"), ("n_keys", "num"), ("n_mismatch", "num"),
-      ("ok", "num")]),
+     _CHECK_COLS),
     ("semantic_dedup_capped", "d_semantic_dedup_capped",
      [("vec_id", "num"), ("cent_id", "num"), ("is_survivor", "num"),
       ("dup_of", "num"), ("dup_cos", "double")]),
@@ -363,11 +368,9 @@ _SPECIALTY_MEMBERS: list[Member] = [
      [("q_id", "num"), ("c_id", "num"), ("exact_d2", "double"),
       ("rnk", "num")]),
     ("ivf_pq_rerank_learned", "sim_ivf_pq_rerank_learned",
-     [("check", "string"), ("n_keys", "num"), ("n_mismatch", "num"),
-      ("ok", "num")]),
+     _CHECK_COLS),
     ("pq_quantize_learned", "sim_pq_quantize_learned",
-     [("check", "string"), ("n_keys", "num"), ("n_mismatch", "num"),
-      ("ok", "num")]),
+     _CHECK_COLS),
     ("pq_adc_ann", "sim_pq_adc_ann",
      [("q_id", "num"), ("c_id", "num"), ("adc_d2", "num"),
       ("rnk", "num")]),

@@ -37,6 +37,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_rows
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -103,6 +105,81 @@ def oracle_davg(expr: str, alias: str) -> str:
     )
 
 
+# --- self-asserted check rows (Spark side + matching DuckDB oracle) ----------
+#
+# A result DuckDB cannot replay (a seeded sampler, an MLlib fit, a
+# learned index) is verified as one (check, n_keys, 0, 1) row per
+# check: the Spark fn RAISES unless every condition of every check
+# holds, and the oracle re-derives each n_keys from the source tables
+# and pins n_mismatch=0/ok=1, so a violated condition fails the query
+# and a drifted key count flips the driver hash.
+
+CHECK_SCHEMA = "check string, n_keys long, n_mismatch long, ok long"
+
+
+def oracle_checks(checks: list[tuple[str, str]]) -> str:
+    """DuckDB oracle matching :func:`check_rows`: one pinned row per
+    ``(check, n_keys_sql)``, ``n_keys_sql`` a scalar SQL expression."""
+    return "\nUNION ALL\n".join(
+        f"SELECT '{check}' AS \"check\", CAST({n_keys_sql} AS BIGINT) AS n_keys,"
+        " CAST(0 AS BIGINT) AS n_mismatch, CAST(1 AS BIGINT) AS ok"
+        for check, n_keys_sql in checks
+    )
+
+
+def raise_failures(
+    query: str, failures: list | dict, detail: object = None
+) -> None:
+    """The one raise site of the self-asserted checks: a RuntimeError
+    naming ``query``, its failing checks and the observed ``detail``."""
+    if failures:
+        seen = "" if detail is None else f"; observed: {detail}"
+        raise RuntimeError(f"{query} check failures: {failures}{seen}")
+
+
+def check_rows(
+    spark: SparkSession,
+    query: str,
+    checks: list[tuple[str, int, dict[str, bool]]],
+    detail: object = None,
+) -> DataFrame:
+    """``(check, n_keys, 0, 1)`` rows for ``checks`` — each a
+    ``(check, n_keys, {condition: held})`` triple — after raising
+    through :func:`raise_failures` if any condition does not hold."""
+    failures = {
+        check: bad
+        for check, _n, conds in checks
+        if (bad := [c for c, held in conds.items() if not held])
+    }
+    raise_failures(query, failures, detail)
+    return local_rows(
+        spark, [(check, int(n), 0, 1) for check, n, _ in checks], CHECK_SCHEMA
+    )
+
+
+def register_check(
+    query: str,
+    member: str,
+    fn_check: Callable[[SparkSession, str], tuple[int, dict[str, bool]]],
+    n_keys_sql: str,
+    doc: str,
+    tags: tuple[str, ...],
+) -> None:
+    """Register a single-member check query: ``fn_check`` returns
+    ``(n_keys, {condition: held})`` and the query returns its one
+    :func:`check_rows` row, pinned by ``oracle_checks([(member,
+    n_keys_sql)])``."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        n_keys, conds = fn_check(spark, sf_dir)
+        return check_rows(spark, query, [(member, n_keys, conds)])
+
+    fn.__name__ = query
+    register(
+        query, oracle=oracle_checks([(member, n_keys_sql)]), doc=doc, tags=tags
+    )(fn)
+
+
 # The correctness driver verifies a bounded number of registered
 # queries (exactly the first 50 in round 1), so the driver-facing
 # surface (__spark_entry__.queries()) is pinned to EXACTLY 50
@@ -122,13 +199,15 @@ def oracle_davg(expr: str, alias: str) -> str:
 # a_pivot_event_values, g_bidirectional_mrr) are verified MORE
 # strongly than by their former individual slots. Since round 7 the
 # surface has ZERO rows-only queries: the last three (r_seeded_suite,
-# ml_pipeline_suite, ml_kmeans_ivf_ann) adopted the st_stateful
-# pattern — self-asserted (check, n_keys, n_mismatch, ok) rows whose
-# key counts the DuckDB oracle re-derives independently and whose ok
-# flags it pins, with the Spark fn RAISING on any violated condition
-# (pinned per-SF sample checksums for the seeded RNG; metric floors +
-# exact-math/domain invariants for the MLlib fits; recall floors and
-# the beats-fair-baseline comparison for the learned IVF index).
+# ml_pipeline_suite, ml_kmeans_ivf_ann) return self-asserted check
+# rows through the one check-row primitive above (CHECK_SCHEMA,
+# oracle_checks, check_rows): key counts the DuckDB oracle re-derives
+# independently and ok flags it pins, with the Spark fn RAISING on any
+# violated condition (pinned per-SF sample checksums for the seeded
+# RNG; metric floors + exact-math/domain invariants for the MLlib
+# fits; recall floors and the beats-fair-baseline comparison for the
+# learned IVF index). st_stateful_suite keeps its own (check, n_keys,
+# n_mismatch, match) rows but raises through the same raise_failures.
 DRIVER_SURFACE: tuple[str, ...] = (
     "flagship_revenue_by_priority",
     "rel_projection_suite",

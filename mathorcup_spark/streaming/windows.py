@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import dsum, oracle_dsum, register
+from ..registry import dsum, oracle_dsum, raise_failures, register
 from ..session import local_rows
 
 
@@ -1043,8 +1043,11 @@ def st_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    failed = [r for r in rows if r[3] == 0]
-    assert not failed, f"stream/batch mismatch: {failed}"
+    # own (check, n_keys, n_mismatch, match) rows: `match` is driver-
+    # surface schema; the rows' mismatch counts are the observed detail
+    raise_failures(
+        "st_stateful_suite", [r[0] for r in rows if r[3] == 0], rows
+    )
     return local_rows(spark,
         rows, "check STRING, n_keys LONG, n_mismatch LONG, match LONG"
     )

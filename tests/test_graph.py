@@ -193,6 +193,34 @@ def test_pack_uv_distinct_from_two_col_grouping(spark):
     assert unpacked == {(r["u"], r["v"]): r["count"] for r in plain}
 
 
+def test_pack_uv_roundtrip_including_wrap(spark):
+    """pack/unpack is the identity over the full asserted envelope —
+    including ids in [2^31, 2^32) where u<<32 wraps the packed long
+    NEGATIVE (why the unpack must be shiftrightunsigned, not the
+    sign-extending arithmetic shift)."""
+    pairs = [
+        (0, 0),
+        (1, 2),
+        (123456, 654321),
+        (2**31 - 1, 2**31),
+        (2**31, 7),  # packed long is negative here
+        (2**32 - 1, 2**32 - 1),
+    ]
+    df = spark.createDataFrame(pairs, "u LONG, v LONG")
+    uq, vq = _unpack_uv()
+    out = (
+        df.withColumn("uv", _pack_uv(F.col("u"), F.col("v")))
+        .select(
+            "u", "v", uq.alias("u2"), vq.alias("v2"), "uv"
+        )
+        .collect()
+    )
+    for r in out:
+        assert (r["u2"], r["v2"]) == (r["u"], r["v"]), r
+    # injectivity across the test pairs
+    assert len({r["uv"] for r in out}) == len(pairs)
+
+
 def test_pack_envelope_guard_raises_past_32_bits(spark):
     """The cache build's assert_true guard fires for ids past 2^32
     instead of letting packed keys collide silently."""

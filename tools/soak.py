@@ -7,9 +7,13 @@ Usage: python tools/soak.py <family> [dirs...]
       The second decade of the scale-sensitive graph and heavy
       operators: each op at base_dir and at a key-shifted x10 replica
       of it (built by tools/gen_scaled.py when x10_dir has no
-      embeddings.parquet). Fails if any op's wall grows more than
-      MAX_FACTOR for 10x input: linear with headroom for shuffle and
-      fit constants, where a wedge or per-cluster blow-up shows 30-100x.
+      embeddings.parquet). Each op is warmed once at WARMUP_SF_DIR with
+      the same full-result action, as bench.py does, so the base column
+      does not pay first compile. Fails if any op's wall or executor
+      CPU grows more than MAX_FACTOR for 10x input: linear with headroom
+      for shuffle and fit constants, where a wedge or per-cluster
+      blow-up shows 30-100x. CPU is judged too because on few cores
+      wall hides work growth that CPU shows.
   index   [sf_dir ...]   (defaults: whichever of sf0.01, sf0.1 and
       .data/sf1 exist)
       The persisted MinHash index per sf dir: built fresh over the first
@@ -104,26 +108,31 @@ def decade(s: Soak, base: str = ".data/sf1", big: str = ".data/sf10") -> int:
         build(s.spark, base, big, 10)
     print(
         f"| query | {base} wall s | cpu s | {big} wall s | cpu s |"
-        " factor (10x input) |\n|---|---|---|---|---|---|"
+        " wall factor | cpu factor |\n|---|---|---|---|---|---|---|"
     )
     failures = []
     for name in DECADE_OPS:
+        s.query(name, WARMUP_SF_DIR)  # first compile, outside the table
         bw, bc = s.query(name, base)
         xw, xc = s.query(name, big)
-        factor = xw / bw
+        wall_f = xw / bw
+        cpu_f = xc / bc if bc else float("nan")
         flag = ""
-        if factor > MAX_FACTOR:
+        if max(wall_f, cpu_f) > MAX_FACTOR:
             flag = " **SUPERLINEAR**"
-            failures.append(f"{name}: {factor:.1f}x")
+            failures.append(f"{name}: wall {wall_f:.1f}x, cpu {cpu_f:.1f}x")
         print(
             f"| `{name}` | {bw:.1f} | {bc:.1f} | {xw:.1f} | {xc:.1f} |"
-            f" {factor:.1f}x{flag} |",
+            f" {wall_f:.1f}x | {cpu_f:.1f}x{flag} |",
             flush=True,
         )
     if failures:
         print(f"\nFAIL superlinear second decade: {failures}")
         return 1
-    print(f"\nall {len(DECADE_OPS)} ops <= {MAX_FACTOR}x for 10x input")
+    print(
+        f"\nall {len(DECADE_OPS)} ops <= {MAX_FACTOR}x wall and CPU"
+        " for 10x input"
+    )
     return 0
 
 
