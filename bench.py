@@ -523,16 +523,22 @@ def _ingest_bench(spark) -> list[dict]:
     from mathorcup_spark.sources.verdicts import (
         append_to_verdict_table,
         create_verdict_table,
+        write_id_ordered_arrivals,
     )
 
     results: list[dict] = []
     work = tempfile.mkdtemp(prefix="bench_ingest_")
 
-    def _run_loop(query, arrivals_df, init, ingest, n_rows, n_files=4):
+    def _run_loop(query, arrivals_df, init, ingest, n_rows, n_files=4, write=None):
+        """``write(arrivals_df, path, n_files)`` lays out the arrival
+        files; by default they are ``n_files`` random repartitions."""
         arrivals = os.path.join(work, f"{query}_arrivals")
-        arrivals_df.repartition(n_files).write.mode("overwrite").parquet(
-            arrivals
-        )
+        if write is None:
+            arrivals_df.repartition(n_files).write.mode("overwrite").parquet(
+                arrivals
+            )
+        else:
+            write(arrivals_df, arrivals, n_files)
         schema = spark.read.parquet(arrivals).schema
         init()
         t0 = time.perf_counter()
@@ -674,6 +680,8 @@ def _ingest_bench(spark) -> list[dict]:
                 lambda: create_verdict_table(spark, d_initial, v_live),
                 v_ingest,
                 n_rest,
+                # the append contract: ascending doc_id ranges
+                write=write_id_ordered_arrivals,
             )
         )
 

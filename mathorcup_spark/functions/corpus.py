@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
+from ..session import run_concurrently
 from .dedup import _norm_text
 from .text import _TOKEN_RE, STOPWORDS, _stop_hits, _ws_words
 
@@ -648,32 +649,14 @@ def _register_corpus_v5() -> None:
             # threads (guide §2.6) — the check still gates the
             # return, it just no longer serializes before the
             # consume job.
-            from pyspark import InheritableThread
-
-            box: dict = {}
-
-            def _sig():
-                try:
-                    box["got"] = verdict_sig(maintained)
-                except BaseException as exc:
-                    box["err"] = exc
-
-            # InheritableThread: inherits job group/description under
-            # pinned-thread mode and releases its pinned JVM thread on
-            # exit (ADVICE r11)
-            t_sig = InheritableThread(target=_sig)
-            t_sig.start()
-            try:
-                result = consume_verdicts(spark, maintained).localCheckpoint(
+            result, got = run_concurrently(
+                lambda: consume_verdicts(spark, maintained).localCheckpoint(
                     eager=True
-                )
-            finally:
-                t_sig.join()
-            got = box.get("got")
+                ),
+                lambda: verdict_sig(maintained),
+            )
             want = (n0 + n1 + n2, c0 + c1 + c2)
-            if "err" in box or got != want:
-                if "err" in box:
-                    raise box["err"]
+            if got != want:
                 raise RuntimeError(
                     f"incremental verdict table read-back diverged from "
                     f"what maintenance wrote: read (rows, checksum)={got}, "

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
+from .similarity import bucket_sql, lsh_bands
+
 
 def _norm_text():
     return F.lower(F.trim(F.regexp_replace("text", "\\s+", " ")))
@@ -681,27 +683,13 @@ NEARDUP_TAU = 0.35
 ND_BITS = 8
 ND_TABLES = 6
 
-# DuckDB mirror of the Spark bucket expression below (same
-# deterministic multiplicative-hash hyperplanes as similarity.py,
-# global plane index j = t*ND_BITS + b).
-_ND_BUCKET_SQL = f"""
-      list_reduce(
-        list_transform(range(0, {ND_BITS}), b -> CASE WHEN
-          list_sum(list_transform(range(0, 64), d ->
-            CAST(embedding[d + 1] AS DOUBLE) *
-            (CAST((((t * {ND_BITS} + b) * 64 + d) * 2654435761 % 1000003) AS DOUBLE)
-             / 1000003 - 0.5)))
-          > 0 THEN (1 << b) ELSE 0 END),
-        (a, b) -> a | b)
-"""
-
 
 def _register_embedding_neardup() -> None:
     @register(
         "d_embedding_neardup",
         oracle=f"""
         WITH b AS (
-          SELECT vec_id, t, {_ND_BUCKET_SQL} AS bucket,
+          SELECT vec_id, t, {bucket_sql(ND_BITS)} AS bucket,
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
           FROM embeddings, range(0, {ND_TABLES}) r(t)
         ), n AS (
@@ -735,37 +723,10 @@ def _register_embedding_neardup() -> None:
         tags=("dedup", "embedding", "lsh"),
     )
     def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .similarity import plane_dots
-
         emb = load(spark, sf_dir, "embeddings")
-
-        # 48 hyperplane dots per vector in ONE narrow Arrow stage
-        # (plane_dots): no explode row-multiplication, no groupBy
-        # shuffle; dimension-ordered accumulation keeps the sums
-        # float-identical to the oracle's sequential list_sum fold.
-        dots = plane_dots(emb, ND_TABLES * ND_BITS)
-
-        # bucket of table t = OR of sign bits; the bits are disjoint
-        # powers of two so plain + is the OR — pure codegen expressions
-        def bucket_expr(t: int):
-            e = F.lit(0)
-            for b in range(ND_BITS):
-                e = e + F.when(
-                    F.col(f"p{t * ND_BITS + b}") > 0, F.lit(1 << b)
-                ).otherwise(0)
-            return e
-
-        tables = dots.select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(t).alias("t"), bucket_expr(t).alias("bucket"))
-                        for t in range(ND_TABLES)
-                    ]
-                )
-            ).alias("tb"),
-        ).select("vec_id", "tb.t", "tb.bucket")
+        # 48 hyperplane dots per vector in ONE narrow Arrow stage, then
+        # the per-table sign-bit buckets (lsh_bands)
+        tables = lsh_bands(emb, ND_TABLES, ND_BITS)
 
         a = tables.select(F.col("vec_id").alias("vec_a"), "t", "bucket")
         c = tables.select(

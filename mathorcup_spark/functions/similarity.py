@@ -1,18 +1,33 @@
 """Vector similarity search over embedding columns (SURVEY.md §2.13):
-brute-force cosine top-k as the exactness baseline, and a
-random-hyperplane LSH bucketed variant as the scale path.
+exact cosine top-k, sign-LSH (single- and multi-probe, inline and
+persisted), IVF, int8 / matryoshka / product quantization, PQ-ADC and
+IVF-PQ search, and SemDeDup semantic dedup, each as a pure DataFrame
+plan beside its DuckDB oracle.
 
-Both are pure DataFrame plans: the dot products are ``zip_with`` +
-``aggregate`` HOFs on ``array<float>`` columns (JVM-side), the query
-side broadcasts, and ranking is a per-query window. The LSH variant
-replaces the all-candidates crossJoin with an equi-join on bucket
-signatures — the move that keeps ANN sub-quadratic at 100 TB.
+The queries share one copy of each building block, so two queries that
+must agree (an index and the inline query it answers for, a query and
+its oracle) agree by construction:
 
-The hyperplanes are generated by a deterministic integer-hash formula
-(not an RNG), so the LSH variant is oracle-checkable end-to-end —
-rare for an ANN implementation and deliberately chosen over MLlib's
-``BucketedRandomProjectionLSH`` (whose seeded planes can't be
-reproduced in SQL).
+- banding: :func:`lsh_bands` gives every vector's ``(t, bucket)`` per
+  table from deterministic hyperplanes (:func:`plane_dots`), and
+  :func:`bucket_sql` is the same bucket in DuckDB SQL. They serve the
+  4x4 ANN index here and in ``sources/ann_index.py`` and the 6x8
+  near-dup index in ``functions/dedup.py``.
+- exact-cosine rescore: :func:`_side` carries each vector's norm as a
+  column, :func:`_cosine` divides the dot by the norms and rounds last,
+  :func:`cosine_topk` is the per-query window (cosine desc, c_id asc),
+  and :func:`rescore_topk` joins the vectors onto ``(q_id, c_id)``
+  candidates and ranks them.
+- the seeded KMeans fit :func:`_seeded_kmeans` (seed 42, 20
+  iterations, id-stride subsample past ``SEMDEDUP_FIT_MAX``) under the
+  learned centroids, coarse cells and PQ codebooks.
+- the PQ subvector split :func:`_split_subvectors` under the corpus,
+  residual and query-residual subvector frames.
+
+The hyperplanes come from an integer-hash formula (not an RNG), so the
+LSH queries are oracle-checkable end to end, which MLlib's
+``BucketedRandomProjectionLSH`` (seeded planes SQL cannot reproduce)
+would not be.
 """
 
 from __future__ import annotations
@@ -23,19 +38,17 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import DEC, REGISTRY, check_rows, oracle_checks, register
-from ..session import local_rows
+from ..session import local_rows, run_concurrently
 
 # Multi-table LSH: single-table sign-LSH has poor recall on weakly
 # clustered data; OR-ing T tables of B bits each trades candidates
 # for recall (collision prob 1-(1-p^B)^T).
 N_TABLES = 4
 N_BITS = 4
-_A = 2654435761
-_M = 1000003
-
 # hyperplane component d of global plane j, in (-0.5, 0.5):
 #   h(j, d) = ((j*64 + d) * A % M) / M - 0.5
-_PLANE_SQL = "(CAST(((j * 64 + d) * 2654435761 % 1000003) AS DOUBLE) / 1000003 - 0.5)"
+_A = 2654435761
+_M = 1000003
 
 
 def plane_dots(
@@ -55,7 +68,7 @@ def plane_dots(
     accumulates dimension-by-dimension in float64, preserving the
     d=0..dims-1 summation order of the DuckDB oracle's sequential
     ``list_sum`` fold, so the signs (and therefore LSH buckets) are
-    bit-identical cross-engine. Weight formula matches ``_PLANE_SQL``
+    bit-identical cross-engine. Weight formula matches ``bucket_sql``
     exactly: integer products stay < 2^53 (n_planes*64*A ~ 8e12), so
     int64 arithmetic agrees with Spark's BIGINT and DuckDB's.
     """
@@ -112,17 +125,86 @@ def _norm(a):
     )
 
 
-# bucket of table t (SQL): same formula, j = t*N_BITS + b
-_BUCKET_SQL = f"""
+def lsh_bands(emb: DataFrame, n_tables: int, n_bits: int) -> DataFrame:
+    """(vec_id, t, bucket) for every vector of ``emb`` and each of
+    ``n_tables`` tables: bit b of table t's bucket is the sign of the
+    vector's dot with plane ``t * n_bits + b`` (:func:`plane_dots`, one
+    Arrow stage). The bits are disjoint powers of two, so + is the OR,
+    pure codegen arithmetic. :func:`bucket_sql` is the DuckDB twin."""
+    dots = plane_dots(emb, n_tables * n_bits)
+
+    def bucket(t: int):
+        e = F.lit(0)
+        for b in range(n_bits):
+            e = e + F.when(
+                F.col(f"p{t * n_bits + b}") > 0, F.lit(1 << b)
+            ).otherwise(0)
+        return e
+
+    return dots.select(
+        "vec_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(t).alias("t"), bucket(t).alias("bucket"))
+                    for t in range(n_tables)
+                ]
+            )
+        ).alias("tb"),
+    ).select("vec_id", "tb.t", "tb.bucket")
+
+
+def bucket_sql(n_bits: int) -> str:
+    """DuckDB SQL for :func:`lsh_bands`' bucket of table ``t`` of the
+    row's ``embedding``: the same plane formula (j = t * n_bits + b) and
+    the same d = 0..63 summation order, so the buckets are equal."""
+    return f"""
       list_reduce(
-        list_transform(range(0, {N_BITS}), b -> CASE WHEN
+        list_transform(range(0, {n_bits}), b -> CASE WHEN
           list_sum(list_transform(range(0, 64), d ->
             CAST(embedding[d + 1] AS DOUBLE) *
-            (CAST((((t * {N_BITS} + b) * 64 + d) * 2654435761 % 1000003) AS DOUBLE)
-             / 1000003 - 0.5)))
+            (CAST((((t * {n_bits} + b) * 64 + d) * {_A} % {_M}) AS DOUBLE)
+             / {_M} - 0.5)))
           > 0 THEN (1 << b) ELSE 0 END),
         (a, b) -> a | b)
 """
+
+
+def _side(vecs: DataFrame, side: str, emb_col: str = "embedding") -> DataFrame:
+    """(<side>_id, <side>e, <side>nrm): one side ("q" or "c") of a
+    rescore, each vector with its norm carried as a column."""
+    return vecs.select(
+        F.col("vec_id").alias(f"{side}_id"), F.col(emb_col).alias(f"{side}e")
+    ).withColumn(f"{side}nrm", _norm(f"{side}e"))
+
+
+def _cosine():
+    """Exact cosine of the (qe, ce) pair over the carried norms, rounded
+    last — the formula every cosine top-k oracle replays."""
+    return F.round(_dot("qe", "ce") / (F.col("qnrm") * F.col("cnrm")), 6)
+
+
+def cosine_topk(scored: DataFrame, k: int = 5) -> DataFrame:
+    """Rank ``scored`` (q_id, c_id, cosine) per query by cosine desc,
+    then c_id, and keep the first ``k`` with their rank ``rnk``."""
+    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
+        F.col("rnk") <= k
+    )
+
+
+def rescore_topk(
+    cand: DataFrame, qv: DataFrame, cv: DataFrame, k: int = 5
+) -> DataFrame:
+    """Exact-cosine top-``k`` of the (q_id, c_id) candidate pairs: the
+    query side ``qv`` (:func:`_side` "q", broadcast) and the candidate
+    side ``cv`` (:func:`_side` "c") join on, then :func:`cosine_topk`."""
+    scored = (
+        cand.join(F.broadcast(qv), "q_id")
+        .join(cv, "c_id")
+        .select("q_id", "c_id", _cosine().alias("cosine"))
+    )
+    return cosine_topk(scored, k)
 
 
 @register(
@@ -154,36 +236,37 @@ _BUCKET_SQL = f"""
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    queries = _side(emb.filter(F.col("vec_id") < 10), "q")
+    scored = (
+        _side(emb, "c")
+        .join(F.broadcast(queries), F.col("c_id") != F.col("q_id"))
+        .select("q_id", "c_id", _cosine().alias("cosine"))
     )
-    cands = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-    cosine = F.round(
-        _dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        cands.join(F.broadcast(queries), F.col("c_id") != F.col("q_id"))
-        .select("q_id", "c_id", cosine.alias("cosine"))
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 5)
-    )
+    return cosine_topk(scored)
 
 
-@register(
-    "sim_lsh_ann",
-    oracle=f"""
+def _lsh_oracle(flip_bits: int) -> str:
+    """DuckDB oracle of :func:`_lsh_topk`: each query probes its own
+    bucket per table plus, for ``flip_bits`` > 0, the buckets with one
+    of its first ``flip_bits`` sign bits flipped (``pb`` = -1 is the
+    unflipped probe)."""
+    return f"""
     WITH b AS (
-      SELECT vec_id, t, {_BUCKET_SQL} AS bucket,
+      SELECT vec_id, t, {bucket_sql(N_BITS)} AS bucket,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       FROM embeddings, range(0, {N_TABLES}) r(t)
     ), n AS (
       SELECT vec_id, t, bucket, e, sqrt(list_dot_product(e, e)) AS nrm FROM b
+    ), probes AS (
+      SELECT vec_id AS q_id, t,
+             CASE WHEN pb = -1 THEN bucket
+                  ELSE xor(bucket, 1 << pb) END AS bucket
+      FROM n, range(-1, {flip_bits}) p(pb)
+      WHERE vec_id < 10
     ), cand AS (
-      SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS c_id
-      FROM n q JOIN n c
-        ON c.t = q.t AND c.bucket = q.bucket AND c.vec_id <> q.vec_id
-      WHERE q.vec_id < 10
+      SELECT DISTINCT p.q_id, c.vec_id AS c_id
+      FROM probes p JOIN n c
+        ON c.t = p.t AND c.bucket = p.bucket AND c.vec_id <> p.q_id
     ), scored AS (
       SELECT cand.q_id, cand.c_id,
              round(CAST(list_dot_product(q.e, c.e) AS DOUBLE)
@@ -197,7 +280,50 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      ORDER BY cosine DESC, c_id) AS BIGINT) AS rnk
       FROM scored)
     SELECT q_id, c_id, cosine, rnk FROM ranked WHERE rnk <= 5
-    """,
+    """
+
+
+def _lsh_topk(spark: SparkSession, sf_dir: str, flip_bits: int) -> DataFrame:
+    """LSH top-5 for the vec_id < 10 query batch: candidates collide
+    with a query probe in some (table, bucket), exact cosine re-ranks
+    them. ``flip_bits`` as in :func:`_lsh_oracle`."""
+    emb = load(spark, sf_dir, "embeddings")
+    tables = lsh_bands(emb, N_TABLES, N_BITS)
+    # for one (q_id, t) the probe buckets differ pairwise in one bit,
+    # so the probe frame needs no dedup; cand's dropDuplicates is the
+    # one that matters (a pair colliding in several tables)
+    probes = tables.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("t").alias("qt"),
+        F.explode(
+            F.array(
+                F.col("bucket"),
+                *[
+                    F.col("bucket").bitwiseXOR(F.lit(1 << b))
+                    for b in range(flip_bits)
+                ],
+            )
+        ).alias("qb"),
+    )
+    cand = (
+        tables.select(F.col("vec_id").alias("c_id"), "t", "bucket")
+        .join(
+            F.broadcast(probes),
+            (F.col("t") == F.col("qt"))
+            & (F.col("bucket") == F.col("qb"))
+            & (F.col("c_id") != F.col("q_id")),
+        )
+        .select("q_id", "c_id")
+        .dropDuplicates()
+    )
+    return rescore_topk(
+        cand, _side(emb.filter(F.col("vec_id") < 10), "q"), _side(emb, "c")
+    )
+
+
+@register(
+    "sim_lsh_ann",
+    oracle=_lsh_oracle(0),
     doc="Multi-table LSH approximate top-k (the scale path): 4 tables × "
     "4 random-hyperplane sign bits; a pair is a candidate if it "
     "collides in ANY table (recall 1-(1-p^4)^4 vs p^16 single-table), "
@@ -209,64 +335,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "ann", "lsh"),
 )
 def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings")
-    # index build: 16 hyperplane dots per vector in one Arrow stage,
-    # then per-table bucket ids from sign bits — pure codegen bit
-    # arithmetic (disjoint powers of two, so + is the OR)
-    dots = plane_dots(emb, N_TABLES * N_BITS)
-
-    def bucket_expr(t: int):
-        e = F.lit(0)
-        for b in range(N_BITS):
-            e = e + F.when(
-                F.col(f"p{t * N_BITS + b}") > 0, F.lit(1 << b)
-            ).otherwise(0)
-        return e
-
-    tables = dots.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("t"), bucket_expr(t).alias("bucket"))
-                    for t in range(N_TABLES)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", "tb.t", "tb.bucket")
-    queries = tables.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("t").alias("qt"), F.col("bucket").alias("qb")
-    )
-    cand = (
-        tables.select(F.col("vec_id").alias("c_id"), "t", "bucket")
-        .join(
-            F.broadcast(queries),
-            (F.col("t") == F.col("qt"))
-            & (F.col("bucket") == F.col("qb"))
-            & (F.col("c_id") != F.col("q_id")),
-        )
-        .select("q_id", "c_id")
-        .dropDuplicates()
-    )
-    vecs = emb.select("vec_id", F.col("embedding").alias("e"))
-    scored = (
-        cand.join(
-            F.broadcast(vecs.withColumnRenamed("vec_id", "q_id").withColumnRenamed("e", "q_emb")),
-            "q_id",
-        )
-        .join(vecs.withColumnRenamed("vec_id", "c_id").withColumnRenamed("e", "c_emb"), "c_id")
-        .select(
-            "q_id",
-            "c_id",
-            F.round(_dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= 5
-    )
+    return _lsh_topk(spark, sf_dir, 0)
 
 
 # --- IVF (inverted-file) ANN ------------------------------------------------
@@ -374,27 +443,10 @@ def _ivf_topk(vecs: DataFrame, cents: DataFrame) -> DataFrame:
         .filter(F.col("c_id") != F.col("q_id"))
         .select("q_id", "c_id")
     )
-    scored = (
-        cand.join(
-            F.broadcast(
-                vecs.select(F.col("vec_id").alias("q_id"), F.col("e").alias("q_emb"))
-            ),
-            "q_id",
-        )
-        .join(
-            vecs.select(F.col("vec_id").alias("c_id"), F.col("e").alias("c_emb")),
-            "c_id",
-        )
-        .select(
-            "q_id",
-            "c_id",
-            F.round(_dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6)
-            .alias("cosine"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= 5
+    return rescore_topk(
+        cand,
+        _side(vecs.filter(F.col("vec_id") < 10), "q", "e"),
+        _side(vecs, "c", "e"),
     )
 
 
@@ -1426,6 +1478,24 @@ def d_semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _seeded_kmeans(train: DataFrame, col: str, k: int) -> list[list[float]]:
+    """Centers of the seeded KMeans fit (``k`` clusters, seed 42, 20
+    iterations) over the array column ``col`` of ``train`` (vec_id,
+    col, ...), in cluster-index order. Past SEMDEDUP_FIT_MAX rows the
+    fit trains on every stride-th vec_id."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    n = int(train.count())
+    if n > SEMDEDUP_FIT_MAX:
+        stride = -(-n // SEMDEDUP_FIT_MAX)
+        train = train.filter(F.col("vec_id") % stride == 0)
+    model = KMeans(k=k, seed=42, maxIter=20).fit(
+        train.select(array_to_vector(F.col(col)).alias("features"))
+    )
+    return [[float(x) for x in c] for c in model.clusterCenters()]
+
+
 def learned_centroids(
     spark: SparkSession, unit: DataFrame, k: int = K_CENTROIDS
 ) -> DataFrame:
@@ -1439,20 +1509,10 @@ def learned_centroids(
     bounded while the downstream assignment covers every vector."""
     import math
 
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    n = int(unit.count())
-    fit_in = unit
-    if n > SEMDEDUP_FIT_MAX:
-        stride = -(-n // SEMDEDUP_FIT_MAX)
-        fit_in = unit.filter(F.col("vec_id") % stride == 0)
-    train = fit_in.select(array_to_vector(F.col("u")).alias("features"))
-    model = KMeans(k=k, seed=42, maxIter=20).fit(train)
     rows = []
-    for i, c in enumerate(model.clusterCenters()):
-        nrm = math.sqrt(sum(float(x) * float(x) for x in c)) or 1.0
-        rows.append((i, [float(x) / nrm for x in c]))
+    for i, c in enumerate(_seeded_kmeans(unit, "u", k)):
+        nrm = math.sqrt(sum(x * x for x in c)) or 1.0
+        rows.append((i, [x / nrm for x in c]))
     return local_rows(spark, rows, "cent_id LONG, cu ARRAY<DOUBLE>")
 
 
@@ -1591,23 +1651,33 @@ PQ_M = 8  # subspaces (64 dims -> 8 x 8)
 PQ_K = 8  # codewords per subspace (first-K deterministic codebook)
 
 
+def _raw_vectors(emb: DataFrame) -> DataFrame:
+    return emb.select(
+        "vec_id",
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
+    )
+
+
+def _split_subvectors(df: DataFrame, vec: str) -> DataFrame:
+    """``df`` with its 64-dim array column ``vec`` replaced by (m, s):
+    one row per each of its PQ_M 8-dim subvectors."""
+    keys = [c for c in df.columns if c != vec]
+    return (
+        df.select(
+            *keys,
+            vec,
+            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
+        )
+        .withColumn("s", F.expr(f"slice({vec}, m * 8 + 1, 8)"))
+        .drop(vec)
+    )
+
+
 def pq_subvectors(emb: DataFrame) -> DataFrame:
     """(vec_id, m, s): each 64-dim embedding split into PQ_M 8-dim
     subvectors — the frame both the quantizer and codebook fits run
     on."""
-    v = emb.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
-    return (
-        v.select(
-            "vec_id",
-            "e",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        )
-        .withColumn("s", F.expr("slice(e, m * 8 + 1, 8)"))
-        .drop("e")
-    )
+    return _split_subvectors(_raw_vectors(emb), "e")
 
 
 def _pq_d2(s: str, c: str):
@@ -1736,36 +1806,17 @@ def learned_pq_codebooks(spark: SparkSession, sub: DataFrame) -> DataFrame:
     FAISS's posture (PQ codebooks are trained on a sample, applied
     to everything); the round-9 second-decade probe measured the
     full-corpus fit at 12.3x for 10x input, and the sampled fit
-    restores linearity while quantization still covers every vector."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    n = int(sub.select("vec_id").distinct().count())
-    fit_in = sub
-    if n > SEMDEDUP_FIT_MAX:
-        stride = -(-n // SEMDEDUP_FIT_MAX)
-        fit_in = sub.filter(F.col("vec_id") % stride == 0)
-    fit_in = fit_in.localCheckpoint(eager=True)
-
-    def fit_one(m: int):
-        # Concurrent job SUBMISSION only — each fit is an independent
-        # seeded KMeans over its own subspace slice, so results are
-        # bit-identical to the sequential loop; the 8 fits just share
-        # the scheduler instead of idling 7/8 of the executors
-        # (measured ~2x wall-clock cut at sf0.1).
-        train = fit_in.filter(F.col("m") == m).select(
-            array_to_vector(F.col("s")).alias("features")
-        )
-        model = KMeans(k=PQ_K, seed=42, maxIter=20).fit(train)
-        return [
-            (m, i, [float(x) for x in c])
-            for i, c in enumerate(model.clusterCenters())
+    restores linearity while quantization still covers every vector.
+    The PQ_M fits are submitted concurrently so they share the
+    executors (each is seeded and independent, so the results equal the
+    sequential loop's); their jobs run in the caller's job group."""
+    fits = run_concurrently(
+        *[
+            lambda m=m: _seeded_kmeans(sub.filter(F.col("m") == m), "s", PQ_K)
+            for m in range(PQ_M)
         ]
-
-    with ThreadPoolExecutor(max_workers=PQ_M) as pool:
-        rows = [r for part in pool.map(fit_one, range(PQ_M)) for r in part]
+    )
+    rows = [(m, i, c) for m, cs in enumerate(fits) for i, c in enumerate(cs)]
     return local_rows(spark, rows, "m INT, cent_id LONG, c ARRAY<DOUBLE>")
 
 
@@ -1823,27 +1874,9 @@ def raw_kmeans_centroids(spark: SparkSession, v0: DataFrame, k: int) -> DataFram
     """(cell, ce): KMeans centroids over raw (unnormalized) double
     vectors — the IVF-PQ coarse quantizer fit (seed 42, fit
     subsampled by deterministic id stride past SEMDEDUP_FIT_MAX)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    n = int(v0.count())
-    fit_in = v0
-    if n > SEMDEDUP_FIT_MAX:
-        stride = -(-n // SEMDEDUP_FIT_MAX)
-        fit_in = v0.filter(F.col("vec_id") % stride == 0)
-    model = KMeans(k=k, seed=42, maxIter=20).fit(
-        fit_in.select(array_to_vector(F.col("e")).alias("features"))
-    )
     return local_rows(spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+        list(enumerate(_seeded_kmeans(v0, "e", k))),
         "cell LONG, ce ARRAY<DOUBLE>",
-    )
-
-
-def _raw_vectors(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
     )
 
 
@@ -2265,22 +2298,13 @@ def _residual_subvectors(
             "vec_id", F.zip_with("e", "ce", lambda x, y: x - y).alias("r")
         )
     )
-    return (
-        res.select(
-            "vec_id",
-            "r",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        )
-        .withColumn("s", F.expr("slice(r, m * 8 + 1, 8)"))
-        .drop("r")
-    )
+    return _split_subvectors(res, "r")
 
 
 def _ivf_pq_adc(
     spark: SparkSession,
     sf_dir: str,
     cent: DataFrame | None = None,
-    learned_codebooks: bool = False,
     n_probe: int = N_PROBE,
     cb: DataFrame | None = None,
 ):
@@ -2290,9 +2314,9 @@ def _ivf_pq_adc(
     the ADC top-m shortlist and re-ranks by exact distance. Defaults
     keep the deterministic oracle-replayable face (first-K cells,
     first-K residual codebooks, 2 probes); pass a learned ``cent``
-    frame plus either ``learned_codebooks=True`` (fit inline) or a
-    prebuilt ``cb`` (m, code, c) frame (the cached fit) and a scaled
-    ``n_probe`` for the production face (sim_ivf_pq_rerank_learned)."""
+    frame, a prebuilt ``cb`` (m, code, c) frame (the cached fit) and a
+    scaled ``n_probe`` for the production face
+    (sim_ivf_pq_rerank_learned)."""
     emb = load(spark, sf_dir, "embeddings")
     v = _raw_vectors(emb)
     if cent is None:
@@ -2305,11 +2329,7 @@ def _ivf_pq_adc(
         (F.col("vec_id") < 10) & (F.col("rn") <= n_probe)
     ).select(F.col("vec_id").alias("q_id"), "cell")
     rsub = _residual_subvectors(asg, v, cent)
-    if cb is None and learned_codebooks:
-        cb = learned_pq_codebooks(spark, rsub).select(
-            "m", F.col("cent_id").alias("code"), "c"
-        )
-    elif cb is None:
+    if cb is None:
         cb = rsub.filter(F.col("vec_id") < PQ_K).select(
             "m", F.col("vec_id").alias("code"), F.col("s").alias("c")
         )
@@ -2329,18 +2349,8 @@ def _ivf_pq_adc(
             F.zip_with("e", "ce", lambda x, y: x - y).alias("rq"),
         )
     )
-    qsub = (
-        qres.select(
-            "q_id",
-            "cell",
-            "rq",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        )
-        .withColumn("sq", F.expr("slice(rq, m * 8 + 1, 8)"))
-        .drop("rq")
-    )
-    lut = qsub.join(F.broadcast(cb), "m").select(
-        "q_id", "cell", "m", "code", _pq_d2("sq", "c").alias("d2q")
+    lut = _split_subvectors(qres, "rq").join(F.broadcast(cb), "m").select(
+        "q_id", "cell", "m", "code", _pq_d2("s", "c").alias("d2q")
     )
     cand = (
         probe.join(asg.select(F.col("vec_id").alias("c_id"), "cell"), "cell")
@@ -2710,38 +2720,7 @@ _register_ivf_pq_rerank()
 
 @register(
     "sim_lsh_multiprobe_ann",
-    oracle=f"""
-    WITH b AS (
-      SELECT vec_id, t, {_BUCKET_SQL} AS bucket,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings, range(0, {N_TABLES}) r(t)
-    ), n AS (
-      SELECT vec_id, t, bucket, e, sqrt(list_dot_product(e, e)) AS nrm FROM b
-    ), probes AS (
-      SELECT vec_id AS q_id, t,
-             CASE WHEN pb = -1 THEN bucket
-                  ELSE xor(bucket, 1 << pb) END AS bucket
-      FROM n, range(-1, {N_BITS}) p(pb)
-      WHERE vec_id < 10
-    ), cand AS (
-      SELECT DISTINCT p.q_id, c.vec_id AS c_id
-      FROM probes p JOIN n c
-        ON c.t = p.t AND c.bucket = p.bucket AND c.vec_id <> p.q_id
-    ), scored AS (
-      SELECT cand.q_id, cand.c_id,
-             round(CAST(list_dot_product(q.e, c.e) AS DOUBLE)
-                   / (q.nrm * c.nrm), 6) AS cosine
-      FROM cand
-      JOIN (SELECT DISTINCT vec_id, e, nrm FROM n) q ON q.vec_id = cand.q_id
-      JOIN (SELECT DISTINCT vec_id, e, nrm FROM n) c ON c.vec_id = cand.c_id
-    ), ranked AS (
-      SELECT q_id, c_id, cosine,
-             CAST(row_number() OVER (PARTITION BY q_id
-                                     ORDER BY cosine DESC, c_id) AS BIGINT)
-               AS rnk
-      FROM scored)
-    SELECT q_id, c_id, cosine, rnk FROM ranked WHERE rnk <= 5
-    """,
+    oracle=_lsh_oracle(N_BITS),
     doc="Multi-probe LSH ANN: same 4-table/4-bit index as "
     "sim_lsh_ann, but each query probes its own bucket PLUS the "
     f"{N_BITS} buckets at Hamming distance 1 in the sign signature "
@@ -2762,87 +2741,4 @@ _register_ivf_pq_rerank()
     tags=("similarity", "ann", "lsh", "multiprobe"),
 )
 def sim_lsh_multiprobe_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings")
-    dots = plane_dots(emb, N_TABLES * N_BITS)
-
-    def bucket_expr(t: int):
-        e = F.lit(0)
-        for b in range(N_BITS):
-            e = e + F.when(
-                F.col(f"p{t * N_BITS + b}") > 0, F.lit(1 << b)
-            ).otherwise(0)
-        return e
-
-    tables = dots.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"), bucket_expr(t).alias("bucket")
-                    )
-                    for t in range(N_TABLES)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", "tb.t", "tb.bucket")
-    # No dropDuplicates on the probe frame (round 12, guide §2.4
-    # "remove shuffles outright"): for one (q_id, t) the probe list
-    # {bucket, bucket^1, bucket^2, bucket^4, bucket^8} is distinct by
-    # construction (each flip differs in exactly one bit), and rows
-    # across tables differ in qt — the old dropDuplicates was a no-op
-    # on values that cost an exchange + aggregate (2 stages) before
-    # the broadcast. The oracle's probes CTE has no DISTINCT either;
-    # cand's own DISTINCT is the (unchanged) dedup that matters.
-    probes = tables.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("t").alias("qt"),
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << b))
-                    for b in range(N_BITS)
-                ],
-            )
-        ).alias("qb"),
-    )
-    cand = (
-        tables.select(F.col("vec_id").alias("c_id"), "t", "bucket")
-        .join(
-            F.broadcast(probes),
-            (F.col("t") == F.col("qt"))
-            & (F.col("bucket") == F.col("qb"))
-            & (F.col("c_id") != F.col("q_id")),
-        )
-        .select("q_id", "c_id")
-        .dropDuplicates()
-    )
-    vecs = emb.select("vec_id", F.col("embedding").alias("e"))
-    scored = (
-        cand.join(
-            F.broadcast(
-                vecs.withColumnRenamed("vec_id", "q_id").withColumnRenamed(
-                    "e", "q_emb"
-                )
-            ),
-            "q_id",
-        )
-        .join(
-            vecs.withColumnRenamed("vec_id", "c_id").withColumnRenamed(
-                "e", "c_emb"
-            ),
-            "c_id",
-        )
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                _dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return scored.withColumn(
-        "rnk", F.row_number().over(w).cast("long")
-    ).filter(F.col("rnk") <= 5)
+    return _lsh_topk(spark, sf_dir, N_BITS)

@@ -58,6 +58,41 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)
 
 
+def run_concurrently(*thunks) -> list:
+    """Run each thunk on its own thread, join them all, re-raise the
+    first error in argument order, and return the results in argument
+    order.
+
+    The threads are ``InheritableThread``s: under pinned-thread mode
+    (the PySpark default) each inherits the caller's JVM thread-locals,
+    so the jobs it runs stay in the caller's job group (a bare thread's
+    jobs run ungrouped, outside ``bench.run_group``'s totals and any
+    cancel-by-group), and it releases its pinned JVM thread on exit.
+    """
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(thunks)
+    errors: list = [None] * len(thunks)
+
+    def run(i: int, thunk) -> None:
+        try:
+            results[i] = thunk()
+        except BaseException as exc:  # re-raised below, after every join
+            errors[i] = exc
+
+    threads = [
+        InheritableThread(target=run, args=(i, t)) for i, t in enumerate(thunks)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results
+
+
 def get_spark(
     app_name: str = "mathorcup_spark",
     cpus: int | None = None,

@@ -8,10 +8,8 @@ that pattern made concrete:
 - :func:`write_lsh_index` materializes the index as two parquet
   layouts under one root: ``buckets/`` — (vec_id) rows partitioned by
   ``(t, bucket)`` so a probe touches only its bucket directories —
-  and ``vectors/`` — embeddings cast to double with their norms,
-  for exact rescoring with ``sim_lsh_ann``'s formula (dot / norms,
-  rounded last) so persisted-index results are byte-identical to the
-  inline query.
+  and ``vectors/`` — embeddings with their norms, for the exact
+  rescore.
 - :func:`query_lsh_index` computes the query batch's buckets (same
   deterministic hyperplanes), collects the distinct (t, bucket) pairs
   it needs (Q·T values — driver-sized by construction), and pushes
@@ -20,9 +18,9 @@ that pattern made concrete:
   (``PartitionFilters`` in the scan node, asserted in
   tests/test_ann_index.py).
 
-The same hyperplane formula as ``similarity.plane_dots`` keeps a
-persisted index's results byte-identical to the inline
-``sim_lsh_ann`` query — pinned by test against it.
+Banding (``similarity.lsh_bands``) and the exact-cosine rescore
+(``similarity.rescore_topk``) are the functions ``sim_lsh_ann`` itself
+runs, so the index answers as the inline query does; a test pins it.
 
 Reference parity note: the reference persists its trained embedding
 matrices to disk and reloads them for evaluation
@@ -32,39 +30,21 @@ matrices to disk and reloads them for evaluation
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.similarity import N_BITS, N_TABLES, _dot, _norm, plane_dots
-
-
-def _vnorm(col: str):
-    return _norm(col)
+from ..functions.similarity import (
+    N_BITS,
+    N_TABLES,
+    _norm,
+    _side,
+    lsh_bands,
+    rescore_topk,
+)
 
 
 def _bucketed(emb: DataFrame) -> DataFrame:
     """(vec_id, t, bucket) for every vector and table."""
-    dots = plane_dots(emb, N_TABLES * N_BITS)
-
-    def bucket_expr(t: int):
-        e = F.lit(0)
-        for b in range(N_BITS):
-            e = e + F.when(
-                F.col(f"p{t * N_BITS + b}") > 0, F.lit(1 << b)
-            ).otherwise(0)
-        return e
-
-    return dots.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("t"), bucket_expr(t).alias("bucket"))
-                    for t in range(N_TABLES)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", "tb.t", "tb.bucket")
+    return lsh_bands(emb, N_TABLES, N_BITS)
 
 
 def write_lsh_index(emb: DataFrame, out_dir: str) -> None:
@@ -80,7 +60,7 @@ def write_lsh_index(emb: DataFrame, out_dir: str) -> None:
     )
     (
         emb.select("vec_id", F.col("embedding").alias("e"))
-        .withColumn("nrm", _vnorm("e"))
+        .withColumn("nrm", _norm("e"))
         .write.mode("overwrite")
         .parquet(f"{out_dir}/vectors")
     )
@@ -116,35 +96,12 @@ def query_lsh_index(
         .dropDuplicates()
     )
 
-    vecs = spark.read.parquet(f"{index_dir}/vectors")
-    qv = (
-        queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"))
-        .withColumn("qnrm", _vnorm("qe"))
+    vecs = spark.read.parquet(f"{index_dir}/vectors").select(
+        F.col("vec_id").alias("c_id"),
+        F.col("e").alias("ce"),
+        F.col("nrm").alias("cnrm"),
     )
-    # sim_lsh_ann's exact formula — dot of the raw vectors divided by
-    # the norms, rounded last — so index answers match it bit-for-bit
-    scored = (
-        cand.join(F.broadcast(qv), "q_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("c_id"),
-                F.col("e").alias("ce"),
-                F.col("nrm").alias("cnrm"),
-            ),
-            "c_id",
-        )
-        .select(
-            "q_id",
-            "c_id",
-            F.round(_dot("qe", "ce") / (F.col("qnrm") * F.col("cnrm")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= k
-    )
+    return rescore_topk(cand, _side(queries, "q"), vecs, k)
 
 
 def append_to_lsh_index(emb: DataFrame, index_dir: str) -> None:
@@ -170,7 +127,7 @@ def append_to_lsh_index(emb: DataFrame, index_dir: str) -> None:
     """
     (
         emb.select("vec_id", F.col("embedding").alias("e"))
-        .withColumn("nrm", _vnorm("e"))
+        .withColumn("nrm", _norm("e"))
         .write.mode("append")
         .parquet(f"{index_dir}/vectors")
     )

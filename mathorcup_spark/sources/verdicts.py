@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
+
 VERDICT_PARTS = 32  # range partitions of the written layout
 
 
@@ -180,36 +182,17 @@ def _write_rows_sig_overlapped(
     from an unrelated MLlib ProbabilisticClassificationModel
     transform, reproduced twice across full-registry sweeps), and a
     framework-bug lottery is a worse trade than one job barrier."""
-    from pyspark import InheritableThread
-
     ck = rows.localCheckpoint(eager=True)
-    sig_box: dict = {}
-
-    def _sig():
-        try:
-            sig_box["sig"] = verdict_sig(ck)
-        except BaseException as exc:  # surfaced on join below
-            sig_box["err"] = exc
-
-    # InheritableThread (not a bare threading.Thread): under pinned-
-    # thread mode the child inherits the parent's JVM thread-locals
-    # (job group/description/tags — so a future cancel-by-group covers
-    # the overlapped job) and releases its pinned JVM thread on exit
-    # instead of holding it for the process lifetime (ADVICE r11).
-    t = InheritableThread(target=_sig)
-    t.start()
-    try:
-        (
+    _, sig = run_concurrently(
+        lambda: (
             ck.repartitionByRange(parts, "doc_id")
             .sortWithinPartitions("doc_id")
             .write.mode(mode)
             .parquet(path)
-        )
-    finally:
-        t.join()
-    if "err" in sig_box:
-        raise sig_box["err"]
-    return sig_box["sig"]
+        ),
+        lambda: verdict_sig(ck),
+    )
+    return sig
 
 
 def build_verdicts_frozen(
@@ -243,8 +226,6 @@ def create_verdict_table(
     from pyspark.sql import Window as W
 
     from ..functions.corpus import MIN_QUALITY, MIN_WORDS, prep_feat_from
-    from pyspark import InheritableThread
-
     from ..functions.text import (
         contamination_from,
         eval_grams_from,
@@ -268,46 +249,42 @@ def create_verdict_table(
     # per-job fixed cost overlaps instead of summing: eval write ∥
     # feat checkpoint, then hashes write ∥ rows write.
     eval_grams = eval_grams_from(spark, base)
-    t_eval = InheritableThread(
-        target=lambda: eval_grams.write.mode("overwrite").parquet(
-            f"{out_dir}/eval"
-        )
+    _, feat = run_concurrently(
+        lambda: eval_grams.write.mode("overwrite").parquet(f"{out_dir}/eval"),
+        lambda: prep_feat_from(base).localCheckpoint(eager=True),
     )
-    t_eval.start()
-    feat = prep_feat_from(base).localCheckpoint(eager=True)
-    t_eval.join()
-    t_hashes = InheritableThread(
-        target=lambda: _append_hashes(
-            feat.select("doc_id", "h"), out_dir, first=True
+
+    def write_rows() -> tuple[int, int]:
+        rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
+        prep = (
+            feat.withColumn("rn", rn)
+            .filter(
+                (F.col("rn") == 1)
+                & (F.col("quality") >= MIN_QUALITY)
+                & (F.col("n_words") >= MIN_WORDS)
+            )
+            .select(
+                "doc_id", "source", "detected_lang", "n_words", "bpe_tokens",
+                "quality",
+            )
         )
-    )
-    t_hashes.start()
-    rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
-    prep = (
-        feat.withColumn("rn", rn)
-        .filter(
-            (F.col("rn") == 1)
-            & (F.col("quality") >= MIN_QUALITY)
-            & (F.col("n_words") >= MIN_WORDS)
+        # the frozen ON-DISK eval store is what contamination consumes
+        # (written above, so the store is complete before this plan
+        # executes)
+        contam = contamination_from(
+            spark, base, eval_grams=spark.read.parquet(f"{out_dir}/eval")
+        ).select("doc_id", "contamination_ratio")
+        rep = repetition_from(base).select("doc_id", "repetitive")
+        pii = pii_from(base).select("doc_id", "has_pii_signal")
+        rows = prep.join(contam, "doc_id").join(rep, "doc_id").join(pii, "doc_id")
+        return _write_rows_sig_overlapped(
+            rows, f"{out_dir}/rows", VERDICT_PARTS, "overwrite"
         )
-        .select(
-            "doc_id", "source", "detected_lang", "n_words", "bpe_tokens",
-            "quality",
-        )
+
+    sig, _ = run_concurrently(
+        write_rows,
+        lambda: _append_hashes(feat.select("doc_id", "h"), out_dir, first=True),
     )
-    # the frozen ON-DISK eval store is what contamination consumes
-    # (t_eval joined above, so the store is complete before this
-    # plan executes)
-    contam = contamination_from(
-        spark, base, eval_grams=spark.read.parquet(f"{out_dir}/eval")
-    ).select("doc_id", "contamination_ratio")
-    rep = repetition_from(base).select("doc_id", "repetitive")
-    pii = pii_from(base).select("doc_id", "has_pii_signal")
-    rows = prep.join(contam, "doc_id").join(rep, "doc_id").join(pii, "doc_id")
-    sig = _write_rows_sig_overlapped(
-        rows, f"{out_dir}/rows", VERDICT_PARTS, "overwrite"
-    )
-    t_hashes.join()
     return sig
 
 
@@ -411,6 +388,43 @@ def append_to_verdict_table(
         out_dir,
     )
     return sig
+
+
+def write_id_ordered_arrivals(
+    arrivals: DataFrame, path: str, n_batches: int
+) -> None:
+    """Write ``arrivals`` under ``path`` as ``n_batches`` parquet files,
+    one per ascending doc_id range, with ascending pinned mtimes.
+
+    A file-source stream over ``path`` with ``maxFilesPerTrigger=1``
+    orders its micro-batches by modification time, so it hands
+    :func:`append_to_verdict_table` the ascending doc_id ranges its
+    append-order contract requires. A plain multi-file write would put
+    ids from the whole range in every file, and Spark's part-file names
+    sort by a random job id, not by write order."""
+    import os
+    import shutil
+
+    row = arrivals.agg(F.min("doc_id"), F.max("doc_id")).first()
+    lo, hi = int(row[0]), int(row[1]) + 1
+    os.makedirs(path, exist_ok=True)
+    base_t = 1_700_000_000
+    for i in range(n_batches):
+        a = lo + (hi - lo) * i // n_batches
+        b = lo + (hi - lo) * (i + 1) // n_batches
+        tmp = f"{path}.tmp{i}"
+        (
+            arrivals.filter((F.col("doc_id") >= a) & (F.col("doc_id") < b))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+        for f in os.listdir(tmp):
+            if f.startswith("part-"):
+                dst = f"{path}/b{i:04d}.parquet"
+                shutil.move(f"{tmp}/{f}", dst)
+                os.utime(dst, (base_t + i, base_t + i))
+        shutil.rmtree(tmp)
 
 
 def read_incremental_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:

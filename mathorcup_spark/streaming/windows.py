@@ -235,7 +235,7 @@ def _stateful_oracle() -> str:
     hash; a stream/batch mismatch raises Spark-side — together the
     row is hash-verified, not rows-only (judge r5 item 7)."""
     from ..functions.dedup import _MINHASH_BANDED_CTES
-    from ..functions.similarity import _BUCKET_SQL, N_TABLES
+    from ..functions.similarity import N_BITS, N_TABLES, bucket_sql
 
     return f"""
     WITH {_MINHASH_BANDED_CTES},
@@ -249,7 +249,7 @@ def _stateful_oracle() -> str:
         WHERE a.doc_id < tt.t AND c.doc_id >= tt.t)
     ),
     bn AS (
-      SELECT vec_id, t, {_BUCKET_SQL} AS bucket
+      SELECT vec_id, t, {bucket_sql(N_BITS)} AS bucket
       FROM embeddings, range(0, {N_TABLES}) r(t)
     ),
     tte AS (SELECT (max(vec_id) * 3) // 5 AS t FROM embeddings),
@@ -823,25 +823,24 @@ def st_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # by a real readStream — create over the initial 3/5 corpus,
         # the rest arriving as id-ordered micro-batches absorbed by
         # append_to_verdict_table inside foreachBatch. Batch files
-        # are written SEQUENTIALLY as ascending doc_id ranges with
-        # explicitly increasing mtimes, because the verdict append
-        # contract requires id-ordered arrival (survivor = min
-        # doc_id per content hash) and the file source orders
-        # micro-batches by modification time. After the stream
+        # are written as ascending doc_id ranges with explicitly
+        # increasing mtimes (write_id_ordered_arrivals), because the
+        # verdict append contract requires id-ordered arrival
+        # (survivor = min doc_id per content hash) and the file
+        # source orders micro-batches by modification time. After the stream
         # drains: (a) maintained == one-shot build_verdicts_frozen
         # over the full corpus (order-independent signature — the
         # maintained-equals-rebuilt assertion, composed through the
         # stream), and (b) the read-back signature equals the
         # additive sum of what create + every micro-batch append
         # wrote (nothing lost or doubled through the stream).
-        import os
-
         from ..sources.verdicts import (
             append_to_verdict_table,
             build_verdicts_frozen,
             create_verdict_table,
             read_incremental_verdicts,
             verdict_sig,
+            write_id_ordered_arrivals,
         )
 
         v_live = f"{work}/verdicts_live"
@@ -856,23 +855,9 @@ def st_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # while a replay after a crash-before-return recomputes the
         # byte-identical sig and records it exactly once.
         sig_by_batch: dict[int, tuple[int, int]] = {}
-        mx_doc = int(docs.agg(F.max("doc_id")).first()[0]) + 1
-        cuts = [t, t + (mx_doc - t) // 3, t + 2 * (mx_doc - t) // 3, mx_doc]
-        for lo, hi in zip(cuts, cuts[1:]):
-            (
-                docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(v_arrivals)
-            )
-        # pin ascending mtimes per part file so the file source's
-        # mod-time ordering matches the id order deterministically
-        parts = sorted(
-            f for f in os.listdir(v_arrivals) if f.startswith("part-")
+        write_id_ordered_arrivals(
+            docs.filter(F.col("doc_id") >= t), v_arrivals, 3
         )
-        base_t = 1_700_000_000
-        for i, fname in enumerate(parts):
-            os.utime(f"{v_arrivals}/{fname}", (base_t + i, base_t + i))
 
         def v_ingest(batch_df, batch_id):
             sig = append_to_verdict_table(

@@ -3,6 +3,8 @@ query exactly, and probes must partition-prune the bucket scan."""
 
 from __future__ import annotations
 
+import pytest
+
 from mathorcup_spark import registry
 from mathorcup_spark.catalog import load
 from mathorcup_spark.sources.ann_index import query_lsh_index, write_lsh_index
@@ -95,3 +97,34 @@ def test_append_then_compact_preserves_answers(spark, tmp_path):
     assert after_rows == want
     assert n_files(f"{grown}/buckets") <= before
     assert not [p for p in pathlib.Path(grown).iterdir() if p.name.endswith(".bak")]
+
+
+def _bucket_shapes():
+    from mathorcup_spark.functions.dedup import ND_BITS, ND_TABLES
+    from mathorcup_spark.functions.similarity import N_BITS, N_TABLES
+
+    return [(N_TABLES, N_BITS), (ND_TABLES, ND_BITS)]
+
+
+@pytest.mark.parametrize("n_tables,n_bits", _bucket_shapes())
+def test_spark_and_duckdb_buckets_agree(spark, n_tables, n_bits):
+    """Every (vec_id, t, bucket) row of the Spark banding equals the
+    DuckDB bucket SQL's, for the ANN (4x4) and near-dup (6x8) shapes:
+    a bucket mismatch the top-k or near-dup rows happen to hide still
+    fails here."""
+    from mathorcup_spark import oracle
+    from mathorcup_spark.functions.similarity import bucket_sql, lsh_bands
+
+    _, want = oracle.run(
+        oracle.connect(SF_DIR),
+        f"SELECT vec_id, t, {bucket_sql(n_bits)} AS bucket "
+        f"FROM embeddings, range(0, {n_tables}) r(t)",
+    )
+    got = lsh_bands(load(spark, SF_DIR, "embeddings"), n_tables, n_bits)
+    n_vec = load(spark, SF_DIR, "embeddings").count()
+
+    def key(rows):
+        return sorted(tuple(int(x) for x in r) for r in rows)
+
+    assert len(want) == n_vec * n_tables
+    assert key(got.collect()) == key(want)

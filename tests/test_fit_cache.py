@@ -120,3 +120,22 @@ def test_fingerprint_guards_staleness(spark, tmp_path):
     # and distinct sf dirs never collide even with identical files
     k3 = _fingerprint(SF_DIR, ("embeddings.parquet",))
     assert k3 not in (k1, k2)
+
+
+def test_pq_codebook_fits_run_in_callers_job_group(spark):
+    """The PQ_M concurrent codebook fits run in the caller's job group,
+    so bench.run_group's totals (and a cancel by group) cover them."""
+    import bench
+    from perfbench.sparkstats import SparkStats
+
+    stats = SparkStats(spark)
+    sub = S.pq_subvectors(load(spark, SF_DIR, "embeddings")).localCheckpoint(
+        eager=True
+    )
+    before = set(stats.all_job_ids())
+    _, _, t = bench.run_group(
+        spark, stats, "test:pq_fits", lambda: S.learned_pq_codebooks(spark, sub)
+    )
+    ran = set(stats.all_job_ids()) - before
+    assert set(stats.jobs_for(["test:pq_fits"])) == ran
+    assert t.jobs >= 4 + S.PQ_M

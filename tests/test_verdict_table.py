@@ -116,3 +116,43 @@ def test_replay_after_crash_between_writes_is_recovered(spark, incr_table):
         assert verdict_sig(deduped) == verdict_sig(oneshot)
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_create_raises_when_a_concurrent_write_fails(spark, monkeypatch, tmp_path):
+    """create_verdict_table writes hashes/ on a second thread; a failure
+    there must raise from the call, not leave a table with no hashes/."""
+    from mathorcup_spark.sources import verdicts
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("hashes write failed")
+
+    monkeypatch.setattr(verdicts, "_append_hashes", fail)
+    docs = load(spark, SF_DIR, "documents").filter(F.col("doc_id") < 50)
+    with pytest.raises(RuntimeError, match="hashes write failed"):
+        create_verdict_table(spark, docs, str(tmp_path / "v"))
+
+
+def test_id_ordered_arrivals_are_ascending_ranges_by_mtime(spark, tmp_path):
+    """Sorted by modification time (the file source's micro-batch
+    order), the arrival files hold ascending, disjoint doc_id ranges
+    that together are exactly the input."""
+    import os
+
+    from mathorcup_spark.sources.verdicts import write_id_ordered_arrivals
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    path = str(tmp_path / "arrivals")
+    write_id_ordered_arrivals(docs, path, 4)
+    files = sorted(
+        (f for f in os.listdir(path) if f.endswith(".parquet")),
+        key=lambda f: os.path.getmtime(f"{path}/{f}"),
+    )
+    assert len(files) == 4
+    ranges = [
+        spark.read.parquet(f"{path}/{f}")
+        .agg(F.min("doc_id"), F.max("doc_id"), F.count("doc_id"))
+        .first()
+        for f in files
+    ]
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
+    assert sum(r[2] for r in ranges) == docs.count()
