@@ -189,77 +189,73 @@ def _v2_oracle() -> str:
     """
 
 
-def _register_corpus_v2() -> None:
-    @register(
-        "corpus_pipeline_v2",
-        oracle=_v2_oracle(),
-        doc="The complete training-data preparation pipeline composed "
-        "end to end: quality filter + language ID + exact-dedup "
-        "survivors (corpus_prep_e2e, one scan + one survivor-window "
-        "shuffle) → deterministic domain-mixture rebalancing "
-        "(r_mixture_sample semantics on the SURVIVOR set: per-source "
-        "rates from one broadcast count, md5-uniform keep decisions) "
-        "→ fixed-length sequence packing of the kept docs "
-        "(t_sequence_pack semantics over the already-computed BPE "
-        "token counts, via the distributed prefix-sum — no "
-        "single-partition exchange). One declarative plan from raw "
-        "documents to train-ready (seq_id, offset) assignments; "
-        "every stage's member operator keeps its own oracle as unit "
-        "evidence while this query hash-verifies the composition.",
-        tags=("text", "dedup", "sampling", "pack", "pipeline", "e2e"),
-    )
-    def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..ids import prefix_sum
-        from ..operators.sampling import MIXTURE_BUDGET, _hash_u
-        from .text import SEQ_LEN
+@register(
+    "corpus_pipeline_v2",
+    oracle=_v2_oracle(),
+    doc="The complete training-data preparation pipeline composed "
+    "end to end: quality filter + language ID + exact-dedup "
+    "survivors (corpus_prep_e2e, one scan + one survivor-window "
+    "shuffle) → deterministic domain-mixture rebalancing "
+    "(r_mixture_sample semantics on the SURVIVOR set: per-source "
+    "rates from one broadcast count, md5-uniform keep decisions) "
+    "→ fixed-length sequence packing of the kept docs "
+    "(t_sequence_pack semantics over the already-computed BPE "
+    "token counts, via the distributed prefix-sum — no "
+    "single-partition exchange). One declarative plan from raw "
+    "documents to train-ready (seq_id, offset) assignments; "
+    "every stage's member operator keeps its own oracle as unit "
+    "evidence while this query hash-verifies the composition.",
+    tags=("text", "dedup", "sampling", "pack", "pipeline", "e2e"),
+)
+def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..ids import prefix_sum
+    from ..operators.sampling import MIXTURE_BUDGET, _hash_u
+    from .text import SEQ_LEN
 
-        prep = corpus_prep_e2e(spark, sf_dir)
-        counts = prep.groupBy("source").agg(F.count("*").alias("n_s"))
-        k = counts.agg(F.count("*").alias("n_sources"))
-        rates = counts.crossJoin(F.broadcast(k)).select(
-            "source",
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources"))
-                    / F.col("n_s"),
-                ),
-                6,
-            ).alias("rate"),
-        )
-        kept = (
-            prep.join(F.broadcast(rates), "source")
-            .filter(_hash_u(F.col("doc_id")) < F.col("rate"))
-            .select(
-                "doc_id",
-                "source",
-                "detected_lang",
-                F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
-                "quality",
-                "rate",
-            )
-        )
-        packed = prefix_sum(kept, ["doc_id"], "bpe_tokens", "cum_before")
-        off = F.col("cum_before") % SEQ_LEN
-        return packed.select(
+    prep = corpus_prep_e2e(spark, sf_dir)
+    counts = prep.groupBy("source").agg(F.count("*").alias("n_s"))
+    k = counts.agg(F.count("*").alias("n_sources"))
+    rates = counts.crossJoin(F.broadcast(k)).select(
+        "source",
+        F.round(
+            F.least(
+                F.lit(1.0),
+                (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources"))
+                / F.col("n_s"),
+            ),
+            6,
+        ).alias("rate"),
+    )
+    kept = (
+        prep.join(F.broadcast(rates), "source")
+        .filter(_hash_u(F.col("doc_id")) < F.col("rate"))
+        .select(
             "doc_id",
             "source",
             "detected_lang",
-            "bpe_tokens",
+            F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
             "quality",
             "rate",
-            F.col("cum_before").cast("long").alias("cum_before"),
-            # exact integer floor division, matching the oracle's `//`
-            # (double division mis-rounds once cum_before > 2^53)
-            F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
-            off.cast("long").alias("seq_offset"),
-            F.when(off + F.col("bpe_tokens") > SEQ_LEN, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("spans_boundary"),
         )
-
-
-_register_corpus_v2()
+    )
+    packed = prefix_sum(kept, ["doc_id"], "bpe_tokens", "cum_before")
+    off = F.col("cum_before") % SEQ_LEN
+    return packed.select(
+        "doc_id",
+        "source",
+        "detected_lang",
+        "bpe_tokens",
+        "quality",
+        "rate",
+        F.col("cum_before").cast("long").alias("cum_before"),
+        # exact integer floor division, matching the oracle's `//`
+        # (double division mis-rounds once cum_before > 2^53)
+        F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
+        off.cast("long").alias("seq_offset"),
+        F.when(off + F.col("bpe_tokens") > SEQ_LEN, F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("spans_boundary"),
+    )
 
 
 def _v3_oracle() -> str:
@@ -316,163 +312,158 @@ def _v3_oracle() -> str:
     """
 
 
-def _register_corpus_v3() -> None:
-    @register(
-        "corpus_pipeline_v3",
-        oracle=_v3_oracle(),
-        doc="The COMPLETE modern training-data pipeline, composed end "
-        "to end and hash-verified as one plan: quality filter + "
-        "language ID + exact-dedup survivors (corpus_prep_e2e) → the "
-        "round-4 hygiene screens — benchmark decontamination (eval "
-        "slice excluded from training, docs over 10% eval-n-gram "
-        "overlap dropped), Gopher-style repetition filter, PII drop — "
-        "→ deterministic domain-mixture rebalancing over the CLEAN "
-        "set → fixed-length sequence packing via the distributed "
-        "prefix-sum. Each screen joins its per-doc verdict back on "
-        "doc_id (hash equi-joins; the screens themselves are narrow "
-        "or single-shuffle, see their own docs), so the composition "
-        "adds no new shuffle shape beyond its members. The documents "
-        "scan appears once per screen — scan-bound columnar reads a "
-        "100 TB run would amortize by materializing the per-doc "
-        "verdict table (the layouts in sources/ support exactly "
-        "that); the declared plan is the contract either way. Every "
-        "member keeps its own oracle as unit evidence; this query "
-        "verifies the composition.",
-        tags=("text", "dedup", "sampling", "pack", "pipeline",
-              "contamination", "pii", "e2e"),
+@register(
+    "corpus_pipeline_v3",
+    oracle=_v3_oracle(),
+    doc="The COMPLETE modern training-data pipeline, composed end "
+    "to end and hash-verified as one plan: quality filter + "
+    "language ID + exact-dedup survivors (corpus_prep_e2e) → the "
+    "round-4 hygiene screens — benchmark decontamination (eval "
+    "slice excluded from training, docs over 10% eval-n-gram "
+    "overlap dropped), Gopher-style repetition filter, PII drop — "
+    "→ deterministic domain-mixture rebalancing over the CLEAN "
+    "set → fixed-length sequence packing via the distributed "
+    "prefix-sum. Each screen joins its per-doc verdict back on "
+    "doc_id (hash equi-joins; the screens themselves are narrow "
+    "or single-shuffle, see their own docs), so the composition "
+    "adds no new shuffle shape beyond its members. The documents "
+    "scan appears once per screen — scan-bound columnar reads a "
+    "100 TB run would amortize by materializing the per-doc "
+    "verdict table (the layouts in sources/ support exactly "
+    "that); the declared plan is the contract either way. Every "
+    "member keeps its own oracle as unit evidence; this query "
+    "verifies the composition.",
+    tags=("text", "dedup", "sampling", "pack", "pipeline",
+          "contamination", "pii", "e2e"),
+)
+def corpus_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..ids import prefix_sum
+    from ..operators.sampling import MIXTURE_BUDGET, _hash_u
+    from .text import (
+        CONTAM_TAU,
+        SEQ_LEN,
+        t_contamination_screen,
+        t_pii_scan,
+        t_repetition_stats,
     )
-    def corpus_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..ids import prefix_sum
-        from ..operators.sampling import MIXTURE_BUDGET, _hash_u
-        from .text import (
-            CONTAM_TAU,
-            SEQ_LEN,
-            t_contamination_screen,
-            t_pii_scan,
-            t_repetition_stats,
-        )
 
-        prep = corpus_prep_e2e(spark, sf_dir)
-        contam = t_contamination_screen(spark, sf_dir).select(
-            "doc_id", "contamination_ratio"
+    prep = corpus_prep_e2e(spark, sf_dir)
+    contam = t_contamination_screen(spark, sf_dir).select(
+        "doc_id", "contamination_ratio"
+    )
+    rep = t_repetition_stats(spark, sf_dir).select("doc_id", "repetitive")
+    pii = t_pii_scan(spark, sf_dir).select("doc_id", "has_pii_signal")
+    clean = (
+        prep.filter(F.col("doc_id") % 100 != 0)
+        .join(contam, "doc_id")
+        .join(rep, "doc_id")
+        .join(pii, "doc_id")
+        .filter(
+            (F.col("contamination_ratio") <= CONTAM_TAU)
+            & (F.col("repetitive") == 0)
+            & (F.col("has_pii_signal") == 0)
         )
-        rep = t_repetition_stats(spark, sf_dir).select("doc_id", "repetitive")
-        pii = t_pii_scan(spark, sf_dir).select("doc_id", "has_pii_signal")
-        clean = (
-            prep.filter(F.col("doc_id") % 100 != 0)
-            .join(contam, "doc_id")
-            .join(rep, "doc_id")
-            .join(pii, "doc_id")
-            .filter(
-                (F.col("contamination_ratio") <= CONTAM_TAU)
-                & (F.col("repetitive") == 0)
-                & (F.col("has_pii_signal") == 0)
-            )
-            .select(
-                "doc_id",
-                "source",
-                "detected_lang",
-                F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
-                "quality",
-            )
-        )
-        counts = clean.groupBy("source").agg(F.count("*").alias("n_s"))
-        k = counts.agg(F.count("*").alias("n_sources"))
-        rates = counts.crossJoin(F.broadcast(k)).select(
-            "source",
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources"))
-                    / F.col("n_s"),
-                ),
-                6,
-            ).alias("rate"),
-        )
-        kept = clean.join(F.broadcast(rates), "source").filter(
-            _hash_u(F.col("doc_id")) < F.col("rate")
-        )
-        packed = prefix_sum(
-            kept.select(
-                "doc_id", "source", "detected_lang", "bpe_tokens",
-                "quality", "rate",
-            ),
-            ["doc_id"],
-            "bpe_tokens",
-            "cum_before",
-        )
-        off = F.col("cum_before") % SEQ_LEN
-        return packed.select(
+        .select(
             "doc_id",
             "source",
             "detected_lang",
-            "bpe_tokens",
+            F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
             "quality",
-            "rate",
-            F.col("cum_before").cast("long").alias("cum_before"),
-            F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
-            off.cast("long").alias("seq_offset"),
-            F.when(off + F.col("bpe_tokens") > SEQ_LEN, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("spans_boundary"),
         )
-
-
-_register_corpus_v3()
-
-
-def _register_corpus_v4() -> None:
-    @register(
-        "corpus_pipeline_v4",
-        oracle=_v3_oracle(),
-        doc="corpus_pipeline_v3 rebuilt on the PERSISTED per-document "
-        "verdict table (sources/verdicts.py): the corpus is "
-        "materialized once (eager localCheckpoint — the single "
-        "reader of the documents parquet), every hygiene verdict "
-        "(prep survivors + quality, decontamination ratio, "
-        "repetition flag, PII flag) is derived from that one pass "
-        "and written to a doc_id-sorted layout, and the consuming "
-        "mixture -> prefix-sum packing plan reads ONLY the verdict "
-        "table — ZERO documents scans in the consumer "
-        "(plan-audited), vs one scan per screen in v3. Output and "
-        "oracle are byte-identical to corpus_pipeline_v3: the "
-        "materialization is a physical-plan change only. At 100 TB "
-        "this is the difference between 4-6 full corpus reads and "
-        "one; the verdict table is fixed-width per doc, orders of "
-        "magnitude smaller than the text it summarizes (reference "
-        "analog: the staged materialization at "
-        "reference/preprocess.py:92-119).",
-        tags=("text", "dedup", "sampling", "pack", "pipeline",
-              "verdict", "one-scan", "e2e"),
     )
-    def corpus_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
+    counts = clean.groupBy("source").agg(F.count("*").alias("n_s"))
+    k = counts.agg(F.count("*").alias("n_sources"))
+    rates = counts.crossJoin(F.broadcast(k)).select(
+        "source",
+        F.round(
+            F.least(
+                F.lit(1.0),
+                (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources"))
+                / F.col("n_s"),
+            ),
+            6,
+        ).alias("rate"),
+    )
+    kept = clean.join(F.broadcast(rates), "source").filter(
+        _hash_u(F.col("doc_id")) < F.col("rate")
+    )
+    packed = prefix_sum(
+        kept.select(
+            "doc_id", "source", "detected_lang", "bpe_tokens",
+            "quality", "rate",
+        ),
+        ["doc_id"],
+        "bpe_tokens",
+        "cum_before",
+    )
+    off = F.col("cum_before") % SEQ_LEN
+    return packed.select(
+        "doc_id",
+        "source",
+        "detected_lang",
+        "bpe_tokens",
+        "quality",
+        "rate",
+        F.col("cum_before").cast("long").alias("cum_before"),
+        F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
+        off.cast("long").alias("seq_offset"),
+        F.when(off + F.col("bpe_tokens") > SEQ_LEN, F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("spans_boundary"),
+    )
 
-        from ..sources.verdicts import read_verdict_table, write_verdict_table
 
-        out = tempfile.mkdtemp(prefix="mathorcup_verdicts_")
-        try:
-            write_verdict_table(spark, load(spark, sf_dir, "documents"), out)
-            # ONE scan of the verdict layout (round 12, guide §5/§3.3):
-            # the consumer's plan references its input ~4× (the counts
-            # subtree under both k and rates, the kept side, and the
-            # prefix-sum range exchange's boundary-sampling pass), so
-            # an un-materialized read re-scans the layout once per
-            # reference. The eager checkpoint pays one barrier and
-            # every re-derivation reads executor-resident blocks. The
-            # zero-documents-scan consumer claim is audited on the
-            # un-checkpointed consume_verdicts plan (tools/
-            # plan_audit.py::audit_verdict_consumer) and is only
-            # strengthened here: the layout itself is now scanned
-            # once, not 4×. Values are unchanged.
-            verd = read_verdict_table(spark, out).localCheckpoint(eager=True)
-            result = consume_verdicts(spark, verd)
-            # materialize before the layout is deleted (batch-sized:
-            # the packed kept-set, not the corpus)
-            return result.localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
+@register(
+    "corpus_pipeline_v4",
+    oracle=_v3_oracle(),
+    doc="corpus_pipeline_v3 rebuilt on the PERSISTED per-document "
+    "verdict table (sources/verdicts.py): the corpus is "
+    "materialized once (eager localCheckpoint — the single "
+    "reader of the documents parquet), every hygiene verdict "
+    "(prep survivors + quality, decontamination ratio, "
+    "repetition flag, PII flag) is derived from that one pass "
+    "and written to a doc_id-sorted layout, and the consuming "
+    "mixture -> prefix-sum packing plan reads ONLY the verdict "
+    "table — ZERO documents scans in the consumer "
+    "(plan-audited), vs one scan per screen in v3. Output and "
+    "oracle are byte-identical to corpus_pipeline_v3: the "
+    "materialization is a physical-plan change only. At 100 TB "
+    "this is the difference between 4-6 full corpus reads and "
+    "one; the verdict table is fixed-width per doc, orders of "
+    "magnitude smaller than the text it summarizes (reference "
+    "analog: the staged materialization at "
+    "reference/preprocess.py:92-119).",
+    tags=("text", "dedup", "sampling", "pack", "pipeline",
+          "verdict", "one-scan", "e2e"),
+)
+def corpus_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from ..sources.verdicts import read_verdict_table, write_verdict_table
+
+    out = tempfile.mkdtemp(prefix="mathorcup_verdicts_")
+    try:
+        write_verdict_table(spark, load(spark, sf_dir, "documents"), out)
+        # ONE scan of the verdict layout (round 12, guide §5/§3.3):
+        # the consumer's plan references its input ~4× (the counts
+        # subtree under both k and rates, the kept side, and the
+        # prefix-sum range exchange's boundary-sampling pass), so
+        # an un-materialized read re-scans the layout once per
+        # reference. The eager checkpoint pays one barrier and
+        # every re-derivation reads executor-resident blocks. The
+        # zero-documents-scan consumer claim is audited on the
+        # un-checkpointed consume_verdicts plan (tools/
+        # plan_audit.py::audit_verdict_consumer) and is only
+        # strengthened here: the layout itself is now scanned
+        # once, not 4×. Values are unchanged.
+        verd = read_verdict_table(spark, out).localCheckpoint(eager=True)
+        result = consume_verdicts(spark, verd)
+        # materialize before the layout is deleted (batch-sized:
+        # the packed kept-set, not the corpus)
+        return result.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def consume_verdicts(spark: SparkSession, verdicts: DataFrame) -> DataFrame:
@@ -541,9 +532,6 @@ def consume_verdicts(spark: SparkSession, verdicts: DataFrame) -> DataFrame:
     )
 
 
-_register_corpus_v4()
-
-
 _V5_EVAL_MARK = "FROM sh WHERE doc_id % 100 = 0"
 _V5_EVAL_FROZEN = (
     "FROM sh WHERE doc_id % 100 = 0 "
@@ -561,110 +549,107 @@ def _v5_oracle() -> str:
     return base.replace(_V5_EVAL_MARK, _V5_EVAL_FROZEN)
 
 
-def _register_corpus_v5() -> None:
-    @register(
-        "corpus_pipeline_v5",
-        oracle=_v5_oracle(),
-        doc="corpus_pipeline_v4's verdict table maintained "
-        "INCREMENTALLY (sources/verdicts.py round-6 layer): the "
-        "initial 3/5 of the corpus creates the table (rows + every-"
-        "seen-hash store + eval-gram store frozen at creation -- the "
-        "external-benchmark decontamination model), the remaining "
-        "docs arrive as two id-ordered batches absorbed by "
-        "append_to_verdict_table -- per-doc screens on the batch "
-        "only, exact-dedup via a batch-sized IN-list probe of the "
-        "hp-partitioned h-sorted hash store (partition + row-group "
-        "pruning; the minhash_index probe discipline applied to "
-        "exact dedup), contamination against the frozen benchmark. "
-        "The query SELF-ASSERTS the disk roundtrip: the read-back "
-        "table's order-independent content checksum must equal the "
-        "SUM of the signatures create/append returned for what they "
-        "wrote (verdict_sig is additive over disjoint row sets; "
-        "raises on drift). The heavier maintained == one-shot-"
-        "rebuild counterfactual runs in tests/test_verdict_table.py "
-        "and `tools/soak.py verdict` instead of on every "
-        "invocation (judge r6 item 8: the rebuild was 2x the row's "
-        "bench cost and is evidence, not operator). The oracle is "
-        "the full v3 pipeline with the eval slice restricted to the "
-        "initial corpus -- so incremental maintenance is STILL hash-"
-        "verified end-to-end against DuckDB, not just self-"
-        "consistent. Per-batch cost is a function of batch size, "
-        "not corpus size (measured: `tools/soak.py verdict`, "
-        "SCALING.md section incremental verdict maintenance).",
-        tags=("text", "dedup", "sampling", "pack", "pipeline",
-              "verdict", "incremental", "e2e"),
-    )
-    def corpus_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
+@register(
+    "corpus_pipeline_v5",
+    oracle=_v5_oracle(),
+    doc="corpus_pipeline_v4's verdict table maintained "
+    "INCREMENTALLY (sources/verdicts.py round-6 layer): the "
+    "initial 3/5 of the corpus creates the table (rows + every-"
+    "seen-hash store + eval-gram store frozen at creation -- the "
+    "external-benchmark decontamination model), the remaining "
+    "docs arrive as two id-ordered batches absorbed by "
+    "append_to_verdict_table -- per-doc screens on the batch "
+    "only, exact-dedup via a batch-sized IN-list probe of the "
+    "hp-partitioned h-sorted hash store (partition + row-group "
+    "pruning; the minhash_index probe discipline applied to "
+    "exact dedup), contamination against the frozen benchmark. "
+    "The query SELF-ASSERTS the disk roundtrip: the read-back "
+    "table's order-independent content checksum must equal the "
+    "SUM of the signatures create/append returned for what they "
+    "wrote (verdict_sig is additive over disjoint row sets; "
+    "raises on drift). The heavier maintained == one-shot-"
+    "rebuild counterfactual runs in tests/test_verdict_table.py "
+    "and `tools/soak.py verdict` instead of on every "
+    "invocation (judge r6 item 8: the rebuild was 2x the row's "
+    "bench cost and is evidence, not operator). The oracle is "
+    "the full v3 pipeline with the eval slice restricted to the "
+    "initial corpus -- so incremental maintenance is STILL hash-"
+    "verified end-to-end against DuckDB, not just self-"
+    "consistent. Per-batch cost is a function of batch size, "
+    "not corpus size (measured: `tools/soak.py verdict`, "
+    "SCALING.md section incremental verdict maintenance).",
+    tags=("text", "dedup", "sampling", "pack", "pipeline",
+          "verdict", "incremental", "e2e"),
+)
+def corpus_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
 
-        from ..sources.verdicts import (
-            append_to_verdict_table,
-            create_verdict_table,
-            read_incremental_verdicts,
-            verdict_sig,
+    from ..sources.verdicts import (
+        append_to_verdict_table,
+        create_verdict_table,
+        read_incremental_verdicts,
+        verdict_sig,
+    )
+
+    docs = load(spark, sf_dir, "documents")
+    ts = docs.agg(
+        F.expr("(max(doc_id) * 3) div 5"),
+        F.expr("(max(doc_id) * 4) div 5"),
+    ).first()
+    t, t2 = int(ts[0]), int(ts[1])
+    out = tempfile.mkdtemp(prefix="mathorcup_verdicts_incr_")
+    try:
+        n0, c0 = create_verdict_table(
+            spark, docs.filter(F.col("doc_id") < t), out
+        )
+        n1, c1 = append_to_verdict_table(
+            spark,
+            out,
+            docs.filter((F.col("doc_id") >= t) & (F.col("doc_id") < t2)),
+        )
+        n2, c2 = append_to_verdict_table(
+            spark, out, docs.filter(F.col("doc_id") >= t2)
+        )
+        # ONE scan + ONE replay-dedup shuffle of the maintained
+        # rows (round 12, guide §5/§3.3): the signature scan, the
+        # consumer's ~4 plan references (counts under k and rates,
+        # the kept side, the range-boundary sampling pass) and the
+        # final pass each re-derived scan+dropDuplicates before;
+        # the eager checkpoint materializes the narrow verdict
+        # frame once and every reader — including the concurrent
+        # signature thread — reads the blocks. Values unchanged.
+        maintained = read_incremental_verdicts(spark, out).localCheckpoint(
+            eager=True
         )
 
-        docs = load(spark, sf_dir, "documents")
-        ts = docs.agg(
-            F.expr("(max(doc_id) * 3) div 5"),
-            F.expr("(max(doc_id) * 4) div 5"),
-        ).first()
-        t, t2 = int(ts[0]), int(ts[1])
-        out = tempfile.mkdtemp(prefix="mathorcup_verdicts_incr_")
-        try:
-            n0, c0 = create_verdict_table(
-                spark, docs.filter(F.col("doc_id") < t), out
-            )
-            n1, c1 = append_to_verdict_table(
-                spark,
-                out,
-                docs.filter((F.col("doc_id") >= t) & (F.col("doc_id") < t2)),
-            )
-            n2, c2 = append_to_verdict_table(
-                spark, out, docs.filter(F.col("doc_id") >= t2)
-            )
-            # ONE scan + ONE replay-dedup shuffle of the maintained
-            # rows (round 12, guide §5/§3.3): the signature scan, the
-            # consumer's ~4 plan references (counts under k and rates,
-            # the kept side, the range-boundary sampling pass) and the
-            # final pass each re-derived scan+dropDuplicates before;
-            # the eager checkpoint materializes the narrow verdict
-            # frame once and every reader — including the concurrent
-            # signature thread — reads the blocks. Values unchanged.
-            maintained = read_incremental_verdicts(spark, out).localCheckpoint(
+        # disk-roundtrip self-assertion: the read-back table's
+        # order-independent signature must equal the additive sum
+        # of what the three maintenance ops wrote (verdict_sig is
+        # additive over disjoint row sets). The heavier
+        # maintained == one-shot-rebuild counterfactual lives in
+        # tests/test_verdict_table.py + `tools/soak.py verdict`.
+        #
+        # Round-11: the signature scan and the consume
+        # materialization are independent reads of the same
+        # rows/ layout, so they run on concurrent scheduler
+        # threads (guide §2.6) — the check still gates the
+        # return, it just no longer serializes before the
+        # consume job.
+        result, got = run_concurrently(
+            lambda: consume_verdicts(spark, maintained).localCheckpoint(
                 eager=True
+            ),
+            lambda: verdict_sig(maintained),
+        )
+        want = (n0 + n1 + n2, c0 + c1 + c2)
+        if got != want:
+            raise RuntimeError(
+                f"incremental verdict table read-back diverged from "
+                f"what maintenance wrote: read (rows, checksum)={got}, "
+                f"written={want}"
             )
+        return result
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
-            # disk-roundtrip self-assertion: the read-back table's
-            # order-independent signature must equal the additive sum
-            # of what the three maintenance ops wrote (verdict_sig is
-            # additive over disjoint row sets). The heavier
-            # maintained == one-shot-rebuild counterfactual lives in
-            # tests/test_verdict_table.py + `tools/soak.py verdict`.
-            #
-            # Round-11: the signature scan and the consume
-            # materialization are independent reads of the same
-            # rows/ layout, so they run on concurrent scheduler
-            # threads (guide §2.6) — the check still gates the
-            # return, it just no longer serializes before the
-            # consume job.
-            result, got = run_concurrently(
-                lambda: consume_verdicts(spark, maintained).localCheckpoint(
-                    eager=True
-                ),
-                lambda: verdict_sig(maintained),
-            )
-            want = (n0 + n1 + n2, c0 + c1 + c2)
-            if got != want:
-                raise RuntimeError(
-                    f"incremental verdict table read-back diverged from "
-                    f"what maintenance wrote: read (rows, checksum)={got}, "
-                    f"written={want}"
-                )
-            return result
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-
-
-_register_corpus_v5()

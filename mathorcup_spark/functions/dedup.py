@@ -1,5 +1,7 @@
 """Deduplication operators for training-data pipelines (SURVEY.md
-§2.13): exact hash dedup, n-gram Jaccard, MinHash+LSH, SimHash.
+§2.13): exact hash dedup, n-gram Jaccard and containment, MinHash+LSH
+(inline and against a persisted index), SimHash, embedding-cosine
+near-dups, repeated-span and content-defined-chunk screens.
 
 Scale posture: exact dedup is one shuffle on the content hash;
 near-dup never compares all pairs — candidate generation is either
@@ -7,11 +9,31 @@ key-bounded (same source, bounded id distance) or LSH-bucketed
 (band signature join), so the quadratic blowup of naive pairwise
 similarity is avoided at 100 TB. Signatures are computed with
 higher-order functions over word arrays (JVM-side, no Python).
+
+Near-dup detection is two stages, candidates then an exact rescore,
+and the queries share one copy of each block (as does the persisted
+index in ``sources/minhash_index.py`` and the n-gram screens in
+``functions/text.py``):
+
+- shingle sets: :func:`shingles_from` gives each document its
+  distinct word-n-gram set (any width, optional kept columns), empty
+  for documents under n words.
+- signatures: :func:`_banded_sigs` gives each document its 16
+  MinHashes cut into 4 ``(band, bucket)`` rows.
+- band join: :func:`band_join` pairs two banded frames on
+  ``(band, bucket)`` with an id predicate and the agreeing-MinHash
+  estimate, one row per pair.
+- exact Jaccard: :func:`_jaccard` is ``round(|A∩B| / |A∪B|, 6)``, NULL
+  for two empty sets, and :func:`rescore_jaccard` attaches both sides'
+  shingle sets to candidate pairs and scores them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -22,30 +44,6 @@ from .similarity import bucket_sql, lsh_bands
 
 def _norm_text():
     return F.lower(F.trim(F.regexp_replace("text", "\\s+", " ")))
-
-
-def _shingles(words, n: int = 3):
-    """Distinct word n-gram shingles of an array column (HOF, no UDF).
-
-    Documents with fewer than ``n`` words yield an EMPTY set — matching
-    the DuckDB oracle CTEs, where the ``||`` chain over an out-of-bounds
-    index is NULL and ``list_distinct`` drops it. Without the guard,
-    ``concat_ws`` would skip the NULL members and emit a truncated
-    shingle only on the Spark side (round-4 ADVICE, latent divergence).
-    """
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    # F.get (NULL on out-of-bounds) not element_at (throws under ANSI)
-    full = F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.get(words, (i + j).cast("int")) for j in range(n)]
-            ),
-        )
-    )
-    return F.when(F.size(words) >= n, full).otherwise(
-        F.array().cast("array<string>")
-    )
 
 
 @register(
@@ -104,49 +102,11 @@ def d_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard"),
 )
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    # Tokenize before a repartition exchange so the regex split is
-    # evaluated once per row, not once per shingle-lambda reference
-    # (no CSE inside Catalyst lambdas), and the compute-bound shingle
-    # build parallelizes even when the scan is a single small file.
-    wdf = docs.select("doc_id", "source", words.alias("words"))
-    if wdf.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        wdf = wdf.repartition("doc_id")
-    wcol = F.col("words")
-    # 3-gram shingles via 1-based element_at, mirroring the oracle's
-    # range(1, len-1) — both sides produce exactly len-2 shingles
-    idx = F.sequence(F.lit(1), F.greatest(F.size(wcol) - 2, F.lit(1)))
-    # Mirrors the oracle's 1-based range; F.get is 0-based and NULL-safe.
-    # Docs under 3 words get an EMPTY set — in the oracle the || chain
-    # over an out-of-bounds index is NULL and list_distinct drops it;
-    # without the guard concat_ws would emit a truncated shingle only
-    # on the Spark side (round-4 ADVICE, latent divergence).
-    shingles = F.when(
-        F.size(wcol) >= 3,
-        F.array_distinct(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ",
-                    F.get(wcol, (i - 1).cast("int")),
-                    F.get(wcol, i.cast("int")),
-                    F.get(wcol, (i + 1).cast("int")),
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sh = wdf.select("doc_id", "source", shingles.alias("shingles"))
-    inter = F.size(F.array_intersect(F.col("a.shingles"), F.col("b.shingles")))
-    union = F.size(F.col("a.shingles")) + F.size(F.col("b.shingles")) - inter
-    # when-guard: both-empty pairs are NULL jaccard on both engines
-    # (DuckDB double 0/0 is NULL; Spark's is IEEE NaN without it)
+    sh = shingles_from(spark, load(spark, sf_dir, "documents"), keep=("source",))
     return _id_window_join(sh).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.round(
-            F.when(union > 0, inter.cast("double") / union), 6
-        ).alias("jaccard"),
+        _jaccard("a.shingles", "b.shingles").alias("jaccard"),
     )
 
 
@@ -318,31 +278,114 @@ def _banded_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mh_tables(spark, sf_dir)["banded"]
 
 
-def shingles_from(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles): distinct word-3-gram shingle sets of any
-    (doc_id, text, ...) frame — shared by the corpus-wide queries and
-    the persisted-index build/probe (sources/minhash_index.py).
+def shingles_from(
+    spark: SparkSession,
+    docs: DataFrame,
+    n: int = 3,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(doc_id, *keep, shingles): distinct word-``n``-gram shingle sets
+    of any (doc_id, text, ...) frame — the one shingle builder of the
+    dedup queries, the persisted index (sources/minhash_index.py) and
+    the n-gram screens of functions/text.py.
+
+    Documents with fewer than ``n`` words get an EMPTY set, matching
+    the DuckDB oracle CTEs, where the ``||`` chain over an
+    out-of-bounds index is NULL and ``list_distinct`` drops it.
+    Without the guard, ``concat_ws`` would skip the NULL members and
+    emit a truncated shingle only on the Spark side (round-4 ADVICE,
+    latent divergence).
 
     Tokenize BEFORE the repartition exchange: the shingle lambda
-    references the words array ~3x per index, and Catalyst's
+    references the words array ``n`` times per index, and Catalyst's
     CollapseProject would re-inline the regex split into every
     reference (no CSE inside lambdas) — the exchange is a barrier
     it cannot cross, so the split runs once per row.
     """
     words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    wdf = docs.select("doc_id", words.alias("words"))
+    wdf = docs.select("doc_id", *keep, words.alias("words"))
     if wdf.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
         # A small parquet file arrives as one partition, serializing
         # the compute-bound shingle build; at cluster scale the scan
         # already yields many splits and this branch never fires.
         wdf = wdf.repartition("doc_id")
-    return wdf.select("doc_id", _shingles(F.col("words"), 3).alias("shingles"))
+    w = F.col("words")
+    idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0)))
+    # F.get (NULL on out-of-bounds) not element_at (throws under ANSI)
+    full = F.array_distinct(
+        F.transform(
+            idx,
+            lambda i: F.concat_ws(
+                " ", *[F.get(w, (i + j).cast("int")) for j in range(n)]
+            ),
+        )
+    )
+    shingles = F.when(F.size(w) >= n, full).otherwise(
+        F.array().cast("array<string>")
+    )
+    return wdf.select("doc_id", *keep, shingles.alias("shingles"))
 
 
-def _minhash_candidates(sh: DataFrame, max_bucket: int | None = None) -> DataFrame:
-    """(doc_a, doc_b, est_jaccard) MinHash-LSH candidate pairs from a
-    (doc_id, shingles) frame — the banded signature build + bucket
-    self-join shared by d_minhash_lsh and d_lsh_rescore_e2e.
+def _candidates_from_banded(
+    banded: DataFrame, max_bucket: int | None = None
+) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard): the corpus-wide candidate
+    self-join over a prebuilt banded-signature frame — sf_dir-level
+    queries pass the persisted bucket-bucketed scan from _banded_df
+    so the join runs co-partitioned.
+
+    ``max_bucket`` skips (band, bucket) groups above that size before
+    the self-join (the boilerplate quadratic guard — see MAX_BUCKET);
+    the count aggregation shuffles on the same key as the join."""
+    if max_bucket is not None:
+        sizes = banded.groupBy("band", "bucket").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        banded = banded.join(
+            sizes.filter(F.col("n") <= max_bucket).drop("n"), ["band", "bucket"]
+        )
+    return band_join(banded, banded, operator.lt)
+
+
+def band_join(
+    a: DataFrame,
+    c: DataFrame,
+    id_pred: Callable[[Column, Column], Column] | None = None,
+    names: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """(names[0], names[1], est_jaccard): every pair of a row of ``a``
+    and a row of ``c`` (both (doc_id, band, bucket, sig) banded
+    frames) that share a (band, bucket), kept where
+    ``id_pred(a.doc_id, c.doc_id)`` holds, with the fraction of
+    agreeing minhashes as the estimate — one row per pair however
+    many bands collide."""
+    a, c = a.alias("a"), c.alias("c")
+    on = (F.col("a.band") == F.col("c.band")) & (
+        F.col("a.bucket") == F.col("c.bucket")
+    )
+    if id_pred is not None:
+        on = on & id_pred(F.col("a.doc_id"), F.col("c.doc_id"))
+    agree = F.size(
+        F.filter(
+            F.zip_with(F.col("a.sig"), F.col("c.sig"), lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
+    return (
+        a.join(c, on)
+        .select(
+            F.col("a.doc_id").alias(names[0]),
+            F.col("c.doc_id").alias(names[1]),
+            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
+        )
+        .dropDuplicates(list(names))
+    )
+
+
+def _banded_sigs(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket, sig) banded MinHash signatures from a
+    (doc_id, shingles) frame — the index layout both the corpus-wide
+    self-join and the incremental new-vs-index join probe.
 
     minhash_i = min over shingles of (a_i * x + b_i) mod P where x
     is the 60-bit prefix of md5(shingle) — one digest per shingle,
@@ -352,57 +395,7 @@ def _minhash_candidates(sh: DataFrame, max_bucket: int | None = None) -> DataFra
     subexpression elimination inside lambdas, so the HOF form
     rebuilds the shingle array once per permutation. Partial
     aggregation collapses the exploded rows map-side; the shuffle
-    carries (doc_id, 16 longs) per document.
-
-    ``max_bucket`` skips (band, bucket) groups above that size before
-    the self-join (the boilerplate quadratic guard — see MAX_BUCKET);
-    the count aggregation shuffles on the same key as the join.
-    """
-    return _candidates_from_banded(_banded_sigs(sh), max_bucket=max_bucket)
-
-
-def _candidates_from_banded(
-    banded: DataFrame, max_bucket: int | None = None
-) -> DataFrame:
-    """The (band, bucket) candidate self-join over a prebuilt banded-
-    signature frame — sf_dir-level queries pass the persisted
-    bucket-bucketed scan from _banded_df so the join runs
-    co-partitioned."""
-    if max_bucket is not None:
-        sizes = banded.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        banded = banded.join(
-            sizes.filter(F.col("n") <= max_bucket).drop("n"), ["band", "bucket"]
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
-def _banded_sigs(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket, sig) banded MinHash signatures from a
-    (doc_id, shingles) frame — the index layout both the corpus-wide
-    self-join and the incremental new-vs-index join probe."""
+    carries (doc_id, 16 longs) per document."""
     # explode_outer, NOT explode: a plain explode lets Catalyst's
     # InferFiltersFromGenerate add a size(shingles) > 0 filter that
     # predicate pushdown re-inlines below the repartition exchange,
@@ -503,19 +496,36 @@ def rescored_pairs(
     cand = _candidates_from_banded(
         _banded_df(spark, sf_dir), max_bucket=max_bucket
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
+    return rescore_jaccard(cand, sh, sh)
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """round(|A∩B| / |A∪B|, 6) of two shingle-set columns — the exact
+    Jaccard every near-dup oracle replays. NULL when both sets are
+    empty: DuckDB's double 0/0 is NULL, Spark's is IEEE NaN without
+    the when-guard."""
+    inter = F.size(F.array_intersect(F.col(a), F.col(b)))
+    union = F.size(F.col(a)) + F.size(F.col(b)) - inter
+    return F.round(F.when(union > 0, inter.cast("double") / union), 6)
+
+
+def rescore_jaccard(
+    cand: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    names: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """(names[0], names[1], est_jaccard, jaccard): candidate pairs
+    rescored with exact shingle Jaccard — two hash equi-joins on the
+    pair's ids attach each side's set from its (doc_id, shingles)
+    frame."""
+    a, b = names
+    sa = sh_a.select(F.col("doc_id").alias(a), F.col("shingles").alias("sh_a"))
+    sb = sh_b.select(F.col("doc_id").alias(b), F.col("shingles").alias("sh_b"))
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_jaccard",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
+        cand.join(sa, a)
+        .join(sb, b)
+        .select(a, b, "est_jaccard", _jaccard("sh_a", "sh_b").alias("jaccard"))
     )
 
 
@@ -684,10 +694,9 @@ ND_BITS = 8
 ND_TABLES = 6
 
 
-def _register_embedding_neardup() -> None:
-    @register(
-        "d_embedding_neardup",
-        oracle=f"""
+@register(
+    "d_embedding_neardup",
+    oracle=f"""
         WITH b AS (
           SELECT vec_id, t, {bucket_sql(ND_BITS)} AS bucket,
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -709,93 +718,90 @@ def _register_embedding_neardup() -> None:
         )
         SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= {NEARDUP_TAU}
         """,
-        doc="Embedding-cosine near-duplicate pairs (SURVEY.md SS2.13): "
-        "candidate pairs collide in any of 6 sign-LSH tables of 8 bits "
-        "(equi-join on (table, bucket) -- never an all-pairs crossJoin), "
-        "then one exact dot product over pre-unit-normalized vectors "
-        "confirms cosine >= tau. The 48 hyperplane projections run as "
-        "one narrow Arrow stage (plane_dots); pair rescoring is fully "
-        "distributed -- deduped id pairs hash-join the normalized "
-        "vectors table on each side and a sequential-fold HOF dot "
-        "keeps results bit-identical to the oracle. No driver-side "
-        "codebook at any corpus size. Pair order vec_a < vec_b halves "
-        "the candidate set.",
-        tags=("dedup", "embedding", "lsh"),
+    doc="Embedding-cosine near-duplicate pairs (SURVEY.md SS2.13): "
+    "candidate pairs collide in any of 6 sign-LSH tables of 8 bits "
+    "(equi-join on (table, bucket) -- never an all-pairs crossJoin), "
+    "then one exact dot product over pre-unit-normalized vectors "
+    "confirms cosine >= tau. The 48 hyperplane projections run as "
+    "one narrow Arrow stage (plane_dots); pair rescoring is fully "
+    "distributed -- deduped id pairs hash-join the normalized "
+    "vectors table on each side and a sequential-fold HOF dot "
+    "keeps results bit-identical to the oracle. No driver-side "
+    "codebook at any corpus size. Pair order vec_a < vec_b halves "
+    "the candidate set.",
+    tags=("dedup", "embedding", "lsh"),
+)
+def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load(spark, sf_dir, "embeddings")
+    # 48 hyperplane dots per vector in ONE narrow Arrow stage, then
+    # the per-table sign-bit buckets (lsh_bands)
+    tables = lsh_bands(emb, ND_TABLES, ND_BITS)
+
+    a = tables.select(F.col("vec_id").alias("vec_a"), "t", "bucket")
+    c = tables.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("t").alias("ct"),
+        F.col("bucket").alias("cb"),
     )
-    def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = load(spark, sf_dir, "embeddings")
-        # 48 hyperplane dots per vector in ONE narrow Arrow stage, then
-        # the per-table sign-bit buckets (lsh_bands)
-        tables = lsh_bands(emb, ND_TABLES, ND_BITS)
-
-        a = tables.select(F.col("vec_id").alias("vec_a"), "t", "bucket")
-        c = tables.select(
-            F.col("vec_id").alias("vec_b"),
-            F.col("t").alias("ct"),
-            F.col("bucket").alias("cb"),
+    # Dedup the candidate id pairs BEFORE attaching vectors: a
+    # pair colliding in k tables would otherwise carry both 64-dim
+    # arrays k times through the rescore joins. The dedup shuffle
+    # moves 16-byte id pairs — two orders of magnitude cheaper
+    # than the ~1 KB/pair it saves downstream.
+    cand = (
+        a.join(
+            c,
+            (F.col("t") == F.col("ct"))
+            & (F.col("bucket") == F.col("cb"))
+            & (F.col("vec_b") > F.col("vec_a")),
         )
-        # Dedup the candidate id pairs BEFORE attaching vectors: a
-        # pair colliding in k tables would otherwise carry both 64-dim
-        # arrays k times through the rescore joins. The dedup shuffle
-        # moves 16-byte id pairs — two orders of magnitude cheaper
-        # than the ~1 KB/pair it saves downstream.
-        cand = (
-            a.join(
-                c,
-                (F.col("t") == F.col("ct"))
-                & (F.col("bucket") == F.col("cb"))
-                & (F.col("vec_b") > F.col("vec_a")),
-            )
-            .select("vec_a", "vec_b")
-            .dropDuplicates(["vec_a", "vec_b"])
+        .select("vec_a", "vec_b")
+        .dropDuplicates(["vec_a", "vec_b"])
+    )
+    # Distributed pair rescore: shuffle-join the candidate pairs
+    # against the unit-normalized vectors table on each side, then
+    # one sequential-fold dot per pair (HOF aggregate, JVM-side).
+    # No driver-side codebook: an earlier revision collected and
+    # broadcast the full embedding table (driver-memory-bounded —
+    # dies when the corpus outgrows the driver); this plan is
+    # executor-memory-bounded at any vector count and every join
+    # is a hash equi-join on vec_id. Float semantics match the
+    # oracle exactly: the norm is the ordered sum of squares
+    # (aggregate fold), the division is per-element, and the dot
+    # accumulates in dimension order — the same IEEE operation
+    # sequence as list_dot_product / the previous numpy loop.
+    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    normed = emb.select("vec_id", dbl.alias("e")).select(
+        "vec_id",
+        F.transform(
+            "e",
+            lambda x: x
+            / F.sqrt(
+                F.aggregate(
+                    F.transform("e", lambda y: y * y),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
+                )
+            ),
+        ).alias("u"),
+    )
+    pair_dot = F.aggregate(
+        F.zip_with(F.col("ua"), F.col("ub"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    scored = (
+        cand.join(
+            normed.select(F.col("vec_id").alias("vec_a"), F.col("u").alias("ua")),
+            "vec_a",
         )
-        # Distributed pair rescore: shuffle-join the candidate pairs
-        # against the unit-normalized vectors table on each side, then
-        # one sequential-fold dot per pair (HOF aggregate, JVM-side).
-        # No driver-side codebook: an earlier revision collected and
-        # broadcast the full embedding table (driver-memory-bounded —
-        # dies when the corpus outgrows the driver); this plan is
-        # executor-memory-bounded at any vector count and every join
-        # is a hash equi-join on vec_id. Float semantics match the
-        # oracle exactly: the norm is the ordered sum of squares
-        # (aggregate fold), the division is per-element, and the dot
-        # accumulates in dimension order — the same IEEE operation
-        # sequence as list_dot_product / the previous numpy loop.
-        dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        normed = emb.select("vec_id", dbl.alias("e")).select(
-            "vec_id",
-            F.transform(
-                "e",
-                lambda x: x
-                / F.sqrt(
-                    F.aggregate(
-                        F.transform("e", lambda y: y * y),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ),
-            ).alias("u"),
+        .join(
+            normed.select(F.col("vec_id").alias("vec_b"), F.col("u").alias("ub")),
+            "vec_b",
         )
-        pair_dot = F.aggregate(
-            F.zip_with(F.col("ua"), F.col("ub"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        scored = (
-            cand.join(
-                normed.select(F.col("vec_id").alias("vec_a"), F.col("u").alias("ua")),
-                "vec_a",
-            )
-            .join(
-                normed.select(F.col("vec_id").alias("vec_b"), F.col("u").alias("ub")),
-                "vec_b",
-            )
-            .select("vec_a", "vec_b", F.round(pair_dot, 6).alias("cosine"))
-        )
-        return scored.filter(F.col("cosine") >= NEARDUP_TAU)
-
-
-_register_embedding_neardup()
+        .select("vec_a", "vec_b", F.round(pair_dot, 6).alias("cosine"))
+    )
+    return scored.filter(F.col("cosine") >= NEARDUP_TAU)
 
 
 @register(
@@ -895,41 +901,10 @@ def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(max(doc_id) * 4) div 5").cast("long").alias("t")
     )
     b = banded.crossJoin(F.broadcast(tt))
-    idx = b.filter(F.col("doc_id") < F.col("t")).drop("t").alias("a")
-    new = b.filter(F.col("doc_id") >= F.col("t")).drop("t").alias("c")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("c.sig"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    cand = (
-        idx.join(
-            new,
-            (F.col("a.band") == F.col("c.band"))
-            & (F.col("a.bucket") == F.col("c.bucket")),
-        )
-        .select(
-            F.col("a.doc_id").alias("idx_id"),
-            F.col("c.doc_id").alias("new_id"),
-            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
-        )
-        .dropDuplicates(["idx_id", "new_id"])
-    )
-    sa = sh.select(F.col("doc_id").alias("idx_id"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        cand.join(sa, "idx_id")
-        .join(sb, "new_id")
-        .select(
-            "idx_id",
-            "new_id",
-            "est_jaccard",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-    )
+    idx = b.filter(F.col("doc_id") < F.col("t")).drop("t")
+    new = b.filter(F.col("doc_id") >= F.col("t")).drop("t")
+    names = ("idx_id", "new_id")
+    return rescore_jaccard(band_join(idx, new, names=names), sh, sh, names)
 
 
 @register(
@@ -1185,14 +1160,7 @@ def d_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "containment", "jaccard"),
 )
 def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    # tokenize-then-repartition before the shingle HOF, the
-    # d_ngram_jaccard discipline (no CSE inside Catalyst lambdas)
-    wdf = docs.select("doc_id", "source", words.alias("words"))
-    if wdf.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        wdf = wdf.repartition("doc_id")
-    sh = wdf.select("doc_id", "source", _shingles(F.col("words")).alias("shingles"))
+    sh = shingles_from(spark, load(spark, sf_dir, "documents"), keep=("source",))
     inter = F.size(F.array_intersect(F.col("a.shingles"), F.col("b.shingles")))
     sz_a = F.size(F.col("a.shingles"))
     sz_b = F.size(F.col("b.shingles"))

@@ -13,16 +13,24 @@ its oracle) agree by construction:
   :func:`bucket_sql` is the same bucket in DuckDB SQL. They serve the
   4x4 ANN index here and in ``sources/ann_index.py`` and the 6x8
   near-dup index in ``functions/dedup.py``.
+- top-k: :func:`topk` is the per-query window (a score, then c_id asc)
+  under every cosine, ADC and exact-L2 ranking of ``(q_id, c_id)``
+  pairs.
 - exact-cosine rescore: :func:`_side` carries each vector's norm as a
   column, :func:`_cosine` divides the dot by the norms and rounds last,
-  :func:`cosine_topk` is the per-query window (cosine desc, c_id asc),
   and :func:`rescore_topk` joins the vectors onto ``(q_id, c_id)``
-  candidates and ranks them.
+  candidates and ranks them by cosine desc.
+- exact-L2 rescore: :func:`_pq_d2` is the one rounded squared-L2
+  distance of two arrays (subvector to codeword, vector to cell, query
+  to candidate), and :func:`l2_rescore_topk` joins the vectors onto an
+  ADC shortlist and ranks it; the ground truth :func:`_exact_l2_top5`
+  rescores every pair the same way.
 - the seeded KMeans fit :func:`_seeded_kmeans` (seed 42, 20
   iterations, id-stride subsample past ``SEMDEDUP_FIT_MAX``) under the
   learned centroids, coarse cells and PQ codebooks.
 - the PQ subvector split :func:`_split_subvectors` under the corpus,
-  residual and query-residual subvector frames.
+  residual and query-residual subvector frames, and the deterministic
+  first-K codebook :func:`first_k_codebook` over a subvector frame.
 
 The hyperplanes come from an integer-hash formula (not an RNG), so the
 LSH queries are oracle-checkable end to end, which MLlib's
@@ -32,7 +40,7 @@ would not be.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -184,10 +192,11 @@ def _cosine():
     return F.round(_dot("qe", "ce") / (F.col("qnrm") * F.col("cnrm")), 6)
 
 
-def cosine_topk(scored: DataFrame, k: int = 5) -> DataFrame:
-    """Rank ``scored`` (q_id, c_id, cosine) per query by cosine desc,
-    then c_id, and keep the first ``k`` with their rank ``rnk``."""
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+def topk(scored: DataFrame, order: str | Column, k: int = 5) -> DataFrame:
+    """Rank ``scored`` (q_id, c_id, ...) per query by ``order`` (a
+    column name sorts ascending), then c_id, and keep the first ``k``
+    with their rank ``rnk``."""
+    w = W.partitionBy("q_id").orderBy(order, F.asc("c_id"))
     return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
         F.col("rnk") <= k
     )
@@ -198,13 +207,14 @@ def rescore_topk(
 ) -> DataFrame:
     """Exact-cosine top-``k`` of the (q_id, c_id) candidate pairs: the
     query side ``qv`` (:func:`_side` "q", broadcast) and the candidate
-    side ``cv`` (:func:`_side` "c") join on, then :func:`cosine_topk`."""
+    side ``cv`` (:func:`_side` "c") join on, then :func:`topk` by cosine
+    desc."""
     scored = (
         cand.join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
         .select("q_id", "c_id", _cosine().alias("cosine"))
     )
-    return cosine_topk(scored, k)
+    return topk(scored, F.desc("cosine"), k)
 
 
 @register(
@@ -242,7 +252,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(queries), F.col("c_id") != F.col("q_id"))
         .select("q_id", "c_id", _cosine().alias("cosine"))
     )
-    return cosine_topk(scored)
+    return topk(scored, F.desc("cosine"))
 
 
 def _lsh_oracle(flip_bits: int) -> str:
@@ -450,17 +460,12 @@ def _ivf_topk(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _register_ann_recall() -> None:
-    exact = REGISTRY["sim_cosine_topk"].oracle
-    lsh = REGISTRY["sim_lsh_ann"].oracle
-    ivf = REGISTRY["sim_ivf_ann"].oracle
-
-    @register(
-        "sim_ann_recall",
-        oracle=f"""
-        WITH exact_k AS ({exact}),
-             lsh_k AS ({lsh}),
-             ivf_k AS ({ivf})
+@register(
+    "sim_ann_recall",
+    oracle=f"""
+        WITH exact_k AS ({REGISTRY['sim_cosine_topk'].oracle}),
+             lsh_k AS ({REGISTRY['sim_lsh_ann'].oracle}),
+             ivf_k AS ({REGISTRY['sim_ivf_ann'].oracle})
         SELECT 'lsh' AS method,
                CAST(count(l.c_id) AS DOUBLE) / count(*) AS recall_at_5
         FROM exact_k e LEFT JOIN lsh_k l
@@ -471,78 +476,69 @@ def _register_ann_recall() -> None:
         FROM exact_k e LEFT JOIN ivf_k i
           ON i.q_id = e.q_id AND i.c_id = e.c_id
         """,
-        doc="ANN quality evaluation as a query: recall@5 of the LSH "
-        "and IVF paths against the exact cosine top-k baseline — the "
-        "measurement loop that justifies (or rejects) an index's "
-        "parameters before a 100 TB rollout. Same-shape outputs make "
-        "it one left join + ratio per method; both the index answers "
-        "AND the metric are oracle-checked.",
-        tags=("similarity", "ann", "metrics"),
-    )
-    def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        exact_df = REGISTRY["sim_cosine_topk"].fn(spark, sf_dir)
-        parts = []
-        for method in ("lsh", "ivf"):
-            approx = REGISTRY[f"sim_{method}_ann" if method == "ivf" else "sim_lsh_ann"].fn(
-                spark, sf_dir
-            )
-            hit = approx.select(
-                F.col("q_id").alias("aq"), F.col("c_id").alias("ac")
-            )
-            joined = exact_df.join(
-                hit,
-                (F.col("aq") == F.col("q_id")) & (F.col("ac") == F.col("c_id")),
-                "left",
-            )
-            parts.append(
-                joined.agg(
-                    (F.count("ac").cast("double") / F.count("*")).alias("recall_at_5")
-                ).select(F.lit(method).alias("method"), "recall_at_5")
-            )
-        return parts[0].unionByName(parts[1])
+    doc="ANN quality evaluation as a query: recall@5 of the LSH "
+    "and IVF paths against the exact cosine top-k baseline — the "
+    "measurement loop that justifies (or rejects) an index's "
+    "parameters before a 100 TB rollout. Same-shape outputs make "
+    "it one left join + ratio per method; both the index answers "
+    "AND the metric are oracle-checked.",
+    tags=("similarity", "ann", "metrics"),
+)
+def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    exact_df = REGISTRY["sim_cosine_topk"].fn(spark, sf_dir)
+    parts = []
+    for method in ("lsh", "ivf"):
+        approx = REGISTRY[f"sim_{method}_ann" if method == "ivf" else "sim_lsh_ann"].fn(
+            spark, sf_dir
+        )
+        hit = approx.select(
+            F.col("q_id").alias("aq"), F.col("c_id").alias("ac")
+        )
+        joined = exact_df.join(
+            hit,
+            (F.col("aq") == F.col("q_id")) & (F.col("ac") == F.col("c_id")),
+            "left",
+        )
+        parts.append(
+            joined.agg(
+                (F.count("ac").cast("double") / F.count("*")).alias("recall_at_5")
+            ).select(F.lit(method).alias("method"), "recall_at_5")
+        )
+    return parts[0].unionByName(parts[1])
 
 
-_register_ann_recall()
+@register(
+    "sim_lsh_index_ann",
+    oracle=REGISTRY["sim_lsh_ann"].oracle,
+    doc="Persisted-index ANN, driver-verified: builds the "
+    "(t, bucket)-partitioned LSH index (sources/ann_index.py) in "
+    "a temp dir, then answers the same vec_id < 10 query batch "
+    "by probing it — partition-pruning literals push the probed "
+    "buckets into the scan, so only those directories are read "
+    "(asserted in tests/test_ann_index.py). Shares sim_lsh_ann's "
+    "oracle because a persisted index MUST answer byte-identically "
+    "to the inline query: same hyperplanes, same rescore formula, "
+    "rounding applied last. The build→probe pattern is what "
+    "amortizes signature cost across query batches at 100 TB.",
+    tags=("similarity", "ann", "lsh", "index"),
+)
+def sim_lsh_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
 
+    from ..sources.ann_index import query_lsh_index, write_lsh_index
 
-def _register_lsh_index_ann() -> None:
-    from ..registry import REGISTRY
-
-    @register(
-        "sim_lsh_index_ann",
-        oracle=REGISTRY["sim_lsh_ann"].oracle,
-        doc="Persisted-index ANN, driver-verified: builds the "
-        "(t, bucket)-partitioned LSH index (sources/ann_index.py) in "
-        "a temp dir, then answers the same vec_id < 10 query batch "
-        "by probing it — partition-pruning literals push the probed "
-        "buckets into the scan, so only those directories are read "
-        "(asserted in tests/test_ann_index.py). Shares sim_lsh_ann's "
-        "oracle because a persisted index MUST answer byte-identically "
-        "to the inline query: same hyperplanes, same rescore formula, "
-        "rounding applied last. The build→probe pattern is what "
-        "amortizes signature cost across query batches at 100 TB.",
-        tags=("similarity", "ann", "lsh", "index"),
-    )
-    def sim_lsh_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-
-        from ..sources.ann_index import query_lsh_index, write_lsh_index
-
-        emb = load(spark, sf_dir, "embeddings")
-        out = tempfile.mkdtemp(prefix="mathorcup_ann_index_")
-        try:
-            write_lsh_index(emb, out)
-            result = query_lsh_index(
-                spark, out, emb.filter(F.col("vec_id") < 10), k=5
-            )
-            # materialize before the index directory is deleted
-            return result.localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-
-
-_register_lsh_index_ann()
+    emb = load(spark, sf_dir, "embeddings")
+    out = tempfile.mkdtemp(prefix="mathorcup_ann_index_")
+    try:
+        write_lsh_index(emb, out)
+        result = query_lsh_index(
+            spark, out, emb.filter(F.col("vec_id") < 10), k=5
+        )
+        # materialize before the index directory is deleted
+        return result.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 # n_keys SQL of the learned-index check rows: query batch, corpus
@@ -881,17 +877,9 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per ranking branch
         .localCheckpoint(eager=False)
     )
-    wf = W.partitionBy("q_id").orderBy(F.desc("cos_full"), F.asc("c_id"))
-    wp = W.partitionBy("q_id").orderBy(F.desc("cos_pref"), F.asc("c_id"))
-    rf = (
-        pairs.withColumn("rnk", F.row_number().over(wf))
-        .filter(F.col("rnk") <= _MATRYOSHKA_K)
-        .select("q_id", "c_id")
-    )
-    rp = (
-        pairs.withColumn("rnk", F.row_number().over(wp))
-        .filter(F.col("rnk") <= _MATRYOSHKA_K)
-        .select(F.col("q_id").alias("p_qid"), F.col("c_id").alias("p_cid"))
+    rf = topk(pairs, F.desc("cos_full"), _MATRYOSHKA_K).select("q_id", "c_id")
+    rp = topk(pairs, F.desc("cos_pref"), _MATRYOSHKA_K).select(
+        F.col("q_id").alias("p_qid"), F.col("c_id").alias("p_cid")
     )
     return (
         rf.join(
@@ -1680,8 +1668,19 @@ def pq_subvectors(emb: DataFrame) -> DataFrame:
     return _split_subvectors(_raw_vectors(emb), "e")
 
 
+def first_k_codebook(sub: DataFrame, code: str = "cent_id") -> DataFrame:
+    """(m, <code>, c): the deterministic first-K codebook of a
+    (vec_id, m, s) subvector frame — the subvectors of vec_id < PQ_K
+    are each subspace's codewords, the choice every PQ oracle
+    replays."""
+    return sub.filter(F.col("vec_id") < PQ_K).select(
+        "m", F.col("vec_id").alias(code), F.col("s").alias("c")
+    )
+
+
 def _pq_d2(s: str, c: str):
-    """round(||s - c||^2, 6) — the shared subvector distance; rounded
+    """round(||s - c||^2, 6) of two equal-length arrays — the one
+    squared-L2 distance (subvectors, cells, exact rescore); rounded
     at the SAME point on both engines so downstream exact-decimal
     sums stay order-independent and cross-engine identical."""
     return F.round(
@@ -1790,10 +1789,7 @@ def pq_quantize_from(sub: DataFrame, cb: DataFrame) -> DataFrame:
 def sim_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     sub = pq_subvectors(emb)
-    cb = sub.filter(F.col("vec_id") < PQ_K).select(
-        F.col("m"), F.col("vec_id").alias("cent_id"), F.col("s").alias("c")
-    )
-    return pq_quantize_from(sub, cb)
+    return pq_quantize_from(sub, first_k_codebook(sub))
 
 
 def learned_pq_codebooks(spark: SparkSession, sub: DataFrame) -> DataFrame:
@@ -2010,10 +2006,7 @@ def sim_pq_quantize_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codebooks from the per-(sf_dir, embeddings fingerprint) fit
     # cache (judge r9 item 1) — same 8 seeded fits, run once
     lrn = pq_quantize_from(sub, cached_pq_codebooks(spark, sf_dir))
-    det_cb = sub.filter(F.col("vec_id") < PQ_K).select(
-        F.col("m"), F.col("vec_id").alias("cent_id"), F.col("s").alias("c")
-    )
-    det = pq_quantize_from(sub, det_cb)
+    det = pq_quantize_from(sub, first_k_codebook(sub))
     n_corpus = int(emb.count())
     ls = lrn.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2108,9 +2101,7 @@ def sim_pq_quantize_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     sub = pq_subvectors(emb)
-    cb = sub.filter(F.col("vec_id") < PQ_K).select(
-        F.col("m"), F.col("vec_id").alias("cent_id"), F.col("s").alias("c")
-    )
+    cb = first_k_codebook(sub)
     codes = pq_assign(sub, cb).select(
         F.col("vec_id").alias("c_id"), "m", "cent_id"
     )
@@ -2126,10 +2117,7 @@ def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "c_id")
         .agg(F.sum(F.col("d2q").cast(DEC)).cast(DEC).alias("adc_d2"))
     )
-    w = W.partitionBy("q_id").orderBy(F.asc("adc_d2"), F.asc("c_id"))
-    return scored.withColumn(
-        "rnk", F.row_number().over(w).cast("long")
-    ).filter(F.col("rnk") <= 5)
+    return topk(scored, "adc_d2")
 
 
 # ---------------------------------------------------------------------------
@@ -2265,10 +2253,7 @@ _IVFPQ_CTES = _ivfpq_ctes(
 )
 def sim_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc, _v = _ivf_pq_adc(spark, sf_dir)
-    w = W.partitionBy("q_id").orderBy(F.asc("adc_d2"), F.asc("c_id"))
-    return adc.withColumn(
-        "rnk", F.row_number().over(w).cast("long")
-    ).filter(F.col("rnk") <= 5)
+    return topk(adc, "adc_d2")
 
 
 def _ivf_rank_cells(v: DataFrame, cent: DataFrame) -> DataFrame:
@@ -2330,9 +2315,7 @@ def _ivf_pq_adc(
     ).select(F.col("vec_id").alias("q_id"), "cell")
     rsub = _residual_subvectors(asg, v, cent)
     if cb is None:
-        cb = rsub.filter(F.col("vec_id") < PQ_K).select(
-            "m", F.col("vec_id").alias("code"), F.col("s").alias("c")
-        )
+        cb = first_k_codebook(rsub, "code")
     codes = (
         pq_assign(rsub, cb.withColumnRenamed("code", "cent_id"))
         .select(
@@ -2403,158 +2386,137 @@ def ivfpq_k(n_vectors: int) -> int:
     return semdedup_k(n_vectors)
 
 
+def l2_rescore_topk(short: DataFrame, v: DataFrame) -> DataFrame:
+    """(q_id, c_id, exact_d2, rnk): the (q_id, c_id) shortlist
+    re-ranked by exact L2 — the (vec_id, e) vectors ``v`` join on
+    each side, :func:`_pq_d2` scores the pair, :func:`topk` keeps 5
+    per query."""
+    vq = v.select(F.col("vec_id").alias("q_id"), F.col("e").alias("eq"))
+    vc = v.select(F.col("vec_id").alias("c_id"), F.col("e").alias("ec"))
+    ex = (
+        short.join(vq, "q_id")
+        .join(vc, "c_id")
+        .select("q_id", "c_id", _pq_d2("eq", "ec").alias("exact_d2"))
+    )
+    return topk(ex, "exact_d2")
+
+
 def _exact_l2_top5(v: DataFrame) -> DataFrame:
     """(q_id, c_id) exact L2 top-5 ground truth for the q_id < 10
-    query batch — broadcast crossJoin of 10 queries, the
-    sim_cosine_topk shape."""
-    q = v.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("eq")
-    )
-    c = v.select(F.col("vec_id").alias("c_id"), F.col("e").alias("ec"))
-    d2 = F.aggregate(
-        F.zip_with("eq", "ec", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    ex = (
-        c.crossJoin(F.broadcast(q))
+    query batch: every other vector is the shortlist (a broadcast
+    crossJoin of 10 query ids), rescored by :func:`l2_rescore_topk`."""
+    q = v.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("q_id"))
+    pairs = (
+        v.select(F.col("vec_id").alias("c_id"))
+        .crossJoin(F.broadcast(q))
         .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", d2.alias("d2"))
     )
-    w = W.partitionBy("q_id").orderBy("d2", "c_id")
-    return (
-        ex.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("q_id", "c_id")
-    )
+    return l2_rescore_topk(pairs, v).select("q_id", "c_id")
 
 
-def _register_ivf_pq_rerank_learned() -> None:
-    @register(
-        "sim_ivf_pq_rerank_learned",
-        oracle=oracle_checks([
-            ("rerank_dominates_adc", _SQL_N_QUERIES),
-            ("rerank_recall_floor", _SQL_N_CORPUS),
-        ]),
-        doc="The PRODUCTION two-stage IVF-PQ ANN (judge r8 item 7, "
-        "quality face): learned coarse cells (MLlib KMeans on the "
-        "raw vectors, k = ivfpq_k(N) growing with the corpus so cell "
-        "size stays pinned; fit subsampled past SEMDEDUP_FIT_MAX), "
-        "learned per-subspace residual codebooks "
-        "(learned_pq_codebooks), ~25% of cells probed per query, "
-        f"ADC top-{RERANK_M} shortlist, exact L2 rescore, top-5. "
-        "The deterministic sim_ivf_pq_rerank keeps the whole "
-        "pipeline DuckDB-hash-verified; THIS face carries the "
-        "recall: measured recall@5 vs the exact ground truth is "
-        "0.46-0.60 across sf0.001-0.1 where raw ADC top-5 sits at "
-        "0.06-0.24 and the deterministic first-8-cell 2-probe "
-        "variant decays to ~0 (fixed arbitrary cells cover a "
-        "shrinking fraction of a growing corpus — SCALING.md's "
-        "rerank table; these near-uniform synthetic embeddings are "
-        "the IVF worst case: with little cluster structure, recall "
-        "is bought with probes, and the rescore recovers what the "
-        "24-bit codes blur). Seeded fits have no SQL replay, so "
-        "the driver row is the self-asserted check-row pattern: "
-        "the fn computes recall@5 against the exact baseline and "
-        "RAISES unless the rescored top-5 dominates raw ADC top-5 "
-        "(guaranteed per query: both draw from the same shortlist "
-        "and true neighbors sort first under exact distance) and "
-        "recall clears the 0.4 floor (slack under the 0.46 worst "
-        "measurement absorbs fit jitter, not a regression). Scale: every stage is the "
-        "sim_ivf_pq_ann shape — candidates bounded by probed "
-        "cells, LUT broadcast, rescore a shortlist-sized equi-join; "
-        "the ground-truth crossJoin is the measurement, not the "
-        "operator (production would sample queries).",
-        tags=("similarity", "ann", "ivf", "pq", "rerank", "ml"),
-    )
-    def sim_ivf_pq_rerank_learned(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import math
+@register(
+    "sim_ivf_pq_rerank_learned",
+    oracle=oracle_checks([
+        ("rerank_dominates_adc", _SQL_N_QUERIES),
+        ("rerank_recall_floor", _SQL_N_CORPUS),
+    ]),
+    doc="The PRODUCTION two-stage IVF-PQ ANN (judge r8 item 7, "
+    "quality face): learned coarse cells (MLlib KMeans on the "
+    "raw vectors, k = ivfpq_k(N) growing with the corpus so cell "
+    "size stays pinned; fit subsampled past SEMDEDUP_FIT_MAX), "
+    "learned per-subspace residual codebooks "
+    "(learned_pq_codebooks), ~25% of cells probed per query, "
+    f"ADC top-{RERANK_M} shortlist, exact L2 rescore, top-5. "
+    "The deterministic sim_ivf_pq_rerank keeps the whole "
+    "pipeline DuckDB-hash-verified; THIS face carries the "
+    "recall: measured recall@5 vs the exact ground truth is "
+    "0.46-0.60 across sf0.001-0.1 where raw ADC top-5 sits at "
+    "0.06-0.24 and the deterministic first-8-cell 2-probe "
+    "variant decays to ~0 (fixed arbitrary cells cover a "
+    "shrinking fraction of a growing corpus — SCALING.md's "
+    "rerank table; these near-uniform synthetic embeddings are "
+    "the IVF worst case: with little cluster structure, recall "
+    "is bought with probes, and the rescore recovers what the "
+    "24-bit codes blur). Seeded fits have no SQL replay, so "
+    "the driver row is the self-asserted check-row pattern: "
+    "the fn computes recall@5 against the exact baseline and "
+    "RAISES unless the rescored top-5 dominates raw ADC top-5 "
+    "(guaranteed per query: both draw from the same shortlist "
+    "and true neighbors sort first under exact distance) and "
+    "recall clears the 0.4 floor (slack under the 0.46 worst "
+    "measurement absorbs fit jitter, not a regression). Scale: every stage is the "
+    "sim_ivf_pq_ann shape — candidates bounded by probed "
+    "cells, LUT broadcast, rescore a shortlist-sized equi-join; "
+    "the ground-truth crossJoin is the measurement, not the "
+    "operator (production would sample queries).",
+    tags=("similarity", "ann", "ivf", "pq", "rerank", "ml"),
+)
+def sim_ivf_pq_rerank_learned(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import math
 
-        emb = load(spark, sf_dir, "embeddings")
-        n_corpus = int(emb.count())
-        k = ivfpq_k(n_corpus)
-        # both fit stages (coarse cells + residual codebooks) come
-        # from the per-(sf_dir, embeddings fingerprint) artifact
-        # cache — one fit per session instead of one per invocation
-        # (judge r9 item 1); the math is identical to the inline fit
-        cent = cached_raw_centroids(spark, sf_dir, k)
-        cb = cached_residual_codebooks(spark, sf_dir, k)
-        n_probe = max(2, math.ceil(IVFPQ_PROBE_FRAC * k))
-        adc, v = _ivf_pq_adc(
-            spark, sf_dir, cent=cent, cb=cb, n_probe=n_probe
-        )
-        adc = adc.localCheckpoint(eager=True)
-        wa = W.partitionBy("q_id").orderBy(F.asc("adc_d2"), F.asc("c_id"))
-        ranked = adc.withColumn("arnk", F.row_number().over(wa))
-        adc5 = ranked.filter(F.col("arnk") <= 5).select("q_id", "c_id")
-        short = ranked.filter(F.col("arnk") <= IVFPQ_RERANK_M).select(
-            "q_id", "c_id"
-        )
-        vq = v.select(F.col("vec_id").alias("q_id"), F.col("e").alias("eq"))
-        vc = v.select(F.col("vec_id").alias("c_id"), F.col("e").alias("ec"))
-        exact_d2 = F.aggregate(
-            F.zip_with("eq", "ec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        we = W.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("c_id"))
-        rr5 = (
-            short.join(vq, "q_id")
-            .join(vc, "c_id")
-            .select("q_id", "c_id", exact_d2.alias("d2"))
-            .withColumn("rnk", F.row_number().over(we))
-            .filter(F.col("rnk") <= 5)
-            .select("q_id", "c_id")
-        )
-        truth = _exact_l2_top5(v).localCheckpoint(eager=True)
-        # ONE job for all four check counts (round 11, guide §5):
-        # the truth size, both hit joins against the checkpointed
-        # truth, and the query-batch size union into one tagged frame
-        # and aggregate together — identical counts, 4 barriers -> 1.
-        tagged = (
-            truth.select(F.lit(0).alias("tag"))
-            .unionAll(
-                adc5.join(truth, ["q_id", "c_id"]).select(
-                    F.lit(1).alias("tag")
-                )
-            )
-            .unionAll(
-                rr5.join(truth, ["q_id", "c_id"]).select(
-                    F.lit(2).alias("tag")
-                )
-            )
-            .unionAll(
-                emb.filter(F.col("vec_id") < 10).select(
-                    F.lit(3).alias("tag")
-                )
+    emb = load(spark, sf_dir, "embeddings")
+    n_corpus = int(emb.count())
+    k = ivfpq_k(n_corpus)
+    # both fit stages (coarse cells + residual codebooks) come
+    # from the per-(sf_dir, embeddings fingerprint) artifact
+    # cache — one fit per session instead of one per invocation
+    # (judge r9 item 1); the math is identical to the inline fit
+    cent = cached_raw_centroids(spark, sf_dir, k)
+    cb = cached_residual_codebooks(spark, sf_dir, k)
+    n_probe = max(2, math.ceil(IVFPQ_PROBE_FRAC * k))
+    adc, v = _ivf_pq_adc(
+        spark, sf_dir, cent=cent, cb=cb, n_probe=n_probe
+    )
+    adc = adc.localCheckpoint(eager=True)
+    short = topk(adc, "adc_d2", IVFPQ_RERANK_M)
+    adc5 = short.filter(F.col("rnk") <= 5).select("q_id", "c_id")
+    rr5 = l2_rescore_topk(short, v).select("q_id", "c_id")
+    truth = _exact_l2_top5(v).localCheckpoint(eager=True)
+    # ONE job for all four check counts (round 11, guide §5):
+    # the truth size, both hit joins against the checkpointed
+    # truth, and the query-batch size union into one tagged frame
+    # and aggregate together — identical counts, 4 barriers -> 1.
+    tagged = (
+        truth.select(F.lit(0).alias("tag"))
+        .unionAll(
+            adc5.join(truth, ["q_id", "c_id"]).select(
+                F.lit(1).alias("tag")
             )
         )
-        cnts = tagged.groupBy().agg(
-            F.sum((F.col("tag") == 0).cast("long")).alias("n_truth"),
-            F.sum((F.col("tag") == 1).cast("long")).alias("adc_hits"),
-            F.sum((F.col("tag") == 2).cast("long")).alias("rr_hits"),
-            F.sum((F.col("tag") == 3).cast("long")).alias("n_queries"),
-        ).first()
-        n_truth = int(cnts["n_truth"] or 0)
-        adc_hits = int(cnts["adc_hits"] or 0)
-        rr_hits = int(cnts["rr_hits"] or 0)
-        n_queries = int(cnts["n_queries"] or 0)
-        checks = [
-            ("rerank_dominates_adc", n_queries, {
-                "rr_hits >= adc_hits": rr_hits >= adc_hits,
-            }),
-            ("rerank_recall_floor", n_corpus, {
-                "rr_hits / n_truth >= 0.4": rr_hits / n_truth >= 0.4,
-            }),
-        ]
-        return check_rows(
-            spark, "sim_ivf_pq_rerank_learned", checks, cnts.asDict()
+        .unionAll(
+            rr5.join(truth, ["q_id", "c_id"]).select(
+                F.lit(2).alias("tag")
+            )
         )
-
-
-_register_ivf_pq_rerank_learned()
+        .unionAll(
+            emb.filter(F.col("vec_id") < 10).select(
+                F.lit(3).alias("tag")
+            )
+        )
+    )
+    cnts = tagged.groupBy().agg(
+        F.sum((F.col("tag") == 0).cast("long")).alias("n_truth"),
+        F.sum((F.col("tag") == 1).cast("long")).alias("adc_hits"),
+        F.sum((F.col("tag") == 2).cast("long")).alias("rr_hits"),
+        F.sum((F.col("tag") == 3).cast("long")).alias("n_queries"),
+    ).first()
+    n_truth = int(cnts["n_truth"] or 0)
+    adc_hits = int(cnts["adc_hits"] or 0)
+    rr_hits = int(cnts["rr_hits"] or 0)
+    n_queries = int(cnts["n_queries"] or 0)
+    checks = [
+        ("rerank_dominates_adc", n_queries, {
+            "rr_hits >= adc_hits": rr_hits >= adc_hits,
+        }),
+        ("rerank_recall_floor", n_corpus, {
+            "rr_hits / n_truth >= 0.4": rr_hits / n_truth >= 0.4,
+        }),
+    ]
+    return check_rows(
+        spark, "sim_ivf_pq_rerank_learned", checks, cnts.asDict()
+    )
 
 
 def det_quantile_cells(
@@ -2598,124 +2560,68 @@ _QCELLS_CENT_SQL = f"""SELECT ks.i AS cell, rv.e AS ce
                     // (2 * ({_QCELLS_K_SQL}))"""
 
 
-def _register_ivf_pq_rerank_qcells() -> None:
-    @register(
-        "sim_ivf_pq_rerank_qcells",
-        oracle=_ivfpq_ctes(_QCELLS_CENT_SQL, _QCELLS_NPROBE_SQL)
-        + _rerank_tail_sql(),
-        doc="The SCALE-STABLE deterministic two-stage IVF-PQ face "
-        "(judge r9 item 7): identical pipeline to sim_ivf_pq_rerank "
-        "(coarse cells, residual PQ codes, per-cell LUT, exact-"
-        f"decimal ADC, top-{RERANK_M} exact rescore) but the cells "
-        "come from det_quantile_cells — the vectors at evenly "
-        "spaced (first-coordinate, vec_id) ranks, k = ivfpq_k(N) "
-        "growing with the corpus, probes = ceil(k/4) — so the hash-"
-        "verifiable face keeps nonzero recall at EVERY scale where "
-        "the first-8-cell fixture decays to 0.00 "
-        "(`tools/soak.py recall` measures both). Seedless and "
-        "DuckDB-replayable end to end: the oracle re-derives k, the "
-        "probe count, the quantile ranks (integer arithmetic), and "
-        "every downstream stage. sim_ivf_pq_rerank stays registered "
-        "as the minimal pinned fixture; THIS is the deterministic "
-        "face a production run would actually deploy next to the "
-        "learned one.",
-        tags=("similarity", "ann", "ivf", "pq", "rerank", "quantile"),
-    )
-    def sim_ivf_pq_rerank_qcells(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import math
+@register(
+    "sim_ivf_pq_rerank_qcells",
+    oracle=_ivfpq_ctes(_QCELLS_CENT_SQL, _QCELLS_NPROBE_SQL)
+    + _rerank_tail_sql(),
+    doc="The SCALE-STABLE deterministic two-stage IVF-PQ face "
+    "(judge r9 item 7): identical pipeline to sim_ivf_pq_rerank "
+    "(coarse cells, residual PQ codes, per-cell LUT, exact-"
+    f"decimal ADC, top-{RERANK_M} exact rescore) but the cells "
+    "come from det_quantile_cells — the vectors at evenly "
+    "spaced (first-coordinate, vec_id) ranks, k = ivfpq_k(N) "
+    "growing with the corpus, probes = ceil(k/4) — so the hash-"
+    "verifiable face keeps nonzero recall at EVERY scale where "
+    "the first-8-cell fixture decays to 0.00 "
+    "(`tools/soak.py recall` measures both). Seedless and "
+    "DuckDB-replayable end to end: the oracle re-derives k, the "
+    "probe count, the quantile ranks (integer arithmetic), and "
+    "every downstream stage. sim_ivf_pq_rerank stays registered "
+    "as the minimal pinned fixture; THIS is the deterministic "
+    "face a production run would actually deploy next to the "
+    "learned one.",
+    tags=("similarity", "ann", "ivf", "pq", "rerank", "quantile"),
+)
+def sim_ivf_pq_rerank_qcells(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import math
 
-        emb = load(spark, sf_dir, "embeddings")
-        n = int(emb.count())
-        k = ivfpq_k(n)
-        v = _raw_vectors(emb)
-        cent = det_quantile_cells(spark, v, k, n)
-        n_probe = max(2, math.ceil(k / 4))
-        adc, v = _ivf_pq_adc(spark, sf_dir, cent=cent, n_probe=n_probe)
-        wa = W.partitionBy("q_id").orderBy(F.asc("adc_d2"), F.asc("c_id"))
-        short = (
-            adc.withColumn("arnk", F.row_number().over(wa))
-            .filter(F.col("arnk") <= RERANK_M)
-            .select("q_id", "c_id")
-        )
-        vq = v.select(F.col("vec_id").alias("q_id"), F.col("e").alias("eq"))
-        vc = v.select(F.col("vec_id").alias("c_id"), F.col("e").alias("ec"))
-        exact_d2 = F.round(
-            F.aggregate(
-                F.zip_with("eq", "ec", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        we = W.partitionBy("q_id").orderBy(F.asc("exact_d2"), F.asc("c_id"))
-        ex = (
-            short.join(vq, "q_id")
-            .join(vc, "c_id")
-            .select("q_id", "c_id", exact_d2.alias("exact_d2"))
-        )
-        return ex.withColumn(
-            "rnk", F.row_number().over(we).cast("long")
-        ).filter(F.col("rnk") <= 5)
+    emb = load(spark, sf_dir, "embeddings")
+    n = int(emb.count())
+    k = ivfpq_k(n)
+    v = _raw_vectors(emb)
+    cent = det_quantile_cells(spark, v, k, n)
+    n_probe = max(2, math.ceil(k / 4))
+    adc, v = _ivf_pq_adc(spark, sf_dir, cent=cent, n_probe=n_probe)
+    return l2_rescore_topk(topk(adc, "adc_d2", RERANK_M), v)
 
 
-_register_ivf_pq_rerank_qcells()
-
-
-def _register_ivf_pq_rerank() -> None:
-    @register(
-        "sim_ivf_pq_rerank",
-        oracle=_IVFPQ_CTES + _rerank_tail_sql(),
-        doc="The production two-stage ANN contract (judge r8 item 7): "
-        f"IVF-PQ ADC generates a top-{RERANK_M} shortlist per query "
-        "(sim_ivf_pq_ann's full pipeline — coarse IVF cells, "
-        "residual PQ codes, per-cell LUT, exact-decimal ADC sums), "
-        "then the shortlist alone is RE-RANKED by the exact 64-dim "
-        "L2 distance and cut to top-5 — quantization error decides "
-        "only shortlist membership, never the final order, which is "
-        "why FAISS deployments always rescore (Jegou et al. §V.C). "
-        "Recall can only improve: the true neighbors present in the "
-        "shortlist sort to the front by construction, so "
-        "recall@5(rerank) >= recall@5(raw ADC) per query — "
-        "tests/test_dedup_similarity.py pins both the measured floor and "
-        "the dominance. Scale: the rescore joins |Q| x "
-        f"{RERANK_M} shortlist rows back to the vector table on "
-        "vec_id — a keyed equi-join bounded by the shortlist, "
-        "never a corpus scan; everything upstream is the "
-        "sim_ivf_pq_ann shape.",
-        tags=("similarity", "ann", "ivf", "pq", "rerank", "embedding"),
-    )
-    def sim_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-        adc, v = _ivf_pq_adc(spark, sf_dir)
-        wa = W.partitionBy("q_id").orderBy(F.asc("adc_d2"), F.asc("c_id"))
-        short = (
-            adc.withColumn("arnk", F.row_number().over(wa))
-            .filter(F.col("arnk") <= RERANK_M)
-            .select("q_id", "c_id")
-        )
-        vq = v.select(F.col("vec_id").alias("q_id"), F.col("e").alias("eq"))
-        vc = v.select(F.col("vec_id").alias("c_id"), F.col("e").alias("ec"))
-        exact_d2 = F.round(
-            F.aggregate(
-                F.zip_with("eq", "ec", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        ex = (
-            short.join(vq, "q_id")
-            .join(vc, "c_id")
-            .select("q_id", "c_id", exact_d2.alias("exact_d2"))
-        )
-        we = W.partitionBy("q_id").orderBy(F.asc("exact_d2"), F.asc("c_id"))
-        return ex.withColumn(
-            "rnk", F.row_number().over(we).cast("long")
-        ).filter(F.col("rnk") <= 5)
-
-
-_register_ivf_pq_rerank()
+@register(
+    "sim_ivf_pq_rerank",
+    oracle=_IVFPQ_CTES + _rerank_tail_sql(),
+    doc="The production two-stage ANN contract (judge r8 item 7): "
+    f"IVF-PQ ADC generates a top-{RERANK_M} shortlist per query "
+    "(sim_ivf_pq_ann's full pipeline — coarse IVF cells, "
+    "residual PQ codes, per-cell LUT, exact-decimal ADC sums), "
+    "then the shortlist alone is RE-RANKED by the exact 64-dim "
+    "L2 distance and cut to top-5 — quantization error decides "
+    "only shortlist membership, never the final order, which is "
+    "why FAISS deployments always rescore (Jegou et al. §V.C). "
+    "Recall can only improve: the true neighbors present in the "
+    "shortlist sort to the front by construction, so "
+    "recall@5(rerank) >= recall@5(raw ADC) per query — "
+    "tests/test_dedup_similarity.py pins both the measured floor and "
+    "the dominance. Scale: the rescore joins |Q| x "
+    f"{RERANK_M} shortlist rows back to the vector table on "
+    "vec_id — a keyed equi-join bounded by the shortlist, "
+    "never a corpus scan; everything upstream is the "
+    "sim_ivf_pq_ann shape.",
+    tags=("similarity", "ann", "ivf", "pq", "rerank", "embedding"),
+)
+def sim_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    adc, v = _ivf_pq_adc(spark, sf_dir)
+    return l2_rescore_topk(topk(adc, "adc_d2", RERANK_M), v)
 
 
 @register(

@@ -15,8 +15,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import register
+from ..registry import REGISTRY, register
 from ..session import local_rows
+from .dedup import _shingle_df, shingles_from
 
 # Tiny per-language stopword profiles for the n-gram/stopword
 # language-ID heuristic. Public knowledge (most-common function words).
@@ -364,12 +365,9 @@ def t_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_pack_manifest() -> None:
-    from ..registry import REGISTRY
-
-    @register(
-        "t_pack_manifest",
-        oracle=f"""
+@register(
+    "t_pack_manifest",
+    oracle=f"""
         WITH sp AS ({REGISTRY['t_sequence_pack'].oracle})
         SELECT seq_id,
                CAST(count(*) AS BIGINT) AS n_docs,
@@ -377,26 +375,23 @@ def _register_pack_manifest() -> None:
                CAST(sum(n_tokens) AS BIGINT) AS tokens_started
         FROM sp GROUP BY seq_id
         """,
-        doc="Per-sequence packing manifest: for every packed training "
-        "sequence, the ordered list of documents that START in it, "
-        "their count, and their total token mass — the index a "
-        "data-loader uses to materialize packed batches without "
-        "re-deriving the packing. One groupBy(seq_id) over "
-        "t_sequence_pack's output; the doc list is sort_array'd so "
-        "the array value is deterministic under any aggregation "
-        "order (collect_list alone is partition-order-dependent).",
-        tags=("text", "pack"),
+    doc="Per-sequence packing manifest: for every packed training "
+    "sequence, the ordered list of documents that START in it, "
+    "their count, and their total token mass — the index a "
+    "data-loader uses to materialize packed batches without "
+    "re-deriving the packing. One groupBy(seq_id) over "
+    "t_sequence_pack's output; the doc list is sort_array'd so "
+    "the array value is deterministic under any aggregation "
+    "order (collect_list alone is partition-order-dependent).",
+    tags=("text", "pack"),
+)
+def t_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sp = t_sequence_pack(spark, sf_dir)
+    return sp.groupBy("seq_id").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
+        F.sum("n_tokens").cast("long").alias("tokens_started"),
     )
-    def t_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sp = t_sequence_pack(spark, sf_dir)
-        return sp.groupBy("seq_id").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
-            F.sum("n_tokens").cast("long").alias("tokens_started"),
-        )
-
-
-_register_pack_manifest()
 
 
 BOILERPLATE_MIN_DF = 5
@@ -435,8 +430,6 @@ BOILERPLATE_TOP = 50
     tags=("text", "boilerplate", "dedup"),
 )
 def t_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _shingle_df
-
     sh = _shingle_df(spark, sf_dir)
     return (
         sh.select(F.explode_outer("shingles").alias("shingle"))
@@ -512,41 +505,11 @@ def t_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_from(spark, load(spark, sf_dir, "documents"))
 
 
-def contam_shingle_sets(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles): distinct CONTAM_N-gram sets of any
-    (doc_id, text, ...) frame — the decontamination screen's shared
-    front half (also used standalone by the incremental verdict
-    table to freeze its eval-gram store at creation)."""
-    words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    wdf = docs.select("doc_id", words.alias("words"))
-    if wdf.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        wdf = wdf.repartition("doc_id")
-    wcol = F.col("words")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(wcol) - (CONTAM_N - 1), F.lit(1)))
-    # mirrors the oracle's 1-based range; F.get is 0-based. Docs shorter
-    # than CONTAM_N words get an EMPTY shingle set on BOTH engines (the
-    # when-guard here, the CASE in the oracle's sh CTE) — they survive
-    # the screen with n_shingles=0, NULL ratio, flagged=0.
-    gram = F.when(
-        F.size(wcol) >= CONTAM_N,
-        F.array_distinct(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ",
-                    *[F.get(wcol, (i + j - 1).cast("int")) for j in range(CONTAM_N)],
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return wdf.select("doc_id", gram.alias("shingles"))
-
-
 def eval_grams_from(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """(s): the DISTINCT eval-slice n-grams of a corpus frame — the
     benchmark side of the decontamination screen."""
     return (
-        contam_shingle_sets(spark, docs)
+        shingles_from(spark, docs, CONTAM_N)
         .filter(F.col("doc_id") % 100 == 0)
         .select(F.explode("shingles").alias("s"))
         .distinct()
@@ -565,8 +528,11 @@ def contamination_from(
     side: the incremental verdict table passes its eval store FROZEN
     at creation (the external-benchmark model — appending training
     batches must not silently grow the benchmark). Default derives
-    the eval slice from ``docs`` itself, the batch semantics."""
-    sh = contam_shingle_sets(spark, docs)
+    the eval slice from ``docs`` itself, the batch semantics. Docs
+    shorter than CONTAM_N words get an empty shingle set on both
+    engines (the CASE in the oracle's sh CTE): they survive the screen
+    with n_shingles=0, NULL ratio, flagged=0."""
+    sh = shingles_from(spark, docs, CONTAM_N)
     if eval_grams is None:
         eval_grams = (
             sh.filter(F.col("doc_id") % 100 == 0)
@@ -1152,18 +1118,13 @@ def t_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "dedup", "quality"),
 )
 def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _shingles
-
-    docs = load(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    # tokenize-then-repartition (the d_ngram_jaccard discipline): the
-    # regex split happens once per row and the compute-bound shingle
-    # explode parallelizes even when the scan is one small file
-    wdf = docs.select("doc_id", words.alias("words"))
-    if wdf.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        wdf = wdf.repartition("doc_id")
-    g = wdf.select(
-        "doc_id", F.explode(_shingles(F.col("words"), 3)).alias("gram")
+    sh = shingles_from(spark, load(spark, sf_dir, "documents"))
+    # explode_outer + isNotNull, not explode: a plain explode of the
+    # shingles attribute lets Catalyst infer a size(shingles) > 0
+    # filter and push it below the repartition exchange, rebuilding
+    # every shingle set in the scan stage (_banded_sigs's note)
+    g = sh.select("doc_id", F.explode_outer("shingles").alias("gram")).where(
+        F.col("gram").isNotNull()
     )
     fs = F.min("doc_id").over(W.partitionBy("gram"))
     novel = F.when(F.col("doc_id") == fs, F.lit(1)).otherwise(F.lit(0))

@@ -1554,70 +1554,66 @@ def _bootstrap_oracle() -> str:
     """
 
 
-def _register_bootstrap() -> None:
-    @register(
-        "a_bootstrap_ci",
-        oracle=_bootstrap_oracle(),
-        doc="Poisson bootstrap of the mean (order value): every row "
-        "draws a hash-deterministic Poisson(1) replication weight "
-        "per replicate (inverse-CDF over the md5-uniform, the "
-        "r_mixture_sample idiom), giving 32 bootstrap replicates of "
-        "mean(o_totalprice) in ONE corpus scan — the bootstrap "
-        "formulation that actually distributes: classic resampling "
-        "needs B passes with global state, Poisson bootstrap is a "
-        "map-side weight column plus one groupBy(replicate) with "
-        "map-side partial aggregation. Output is the replicate table "
-        "with a deterministic rank by mean: ranks 2 and 31 bracket "
-        "the ~93% percentile CI (documented instead of a percentile "
-        "call, whose interpolation rules differ between engines). "
-        "The final ranking window is global but runs over exactly "
-        "B=32 rows at ANY corpus size. Decimal-accumulated sums "
-        "keep replicate means bit-identical to the oracle.",
-        tags=("stats", "bootstrap", "sampling", "A1"),
+@register(
+    "a_bootstrap_ci",
+    oracle=_bootstrap_oracle(),
+    doc="Poisson bootstrap of the mean (order value): every row "
+    "draws a hash-deterministic Poisson(1) replication weight "
+    "per replicate (inverse-CDF over the md5-uniform, the "
+    "r_mixture_sample idiom), giving 32 bootstrap replicates of "
+    "mean(o_totalprice) in ONE corpus scan — the bootstrap "
+    "formulation that actually distributes: classic resampling "
+    "needs B passes with global state, Poisson bootstrap is a "
+    "map-side weight column plus one groupBy(replicate) with "
+    "map-side partial aggregation. Output is the replicate table "
+    "with a deterministic rank by mean: ranks 2 and 31 bracket "
+    "the ~93% percentile CI (documented instead of a percentile "
+    "call, whose interpolation rules differ between engines). "
+    "The final ranking window is global but runs over exactly "
+    "B=32 rows at ANY corpus size. Decimal-accumulated sums "
+    "keep replicate means bit-identical to the oracle.",
+    tags=("stats", "bootstrap", "sampling", "A1"),
+)
+def a_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .sampling import _hash_u
+
+    orders = load(spark, sf_dir, "orders")
+    rows = orders.select(
+        F.col("o_orderkey"),
+        F.col("o_totalprice").alias("x"),
+        F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1))).alias("b"),
     )
-    def a_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .sampling import _hash_u
-
-        orders = load(spark, sf_dir, "orders")
-        rows = orders.select(
-            F.col("o_orderkey"),
-            F.col("o_totalprice").alias("x"),
-            F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1))).alias("b"),
+    u = _hash_u(
+        F.concat(
+            F.col("o_orderkey").cast("string"),
+            F.lit(":"),
+            F.col("b").cast("string"),
         )
-        u = _hash_u(
-            F.concat(
-                F.col("o_orderkey").cast("string"),
-                F.lit(":"),
-                F.col("b").cast("string"),
-            )
+    )
+    wt = F.when(u < _POISSON_CDF[0], 0)
+    for i, t in enumerate(_POISSON_CDF[1:], start=1):
+        wt = wt.when(u < t, i)
+    wt = wt.otherwise(5)
+    agg = (
+        rows.withColumn("wt", wt)
+        .groupBy("b")
+        .agg(
+            F.sum("wt").cast("long").alias("n_eff"),
+            F.sum((F.col("wt") * F.col("x")).cast(DEC)).alias("s"),
         )
-        wt = F.when(u < _POISSON_CDF[0], 0)
-        for i, t in enumerate(_POISSON_CDF[1:], start=1):
-            wt = wt.when(u < t, i)
-        wt = wt.otherwise(5)
-        agg = (
-            rows.withColumn("wt", wt)
-            .groupBy("b")
-            .agg(
-                F.sum("wt").cast("long").alias("n_eff"),
-                F.sum((F.col("wt") * F.col("x")).cast(DEC)).alias("s"),
-            )
-            .select(
-                "b",
-                "n_eff",
-                (F.col("s").cast("double") / F.col("n_eff")).alias("m"),
-            )
-        )
-        rank = F.row_number().over(W.orderBy("m", "b")).cast("long")
-        return agg.select(
-            F.col("b").cast("long").alias("replicate"),
+        .select(
+            "b",
             "n_eff",
-            F.round("m", 6).alias("boot_mean"),
-            rank.alias("rank_by_mean"),
+            (F.col("s").cast("double") / F.col("n_eff")).alias("m"),
         )
-
-
-_register_bootstrap()
+    )
+    rank = F.row_number().over(W.orderBy("m", "b")).cast("long")
+    return agg.select(
+        F.col("b").cast("long").alias("replicate"),
+        "n_eff",
+        F.round("m", 6).alias("boot_mean"),
+        rank.alias("rank_by_mean"),
+    )
 
 
 # --- Market-basket frequent pairs -------------------------------------------

@@ -532,51 +532,47 @@ _POIS03_CDF = (
     0.9964005071543591,
     0.9997321891509589,
 )
+_POIS03_STEPS = " ".join(
+    f"WHEN u < {t} THEN {i}" for i, t in enumerate(_POIS03_CDF)
+)
 
 
-def _register_poisson_sample() -> None:
-    steps = " ".join(
-        f"WHEN u < {t} THEN {i}" for i, t in enumerate(_POIS03_CDF)
-    )
-
-    @register(
-        "r_poisson_sample",
-        oracle=f"""
+@register(
+    "r_poisson_sample",
+    oracle=f"""
         SELECT o_orderkey, n_copies FROM (
           SELECT o_orderkey,
-                 CAST(CASE {steps} ELSE 4 END AS BIGINT) AS n_copies
+                 CAST(CASE {_POIS03_STEPS} ELSE 4 END AS BIGINT) AS n_copies
           FROM (SELECT o_orderkey, {_hash_u_sql('o_orderkey')} AS u
                 FROM orders)
         ) WHERE n_copies >= 1
         """,
-        doc="WITH-REPLACEMENT sampling (the R3 variant the seeded "
-        "Bernoulli/exact-n samplers do not cover — the reference's "
-        "np.random.choice(replace=True)): every row draws a "
-        "hash-deterministic Poisson(0.3) replication count via "
-        "inverse-CDF over the md5-uniform, and rows with count >= 1 "
-        "are emitted with their multiplicity. This is how a "
-        "distributed engine samples with replacement — per-row "
-        "independent draws in one scan, no global resample pass, no "
-        "shuffle at all (narrow map + filter); downstream consumers "
-        "explode on n_copies when physical duplication is needed. "
-        "Reproducible across engines, partition layouts, and "
-        "cluster sizes; the same weight mechanism drives "
-        "a_bootstrap_ci's replicates.",
-        tags=("R3", "sampling"),
-    )
-    def r_poisson_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        orders = load(spark, sf_dir, "orders")
-        u = _hash_u(F.col("o_orderkey"))
-        n = F.when(u < _POIS03_CDF[0], 0)
-        for i, t in enumerate(_POIS03_CDF[1:], start=1):
-            n = n.when(u < t, i)
-        n = n.otherwise(4)
-        return (
-            orders.select(
-                "o_orderkey", n.cast("long").alias("n_copies")
-            )
-            .filter(F.col("n_copies") >= 1)
+    doc="WITH-REPLACEMENT sampling (the R3 variant the seeded "
+    "Bernoulli/exact-n samplers do not cover — the reference's "
+    "np.random.choice(replace=True)): every row draws a "
+    "hash-deterministic Poisson(0.3) replication count via "
+    "inverse-CDF over the md5-uniform, and rows with count >= 1 "
+    "are emitted with their multiplicity. This is how a "
+    "distributed engine samples with replacement — per-row "
+    "independent draws in one scan, no global resample pass, no "
+    "shuffle at all (narrow map + filter); downstream consumers "
+    "explode on n_copies when physical duplication is needed. "
+    "Reproducible across engines, partition layouts, and "
+    "cluster sizes; the same weight mechanism drives "
+    "a_bootstrap_ci's replicates.",
+    tags=("R3", "sampling"),
+)
+def r_poisson_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load(spark, sf_dir, "orders")
+    u = _hash_u(F.col("o_orderkey"))
+    n = F.when(u < _POIS03_CDF[0], 0)
+    for i, t in enumerate(_POIS03_CDF[1:], start=1):
+        n = n.when(u < t, i)
+    n = n.otherwise(4)
+    return (
+        orders.select(
+            "o_orderkey", n.cast("long").alias("n_copies")
         )
+        .filter(F.col("n_copies") >= 1)
+    )
 
-
-_register_poisson_sample()

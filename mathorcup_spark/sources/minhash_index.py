@@ -46,10 +46,12 @@ per-batch cost is flat as the corpus grows (measured in SCALING.md).
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dedup import N_HASHES, _banded_sigs, shingles_from
+from ..functions.dedup import _banded_sigs, band_join, rescore_jaccard, shingles_from
 
 MH_PARTS = 64  # hash-partitions per band in bands/ (dir count = 4 * 64)
 DOC_PARTS = 64  # target directory count for shingles/
@@ -63,7 +65,6 @@ BUCKET_PUSHDOWN_LIMIT = 20_000
 
 def _pb():
     return F.pmod(F.xxhash64("bucket"), F.lit(MH_PARTS)).cast("int")
-
 
 
 def _write_meta(path: str, width: int, n_docs: int) -> None:
@@ -160,30 +161,7 @@ def index_candidates(
         # pruning; the partitions filter above pruned directories
         idx = idx.filter(F.col("bucket").isin(buckets))
 
-    a = idx.alias("a")
-    c = banded_new.alias("c")
-    agree = F.size(
-        F.filter(
-            F.zip_with(
-                F.col("a.sig"), F.col("c.sig"), lambda x, y: (x == y).cast("int")
-            ),
-            lambda v: v == 1,
-        )
-    )
-    return (
-        a.join(
-            c,
-            (F.col("a.band") == F.col("c.band"))
-            & (F.col("a.bucket") == F.col("c.bucket"))
-            & (F.col("a.doc_id") != F.col("c.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("idx_id"),
-            F.col("c.doc_id").alias("new_id"),
-            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
-        )
-        .dropDuplicates(["idx_id", "new_id"])
-    )
+    return band_join(idx, banded_new, operator.ne, ("idx_id", "new_id"))
 
 
 def probe_minhash_index(
@@ -236,26 +214,10 @@ def probe_minhash_index(
             .collect()
         }
     )
-    sh_idx = (
-        spark.read.parquet(f"{index_dir}/shingles")
-        .filter(F.col("dp").isin(dps))
-        .select(F.col("doc_id").alias("idx_id"), F.col("shingles").alias("sh_a"))
+    sh_idx = spark.read.parquet(f"{index_dir}/shingles").filter(
+        F.col("dp").isin(dps)
     )
-    sh_b = sh_new.select(
-        F.col("doc_id").alias("new_id"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        cand.join(sh_idx, "idx_id")
-        .join(sh_b, "new_id")
-        .select(
-            "idx_id",
-            "new_id",
-            "est_jaccard",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-    )
+    return rescore_jaccard(cand, sh_idx, sh_new, ("idx_id", "new_id"))
 
 
 def append_to_minhash_index(

@@ -47,6 +47,13 @@ _QUERIES = [
     "d_lsh_rescore_e2e",
     "d_exact_dedup",
     "d_simhash",
+    "d_containment",
+    "t_ngram_novelty",
+    "d_incremental_dedup",
+    "d_incremental_index_dedup",
+    "d_minhash_lsh_capped",
+    "d_lsh_hamming_e2e",
+    "d_dedup_clusters",
 ]
 
 

@@ -50,12 +50,12 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import Window as W  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import WARMUP_SF_DIR, full_result, run_group  # noqa: E402
 from mathorcup_spark import registry  # noqa: E402
 from mathorcup_spark.catalog import load  # noqa: E402
+from mathorcup_spark.functions.similarity import _exact_l2_top5, _raw_vectors  # noqa: E402
 from mathorcup_spark.session import get_spark  # noqa: E402
 from perfbench.sparkstats import SparkStats  # noqa: E402
 
@@ -269,34 +269,6 @@ def verdict(s: Soak, sf_dir: str = f"{TESTDATA}/sf0.1") -> int:
     return 0
 
 
-def _truth(spark, sf_dir: str):
-    """Exact L2 top-5 neighbours of 10 fixed query vectors: a broadcast
-    crossJoin over the whole corpus (the sim_cosine_topk shape)."""
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
-    q = v.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("eq")
-    )
-    c = v.select(F.col("vec_id").alias("c_id"), F.col("e").alias("ec"))
-    d2 = F.aggregate(
-        F.zip_with("eq", "ec", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    w = W.partitionBy("q_id").orderBy("d2", "c_id")
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", d2.alias("d2"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("q_id", "c_id")
-        .localCheckpoint()
-    )
-
-
 def recall(s: Soak, *dirs: str) -> int:
     spark = s.spark
     qs = registry.queries()
@@ -307,7 +279,8 @@ def recall(s: Soak, *dirs: str) -> int:
         " learned wall s | cpu s |\n|---|---|---|---|---|---|---|"
     )
     for d in dirs:
-        truth = _truth(spark, d)
+        v = _raw_vectors(load(spark, d, "embeddings"))
+        truth = _exact_l2_top5(v).localCheckpoint()
         n = truth.count()
         adc, rr, qc = (
             qs[name](spark, d).join(truth, ["q_id", "c_id"]).count() / n
