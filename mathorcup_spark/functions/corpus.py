@@ -21,10 +21,21 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import register
+from ..registry import REGISTRY, register
 from ..session import run_concurrently
 from .dedup import _norm_text
-from .text import _TOKEN_RE, STOPWORDS, _stop_hits, _ws_words
+from .text import (
+    _TOKEN_RE,
+    CONTAM_TAU,
+    SEQ_LEN,
+    STOPWORDS,
+    _stop_hits,
+    _ws_words,
+    contamination_from,
+    pack_sequences,
+    pii_from,
+    repetition_from,
+)
 
 MIN_QUALITY = 0.3
 MIN_WORDS = 5
@@ -133,27 +144,59 @@ def prep_feat_from(docs: DataFrame) -> DataFrame:
     )
 
 
+def first_per_hash(feat: DataFrame) -> DataFrame:
+    """The exact-dedup survivor window: row 1 per content hash ``h``
+    in doc_id order, ``feat``'s columns unchanged."""
+    rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
+    return feat.withColumn("rn", rn).filter(F.col("rn") == 1).drop("rn")
+
+
+def floored(df: DataFrame) -> DataFrame:
+    """The MIN_QUALITY / MIN_WORDS floors and the six prep columns."""
+    return df.filter(
+        (F.col("quality") >= MIN_QUALITY) & (F.col("n_words") >= MIN_WORDS)
+    ).select("doc_id", "source", "detected_lang", "n_words", "bpe_tokens", "quality")
+
+
 def prep_from(docs: DataFrame) -> DataFrame:
     """corpus_prep_e2e over any (doc_id, source, text, ...) frame —
     shared with the one-scan verdict build (sources/verdicts.py)."""
-    feat = prep_feat_from(docs)
-    rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
-    return (
-        feat.withColumn("rn", rn)
-        .filter(
-            (F.col("rn") == 1)
-            & (F.col("quality") >= MIN_QUALITY)
-            & (F.col("n_words") >= MIN_WORDS)
-        )
-        .select(
-            "doc_id", "source", "detected_lang", "n_words", "bpe_tokens", "quality"
-        )
+    return floored(first_per_hash(prep_feat_from(docs)))
+
+
+def screened(
+    spark: SparkSession,
+    base: DataFrame,
+    prep: DataFrame,
+    eval_grams: DataFrame | None = None,
+) -> DataFrame:
+    """``prep`` joined on doc_id to the three hygiene screens of
+    ``base`` (doc_id, text, ...): contamination_ratio, repetitive and
+    has_pii_signal — the verdict-row shape of sources/verdicts.py.
+    ``eval_grams`` is passed to ``contamination_from`` (None derives the
+    benchmark slice from ``base``)."""
+    contam = contamination_from(spark, base, eval_grams=eval_grams).select(
+        "doc_id", "contamination_ratio"
+    )
+    rep = repetition_from(base).select("doc_id", "repetitive")
+    pii = pii_from(base).select("doc_id", "has_pii_signal")
+    return prep.join(contam, "doc_id").join(rep, "doc_id").join(pii, "doc_id")
+
+
+def _train_cols(df: DataFrame) -> DataFrame:
+    """The columns the mixture and packing stages carry, with
+    ``bpe_tokens`` widened to the oracle's BIGINT."""
+    return df.select(
+        "doc_id",
+        "source",
+        "detected_lang",
+        F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
+        "quality",
     )
 
 
 def _v2_oracle() -> str:
     from ..operators.sampling import MIXTURE_BUDGET, _hash_u_sql
-    from .text import SEQ_LEN
 
     return f"""
     WITH prep AS ({_PREP_SQL}),
@@ -208,60 +251,14 @@ def _v2_oracle() -> str:
     tags=("text", "dedup", "sampling", "pack", "pipeline", "e2e"),
 )
 def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..ids import prefix_sum
-    from ..operators.sampling import MIXTURE_BUDGET, _hash_u
-    from .text import SEQ_LEN
+    from ..operators.sampling import mixture_keep
 
-    prep = corpus_prep_e2e(spark, sf_dir)
-    counts = prep.groupBy("source").agg(F.count("*").alias("n_s"))
-    k = counts.agg(F.count("*").alias("n_sources"))
-    rates = counts.crossJoin(F.broadcast(k)).select(
-        "source",
-        F.round(
-            F.least(
-                F.lit(1.0),
-                (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources"))
-                / F.col("n_s"),
-            ),
-            6,
-        ).alias("rate"),
-    )
-    kept = (
-        prep.join(F.broadcast(rates), "source")
-        .filter(_hash_u(F.col("doc_id")) < F.col("rate"))
-        .select(
-            "doc_id",
-            "source",
-            "detected_lang",
-            F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
-            "quality",
-            "rate",
-        )
-    )
-    packed = prefix_sum(kept, ["doc_id"], "bpe_tokens", "cum_before")
-    off = F.col("cum_before") % SEQ_LEN
-    return packed.select(
-        "doc_id",
-        "source",
-        "detected_lang",
-        "bpe_tokens",
-        "quality",
-        "rate",
-        F.col("cum_before").cast("long").alias("cum_before"),
-        # exact integer floor division, matching the oracle's `//`
-        # (double division mis-rounds once cum_before > 2^53)
-        F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
-        off.cast("long").alias("seq_offset"),
-        F.when(off + F.col("bpe_tokens") > SEQ_LEN, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("spans_boundary"),
-    )
+    prep = _train_cols(corpus_prep_e2e(spark, sf_dir))
+    return pack_sequences(mixture_keep(prep), "bpe_tokens")
 
 
 def _v3_oracle() -> str:
     from ..operators.sampling import MIXTURE_BUDGET, _hash_u_sql
-    from ..registry import REGISTRY
-    from .text import CONTAM_TAU, SEQ_LEN
 
     contam = REGISTRY["t_contamination_screen"].oracle
     rep = REGISTRY["t_repetition_stats"].oracle
@@ -337,80 +334,8 @@ def _v3_oracle() -> str:
           "contamination", "pii", "e2e"),
 )
 def corpus_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..ids import prefix_sum
-    from ..operators.sampling import MIXTURE_BUDGET, _hash_u
-    from .text import (
-        CONTAM_TAU,
-        SEQ_LEN,
-        t_contamination_screen,
-        t_pii_scan,
-        t_repetition_stats,
-    )
-
-    prep = corpus_prep_e2e(spark, sf_dir)
-    contam = t_contamination_screen(spark, sf_dir).select(
-        "doc_id", "contamination_ratio"
-    )
-    rep = t_repetition_stats(spark, sf_dir).select("doc_id", "repetitive")
-    pii = t_pii_scan(spark, sf_dir).select("doc_id", "has_pii_signal")
-    clean = (
-        prep.filter(F.col("doc_id") % 100 != 0)
-        .join(contam, "doc_id")
-        .join(rep, "doc_id")
-        .join(pii, "doc_id")
-        .filter(
-            (F.col("contamination_ratio") <= CONTAM_TAU)
-            & (F.col("repetitive") == 0)
-            & (F.col("has_pii_signal") == 0)
-        )
-        .select(
-            "doc_id",
-            "source",
-            "detected_lang",
-            F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
-            "quality",
-        )
-    )
-    counts = clean.groupBy("source").agg(F.count("*").alias("n_s"))
-    k = counts.agg(F.count("*").alias("n_sources"))
-    rates = counts.crossJoin(F.broadcast(k)).select(
-        "source",
-        F.round(
-            F.least(
-                F.lit(1.0),
-                (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources"))
-                / F.col("n_s"),
-            ),
-            6,
-        ).alias("rate"),
-    )
-    kept = clean.join(F.broadcast(rates), "source").filter(
-        _hash_u(F.col("doc_id")) < F.col("rate")
-    )
-    packed = prefix_sum(
-        kept.select(
-            "doc_id", "source", "detected_lang", "bpe_tokens",
-            "quality", "rate",
-        ),
-        ["doc_id"],
-        "bpe_tokens",
-        "cum_before",
-    )
-    off = F.col("cum_before") % SEQ_LEN
-    return packed.select(
-        "doc_id",
-        "source",
-        "detected_lang",
-        "bpe_tokens",
-        "quality",
-        "rate",
-        F.col("cum_before").cast("long").alias("cum_before"),
-        F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
-        off.cast("long").alias("seq_offset"),
-        F.when(off + F.col("bpe_tokens") > SEQ_LEN, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("spans_boundary"),
-    )
+    docs = load(spark, sf_dir, "documents")
+    return consume_verdicts(spark, screened(spark, docs, prep_from(docs)))
 
 
 @register(
@@ -467,69 +392,24 @@ def corpus_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def consume_verdicts(spark: SparkSession, verdicts: DataFrame) -> DataFrame:
-    """Threshold filter -> mixture rebalance -> prefix-sum packing
-    over a verdict table — corpus_pipeline_v3's back half, reading
-    no document text at all (the plan contains zero documents
-    scans; asserted by tools/plan_audit.py)."""
-    from ..ids import prefix_sum
-    from ..operators.sampling import MIXTURE_BUDGET, _hash_u
-    from .text import CONTAM_TAU, SEQ_LEN
+    """Threshold filter -> ``mixture_keep`` -> ``pack_sequences`` over
+    verdict rows (already cut by ``floored`` when they were built) —
+    the back half of corpus_pipeline_v3, which calls it on its
+    un-materialized ``screened`` frame, and of v4/v5, which call it on
+    the persisted table. Over the table it reads no document text at
+    all (zero documents scans; asserted by tools/plan_audit.py and
+    tests/test_plans.py)."""
+    from ..operators.sampling import mixture_keep
 
-    clean = (
+    clean = _train_cols(
         verdicts.filter(
             (F.col("doc_id") % 100 != 0)
             & (F.col("contamination_ratio") <= CONTAM_TAU)
             & (F.col("repetitive") == 0)
             & (F.col("has_pii_signal") == 0)
         )
-        .select(
-            "doc_id",
-            "source",
-            "detected_lang",
-            F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
-            "quality",
-        )
     )
-    counts = clean.groupBy("source").agg(F.count("*").alias("n_s"))
-    k = counts.agg(F.count("*").alias("n_sources"))
-    rates = counts.crossJoin(F.broadcast(k)).select(
-        "source",
-        F.round(
-            F.least(
-                F.lit(1.0),
-                (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources"))
-                / F.col("n_s"),
-            ),
-            6,
-        ).alias("rate"),
-    )
-    kept = clean.join(F.broadcast(rates), "source").filter(
-        _hash_u(F.col("doc_id")) < F.col("rate")
-    )
-    packed = prefix_sum(
-        kept.select(
-            "doc_id", "source", "detected_lang", "bpe_tokens",
-            "quality", "rate",
-        ),
-        ["doc_id"],
-        "bpe_tokens",
-        "cum_before",
-    )
-    off = F.col("cum_before") % SEQ_LEN
-    return packed.select(
-        "doc_id",
-        "source",
-        "detected_lang",
-        "bpe_tokens",
-        "quality",
-        "rate",
-        F.col("cum_before").cast("long").alias("cum_before"),
-        F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
-        off.cast("long").alias("seq_offset"),
-        F.when(off + F.col("bpe_tokens") > SEQ_LEN, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("spans_boundary"),
-    )
+    return pack_sequences(mixture_keep(clean), "bpe_tokens")
 
 
 _V5_EVAL_MARK = "FROM sh WHERE doc_id % 100 = 0"

@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..ids import prefix_sum
 from ..registry import REGISTRY, register
 from ..session import local_rows
 from .dedup import _shingle_df, shingles_from
@@ -300,6 +301,28 @@ def t_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEQ_LEN = 2048  # tokens per packed training sequence
 
 
+def pack_sequences(df: DataFrame, tokens: str) -> DataFrame:
+    """Fixed-length sequence packing of any (doc_id, ``tokens``, ...)
+    frame: ``df``'s columns, then the exclusive running token count
+    ``cum_before`` in doc_id order (ids.prefix_sum — no single-partition
+    exchange), ``seq_id``, ``seq_offset`` and ``spans_boundary`` — the
+    one copy shared by t_sequence_pack and the corpus pipelines."""
+    packed = prefix_sum(df, ["doc_id"], tokens, "cum_before")
+    off = F.col("cum_before") % SEQ_LEN
+    return packed.select(
+        *df.columns,
+        "cum_before",
+        # exact integer floor division (`div`), matching the oracle's
+        # `//`: double division rounds wrong near multiples of SEQ_LEN
+        # once cum_before exceeds 2^53 (reachable at 100 TB token mass)
+        F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
+        off.alias("seq_offset"),
+        F.when(off + F.col(tokens) > SEQ_LEN, F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("spans_boundary"),
+    )
+
+
 @register(
     "t_sequence_pack",
     oracle=f"""
@@ -339,30 +362,13 @@ SEQ_LEN = 2048  # tokens per packed training sequence
     tags=("text", "pack", "E1"),
 )
 def t_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..ids import prefix_sum
-
-    docs = load(spark, sf_dir, "documents")
-    tok = docs.select(
+    tok = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(_TOKEN_RE), F.lit(0)))
         .cast("long")
         .alias("n_tokens"),
     )
-    packed = prefix_sum(tok, ["doc_id"], "n_tokens", "cum_before")
-    off = F.col("cum_before") % SEQ_LEN
-    return packed.select(
-        "doc_id",
-        "n_tokens",
-        "cum_before",
-        # exact integer floor division (`div`), matching the oracle's
-        # `//`: double division rounds wrong near multiples of SEQ_LEN
-        # once cum_before exceeds 2^53 (reachable at 100 TB token mass)
-        F.expr(f"cum_before div {SEQ_LEN}").alias("seq_id"),
-        off.alias("seq_offset"),
-        F.when(off + F.col("n_tokens") > SEQ_LEN, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("spans_boundary"),
-    )
+    return pack_sequences(tok, "n_tokens")
 
 
 @register(
@@ -1104,9 +1110,10 @@ def t_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "marginal value of additional data. first-seen = min(doc_id) "
     "over a gram-partitioned window: ONE shuffle on the gram key "
     "computes every gram's first doc AND flags each (doc, gram) row "
-    "in the same pass — the tokenize+shingle explode is evaluated "
-    "once, parallelized by the tokenize-then-repartition barrier "
-    "(a groupBy-then-join-back formulation re-explodes the corpus "
+    "in the same pass — the shingle sets are read from the "
+    "persisted MinHash shingle cache (built once per documents "
+    "fingerprint, shared with t_boilerplate_ngrams) and exploded "
+    "once (a groupBy-then-join-back formulation re-explodes the corpus "
     "on both join sides and shuffles the gram strings twice; this "
     "rewrite measured 21.9s -> 1.2s at sf0.1) — then a doc_id "
     "re-aggregation with map-side partial combine. No pairwise "
@@ -1118,13 +1125,8 @@ def t_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "dedup", "quality"),
 )
 def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = shingles_from(spark, load(spark, sf_dir, "documents"))
-    # explode_outer + isNotNull, not explode: a plain explode of the
-    # shingles attribute lets Catalyst infer a size(shingles) > 0
-    # filter and push it below the repartition exchange, rebuilding
-    # every shingle set in the scan stage (_banded_sigs's note)
-    g = sh.select("doc_id", F.explode_outer("shingles").alias("gram")).where(
-        F.col("gram").isNotNull()
+    g = _shingle_df(spark, sf_dir).select(
+        "doc_id", F.explode("shingles").alias("gram")
     )
     fs = F.min("doc_id").over(W.partitionBy("gram"))
     novel = F.when(F.col("doc_id") == fs, F.lit(1)).otherwise(F.lit(0))

@@ -411,6 +411,33 @@ def r_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIXTURE_BUDGET = 150  # target total docs in the mixed corpus
 
 
+def mixture_keep(df: DataFrame) -> DataFrame:
+    """Domain-mixture rebalance of any (doc_id, source, ...) frame:
+    ``df``'s columns plus the per-source keep ``rate``, for the rows
+    whose md5-uniform ``_hash_u(doc_id)`` falls under it. Per-source
+    rate = round(min(1, MIXTURE_BUDGET / n_sources / n_s), 6) from one
+    groupBy(source) count, with the one-row source count broadcast to
+    it and the rates broadcast back — the one copy shared by
+    r_mixture_sample and the corpus pipelines."""
+    counts = df.groupBy("source").agg(F.count("*").alias("n_s"))
+    k = counts.agg(F.count("*").alias("n_sources"))
+    rates = counts.crossJoin(F.broadcast(k)).select(
+        "source",
+        F.round(
+            F.least(
+                F.lit(1.0),
+                (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources")) / F.col("n_s"),
+            ),
+            6,
+        ).alias("rate"),
+    )
+    return (
+        df.join(F.broadcast(rates), "source")
+        .filter(_hash_u(F.col("doc_id")) < F.col("rate"))
+        .select(*df.columns, "rate")
+    )
+
+
 @register(
     "r_mixture_sample",
     oracle=f"""
@@ -442,24 +469,7 @@ MIXTURE_BUDGET = 150  # target total docs in the mixed corpus
     tags=("R3", "sampling", "mixture"),
 )
 def r_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    counts = docs.groupBy("source").agg(F.count("*").alias("n_s"))
-    k = counts.agg(F.count("*").alias("n_sources"))
-    rates = counts.crossJoin(F.broadcast(k)).select(
-        "source",
-        F.round(
-            F.least(
-                F.lit(1.0),
-                (F.lit(float(MIXTURE_BUDGET)) / F.col("n_sources")) / F.col("n_s"),
-            ),
-            6,
-        ).alias("rate"),
-    )
-    return (
-        docs.join(F.broadcast(rates), "source")
-        .filter(_hash_u(F.col("doc_id")) < F.col("rate"))
-        .select("doc_id", "source", "rate")
-    )
+    return mixture_keep(load(spark, sf_dir, "documents").select("doc_id", "source"))
 
 
 _KFOLD = 5

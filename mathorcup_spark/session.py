@@ -24,6 +24,15 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for when
+    ``SPARK_GRAFT_DRIVER_MEM`` is unset: two thirds of physical memory
+    in whole GiB, capped at 16g, so the one local JVM cannot grow past
+    the machine (10g on a 15 GB host)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys * 2 // 3 // 2**30))}g"
+
+
 def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     """Build a small driver-local DataFrame as a ``LocalTableScan``.
 
@@ -115,7 +124,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
     )

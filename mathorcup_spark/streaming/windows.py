@@ -828,7 +828,7 @@ def st_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # verdict append contract requires id-ordered arrival
         # (survivor = min doc_id per content hash) and the file
         # source orders micro-batches by modification time. After the stream
-        # drains: (a) maintained == one-shot build_verdicts_frozen
+        # drains: (a) maintained == one-shot build_verdicts
         # over the full corpus (order-independent signature — the
         # maintained-equals-rebuilt assertion, composed through the
         # stream), and (b) the read-back signature equals the
@@ -836,7 +836,7 @@ def st_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # wrote (nothing lost or doubled through the stream).
         from ..sources.verdicts import (
             append_to_verdict_table,
-            build_verdicts_frozen,
+            build_verdicts,
             create_verdict_table,
             read_incremental_verdicts,
             verdict_sig,
@@ -880,7 +880,7 @@ def st_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         maintained = read_incremental_verdicts(spark, v_live)
         got_sig = verdict_sig(maintained)
         rebuilt_sig = verdict_sig(
-            build_verdicts_frozen(
+            build_verdicts(
                 spark, docs, spark.read.parquet(f"{v_live}/eval")
             )
         )

@@ -5,7 +5,7 @@ invariant (read-back checksum == additive checksum of what maintenance
 wrote); the two heavier guarantees live here (judge r6 item 8 moved
 the rebuild counterfactual out of the driver row):
 
-1. maintained == one-shot ``build_verdicts_frozen`` over the full
+1. maintained == one-shot ``build_verdicts`` over the full
    corpus, bit-for-bit (order-independent signature);
 2. replaying a batch — the crash-recovery path for a failure between
    the rows/ and hashes/ writes — leaves the READ table unchanged
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from mathorcup_spark.catalog import load
 from mathorcup_spark.sources.verdicts import (
     append_to_verdict_table,
-    build_verdicts_frozen,
+    build_verdicts,
     create_verdict_table,
     read_incremental_verdicts,
     verdict_sig,
@@ -56,7 +56,7 @@ def incr_table(spark):
 
 def test_maintained_equals_one_shot_rebuild(spark, incr_table):
     maintained = read_incremental_verdicts(spark, incr_table["out"])
-    oneshot = build_verdicts_frozen(
+    oneshot = build_verdicts(
         spark,
         incr_table["docs"],
         spark.read.parquet(f"{incr_table['out']}/eval"),
@@ -110,7 +110,7 @@ def test_replay_after_crash_between_writes_is_recovered(spark, incr_table):
         raw = spark.read.parquet(f"{out}/rows")
         deduped = read_incremental_verdicts(spark, out)
         assert raw.count() > deduped.count(), "duplicates must exist on disk"
-        oneshot = build_verdicts_frozen(
+        oneshot = build_verdicts(
             spark, docs, spark.read.parquet(f"{out}/eval")
         )
         assert verdict_sig(deduped) == verdict_sig(oneshot)

@@ -213,7 +213,7 @@ def index(s: Soak, *sf_dirs: str) -> int:
 def verdict(s: Soak, sf_dir: str = f"{TESTDATA}/sf0.1") -> int:
     from mathorcup_spark.sources.verdicts import (
         append_to_verdict_table,
-        build_verdicts_frozen,
+        build_verdicts,
         create_verdict_table,
         read_incremental_verdicts,
     )
@@ -247,7 +247,7 @@ def verdict(s: Soak, sf_dir: str = f"{TESTDATA}/sf0.1") -> int:
             # arrival: one build over everything so far
             rw, rc = s.timed(
                 lambda: full_result(
-                    build_verdicts_frozen(spark, docs.filter(doc_id < hi), eval_store)
+                    build_verdicts(spark, docs.filter(doc_id < hi), eval_store)
                 )
             )
             rows.append((n_before, aw, rw))
