@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
-from .dedup import _CAPPED_CTES, MAX_BUCKET, rescored_pairs
+from .dedup import _CAPPED_CTES, MAX_BUCKET, jaccard_sql, rescored_pairs
 
 # Exact-Jaccard threshold for a rescored LSH candidate pair to become
 # a cluster edge. The sf0.01 candidate distribution is bimodal
@@ -112,10 +112,7 @@ _CLUSTER_ORACLE = f"""
       FROM cand
       JOIN sh sa ON sa.doc_id = cand.doc_a
       JOIN sh sb ON sb.doc_id = cand.doc_b
-      WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-            / (len(sa.shingles) + len(sb.shingles)
-               - len(list_intersect(sa.shingles, sb.shingles))), 6)
-            >= {NEARDUP_JACCARD}
+      WHERE {jaccard_sql("sa.shingles", "sb.shingles")} >= {NEARDUP_JACCARD}
     ),
     bidir AS (
       SELECT doc_a AS src, doc_b AS dst FROM edges

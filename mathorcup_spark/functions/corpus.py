@@ -7,53 +7,40 @@ every per-document feature (quality heuristic, language ID, BPE-ish
 token count, normalized-content hash) is a narrow expression computed
 in one pass over the scan, the dedup survivor choice is one window
 over the content hash, and the only shuffle in the whole plan is that
-window's hash partitioning. Mirrors the member operators
-``t_text_stats`` / ``t_language_id`` / ``t_token_count`` /
-``d_dedup_survivors`` expression-for-expression (same constants, same
-tie-breaks), so their individual oracles stay the unit evidence while
-this query verifies the composition.
+window's hash partitioning. It calls the member operators' own
+functions — ``quality_score`` (t_text_stats), ``detected_lang``
+(t_language_id), t_token_count's token regex and ``first_per_hash``
+(d_dedup_survivors) — and its oracle calls their SQL twins, so their
+individual oracles stay the unit evidence while this query verifies
+the composition.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import REGISTRY, register
 from ..session import run_concurrently
-from .dedup import _norm_text
+from .dedup import _norm_text, content_hash_sql, first_per_hash
 from .text import (
     _TOKEN_RE,
     CONTAM_TAU,
-    SEQ_LEN,
-    STOPWORDS,
-    _stop_hits,
     _ws_words,
     contamination_from,
+    detected_lang,
+    langid_sql,
     pack_sequences,
+    pack_sql,
     pii_from,
+    quality_score,
+    quality_sql,
     repetition_from,
 )
 
 MIN_QUALITY = 0.3
 MIN_WORDS = 5
-
-_STOP_EN = ",".join(f"'{w}'" for w in STOPWORDS["en"])
-_LANG_HITS = {
-    lang: (
-        "len(list_filter(lwords, x -> list_contains(["
-        + ",".join(f"'{w}'" for w in ws)
-        + "], x)))"
-    )
-    for lang, ws in STOPWORDS.items()
-}
-_LANG_CASE = (
-    "CASE "
-    + " ".join(f"WHEN hits_{lang} = best THEN '{lang}'" for lang in STOPWORDS)
-    + " END"
-)
 
 
 _PREP_SQL = f"""
@@ -61,28 +48,19 @@ _PREP_SQL = f"""
       SELECT doc_id, source, text,
              string_split_regex(trim(text), '\\s+') AS words,
              string_split_regex(lower(trim(text)), '\\s+') AS lwords,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+             {content_hash_sql()} AS h
       FROM documents
     ), scored AS (
       SELECT doc_id, source,
+             {langid_sql("lwords")} AS detected_lang,
              CAST(len(words) AS INTEGER) AS n_words,
              CAST(len(regexp_extract_all(text, '{_TOKEN_RE}')) AS INTEGER)
                AS bpe_tokens,
-             round(least(1.0, len(words) / 100.0)
-                   * (1 - CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                               AS DOUBLE) / length(text))
-                   * (0.5 + 0.5 * CAST(len(list_filter(words,
-                         x -> list_contains([{_STOP_EN}], x)))
-                         AS DOUBLE) / len(words)), 6) AS quality,
-             greatest({", ".join(_LANG_HITS[lang] for lang in STOPWORDS)}) AS best,
-             {", ".join(f"{_LANG_HITS[lang]} AS hits_{lang}" for lang in STOPWORDS)},
+             {quality_sql("words")} AS quality,
              row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
       FROM feat
     )
-    SELECT doc_id, source,
-           CASE WHEN best = 0 THEN 'unknown' ELSE {_LANG_CASE} END
-             AS detected_lang,
-           n_words, bpe_tokens, quality
+    SELECT doc_id, source, detected_lang, n_words, bpe_tokens, quality
     FROM scored
     WHERE rn = 1 AND quality >= {MIN_QUALITY} AND n_words >= {MIN_WORDS}
 """
@@ -113,42 +91,16 @@ def prep_feat_from(docs: DataFrame) -> DataFrame:
     within-batch window + a probe of its persisted hash store)."""
     words = _ws_words()
     lwords = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    n_words = F.size(words)
-    n_chars = F.length("text")
-    punct = (
-        F.length(F.regexp_replace("text", "[^.,;:!?]", "")).cast("double") / n_chars
-    )
-    stop_ratio = _stop_hits(words, "en").cast("double") / n_words
-    quality = F.round(
-        F.least(F.lit(1.0), n_words / 100.0) * (1 - punct) * (0.5 + 0.5 * stop_ratio),
-        6,
-    )
-    hits = {
-        lang: F.size(F.filter(lwords, lambda w: w.isin(STOPWORDS[lang])))
-        for lang in STOPWORDS
-    }
-    best = F.greatest(*hits.values())
-    detected = F.when(best == 0, "unknown")
-    for lang in STOPWORDS:
-        detected = detected.when(hits[lang] == best, lang)
     bpe = F.size(F.regexp_extract_all("text", F.lit(_TOKEN_RE), F.lit(0)))
-
     return docs.select(
         "doc_id",
         "source",
-        n_words.alias("n_words"),
+        F.size(words).alias("n_words"),
         bpe.alias("bpe_tokens"),
-        quality.alias("quality"),
-        detected.alias("detected_lang"),
+        quality_score(words).alias("quality"),
+        detected_lang(lwords).alias("detected_lang"),
         F.md5(_norm_text()).alias("h"),
     )
-
-
-def first_per_hash(feat: DataFrame) -> DataFrame:
-    """The exact-dedup survivor window: row 1 per content hash ``h``
-    in doc_id order, ``feat``'s columns unchanged."""
-    rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
-    return feat.withColumn("rn", rn).filter(F.col("rn") == 1).drop("rn")
 
 
 def floored(df: DataFrame) -> DataFrame:
@@ -196,40 +148,17 @@ def _train_cols(df: DataFrame) -> DataFrame:
 
 
 def _v2_oracle() -> str:
-    from ..operators.sampling import MIXTURE_BUDGET, _hash_u_sql
+    from ..operators.sampling import mixture_sql
 
     return f"""
     WITH prep AS ({_PREP_SQL}),
-    counts AS (
-      SELECT source, count(*) AS n_s FROM prep GROUP BY source
-    ), k AS (
-      SELECT count(*) AS n_sources FROM counts
-    ), rates AS (
-      SELECT source,
-             round(least(1.0, ({MIXTURE_BUDGET}.0 / k.n_sources) / n_s), 6)
-               AS rate
-      FROM counts, k
-    ), kept AS (
-      SELECT p.doc_id, p.source, p.detected_lang,
-             CAST(p.bpe_tokens AS BIGINT) AS bpe_tokens,
-             p.quality, r.rate
-      FROM prep p JOIN rates r USING (source)
-      WHERE {_hash_u_sql('p.doc_id')} < r.rate
-    ), packed AS (
-      SELECT *, CAST(coalesce(sum(bpe_tokens) OVER (
-                 ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS cum_before
-      FROM kept
-    )
-    SELECT doc_id, source, detected_lang, bpe_tokens, quality, rate,
-           cum_before,
-           cum_before // {SEQ_LEN} AS seq_id,
-           cum_before % {SEQ_LEN} AS seq_offset,
-           CASE WHEN cum_before % {SEQ_LEN} + bpe_tokens > {SEQ_LEN}
-                THEN 1 ELSE 0 END AS spans_boundary
-    FROM packed
-    """
+    train AS (
+      SELECT doc_id, source, detected_lang,
+             CAST(bpe_tokens AS BIGINT) AS bpe_tokens, quality
+      FROM prep
+    ),
+    kept AS ({mixture_sql("train")})
+    {pack_sql("kept", "bpe_tokens")}"""
 
 
 @register(
@@ -258,7 +187,7 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _v3_oracle() -> str:
-    from ..operators.sampling import MIXTURE_BUDGET, _hash_u_sql
+    from ..operators.sampling import mixture_sql
 
     contam = REGISTRY["t_contamination_screen"].oracle
     rep = REGISTRY["t_repetition_stats"].oracle
@@ -280,33 +209,8 @@ def _v3_oracle() -> str:
         AND r.repetitive = 0
         AND pii.has_pii_signal = 0
     ),
-    counts AS (
-      SELECT source, count(*) AS n_s FROM clean GROUP BY source
-    ), k AS (
-      SELECT count(*) AS n_sources FROM counts
-    ), rates AS (
-      SELECT source,
-             round(least(1.0, ({MIXTURE_BUDGET}.0 / k.n_sources) / n_s), 6)
-               AS rate
-      FROM counts, k
-    ), kept AS (
-      SELECT cl.*, r.rate FROM clean cl JOIN rates r USING (source)
-      WHERE {_hash_u_sql('cl.doc_id')} < r.rate
-    ), packed AS (
-      SELECT *, CAST(coalesce(sum(bpe_tokens) OVER (
-                 ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS cum_before
-      FROM kept
-    )
-    SELECT doc_id, source, detected_lang, bpe_tokens, quality, rate,
-           cum_before,
-           cum_before // {SEQ_LEN} AS seq_id,
-           cum_before % {SEQ_LEN} AS seq_offset,
-           CASE WHEN cum_before % {SEQ_LEN} + bpe_tokens > {SEQ_LEN}
-                THEN 1 ELSE 0 END AS spans_boundary
-    FROM packed
-    """
+    kept AS ({mixture_sql("clean")})
+    {pack_sql("kept", "bpe_tokens")}"""
 
 
 @register(

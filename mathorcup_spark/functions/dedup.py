@@ -13,19 +13,25 @@ higher-order functions over word arrays (JVM-side, no Python).
 Near-dup detection is two stages, candidates then an exact rescore,
 and the queries share one copy of each block (as does the persisted
 index in ``sources/minhash_index.py`` and the n-gram screens in
-``functions/text.py``):
+``functions/text.py``). Beside each block whose SQL the oracles share
+sits its DuckDB twin, a builder that returns SQL text only; the
+builders are shared among oracles alone, so each oracle stays an
+independent check of its query:
 
+- content hash: ``md5(_norm_text())`` and :func:`content_hash_sql`,
+  with :func:`first_per_hash` the survivor window on that hash.
 - shingle sets: :func:`shingles_from` gives each document its
   distinct word-n-gram set (any width, optional kept columns), empty
-  for documents under n words.
+  for documents under n words; :func:`shingles_sql` is its twin.
 - signatures: :func:`_banded_sigs` gives each document its 16
   MinHashes cut into 4 ``(band, bucket)`` rows.
 - band join: :func:`band_join` pairs two banded frames on
   ``(band, bucket)`` with an id predicate and the agreeing-MinHash
-  estimate, one row per pair.
+  estimate (:func:`agree_sql` in SQL), one row per pair.
 - exact Jaccard: :func:`_jaccard` is ``round(|A∩B| / |A∪B|, 6)``, NULL
-  for two empty sets, and :func:`rescore_jaccard` attaches both sides'
-  shingle sets to candidate pairs and scores them.
+  for two empty sets (:func:`jaccard_sql` in SQL), and
+  :func:`rescore_jaccard` attaches both sides' shingle sets to
+  candidate pairs and scores them.
 """
 
 from __future__ import annotations
@@ -39,19 +45,162 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
-from .similarity import bucket_sql, lsh_bands
+from .similarity import bucket_sql, lsh_bands, unit_sql
 
 
 def _norm_text():
     return F.lower(F.trim(F.regexp_replace("text", "\\s+", " ")))
 
 
+def content_hash_sql() -> str:
+    """DuckDB twin of ``F.md5(_norm_text())``: md5 of the
+    whitespace-collapsed, trimmed, lowercased ``text``."""
+    return "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
+
+
+def first_per_hash(feat: DataFrame) -> DataFrame:
+    """The exact-dedup survivor window: row 1 per content hash ``h``
+    in doc_id order, ``feat``'s columns unchanged."""
+    rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
+    return feat.withColumn("rn", rn).filter(F.col("rn") == 1).drop("rn")
+
+
+N_HASHES = 16
+N_BANDS = 4  # 4 rows per band
+
+
+def shingles_from(
+    spark: SparkSession,
+    docs: DataFrame,
+    n: int = 3,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(doc_id, *keep, shingles): distinct word-``n``-gram shingle sets
+    of any (doc_id, text, ...) frame — the one shingle builder of the
+    dedup queries, the persisted index (sources/minhash_index.py) and
+    the n-gram screens of functions/text.py.
+
+    Documents with fewer than ``n`` words get an EMPTY set, matching
+    :func:`shingles_sql`, where the ``||`` chain over an
+    out-of-bounds index is NULL and ``list_distinct`` drops it.
+    Without the guard, ``concat_ws`` would skip the NULL members and
+    emit a truncated shingle only on the Spark side (round-4 ADVICE,
+    latent divergence).
+
+    Tokenize BEFORE the repartition exchange: the shingle lambda
+    references the words array ``n`` times per index, and Catalyst's
+    CollapseProject would re-inline the regex split into every
+    reference (no CSE inside lambdas) — the exchange is a barrier
+    it cannot cross, so the split runs once per row.
+    """
+    words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
+    wdf = docs.select("doc_id", *keep, words.alias("words"))
+    if wdf.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        # A small parquet file arrives as one partition, serializing
+        # the compute-bound shingle build; at cluster scale the scan
+        # already yields many splits and this branch never fires.
+        wdf = wdf.repartition("doc_id")
+    w = F.col("words")
+    idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0)))
+    # F.get (NULL on out-of-bounds) not element_at (throws under ANSI)
+    full = F.array_distinct(
+        F.transform(
+            idx,
+            lambda i: F.concat_ws(
+                " ", *[F.get(w, (i + j).cast("int")) for j in range(n)]
+            ),
+        )
+    )
+    shingles = F.when(F.size(w) >= n, full).otherwise(
+        F.array().cast("array<string>")
+    )
+    return wdf.select("doc_id", *keep, shingles.alias("shingles"))
+
+
+def shingles_sql(n: int = 3, keep: tuple[str, ...] = ()) -> str:
+    """DuckDB twin of :func:`shingles_from` over ``documents``: a
+    SELECT of (doc_id, *keep, shingles). Under ``n`` words the ``||``
+    chain reaches an out-of-bounds index, which is NULL, and
+    ``list_distinct`` drops it, so the set is empty."""
+    cols = "".join(f"{c}, " for c in keep)
+    gram = " || ' ' || ".join(f"words[i+{j}]" if j else "words[i]" for j in range(n))
+    return f"""
+      SELECT doc_id, {cols}list_distinct(list_transform(
+               range(1, greatest(len(words) - {n - 1}, 1) + 1),
+               i -> {gram})) AS shingles
+      FROM (SELECT doc_id, {cols}
+                   string_split_regex(lower(trim(text)), '\\s+') AS words
+            FROM documents)
+    """
+
+
+def band_join(
+    a: DataFrame,
+    c: DataFrame,
+    id_pred: Callable[[Column, Column], Column] | None = None,
+    names: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """(names[0], names[1], est_jaccard): every pair of a row of ``a``
+    and a row of ``c`` (both (doc_id, band, bucket, sig) banded
+    frames) that share a (band, bucket), kept where
+    ``id_pred(a.doc_id, c.doc_id)`` holds, with the fraction of
+    agreeing minhashes as the estimate — one row per pair however
+    many bands collide."""
+    a, c = a.alias("a"), c.alias("c")
+    on = (F.col("a.band") == F.col("c.band")) & (
+        F.col("a.bucket") == F.col("c.bucket")
+    )
+    if id_pred is not None:
+        on = on & id_pred(F.col("a.doc_id"), F.col("c.doc_id"))
+    agree = F.size(
+        F.filter(
+            F.zip_with(F.col("a.sig"), F.col("c.sig"), lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
+    return (
+        a.join(c, on)
+        .select(
+            F.col("a.doc_id").alias(names[0]),
+            F.col("c.doc_id").alias(names[1]),
+            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
+        )
+        .dropDuplicates(list(names))
+    )
+
+
+def agree_sql(a: str, c: str) -> str:
+    """DuckDB twin of :func:`band_join`'s estimate: the fraction of the
+    ``N_HASHES`` minhashes on which the ``sig`` of rows ``a`` and ``c``
+    agree."""
+    return (
+        f"CAST(len(list_filter(range(1, {N_HASHES + 1}),"
+        f" i -> {a}.sig[i] = {c}.sig[i])) AS DOUBLE) / {N_HASHES}"
+    )
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """round(|A∩B| / |A∪B|, 6) of two shingle-set columns — the exact
+    Jaccard every near-dup oracle replays. NULL when both sets are
+    empty: DuckDB's double 0/0 is NULL, Spark's is IEEE NaN without
+    the when-guard."""
+    inter = F.size(F.array_intersect(F.col(a), F.col(b)))
+    union = F.size(F.col(a)) + F.size(F.col(b)) - inter
+    return F.round(F.when(union > 0, inter.cast("double") / union), 6)
+
+
+def jaccard_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`_jaccard` over two shingle-set columns;
+    DuckDB's double 0/0 is already NULL."""
+    inter = f"len(list_intersect({a}, {b}))"
+    return f"round(CAST({inter} AS DOUBLE) / (len({a}) + len({b}) - {inter}), 6)"
+
+
 @register(
     "d_exact_dedup",
-    oracle="""
+    oracle=f"""
     WITH hashed AS (
-      SELECT doc_id,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS content_hash
+      SELECT doc_id, {content_hash_sql()} AS content_hash
       FROM documents
     )
     SELECT content_hash, count(*) AS n_copies,
@@ -75,21 +224,10 @@ def d_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d_ngram_jaccard",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id, source,
-             list_distinct(list_transform(
-               range(1, greatest(len(words) - 2, 1) + 1),
-               i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-             )) AS shingles
-      FROM (SELECT doc_id, source,
-                   string_split_regex(lower(trim(text)), '\\s+') AS words
-            FROM documents)
-    )
+    oracle=f"""
+    WITH sh AS ({shingles_sql(keep=("source",))})
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                 / (len(a.shingles) + len(b.shingles)
-                    - len(list_intersect(a.shingles, b.shingles))), 6) AS jaccard
+           {jaccard_sql("a.shingles", "b.shingles")} AS jaccard
     FROM sh a JOIN sh b
       ON a.source = b.source
      AND b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 20
@@ -135,10 +273,6 @@ def _id_window_join(sh: DataFrame, window: int = 20):
     )
 
 
-N_HASHES = 16
-N_BANDS = 4  # 4 rows per band
-
-
 # Universal-hash MinHash permutations: ONE md5 per shingle gives a
 # 60-bit base value x (15 hex chars, parseable on both engines); the
 # 16 "permutations" are h_i(x) = (a_i * x + b_i) mod P — the standard
@@ -154,16 +288,7 @@ _MH_B = [(69621 * (i * i + 1)) % _MH_P for i in range(N_HASHES)]
 # selects the candidates directly; d_lsh_rescore_e2e joins them back
 # to the shingle sets for the exact-Jaccard rescore.
 _MINHASH_BANDED_CTES = f"""
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(words) - 2, 1) + 1),
-               i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-             )) AS shingles
-      FROM (SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\\s+') AS words
-            FROM documents)
-    ), ex AS (
+    sh AS ({shingles_sql()}), ex AS (
       SELECT doc_id,
              ('0x' || substr(md5(unnest(shingles)), 1, 15))::BIGINT
                % {_MH_P} AS x
@@ -189,8 +314,7 @@ _MINHASH_BANDED_CTES = f"""
 
 _MINHASH_CTES = f"""{_MINHASH_BANDED_CTES}, cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b,
-             CAST(len(list_filter(range(1, 17), i -> a.sig[i] = c.sig[i]))
-                  AS DOUBLE) / 16 AS est_jaccard
+             {agree_sql("a", "c")} AS est_jaccard
       FROM banded a JOIN banded c
         ON a.band = c.band AND a.bucket = c.bucket AND a.doc_id < c.doc_id
     )
@@ -278,54 +402,6 @@ def _banded_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mh_tables(spark, sf_dir)["banded"]
 
 
-def shingles_from(
-    spark: SparkSession,
-    docs: DataFrame,
-    n: int = 3,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """(doc_id, *keep, shingles): distinct word-``n``-gram shingle sets
-    of any (doc_id, text, ...) frame — the one shingle builder of the
-    dedup queries, the persisted index (sources/minhash_index.py) and
-    the n-gram screens of functions/text.py.
-
-    Documents with fewer than ``n`` words get an EMPTY set, matching
-    the DuckDB oracle CTEs, where the ``||`` chain over an
-    out-of-bounds index is NULL and ``list_distinct`` drops it.
-    Without the guard, ``concat_ws`` would skip the NULL members and
-    emit a truncated shingle only on the Spark side (round-4 ADVICE,
-    latent divergence).
-
-    Tokenize BEFORE the repartition exchange: the shingle lambda
-    references the words array ``n`` times per index, and Catalyst's
-    CollapseProject would re-inline the regex split into every
-    reference (no CSE inside lambdas) — the exchange is a barrier
-    it cannot cross, so the split runs once per row.
-    """
-    words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    wdf = docs.select("doc_id", *keep, words.alias("words"))
-    if wdf.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        # A small parquet file arrives as one partition, serializing
-        # the compute-bound shingle build; at cluster scale the scan
-        # already yields many splits and this branch never fires.
-        wdf = wdf.repartition("doc_id")
-    w = F.col("words")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0)))
-    # F.get (NULL on out-of-bounds) not element_at (throws under ANSI)
-    full = F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.get(w, (i + j).cast("int")) for j in range(n)]
-            ),
-        )
-    )
-    shingles = F.when(F.size(w) >= n, full).otherwise(
-        F.array().cast("array<string>")
-    )
-    return wdf.select("doc_id", *keep, shingles.alias("shingles"))
-
-
 def _candidates_from_banded(
     banded: DataFrame, max_bucket: int | None = None
 ) -> DataFrame:
@@ -345,41 +421,6 @@ def _candidates_from_banded(
             sizes.filter(F.col("n") <= max_bucket).drop("n"), ["band", "bucket"]
         )
     return band_join(banded, banded, operator.lt)
-
-
-def band_join(
-    a: DataFrame,
-    c: DataFrame,
-    id_pred: Callable[[Column, Column], Column] | None = None,
-    names: tuple[str, str] = ("doc_a", "doc_b"),
-) -> DataFrame:
-    """(names[0], names[1], est_jaccard): every pair of a row of ``a``
-    and a row of ``c`` (both (doc_id, band, bucket, sig) banded
-    frames) that share a (band, bucket), kept where
-    ``id_pred(a.doc_id, c.doc_id)`` holds, with the fraction of
-    agreeing minhashes as the estimate — one row per pair however
-    many bands collide."""
-    a, c = a.alias("a"), c.alias("c")
-    on = (F.col("a.band") == F.col("c.band")) & (
-        F.col("a.bucket") == F.col("c.bucket")
-    )
-    if id_pred is not None:
-        on = on & id_pred(F.col("a.doc_id"), F.col("c.doc_id"))
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("c.sig"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    return (
-        a.join(c, on)
-        .select(
-            F.col("a.doc_id").alias(names[0]),
-            F.col("c.doc_id").alias(names[1]),
-            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
-        )
-        .dropDuplicates(list(names))
-    )
 
 
 def _banded_sigs(sh: DataFrame) -> DataFrame:
@@ -452,9 +493,7 @@ def _banded_sigs(sh: DataFrame) -> DataFrame:
 _LSH_RESCORE_ORACLE = f"""
     WITH {_MINHASH_CTES}
     SELECT cand.doc_a, cand.doc_b, cand.est_jaccard,
-           round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-                 / (len(sa.shingles) + len(sb.shingles)
-                    - len(list_intersect(sa.shingles, sb.shingles))), 6) AS jaccard
+           {jaccard_sql("sa.shingles", "sb.shingles")} AS jaccard
     FROM cand
     JOIN sh sa ON sa.doc_id = cand.doc_a
     JOIN sh sb ON sb.doc_id = cand.doc_b
@@ -499,16 +538,6 @@ def rescored_pairs(
     return rescore_jaccard(cand, sh, sh)
 
 
-def _jaccard(a: str, b: str) -> Column:
-    """round(|A∩B| / |A∪B|, 6) of two shingle-set columns — the exact
-    Jaccard every near-dup oracle replays. NULL when both sets are
-    empty: DuckDB's double 0/0 is NULL, Spark's is IEEE NaN without
-    the when-guard."""
-    inter = F.size(F.array_intersect(F.col(a), F.col(b)))
-    union = F.size(F.col(a)) + F.size(F.col(b)) - inter
-    return F.round(F.when(union > 0, inter.cast("double") / union), 6)
-
-
 def rescore_jaccard(
     cand: DataFrame,
     sh_a: DataFrame,
@@ -526,72 +555,6 @@ def rescore_jaccard(
         cand.join(sa, a)
         .join(sb, b)
         .select(a, b, "est_jaccard", _jaccard("sh_a", "sh_b").alias("jaccard"))
-    )
-
-
-def _md5_bit_sql(i: int) -> str:
-    """DuckDB: bit i (0..63) of the first 64 bits of md5(word) hex."""
-    pos, shift = i // 4 + 1, i % 4
-    return (
-        f"((instr('0123456789abcdef', substr(hx, {pos}, 1)) - 1)"
-        f" >> {shift}) & 1"
-    )
-
-
-_SIMHASH_ORACLE = f"""
-    WITH w AS (
-      SELECT doc_id, source,
-             unnest(list_distinct(
-               string_split_regex(lower(trim(text)), '\\s+'))) AS word
-      FROM documents
-    ), h AS (
-      SELECT doc_id, source, md5(word) AS hx FROM w
-    ), votes AS (
-      SELECT doc_id, source,
-             {", ".join(
-                 f"sum(CASE WHEN {_md5_bit_sql(i)} = 1 THEN 1 ELSE -1 END)"
-                 f" AS b{i}"
-                 for i in range(64))}
-      FROM h GROUP BY doc_id, source
-    ), bits AS (
-      SELECT doc_id, source,
-             [{", ".join(f"CASE WHEN b{i} > 0 THEN 1 ELSE 0 END"
-                          for i in range(64))}] AS bits
-      FROM votes
-    )
-    SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-           CAST(list_sum(list_transform(range(1, 65),
-                i -> CASE WHEN a.bits[i] <> c.bits[i] THEN 1 ELSE 0 END))
-                AS BIGINT) AS hamming
-    FROM bits a JOIN bits c
-      ON a.source = c.source
-     AND c.doc_id > a.doc_id AND c.doc_id <= a.doc_id + 20
-"""
-
-
-@register(
-    "d_simhash",
-    oracle=_SIMHASH_ORACLE,
-    doc="SimHash 64-bit signatures + Hamming-distance scoring over "
-    "key-bounded pairs: per word, the first 64 bits of md5(word) vote "
-    "±1 on each signature bit; the sign of the per-bit sum forms the "
-    "signature; near-dups have small Hamming distance (bit_count of "
-    "XOR). md5 bits (not xxhash64) so the oracle recomputes the exact "
-    "signatures — the DuckDB side unpacks hex digits and compares "
-    "bit vectors, verifying votes, signs, and Hamming end to end. "
-    "Candidate pairs are key-bounded (same source, id distance ≤ 20) "
-    "— a scoring-stage demonstrator; corpus-wide recall comes from "
-    "the LSH variants (see COVERAGE.md §near-dup-recall).",
-    tags=("dedup", "simhash"),
-)
-def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    sh = _simhash_sigs(docs, keep=("source",))
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return _id_window_join(sh).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        hamming.cast("long").alias("hamming"),
     )
 
 
@@ -649,13 +612,81 @@ def _simhash_sigs(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     return votes.select("doc_id", *keep, simhash.alias("simhash"))
 
 
+def _md5_bit_sql(i: int) -> str:
+    """DuckDB: bit i (0..63) of the first 64 bits of md5(word) hex."""
+    pos, shift = i // 4 + 1, i % 4
+    return (
+        f"((instr('0123456789abcdef', substr(hx, {pos}, 1)) - 1)"
+        f" >> {shift}) & 1"
+    )
+
+
+def simhash_sql(keep: tuple[str, ...] = ()) -> str:
+    """DuckDB twin of :func:`_simhash_sigs` over ``documents``: a query
+    of (doc_id, *keep, bits), the signature as a list of 64 0/1 bits
+    (bit i votes with bit i of md5(word), as in the Spark twin)."""
+    cols = "".join(f"{c}, " for c in keep)
+    votes = ", ".join(
+        f"sum(CASE WHEN {_md5_bit_sql(i)} = 1 THEN 1 ELSE -1 END) AS b{i}"
+        for i in range(64)
+    )
+    bits = ", ".join(f"CASE WHEN b{i} > 0 THEN 1 ELSE 0 END" for i in range(64))
+    return f"""
+    WITH w AS (
+      SELECT doc_id, {cols}unnest(list_distinct(
+               string_split_regex(lower(trim(text)), '\\s+'))) AS word
+      FROM documents
+    ), votes AS (
+      SELECT doc_id, {cols}{votes}
+      FROM (SELECT *, md5(word) AS hx FROM w) GROUP BY ALL
+    )
+    SELECT doc_id, {cols}[{bits}] AS bits FROM votes
+    """
+
+
+_SIMHASH_ORACLE = f"""
+    WITH bits AS ({simhash_sql(keep=("source",))})
+    SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
+           CAST(list_sum(list_transform(range(1, 65),
+                i -> CASE WHEN a.bits[i] <> c.bits[i] THEN 1 ELSE 0 END))
+                AS BIGINT) AS hamming
+    FROM bits a JOIN bits c
+      ON a.source = c.source
+     AND c.doc_id > a.doc_id AND c.doc_id <= a.doc_id + 20
+"""
+
+
+@register(
+    "d_simhash",
+    oracle=_SIMHASH_ORACLE,
+    doc="SimHash 64-bit signatures + Hamming-distance scoring over "
+    "key-bounded pairs: per word, the first 64 bits of md5(word) vote "
+    "±1 on each signature bit; the sign of the per-bit sum forms the "
+    "signature; near-dups have small Hamming distance (bit_count of "
+    "XOR). md5 bits (not xxhash64) so the oracle recomputes the exact "
+    "signatures — the DuckDB side unpacks hex digits and compares "
+    "bit vectors, verifying votes, signs, and Hamming end to end. "
+    "Candidate pairs are key-bounded (same source, id distance ≤ 20) "
+    "— a scoring-stage demonstrator; corpus-wide recall comes from "
+    "the LSH variants (see COVERAGE.md §near-dup-recall).",
+    tags=("dedup", "simhash"),
+)
+def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents")
+    sh = _simhash_sigs(docs, keep=("source",))
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return _id_window_join(sh).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        hamming.cast("long").alias("hamming"),
+    )
+
+
 @register(
     "d_dedup_survivors",
-    oracle="""
+    oracle=f"""
     WITH hashed AS (
-      SELECT doc_id, n_chars,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
-      FROM documents
+      SELECT doc_id, n_chars, {content_hash_sql()} AS h FROM documents
     ), ranked AS (
       SELECT doc_id, n_chars,
              row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
@@ -670,13 +701,9 @@ def _simhash_sigs(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
 )
 def d_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    w = W.partitionBy("h").orderBy("doc_id")
-    return (
+    return first_per_hash(
         docs.select("doc_id", "n_chars", F.md5(_norm_text()).alias("h"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "n_chars")
-    )
+    ).select("doc_id", "n_chars")
 
 
 # --- embedding-cosine near-duplicate detection ------------------------------
@@ -702,9 +729,7 @@ ND_TABLES = 6
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
           FROM embeddings, range(0, {ND_TABLES}) r(t)
         ), n AS (
-          SELECT vec_id, t, bucket,
-                 list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS u
-          FROM b
+          SELECT vec_id, t, bucket, {unit_sql("e")} AS u FROM b
         ), cand AS (
           SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
           FROM n a JOIN n c
@@ -858,18 +883,14 @@ _INCR_ORACLE = f"""
     ),
     icand AS (
       SELECT DISTINCT a.doc_id AS idx_id, c.doc_id AS new_id,
-             CAST(len(list_filter(range(1, 17), i -> a.sig[i] = c.sig[i]))
-                  AS DOUBLE) / 16 AS est_jaccard
+             {agree_sql("a", "c")} AS est_jaccard
       FROM banded a JOIN banded c
         ON a.band = c.band AND a.bucket = c.bucket
       CROSS JOIN tt
       WHERE a.doc_id < tt.t AND c.doc_id >= tt.t
     )
     SELECT icand.idx_id, icand.new_id, icand.est_jaccard,
-           round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-                 / (len(sa.shingles) + len(sb.shingles)
-                    - len(list_intersect(sa.shingles, sb.shingles))), 6)
-             AS jaccard
+           {jaccard_sql("sa.shingles", "sb.shingles")} AS jaccard
     FROM icand
     JOIN sh sa ON sa.doc_id = icand.idx_id
     JOIN sh sb ON sb.doc_id = icand.new_id
@@ -958,26 +979,7 @@ def d_incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HAMMING_E2E_ORACLE = f"""
     WITH {_MINHASH_CTES},
-    w2 AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               string_split_regex(lower(trim(text)), '\\s+'))) AS word
-      FROM documents
-    ), h2 AS (
-      SELECT doc_id, md5(word) AS hx FROM w2
-    ), votes2 AS (
-      SELECT doc_id,
-             {", ".join(
-                 f"sum(CASE WHEN {_md5_bit_sql(i)} = 1 THEN 1 ELSE -1 END)"
-                 f" AS b{i}"
-                 for i in range(64))}
-      FROM h2 GROUP BY doc_id
-    ), bits2 AS (
-      SELECT doc_id,
-             [{", ".join(f"CASE WHEN b{i} > 0 THEN 1 ELSE 0 END"
-                          for i in range(64))}] AS bits
-      FROM votes2
-    )
+    bits2 AS ({simhash_sql()})
     SELECT cand.doc_a, cand.doc_b, cand.est_jaccard,
            CAST(list_sum(list_transform(range(1, 65),
                 i -> CASE WHEN a.bits[i] <> c.bits[i] THEN 1 ELSE 0 END))
@@ -1046,8 +1048,7 @@ _CAPPED_CTES = f"""{_MINHASH_BANDED_CTES}, bsz AS (
       WHERE bsz.n <= {MAX_BUCKET}
     ), cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b,
-             CAST(len(list_filter(range(1, 17), i -> a.sig[i] = c.sig[i]))
-                  AS DOUBLE) / 16 AS est_jaccard
+             {agree_sql("a", "c")} AS est_jaccard
       FROM capped a JOIN capped c
         ON a.band = c.band AND a.bucket = c.bucket AND a.doc_id < c.doc_id
     )
@@ -1125,17 +1126,8 @@ def d_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d_containment",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id, source,
-             list_distinct(list_transform(
-               range(1, greatest(len(words) - 2, 1) + 1),
-               i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-             )) AS shingles
-      FROM (SELECT doc_id, source,
-                   string_split_regex(lower(trim(text)), '\\s+') AS words
-            FROM documents)
-    )
+    oracle=f"""
+    WITH sh AS ({shingles_sql(keep=("source",))})
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
                  / nullif(len(a.shingles), 0), 6) AS containment_a,

@@ -10,7 +10,7 @@ scale linearly to 100 TB of text.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -18,7 +18,7 @@ from ..catalog import load
 from ..ids import prefix_sum
 from ..registry import REGISTRY, register
 from ..session import local_rows
-from .dedup import _shingle_df, shingles_from
+from .dedup import _shingle_df, shingles_from, shingles_sql
 
 # Tiny per-language stopword profiles for the n-gram/stopword
 # language-ID heuristic. Public knowledge (most-common function words).
@@ -40,9 +40,59 @@ def _stop_hits(words, lang: str):
     return F.size(F.filter(words, lambda w: w.isin(STOPWORDS[lang])))
 
 
+def _stop_hits_sql(words: str, lang: str) -> str:
+    listed = ",".join(f"'{w}'" for w in STOPWORDS[lang])
+    return f"len(list_filter({words}, x -> list_contains([{listed}], x)))"
+
+
+def _punct_ratio() -> Column:
+    # try_divide: empty text has n_chars=0 — ANSI Spark would throw
+    # where DuckDB's double /0 yields NULL; try_divide matches DuckDB
+    return F.try_divide(
+        F.length(F.regexp_replace("text", "[^.,;:!?]", "")).cast("double"),
+        F.length("text"),
+    )
+
+
+_PUNCT_RATIO_SQL = (
+    "CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)"
+    " / length(text)"
+)
+
+
+def _stop_ratio(words) -> Column:
+    return _stop_hits(words, "en").cast("double") / F.size(words)
+
+
+def _stop_ratio_sql(words: str) -> str:
+    return f"CAST({_stop_hits_sql(words, 'en')} AS DOUBLE) / len({words})"
+
+
+def quality_score(words) -> Column:
+    """The composite quality heuristic of the row's ``text`` split into
+    the array ``words``: length-capped x low-punctuation x
+    stopword-weighted, rounded to 6 — shared by t_text_stats and the
+    corpus prep (functions/corpus.py). NULL for empty text."""
+    return F.round(
+        F.least(F.lit(1.0), F.size(words) / 100.0)
+        * (1 - _punct_ratio())
+        * (0.5 + 0.5 * _stop_ratio(words)),
+        6,
+    )
+
+
+def quality_sql(words: str) -> str:
+    """DuckDB twin of :func:`quality_score` over the words-array column
+    ``words``."""
+    return (
+        f"round(least(1.0, len({words}) / 100.0) * (1 - {_PUNCT_RATIO_SQL})"
+        f" * (0.5 + 0.5 * {_stop_ratio_sql(words)}), 6)"
+    )
+
+
 @register(
     "t_text_stats",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS words
       FROM documents
@@ -52,17 +102,9 @@ def _stop_hits(words, lang: str):
            CAST(len(words) AS INTEGER) AS n_words,
            CAST(length(replace(trim(text), ' ', '')) AS DOUBLE) / len(words)
              AS avg_word_len,
-           CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
-             / length(text) AS punct_ratio,
-           CAST(len(list_filter(words, x -> list_contains(
-                 ['the','and','of','to','a','in','is','it','that','for'], x)))
-                AS DOUBLE) / len(words) AS stopword_ratio,
-           round(least(1.0, len(words) / 100.0)
-                 * (1 - CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                             AS DOUBLE) / length(text))
-                 * (0.5 + 0.5 * CAST(len(list_filter(words, x -> list_contains(
-                       ['the','and','of','to','a','in','is','it','that','for'], x)))
-                       AS DOUBLE) / len(words)), 6) AS quality
+           {_PUNCT_RATIO_SQL} AS punct_ratio,
+           {_stop_ratio_sql("words")} AS stopword_ratio,
+           {quality_sql("words")} AS quality
     FROM w
     """,
     doc="Text quality scoring: char/word counts, average word length, "
@@ -75,65 +117,54 @@ def t_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     words = _ws_words()
     n_words = F.size(words)
-    n_chars = F.length("text")
-    # try_divide: empty text has n_chars=0 — ANSI Spark would throw
-    # where DuckDB's double /0 yields NULL; try_divide matches DuckDB
-    punct = F.try_divide(
-        F.length(F.regexp_replace("text", "[^.,;:!?]", "")).cast("double"), n_chars
-    )
-    stop_ratio = _stop_hits(words, "en").cast("double") / n_words
     avg_wlen = (
         F.length(F.replace(F.trim(F.col("text")), F.lit(" "), F.lit(""))).cast("double")
         / n_words
     )
-    quality = F.round(
-        F.least(F.lit(1.0), n_words / 100.0) * (1 - punct) * (0.5 + 0.5 * stop_ratio),
-        6,
-    )
     return docs.select(
         "doc_id",
-        n_chars.alias("n_chars_m"),
+        F.length("text").alias("n_chars_m"),
         n_words.alias("n_words"),
         avg_wlen.alias("avg_word_len"),
-        punct.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        quality.alias("quality"),
+        _punct_ratio().alias("punct_ratio"),
+        _stop_ratio(words).alias("stopword_ratio"),
+        quality_score(words).alias("quality"),
     )
 
 
-def _langid_oracle() -> str:
-    hits = {
-        lang: (
-            "len(list_filter(words, x -> list_contains(["
-            + ",".join(f"'{w}'" for w in ws)
-            + "], x)))"
-        )
-        for lang, ws in STOPWORDS.items()
-    }
-    order = list(STOPWORDS)  # tie-break: first language in declaration order
-    case = "CASE " + " ".join(
-        f"WHEN hits_{lang} = best THEN '{lang}'" for lang in order
-    ) + " END"
-    return f"""
-    WITH w AS (
-      SELECT doc_id, lang AS labeled_lang,
-             string_split_regex(lower(trim(text)), '\\s+') AS words
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, labeled_lang,
-             greatest({", ".join(hits[lang] for lang in order)}) AS best,
-             {", ".join(f"{hits[lang]} AS hits_{lang}" for lang in order)}
-      FROM w
+def detected_lang(words) -> Column:
+    """Stopword-profile language id of the lowercased array ``words``:
+    the language with the most hits, ties to the first in STOPWORDS
+    order, 'unknown' on no hits — shared by t_language_id and the
+    corpus prep (functions/corpus.py)."""
+    hits = {lang: _stop_hits(words, lang) for lang in STOPWORDS}
+    best = F.greatest(*hits.values())
+    detected = F.when(best == 0, "unknown")
+    for lang in STOPWORDS:
+        detected = detected.when(hits[lang] == best, lang)
+    return detected
+
+
+def langid_sql(words: str) -> str:
+    """DuckDB twin of :func:`detected_lang` over the words-array column
+    ``words``: ``list_position`` finds the first maximum, the same
+    tie-break."""
+    hits = "[" + ", ".join(_stop_hits_sql(words, lang) for lang in STOPWORDS) + "]"
+    langs = "[" + ", ".join(f"'{lang}'" for lang in STOPWORDS) + "]"
+    return (
+        f"CASE WHEN list_max({hits}) = 0 THEN 'unknown'"
+        f" ELSE {langs}[list_position({hits}, list_max({hits}))] END"
     )
-    SELECT doc_id, labeled_lang,
-           CASE WHEN best = 0 THEN 'unknown' ELSE {case} END AS detected_lang
-    FROM scored
-    """
 
 
 @register(
     "t_language_id",
-    oracle=_langid_oracle(),
+    oracle=f"""
+    SELECT doc_id, lang AS labeled_lang, {langid_sql("words")} AS detected_lang
+    FROM (SELECT doc_id, lang,
+                 string_split_regex(lower(trim(text)), '\\s+') AS words
+          FROM documents)
+    """,
     doc="Language identification via stopword-profile hits: count "
     "matches against per-language function-word lists, argmax with a "
     "declared tie-break order, 'unknown' when nothing matches. The "
@@ -144,15 +175,10 @@ def _langid_oracle() -> str:
 def t_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.lower(F.trim(F.col("text"))), "\\s+")
-    hits = {lang: _stop_hits(words, lang) for lang in STOPWORDS}
-    best = F.greatest(*hits.values())
-    detected = F.when(best == 0, "unknown")
-    for lang in STOPWORDS:
-        detected = detected.when(hits[lang] == best, lang)
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        detected.alias("detected_lang"),
+        detected_lang(words).alias("detected_lang"),
     )
 
 
@@ -323,6 +349,25 @@ def pack_sequences(df: DataFrame, tokens: str) -> DataFrame:
     )
 
 
+def pack_sql(src: str, tokens: str) -> str:
+    """DuckDB twin of :func:`pack_sequences`: every column of the
+    relation ``src``, then ``cum_before`` (the exclusive running sum of
+    ``tokens`` in doc_id order), ``seq_id``, ``seq_offset`` and
+    ``spans_boundary``."""
+    return f"""
+    SELECT *, cum_before // {SEQ_LEN} AS seq_id,
+           cum_before % {SEQ_LEN} AS seq_offset,
+           CASE WHEN cum_before % {SEQ_LEN} + {tokens} > {SEQ_LEN}
+                THEN 1 ELSE 0 END AS spans_boundary
+    FROM (
+      SELECT *, CAST(coalesce(sum({tokens}) OVER (
+                 ORDER BY doc_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS BIGINT) AS cum_before
+      FROM {src})
+    """
+
+
 @register(
     "t_sequence_pack",
     oracle=f"""
@@ -331,21 +376,8 @@ def pack_sequences(df: DataFrame, tokens: str) -> DataFrame:
              CAST(len(regexp_extract_all(text, '{_TOKEN_RE}')) AS BIGINT)
                AS n_tokens
       FROM documents
-    ), packed AS (
-      SELECT doc_id, n_tokens,
-             coalesce(sum(n_tokens) OVER (
-               ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cum_before
-      FROM tok
     )
-    SELECT doc_id, n_tokens, cum_before,
-           cum_before // {SEQ_LEN} AS seq_id,
-           cum_before % {SEQ_LEN} AS seq_offset,
-           CASE WHEN cum_before % {SEQ_LEN} + n_tokens > {SEQ_LEN}
-                THEN 1 ELSE 0 END AS spans_boundary
-    FROM packed
-    """,
+    {pack_sql("tok", "n_tokens")}""",
     doc=f"Sequence packing for LLM training: concatenate the corpus "
     "in doc_id order and cut fixed-length windows of "
     f"{SEQ_LEN} tokens — each document gets the sequence it starts "
@@ -407,18 +439,9 @@ BOILERPLATE_TOP = 50
 @register(
     "t_boilerplate_ngrams",
     oracle=f"""
-    WITH sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, greatest(len(words) - 2, 1) + 1),
-               i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-             ))) AS shingle
-      FROM (SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\\s+') AS words
-            FROM documents)
-    )
+    WITH sh AS ({shingles_sql()})
     SELECT shingle, count(*) AS df
-    FROM sh GROUP BY shingle
+    FROM (SELECT unnest(shingles) AS shingle FROM sh) GROUP BY shingle
     HAVING count(*) >= {BOILERPLATE_MIN_DF}
     ORDER BY df DESC, shingle
     LIMIT {BOILERPLATE_TOP}
@@ -459,19 +482,7 @@ CONTAM_TAU = 0.1  # flagged when >10% of a doc's n-grams hit the eval set
 @register(
     "t_contamination_screen",
     oracle=f"""
-    WITH sh AS (
-      SELECT doc_id,
-             CASE WHEN len(words) >= {CONTAM_N}
-                  THEN list_distinct(list_transform(
-                    range(1, greatest(len(words) - {CONTAM_N - 1}, 1) + 1),
-                    i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                         || ' ' || words[i+3] || ' ' || words[i+4]
-                  ))
-                  ELSE CAST([] AS VARCHAR[]) END AS shingles
-      FROM (SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\\s+') AS words
-            FROM documents)
-    ), ev AS (
+    WITH sh AS ({shingles_sql(CONTAM_N)}), ev AS (
       SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 100 = 0
     ), corp AS (
       -- [NULL] for empty sets mirrors Spark's explode_outer: the doc
@@ -536,8 +547,8 @@ def contamination_from(
     batches must not silently grow the benchmark). Default derives
     the eval slice from ``docs`` itself, the batch semantics. Docs
     shorter than CONTAM_N words get an empty shingle set on both
-    engines (the CASE in the oracle's sh CTE): they survive the screen
-    with n_shingles=0, NULL ratio, flagged=0."""
+    engines (``shingles_from`` and its twin ``shingles_sql``): they
+    survive the screen with n_shingles=0, NULL ratio, flagged=0."""
     sh = shingles_from(spark, docs, CONTAM_N)
     if eval_grams is None:
         eval_grams = (
@@ -1076,17 +1087,9 @@ def t_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t_ngram_novelty",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id,
-             string_split_regex(lower(trim(text)), '\\s+') AS ws
-      FROM documents
-    ), g AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-             ))) AS gram
-      FROM w
+    oracle=f"""
+    WITH sh AS ({shingles_sql()}), g AS (
+      SELECT doc_id, unnest(shingles) AS gram FROM sh
     ), first_seen AS (
       SELECT gram, CAST(min(doc_id) AS BIGINT) AS fs FROM g GROUP BY gram
     )

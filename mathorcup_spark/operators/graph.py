@@ -18,7 +18,9 @@ in one DAG (SURVEY §4.2 decision 1).
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -740,22 +742,10 @@ def _copurchase_oriented(spark: SparkSession, sf_dir: str):
             F.when(fwd1, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
             F.when(fwd1, F.col("d2")).otherwise(F.col("d1")).alias("dst_deg"),
         )
-        # _pack_uv envelope guard: every node id of the family appears
-        # as an edge endpoint, so this one per-edge check at cache
-        # BUILD time (1 compare per row, once per sf_dir) certifies
-        # the 32-bit pack every wedge query relies on — ids past 2^32
-        # raise here instead of silently colliding packed keys.
-        # assert_true returns NULL when the condition holds, so the
-        # filter keeps every row: values and hashes are unchanged.
-        oriented = oriented.where(
-            F.assert_true(
-                (F.col("src") >= 0)
-                & (F.col("src") <= _UV_MASK)
-                & (F.col("dst") >= 0)
-                & (F.col("dst") <= _UV_MASK),
-                F.lit("node id exceeds the 32-bit _pack_uv envelope"),
-            ).isNull()
-        )
+        # every node id of the family appears as an edge endpoint, so
+        # this one per-edge check at cache BUILD time (once per sf_dir)
+        # certifies the 32-bit pack every wedge query relies on
+        oriented = uv_guarded(oriented, "src", "dst")
         # truncated informative adjacency (each node's _NJ_TRUNC_K
         # lowest-degree neighbors) — the shared candidate sketch of
         # g_node_jaccard and g_adamic_adar, bucketed+sorted on the
@@ -808,6 +798,7 @@ def _copurchase_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _UV_MASK = (1 << 32) - 1
+_UV_GUARD_MSG = "node id exceeds the 32-bit _pack_uv envelope"
 
 
 def _pack_uv(u, v):
@@ -824,6 +815,19 @@ def _pack_uv(u, v):
     wraps the packed long negative, which is fine for grouping and
     joining but must not sign-extend back)."""
     return F.shiftleft(u, 32).bitwiseOR(v)
+
+
+def uv_guarded(df: DataFrame, *cols: str) -> DataFrame:
+    """``df`` with an in-plan check that every id in ``cols`` lies in
+    :func:`_pack_uv`'s [0, 2^32) envelope: an id past it raises instead
+    of silently colliding packed keys. assert_true returns NULL when
+    the condition holds, so the filter keeps every row and adds no
+    job."""
+    ok = reduce(
+        operator.and_,
+        [cond for c in cols for cond in (F.col(c) >= 0, F.col(c) <= _UV_MASK)],
+    )
+    return df.where(F.assert_true(ok, F.lit(_UV_GUARD_MSG)).isNull())
 
 
 def _unpack_uv(uv: str = "uv"):

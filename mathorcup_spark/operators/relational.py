@@ -1664,20 +1664,23 @@ _FP_MIN_SUPPORT = 2  # orders containing the pair
     tags=("agg", "basket", "frequent-itemset", "A16"),
 )
 def a_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .graph import _pack_uv, _unpack_uv
+    from .graph import _pack_uv, _unpack_uv, uv_guarded
 
     li = load(spark, sf_dir, "lineitem")
-    baskets = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
+    baskets = uv_guarded(
+        li.select(
+            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+        ).distinct(),
+        "p",
+    )
     a = baskets.select("o", F.col("p").alias("p1"))
     b = baskets.select(F.col("o").alias("o2"), F.col("p").alias("p2"))
     # pair-count aggregate keyed on the PACKED (p1,p2) long — the
     # same rewrite as the graph wedge aggregates (judge r11 item 3,
     # guide §2.2/§2.3): half the exchange key bytes, single-long hash
     # aggregate. Injective for part ids < 2^32 (l_partkey is 200k·SF;
-    # the graph cache build asserts the same domain); grouping and
-    # counts are bit-identical, (p1,p2) unpacked right after.
+    # uv_guarded above asserts it); grouping and counts are
+    # bit-identical, (p1,p2) unpacked right after.
     p1q, p2q = _unpack_uv()
     pair = (
         a.join(b, (F.col("o2") == F.col("o")) & (F.col("p2") > F.col("p1")))

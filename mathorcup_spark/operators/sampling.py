@@ -438,11 +438,13 @@ def mixture_keep(df: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "r_mixture_sample",
-    oracle=f"""
+def mixture_sql(src: str) -> str:
+    """DuckDB twin of :func:`mixture_keep`: every column of the
+    relation ``src`` plus ``rate``, for the rows whose
+    ``_hash_u_sql(doc_id)`` falls under their source's rate."""
+    return f"""
     WITH counts AS (
-      SELECT source, count(*) AS n_s FROM documents GROUP BY source
+      SELECT source, count(*) AS n_s FROM {src} GROUP BY source
     ), k AS (
       SELECT count(*) AS n_sources FROM counts
     ), rates AS (
@@ -451,10 +453,14 @@ def mixture_keep(df: DataFrame) -> DataFrame:
                AS rate
       FROM counts, k
     )
-    SELECT d.doc_id, d.source, r.rate
-    FROM documents d JOIN rates r USING (source)
-    WHERE {_hash_u_sql('d.doc_id')} < r.rate
-    """,
+    SELECT s.*, r.rate FROM {src} s JOIN rates r USING (source)
+    WHERE {_hash_u_sql('s.doc_id')} < r.rate
+    """
+
+
+@register(
+    "r_mixture_sample",
+    oracle=mixture_sql("(SELECT doc_id, source FROM documents)"),
     doc="Domain-mixture sampling: rebalance a multi-source corpus to "
     "uniform source shares under a fixed total budget — the "
     "training-mixture step that up/down-samples domains. Per-source "

@@ -203,12 +203,8 @@ def create_verdict_table(
     corpus: rows + every-seen-hash store + frozen eval-gram store.
     Returns the written rows' :func:`verdict_sig` so callers can
     accumulate the additive disk-roundtrip expectation."""
-    from ..functions.corpus import (
-        first_per_hash,
-        floored,
-        prep_feat_from,
-        screened,
-    )
+    from ..functions.corpus import floored, prep_feat_from, screened
+    from ..functions.dedup import first_per_hash
     from ..functions.text import eval_grams_from
 
     base = docs.select("doc_id", "source", "text").localCheckpoint(eager=True)
@@ -272,12 +268,8 @@ def append_to_verdict_table(
     only, exact-dedup consults the persisted hash store via a pruned
     semi-join probe, contamination scores against the FROZEN eval
     store. Returns the appended rows' :func:`verdict_sig`."""
-    from ..functions.corpus import (
-        first_per_hash,
-        floored,
-        prep_feat_from,
-        screened,
-    )
+    from ..functions.corpus import floored, prep_feat_from, screened
+    from ..functions.dedup import first_per_hash
 
     base = (
         new_docs.select("doc_id", "source", "text").localCheckpoint(eager=True)

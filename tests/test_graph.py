@@ -16,6 +16,7 @@ from mathorcup_spark.operators.graph import (
     _lpa_round,
     _pack_uv,
     _unpack_uv,
+    uv_guarded,
 )
 from mathorcup_spark.registry import queries
 from tests.conftest import SF_DIR
@@ -222,20 +223,22 @@ def test_pack_uv_roundtrip_including_wrap(spark):
 
 
 def test_pack_envelope_guard_raises_past_32_bits(spark):
-    """The cache build's assert_true guard fires for ids past 2^32
-    instead of letting packed keys collide silently."""
+    """The engine's envelope guard (uv_guarded, used by the cache build
+    and a_frequent_pairs) fires for ids past 2^32 instead of letting
+    packed keys collide silently."""
     df = spark.createDataFrame([(2**32 + 1, 1)], "src LONG, dst LONG")
-    guarded = df.where(
-        F.assert_true(
-            (F.col("src") >= 0)
-            & (F.col("src") <= _UV_MASK)
-            & (F.col("dst") >= 0)
-            & (F.col("dst") <= _UV_MASK),
-            F.lit("node id exceeds the 32-bit _pack_uv envelope"),
-        ).isNull()
-    )
+    guarded = uv_guarded(df, "src", "dst")
     with pytest.raises(Exception, match="32-bit _pack_uv envelope"):
         guarded.collect()
+
+
+def test_frequent_pairs_plan_carries_envelope_guard(spark):
+    """a_frequent_pairs packs (p1, p2) with _pack_uv, so its executed
+    plan checks the part ids against the envelope."""
+    df = queries()["a_frequent_pairs"](spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "32-bit _pack_uv envelope" in plan
 
 
 def test_lpa_tie_takes_lowest_label(spark):

@@ -6,7 +6,10 @@ NULL out-of-bounds words and emits a truncated shingle, while the
 DuckDB oracle's ``||`` chain yields NULL and ``list_distinct`` drops
 it. The shipped test corpora have no short docs, so the divergence
 was latent; this module manufactures a corpus full of 0-4 word
-documents and asserts Spark == DuckDB for every shingle consumer.
+documents, an empty one and duplicated texts, and asserts Spark ==
+DuckDB for every consumer of a shared text fragment: shingles, the
+content hash, the quality score (NULL on empty text), the mixture
+rebalance and the sequence pack.
 """
 
 from __future__ import annotations
@@ -54,6 +57,15 @@ _QUERIES = [
     "d_minhash_lsh_capped",
     "d_lsh_hamming_e2e",
     "d_dedup_clusters",
+    "d_dedup_survivors",
+    "r_mixture_sample",
+    "t_sequence_pack",
+    "t_pack_manifest",
+    "corpus_prep_e2e",
+    "corpus_pipeline_v2",
+    "corpus_pipeline_v3",
+    "corpus_pipeline_v4",
+    "corpus_pipeline_v5",
 ]
 
 
