@@ -14,8 +14,8 @@ Near-dup detection is two stages, candidates then an exact rescore,
 and the queries share one copy of each block (as does the persisted
 index in ``sources/minhash_index.py`` and the n-gram screens in
 ``functions/text.py``). Beside each block whose SQL the oracles share
-sits its DuckDB twin, a builder that returns SQL text only; the
-builders are shared among oracles alone, so each oracle stays an
+sits its DuckDB twin, a function that returns SQL text only; the
+twins are shared among oracles alone, so each oracle stays an
 independent check of its query:
 
 - content hash: ``md5(_norm_text())`` and :func:`content_hash_sql`,
@@ -76,7 +76,7 @@ def shingles_from(
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """(doc_id, *keep, shingles): distinct word-``n``-gram shingle sets
-    of any (doc_id, text, ...) frame — the one shingle builder of the
+    of any (doc_id, text, ...) frame — the one shingle-set function of the
     dedup queries, the persisted index (sources/minhash_index.py) and
     the n-gram screens of functions/text.py.
 
@@ -84,8 +84,7 @@ def shingles_from(
     :func:`shingles_sql`, where the ``||`` chain over an
     out-of-bounds index is NULL and ``list_distinct`` drops it.
     Without the guard, ``concat_ws`` would skip the NULL members and
-    emit a truncated shingle only on the Spark side (round-4 ADVICE,
-    latent divergence).
+    emit a truncated shingle only on the Spark side.
 
     Tokenize BEFORE the repartition exchange: the shingle lambda
     references the words array ``n`` times per index, and Catalyst's

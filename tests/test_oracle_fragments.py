@@ -1,5 +1,5 @@
-"""Each shared oracle SQL fragment is written once, in the builder that
-sits beside its Spark twin. Spark-free: a source scan of
+"""Each shared oracle SQL fragment is written once, in the SQL function
+that sits beside its Spark twin. Spark-free: a source scan of
 ``mathorcup_spark/`` with whitespace runs collapsed, so a hand copy
 laid out over several lines still counts."""
 
@@ -13,7 +13,7 @@ from tests.conftest import REPO
 
 PKG = REPO / "mathorcup_spark"
 
-# builder -> (module that defines it, a substring of its SQL)
+# SQL function -> (module that defines it, a substring of its SQL)
 FRAGMENTS = {
     "shingles_sql": ("functions/dedup.py", "list_distinct(list_transform("),
     "agree_sql": ("functions/dedup.py", "list_filter(range(1,"),
@@ -52,9 +52,9 @@ def sources() -> dict[str, str]:
     }
 
 
-@pytest.mark.parametrize("builder", sorted(FRAGMENTS))
-def test_fragment_written_once(sources, builder):
-    home, fragment = FRAGMENTS[builder]
-    assert f"def {builder}(" in sources[home], f"{builder} not in {home}"
+@pytest.mark.parametrize("fn", sorted(FRAGMENTS))
+def test_fragment_written_once(sources, fn):
+    home, fragment = FRAGMENTS[fn]
+    assert f"def {fn}(" in sources[home], f"{fn} not in {home}"
     where = {f: src.count(fragment) for f, src in sources.items() if fragment in src}
-    assert where == {home: 1}, f"{fragment!r} of {builder}: {where}"
+    assert where == {home: 1}, f"{fragment!r} of {fn}: {where}"
