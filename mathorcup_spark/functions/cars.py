@@ -319,6 +319,9 @@ from ..registry import register  # noqa: E402
     "can independently re-derive every value, including the "
     "JSON-extracted deal price.",
     tags=("J1", "J2", "F1", "F2", "F5", "F6", "F8", "suite"),
+    # the fixture derives carid from a max(partkey) scalar — a 1-row aggregate
+    # broadcast (scalar-subquery plan, BNLJ over one row)
+    plan={"bnlj_ok": True},
 )
 def car_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")

@@ -158,6 +158,11 @@ _CLUSTER_ORACLE = f"""
     "one. Iteration cost: two groupBy-min shuffles per round, "
     "O(log n) rounds, driver state O(1).",
     tags=("dedup", "cluster", "cc", "e2e"),
+    # final cluster assembly: documents left-joined to the CC fixpoint (a
+    # localCheckpointed star edge set — supersteps fixpoint rounds are
+    # lineage-truncated: two groupBy-min shuffles per round) plus the cluster-
+    # size join
+    plan={},
 )
 def d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id")

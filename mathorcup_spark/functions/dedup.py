@@ -237,6 +237,7 @@ def d_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "all-pairs. The LSH variant below replaces the key bound with "
     "signature buckets.",
     tags=("dedup", "jaccard"),
+    plan={},
 )
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_from(spark, load(spark, sf_dir, "documents"), keep=("source",))
@@ -339,6 +340,7 @@ _MINHASH_ORACLE = f"""
     "collisions; the per-shingle cost is one digest + 16 multiply-"
     "adds (16 salted digests measured ~20x slower at sf0.1).",
     tags=("dedup", "minhash", "lsh"),
+    plan={},
 )
 def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _candidates_from_banded(_banded_df(spark, sf_dir))
@@ -516,6 +518,7 @@ _LSH_RESCORE_ORACLE = f"""
     "COVERAGE.md: LSH candidates in, scored pairs out. Reference "
     "analog: the composed dedup semantics of src/utils.py:161-202.",
     tags=("dedup", "minhash", "lsh", "jaccard", "e2e"),
+    plan={},
 )
 def d_lsh_rescore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rescored_pairs(spark, sf_dir)
@@ -669,6 +672,7 @@ _SIMHASH_ORACLE = f"""
     "— a scoring-stage demonstrator; corpus-wide recall comes from "
     "the LSH variants (see COVERAGE.md §near-dup-recall).",
     tags=("dedup", "simhash"),
+    plan={},
 )
 def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -754,6 +758,9 @@ ND_TABLES = 6
     "codebook at any corpus size. Pair order vec_a < vec_b halves "
     "the candidate set.",
     tags=("dedup", "embedding", "lsh"),
+    # rescore is hash equi-joins against the normalized vectors table (no
+    # driver codebook, no BNLJ) — assert it stays that way
+    plan={},
 )
 def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -853,6 +860,8 @@ def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "equi-join, never all-pairs. sim = 1 - dist/max_len is the "
     "normalized similarity a title/URL fuzzy-dedup thresholds on.",
     tags=("dedup", "fuzzy", "levenshtein"),
+    # blocked equi-join candidates + constant-bounded 64x64 DP/pair
+    plan={},
 )
 def d_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -912,6 +921,9 @@ _INCR_ORACLE = f"""
     "Collisions rescore with exact shingle Jaccard, same contract "
     "as d_lsh_rescore_e2e: (idx_id, new_id, est_jaccard, jaccard).",
     tags=("dedup", "minhash", "lsh", "incremental"),
+    # the batch-split threshold is a 1-row broadcast scalar; the new-vs-index
+    # probe is the (band,bucket) hash equi-join
+    plan={"bnlj_ok": True},
 )
 def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -943,8 +955,8 @@ def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d_incremental_dedup — the persisted probe is value-verified "
     "against the in-query build — while the physical plan proves "
     "per-batch cost is bounded by the batch (PartitionFilters on "
-    "every index scan; asserted in tests/test_minhash_index.py and "
-    "tools/plan_audit.py). Reference analog: the dictionary "
+    "every index scan; asserted in tests/test_minhash_index.py). "
+    "Reference analog: the dictionary "
     "persist/reload discipline at reference/src/data.py:160-174.",
     tags=("dedup", "minhash", "lsh", "incremental", "index"),
 )
@@ -1007,6 +1019,7 @@ _HAMMING_E2E_ORACLE = f"""
     "a production pipeline runs before the exact one. Output: "
     "(doc_a, doc_b, est_jaccard, hamming).",
     tags=("dedup", "simhash", "minhash", "lsh", "e2e"),
+    plan={},
 )
 def d_lsh_hamming_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1073,6 +1086,9 @@ _CAPPED_CTES = f"""{_MINHASH_BANDED_CTES}, bsz AS (
     "on the same (band, bucket) key as the candidate join, so the "
     "guard adds one partial-agg pass, no new join strategy.",
     tags=("dedup", "minhash", "lsh", "skew"),
+    # the bucket-size guard: one extra groupBy on the SAME (band, bucket) key
+    # as the candidate join — no new join strategy
+    plan={},
 )
 def d_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _candidates_from_banded(_banded_df(spark, sf_dir), max_bucket=MAX_BUCKET)
@@ -1103,6 +1119,7 @@ def d_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and boilerplate passes should be absorbing). One groupBy over "
     "the banded signatures with map-side partials.",
     tags=("dedup", "minhash", "lsh", "skew"),
+    plan={},
 )
 def d_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = _banded_df(spark, sf_dir)
@@ -1149,6 +1166,8 @@ def d_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "under 3 words carry an empty shingle set and NULL containment "
     "on both engines (nullif/when divide guards).",
     tags=("dedup", "containment", "jaccard"),
+    # same blocked (source, id-block) equi-join as d_ngram_jaccard
+    plan={},
 )
 def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_from(spark, load(spark, sf_dir, "documents"), keep=("source",))
@@ -1224,6 +1243,7 @@ SPAN_DUP_TAU = 0.3  # flag docs with >30% duplicated spans
     "true duplicate mass. Docs shorter than the span width are "
     "excluded identically on both engines.",
     tags=("dedup", "span", "quality"),
+    plan={},
 )
 def d_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1333,6 +1353,9 @@ _CDC_MOD = 16
     "cardinality is bounded by total words / 16 — linear in corpus "
     "at 100 TB, no pairwise comparisons anywhere.",
     tags=("dedup", "cdc", "text"),
+    # boundary flag is narrow; cumsum window + chunk groupBy share the doc_id
+    # shuffle; frequency join shuffles on chunk_hash
+    plan={},
 )
 def d_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")

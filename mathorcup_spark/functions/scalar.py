@@ -342,6 +342,9 @@ def f_elementwise_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dense_ids rank so a high-cardinality domain never funnels "
     "through a single-partition sort.",
     tags=("E1", "E2"),
+    # dictionary builds must never funnel data through a single partition
+    # (dense_ids assertion, same as g_triple_build)
+    plan={},
 )
 def e_dictionary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
@@ -665,6 +668,9 @@ _TE_SMOOTH = 50  # prior strength m in (sum + m*prior)/(n + m)
     "by the category domain. The encode table then broadcast-joins "
     "back onto any fact table — the j_lookup_encode path.",
     tags=("E1", "encode", "feature", "ml"),
+    # one shuffle on the category key + 1-row broadcast prior (scalar-subquery
+    # BNLJ); output bounded by the category domain
+    plan={"bnlj_ok": True},
 )
 def e_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")

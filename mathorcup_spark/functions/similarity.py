@@ -15,7 +15,7 @@ its oracle) agree by construction:
   near-dup index in ``functions/dedup.py``.
 - top-k: :func:`topk` is the per-query window (a score, then c_id asc)
   under every cosine, ADC and exact-L2 ranking of ``(q_id, c_id)``
-  pairs; :func:`topk_sql` is the cosine top-5 tail of the oracles.
+  pairs; :func:`topk_sql` is the top-5 tail of their oracles.
 - exact-cosine rescore: :func:`_side` carries each vector's norm as a
   column, :func:`_cosine` divides the dot by the norms and rounds last,
   and :func:`rescore_topk` joins the vectors onto ``(q_id, c_id)``
@@ -218,15 +218,16 @@ def topk(scored: DataFrame, order: str | Column, k: int = 5) -> DataFrame:
     )
 
 
-def topk_sql(scored: str) -> str:
-    """DuckDB twin of :func:`topk` by cosine desc with ``k`` = 5: the
-    first five (q_id, c_id, cosine, rnk) rows per q_id of the relation
-    ``scored``."""
+def topk_sql(scored: str, score: str, desc: bool = False) -> str:
+    """DuckDB twin of :func:`topk` with ``k`` = 5: the first five
+    (q_id, c_id, ``score``, rnk) rows per q_id of the relation
+    ``scored``, ranked by ``score`` (descending if ``desc``), then c_id."""
+    order = f"{score} DESC" if desc else score
     return f"""
-    SELECT q_id, c_id, cosine, rnk FROM (
-      SELECT q_id, c_id, cosine,
+    SELECT q_id, c_id, {score}, rnk FROM (
+      SELECT q_id, c_id, {score},
              CAST(row_number() OVER (PARTITION BY q_id
-                                     ORDER BY cosine DESC, c_id) AS BIGINT) AS rnk
+                                     ORDER BY {order}, c_id) AS BIGINT) AS rnk
       FROM {scored}) WHERE rnk <= 5
     """
 
@@ -260,7 +261,7 @@ def rescore_topk(
       FROM n q JOIN n c ON c.vec_id <> q.vec_id
       WHERE q.vec_id < 10
     )
-    {topk_sql("scored")}""",
+    {topk_sql("scored", "cosine", desc=True)}""",
     doc="Brute-force cosine top-k (the ANN exactness baseline): "
     "broadcast the query set, score every candidate with zip_with/"
     "aggregate dot products, rank per query. Exact but O(Q·N) — the "
@@ -307,7 +308,7 @@ def _lsh_oracle(flip_bits: int) -> str:
       JOIN (SELECT DISTINCT vec_id, e, nrm FROM n) q ON q.vec_id = cand.q_id
       JOIN (SELECT DISTINCT vec_id, e, nrm FROM n) c ON c.vec_id = cand.c_id
     )
-    {topk_sql("scored")}"""
+    {topk_sql("scored", "cosine", desc=True)}"""
 
 
 def _lsh_topk(spark: SparkSession, sf_dir: str, flip_bits: int) -> DataFrame:
@@ -360,6 +361,9 @@ def _lsh_topk(spark: SparkSession, sf_dir: str, flip_bits: int) -> DataFrame:
     "this ANN index oracle-checkable end-to-end. Same output shape as "
     "sim_cosine_topk so recall is measurable by direct diff.",
     tags=("similarity", "ann", "lsh"),
+    # candidates come from an equi-join on (table, bucket), never an all-pairs
+    # product
+    plan={},
 )
 def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_topk(spark, sf_dir, 0)
@@ -412,7 +416,7 @@ N_PROBE = 2
       JOIN n q ON q.vec_id = cand.q_id
       JOIN n c ON c.vec_id = cand.c_id
     )
-    {topk_sql("scored")}""",
+    {topk_sql("scored", "cosine", desc=True)}""",
     doc="IVF approximate top-k (the clustered scale path beside LSH): "
     "assign every vector to its nearest of 8 centroids (broadcast "
     "crossJoin + per-vector rank — the inverted file), queries probe "
@@ -424,6 +428,10 @@ N_PROBE = 2
     "checkable end-to-end; same output shape as sim_cosine_topk so "
     "recall is directly diffable.",
     tags=("similarity", "ann", "ivf"),
+    # IVF probe crossJoins each query vector against the k≈16-row centroid
+    # table — a broadcast nested loop over a constant-size side is the
+    # intended, scale-safe plan (cost O(n·k), no shuffle).
+    plan={"bnlj_ok": True},
 )
 def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -492,6 +500,11 @@ def _ivf_topk(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     "it one left join + ratio per method; both the index answers "
     "AND the metric are oracle-checked.",
     tags=("similarity", "ann", "metrics"),
+    # recall@5 composes the exact baseline with both ANN paths; two constant-
+    # size BNLJ sources are expected — the exact baseline broadcasts its
+    # <=10-row query set joined on c_id != q_id, and the IVF member carries
+    # its k~16-row centroid probe (see sim_ivf_ann)
+    plan={"bnlj_ok": True},
 )
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_df = REGISTRY["sim_cosine_topk"].fn(spark, sf_dir)
@@ -738,6 +751,8 @@ def ml_kmeans_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at scan speed. max_q <= 127 by construction (|x| <= scale "
     "implies |q| <= floor(127.5) = 127), asserted in pytest.",
     tags=("similarity", "quantize", "embedding"),
+    # narrow map-only array HOFs: no shuffle at all
+    plan={},
 )
 def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -849,6 +864,11 @@ _MATRYOSHKA_K = 10
     "is what the IVF/LSH index approximates); the overlap join and "
     "per-query agg run on the bounded 10 x k candidate lists.",
     tags=("similarity", "ann", "matryoshka"),
+    # pair cosines evaluated once behind a lazy checkpoint feeding both
+    # ranking branches (downstream windows/join visible — the default checks
+    # run); broadcast 10-query batch (scalar BNLJ for the inequality join);
+    # overlap agg on bounded 10xK lists
+    plan={"bnlj_ok": True},
 )
 def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -1391,6 +1411,11 @@ def _semdedup_oracle(k_sql: str, pair_window: int | None = None) -> str:
     "(min_by ties impossible: ids are unique), so the survivor set "
     "is reproducible on any partitioning.",
     tags=("dedup", "similarity", "embedding", "semantic", "cluster"),
+    # centroid assignment is a broadcast crossJoin of the K-row cents frame
+    # (scalar-batch BNLJ, the sim_ivf_ann shape); the pair stage is a cent_id
+    # equi-join (cluster-bounded, never all-pairs); per-vector argmax window
+    # partitions on vec_id
+    plan={"bnlj_ok": True},
 )
 def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # served from the build-once persisted verdict (byte-identical
@@ -1440,6 +1465,8 @@ def semdedup_k_capped(n_vectors: int) -> int:
     "derivation); the learned-centroid swap is the same one-frame "
     "swap as always.",
     tags=("dedup", "similarity", "embedding", "semantic", "skew"),
+    # same assignment+window+pair shape; cap/window literals only
+    plan={"bnlj_ok": True},
 )
 def d_semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -1772,6 +1799,9 @@ def pq_quantize_from(sub: DataFrame, cb: DataFrame) -> DataFrame:
     "broadcasts 64 rows, argmin windows partition by (vec_id, m) — "
     "map-side shapes end to end, no corpus-squared stage.",
     tags=("similarity", "quantize", "pq", "embedding"),
+    # x8 subspace explode, broadcast 64-row codebook join, argmin window
+    # partitioned by (vec_id, m), one vec_id groupBy
+    plan={"broadcast": 1},
 )
 def sim_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -2056,12 +2086,7 @@ def sim_pq_quantize_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE best.vec_id <> lut.q_id
       GROUP BY 1, 2
     )
-    SELECT q_id, c_id, adc_d2, rnk FROM (
-      SELECT q_id, c_id, adc_d2,
-             CAST(row_number() OVER (PARTITION BY q_id
-                                     ORDER BY adc_d2, c_id) AS BIGINT) AS rnk
-      FROM adc) WHERE rnk <= 5
-    """,
+    {topk_sql("adc", "adc_d2")}""",
     doc="PQ asymmetric-distance (ADC) top-k search — the query path "
     "that makes product quantization an ANN index, not just a "
     "compressor (Jegou et al.'s search recipe): the corpus is "
@@ -2084,6 +2109,10 @@ def sim_pq_quantize_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "N x Q rows only because Q here is 10 — production fans the "
     "query batch across partitions the same way.",
     tags=("similarity", "ann", "pq", "adc", "embedding"),
+    # ADC search: broadcast 64-row codebook + broadcast 640-row query LUT onto
+    # the narrow unpacked-code frame; one (q_id, c_id) groupBy; per-query
+    # ranking window partitions on q_id
+    plan={"broadcast": 2},
 )
 def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -2202,14 +2231,7 @@ _IVFPQ_CTES = _ivfpq_ctes(
 
 @register(
     "sim_ivf_pq_ann",
-    oracle=_IVFPQ_CTES
-    + """
-    SELECT q_id, c_id, adc_d2, rnk FROM (
-      SELECT q_id, c_id, adc_d2,
-             CAST(row_number() OVER (PARTITION BY q_id
-                                     ORDER BY adc_d2, c_id) AS BIGINT) AS rnk
-      FROM adc) WHERE rnk <= 5
-    """,
+    oracle=_IVFPQ_CTES + topk_sql("adc", "adc_d2"),
     doc="IVF-PQ approximate search — the full FAISS composition "
     "(Jegou et al. §V): a coarse inverted file (nearest of "
     f"{K_CENTROIDS} centroids by L2) partitions the corpus into "
@@ -2237,6 +2259,10 @@ _IVFPQ_CTES = _ivfpq_ctes(
     "build is two bounded ranks + map-side residual encode; query "
     "cost is |probed cells| x codes, the IVF contraction.",
     tags=("similarity", "ann", "ivf", "pq", "adc", "embedding"),
+    # coarse crossJoin against the 8-row centroid frame is the intended
+    # constant-size BNLJ (the sim_ivf_ann shape); codebook + LUT joins
+    # broadcast
+    plan={"bnlj_ok": True},
 )
 def sim_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc, _v = _ivf_pq_adc(spark, sf_dir)
@@ -2354,13 +2380,7 @@ def _rerank_tail_sql() -> str:
       JOIN v vq ON vq.vec_id = s.q_id
       JOIN v vc ON vc.vec_id = s.c_id
     )
-    SELECT q_id, c_id, exact_d2, rnk FROM (
-      SELECT q_id, c_id, exact_d2,
-             CAST(row_number() OVER (PARTITION BY q_id
-                                     ORDER BY exact_d2, c_id) AS BIGINT)
-               AS rnk
-      FROM ex) WHERE rnk <= 5
-    """
+    {topk_sql("ex", "exact_d2")}"""
 
 
 IVFPQ_PROBE_FRAC = 0.5  # learned face probes ~half the cells
@@ -2568,6 +2588,9 @@ _QCELLS_CENT_SQL = f"""SELECT ks.i AS cell, rv.e AS ce
     "face a production run would actually deploy next to the "
     "learned one.",
     tags=("similarity", "ann", "ivf", "pq", "rerank", "quantile"),
+    # quantile-cell det face: same ADC+rescore chain; the rank feeding the
+    # cell selection is ids.dense_ids (range-partitioned)
+    plan={"bnlj_ok": True},
 )
 def sim_ivf_pq_rerank_qcells(
     spark: SparkSession, sf_dir: str
@@ -2632,6 +2655,9 @@ def sim_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hyperplanes end-to-end, oracle replays the bit-flip probes "
     "with xor.",
     tags=("similarity", "ann", "lsh", "multiprobe"),
+    # expanded probe frame + query-vector frame both broadcast onto the
+    # tables/candidates (the sim_lsh_ann shape)
+    plan={"broadcast": 2},
 )
 def sim_lsh_multiprobe_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_topk(spark, sf_dir, N_BITS)

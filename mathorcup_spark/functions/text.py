@@ -112,6 +112,7 @@ def quality_sql(words: str) -> str:
     "(length-capped × low-punct × stopword-weighted). Narrow ops only — "
     "no shuffle, linear scale-out.",
     tags=("text", "quality"),
+    plan={},
 )
 def t_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -286,6 +287,9 @@ def t_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast. The rank window partitions by source, so no "
     "single-partition exchange at any corpus size.",
     tags=("text", "tfidf"),
+    # the doc-count scalar is a 1-row broadcast crossJoin — the standard
+    # scalar-subquery plan (same as r_weighted_sample)
+    plan={"bnlj_ok": True},
 )
 def t_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -392,6 +396,9 @@ def pack_sql(src: str, tokens: str) -> str:
     "t_token_count, so packing budgets agree with the reported "
     "token counts.",
     tags=("text", "pack", "E1"),
+    # global cumsum via ids.prefix_sum: the point is the ABSENCE of a single-
+    # partition exchange despite ORDER BY cumsum
+    plan={},
 )
 def t_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = load(spark, sf_dir, "documents").select(
@@ -517,6 +524,9 @@ CONTAM_TAU = 0.1  # flagged when >10% of a doc's n-grams hit the eval set
     "the eval side is DISTINCT n-grams only. Output: (doc_id, "
     "n_shingles, n_contaminated, contamination_ratio, flagged).",
     tags=("text", "contamination", "dedup"),
+    # eval-side n-gram set joined on the shingle string — a hash equi-join;
+    # the eval side is DISTINCT grams of a 1% slice
+    plan={},
 )
 def t_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_from(spark, load(spark, sf_dir, "documents"))
@@ -624,6 +634,8 @@ REP_DISTINCT_TAU = 0.25  # or under a quarter of words distinct
     f"{REP_DISTINCT_TAU:.0%} of words are distinct. One explode + "
     "two-level aggregate, map-side partials, no joins.",
     tags=("text", "quality", "repetition"),
+    # explode + two-level aggregate, no joins
+    plan={},
 )
 def t_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_from(load(spark, sf_dir, "documents"))
@@ -696,6 +708,8 @@ _LONG_DIGIT_RE = "[0-9]{6,}"
     "identically under Java regex and RE2) — narrow, no shuffle, "
     "linear to 100 TB.",
     tags=("text", "pii", "quality"),
+    # pure regexp column work, no shuffle
+    plan={},
 )
 def t_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pii_from(load(spark, sf_dir, "documents"))
@@ -788,6 +802,9 @@ LM_RARE_TAU = 0.02  # outlier = more than 2% of bigrams are rare
     "count); explode + model groupBy + one hash join + per-doc "
     "aggregate — no quadratic stage, model is vocabulary-sized.",
     tags=("text", "quality", "lm"),
+    # 1-row model-total and quantile-threshold aggregates broadcast back over
+    # the scoring side (scalar-assembly BNLJ, the tpch_q11 pattern)
+    plan={"bnlj_ok": True},
 )
 def t_lm_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -871,6 +888,9 @@ def t_lm_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "data, so the single-partition sort is O(1) at any corpus "
     "scale. Deterministic (cnt DESC, pair) tie-break.",
     tags=("text", "bpe", "tokenizer"),
+    # top-40 ranking window is global BUT post-aggregation over the bounded
+    # pair domain (alphabet^2 rows) — O(1) at any corpus size
+    plan={"single_partition_ok": True},
 )
 def t_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -939,6 +959,9 @@ def t_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at any corpus size, and the 100-TB cost is exactly one corpus "
     "scan).",
     tags=("text", "entropy", "quality"),
+    # explode-to-chars then two doc_id-keyed aggregates + one doc_id equi-join
+    # — embarrassingly parallel over documents
+    plan={},
 )
 def t_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty documents drop out on both engines (the oracle's
@@ -1032,6 +1055,9 @@ def t_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "threshold change by re-aggregating flags without re-reading "
     "text.",
     tags=("text", "quality", "corpus"),
+    # narrow map-only rule evaluation (split/filter/aggregate HOFs): no
+    # shuffle at all
+    plan={},
 )
 def t_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1126,6 +1152,10 @@ def t_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contribute nothing on either engine). A doc is flagged "
     "derivative under 30% novelty.",
     tags=("text", "dedup", "quality"),
+    # one shuffle on the gram key (first-seen min via window, no join back),
+    # then a doc_id re-aggregation — no pairwise stage; the explode is
+    # evaluated once behind the repartition barrier
+    plan={},
 )
 def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = _shingle_df(spark, sf_dir).select(
@@ -1193,6 +1223,9 @@ def _curriculum_oracle() -> str:
     "keeps is embarrassingly parallel with zero shuffles after the "
     "bound join.",
     tags=("text", "sampling", "curriculum", "llm-data"),
+    # quartile bounds are a 1-row broadcast crossJoin; keep flags are map-side
+    # hash arithmetic, zero shuffles after the bound join
+    plan={"bnlj_ok": True},
 )
 def t_curriculum_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import _hash_u
@@ -1311,8 +1344,8 @@ def bpe_vocab_from(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bpe_pair_counts_of(toks: DataFrame) -> DataFrame:
     """One merge round's pair-count aggregation: weighted adjacent
-    token pairs into a single groupBy — the hot stage plan_audit
-    checks (one shuffle, codegen end to end)."""
+    token pairs into a single groupBy — the hot stage whose plan
+    tests/test_plans.py::test_bpe_round_plan checks."""
     pairs = toks.select(
         "n",
         F.explode(
@@ -1685,6 +1718,12 @@ def _bpe_encode_oracle() -> str:
     "trained vocabulary AND every document's token budget are "
     "hash-verified end to end.",
     tags=("text", "bpe", "tokenizer", "encode"),
+    # encode = explode words -> join the trained per-word token lists -> one
+    # doc_id groupBy (training's per-round plan is tests/test_plans.py's). The
+    # vocabulary join carries NO broadcast hint (unbounded cardinality at 100
+    # TB): this claims the optimizer STATS-chooses broadcast at committed SFs;
+    # a shuffle join at real scale is the correct fallback.
+    plan={"broadcast": 1},
 )
 def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     _merges, toks = bpe_train_core(spark, sf_dir)
@@ -1796,6 +1835,10 @@ def _dsir_oracle() -> str:
     "DuckDB-hash-identical. Docs with no tokens drop out (no "
     "feature evidence either way).",
     tags=("text", "dsir", "sampling", "quality", "llm-data"),
+    # the two-scalar totals row joins conditionlessly onto the 64-bucket
+    # histogram (1-row BNLJ); the log-ratio frame then broadcasts back onto
+    # the token stream
+    plan={"bnlj_ok": True, "broadcast": 1},
 )
 def t_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import _hash_u
@@ -1901,6 +1944,9 @@ _PMI_TOP_TERMS = 32  # global vocabulary cap for the pair stage
     "ln runs in double, rounded to 6 (same discipline as "
     "t_tfidf_top_terms's idf).",
     tags=("text", "pmi", "cooccurrence"),
+    # top-K vocabulary broadcast-semi-joins the presence rows; 1-row doc-count
+    # scalar is a BNLJ
+    plan={"bnlj_ok": True, "broadcast": 1},
 )
 def t_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")

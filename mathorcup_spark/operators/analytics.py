@@ -53,6 +53,7 @@ from ..registry import davg, dsum, oracle_davg, oracle_dsum, register
     "the one-scan Spark counterpart). Map-side partial aggregation "
     "collapses 6B rows/TB to 6 groups before the shuffle.",
     tags=("tpch", "A1", "A16"),
+    plan={"pushed": "l_shipdate"},
 )
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -97,6 +98,7 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "10-row driver merge, no full sort at any scale. Unique-key "
     "tiebreak (l_orderkey) makes the cut deterministic.",
     tags=("tpch", "J1", "W4"),
+    plan={"pushed": "l_shipdate", "broadcast": 1},
 )
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("1998-03-15").cast("timestamp")
@@ -143,6 +145,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join condition, not a post-filter, so Catalyst keeps it in the "
     "hash-join key set.",
     tags=("tpch", "J1", "A1"),
+    plan={"pushed": "o_orderdate", "broadcast": 1},
 )
 def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
@@ -191,6 +194,7 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     "is a single partial-sum — the cheapest possible full-table "
     "query shape at 100 TB.",
     tags=("tpch", "P8", "A16"),
+    plan={"pushed": "l_discount"},
 )
 def tpch_q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -228,6 +232,7 @@ def tpch_q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side before anything wide. The classic product-analytics "
     "query a 100 TB event lake runs daily.",
     tags=("events-analytics", "A16", "F6"),
+    plan={},
 )
 def ev_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
@@ -273,6 +278,10 @@ def ev_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     "monotonically down the pipeline — the shape scales to arbitrary "
     "event history.",
     tags=("events-analytics", "F6", "A16"),
+    # the three single-row stage counts are combined with crossJoins of 1-row
+    # aggregates — BroadcastNestedLoopJoin over single rows is the correct
+    # (and only) plan for scalar assembly
+    plan={"bnlj_ok": True},
 )
 def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
@@ -311,6 +320,7 @@ def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "prunes lineitem row groups before the join; part is broadcast "
     "(it stays dim-sized relative to lineitem at every SF).",
     tags=("tpch", "A1", "P8"),
+    plan={"pushed": "l_shipdate", "broadcast": 1},
 )
 def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
@@ -357,6 +367,7 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(~0.5%) flow downstream; the top-100 is TakeOrderedAndProject "
     "with a unique-key tiebreak.",
     tags=("tpch", "A16", "W4"),
+    plan={},
 )
 def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -402,6 +413,7 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "encoded column → row-group skip); nation is broadcast; the "
     "top-20 is TakeOrderedAndProject with a c_custkey tiebreak.",
     tags=("tpch", "J2", "W4"),
+    plan={"pushed": "l_returnflag", "broadcast": 1},
 )
 def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").filter(

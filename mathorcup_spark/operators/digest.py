@@ -196,6 +196,10 @@ _agg_oracle, _agg_fn = _digest_suite(_AGG_MEMBERS)
     "column of every member row md5-hash-verified in one driver row "
     "(not a slot projection).",
     tags=("A1", "A5", "A6", "A7", "A8", "A9", "A13", "suite", "digest"),
+    # a UNION ALL of member plans whose own claims carry the per-plan
+    # assertions; the suite inherits its members' allowances (scalar-assembly
+    # BNLJs, single-partition windows over bounded rows)
+    plan={"bnlj_ok": True, "single_partition_ok": True},
 )
 def agg_digest_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _agg_fn(spark, sf_dir)
@@ -317,6 +321,10 @@ _lake_oracle, _lake_fn = _digest_suite(_LAKE_MEMBERS)
     "column of every member row md5-hash-verified in one driver "
     "row.",
     tags=("text", "corpus", "sampling", "suite", "digest"),
+    # a UNION ALL of member plans whose own claims carry the per-plan
+    # assertions; the suite inherits its members' allowances (scalar-assembly
+    # BNLJs, single-partition windows over bounded rows)
+    plan={"bnlj_ok": True, "single_partition_ok": True},
 )
 def lake_digest_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lake_fn(spark, sf_dir)
@@ -545,6 +553,10 @@ _spec_oracle, _spec_fn = _digest_suite(_SPECIALTY_MEMBERS)
     "g_bidirectional_mrr) are verified FULL-width here, freeing "
     "their slots for round-5 additions.",
     tags=("tpch", "temporal", "dedup", "suite", "digest"),
+    # a UNION ALL of member plans whose own claims carry the per-plan
+    # assertions; the suite inherits its members' allowances (scalar-assembly
+    # BNLJs, single-partition windows over bounded rows)
+    plan={"bnlj_ok": True, "single_partition_ok": True},
 )
 def specialty_digest_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spec_fn(spark, sf_dir)

@@ -27,6 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.similarity import topk_sql
 from ..ids import dense_ids
 from ..registry import DEC, register
 from ..sources.layout import materialize_derived
@@ -99,6 +100,10 @@ _TRIPLES_SQL = """
     "iterations with one shuffled join; the entity/relation "
     "dictionaries are vocabulary-sized broadcast joins.",
     tags=("G1", "E1", "A6"),
+    # dictionary id assignment uses the range-partitioned dense_ids rank
+    # (mathorcup_spark/ids.py) — no single-partition exchange at any
+    # vocabulary cardinality, asserted like every other query.
+    plan={},
 )
 def g_triple_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
@@ -197,7 +202,7 @@ def g_transe_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "g_filtered_ranking",
-    oracle="""
+    oracle=f"""
     WITH queries AS (
       SELECT vec_id AS q_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb,
@@ -213,13 +218,8 @@ def g_transe_score(spark: SparkSession, sf_dir: str) -> DataFrame:
              round(CAST(list_dot_product(q.q_emb, c.c_emb) AS DOUBLE), 6) AS score
       FROM queries q JOIN cands c
         ON c.c_id <> q.q_id AND c.c_label <> q.q_label
-    ), ranked AS (
-      SELECT q_id, c_id, score,
-             CAST(row_number() OVER (PARTITION BY q_id
-                                     ORDER BY score DESC, c_id) AS BIGINT) AS rnk
-      FROM scored)
-    SELECT q_id, c_id, score, rnk FROM ranked WHERE rnk <= 5
-    """,
+    )
+    {topk_sql("scored", "score", desc=True)}""",
     doc="G6: filtered link-prediction ranking — score every candidate "
     "against each query, exclude known positives (same label: the "
     "'filtered' setting of src/evaluate.py:111-191), rank per query, "
@@ -339,6 +339,7 @@ _SC_H, _SC_R, _SC_T, _SC_M = 48271, 69621, 16807, 1000003
     "vocabulary-sized entity set. MRR uses exact integer micro-units "
     "(1e6 div rank) like m_mrr_hits.",
     tags=("G1", "G6", "A15", "W1", "suite"),
+    plan={"bnlj_ok": True},
 )
 def g_bidirectional_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = g_triple_build(spark, sf_dir)
@@ -496,6 +497,10 @@ def _pagerank_oracle() -> str:
     "fixed-point float algorithm hash-verifiable cross-engine at "
     "all. Degree and node count are computed once and reused.",
     tags=("graph", "pagerank", "G4"),
+    # the node-count scalar is a 1-row broadcast per iteration — the scalar-
+    # subquery plan; the 3 rounds are unrolled (supersteps: the ranks are read
+    # once per round) over the bucketed edges
+    plan={"bnlj_ok": True, "bucketed": "mcs_bip_"},
 )
 def g_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(_bipartite_edges(spark, sf_dir))
@@ -673,6 +678,10 @@ def pagerank(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     "n_triangles) — the graph-analytics summary the reference's "
     "co-occurrence graph build (src/utils.py:163-202) would feed.",
     tags=("graph", "triangle", "G1"),
+    # the three scalar counts assemble via 1-row crossJoins — the scalar-
+    # subquery plan; the triangle join itself is two hash equi-joins over the
+    # checkpointed edge list
+    plan={"bnlj_ok": True, "bucketed": "mcs_cp_", "no_exchange_on": ("src",)},
 )
 def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, deg, oriented = _copurchase_oriented(spark, sf_dir)
@@ -918,6 +927,10 @@ def _closed_wedges(oriented: DataFrame) -> DataFrame:
     "invariant. Output: (node, degree, n_tri, clustering_coeff) for "
     "every node of the graph; deg<2 nodes get coefficient 0.",
     tags=("graph", "triangle", "clustering", "G1"),
+    # per-node triangle membership: same oriented wedge join as
+    # g_triangle_count plus one groupBy on node and a left join back to the
+    # degree table — no scalar assembly, no BNLJ
+    plan={"bucketed": "mcs_cp_", "no_exchange_on": ("src",)},
 )
 def g_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, deg, oriented = _copurchase_oriented(spark, sf_dir)
@@ -1001,6 +1014,11 @@ def _kcore_oracle() -> str:
     "unrolls the same rounds as chained CTEs. Output: (node, "
     "core_degree) for every node in the K-core.",
     tags=("graph", "kcore", "iterative"),
+    # peel rounds are supersteps fixpoint rounds, lineage-truncated (one
+    # degree agg + two semi-joins per round); the final plan is the degree
+    # aggregate over the converged core (the bucketed mcs_cp_ scan feeds the
+    # cut initial state — not visible here)
+    plan={},
 )
 def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, deg, _ = _copurchase_oriented(spark, sf_dir)
@@ -1081,6 +1099,11 @@ _BFS_HOPS = 4
     "any scale. Oracle: DuckDB recursive CTE over the identical "
     "edge construction, min(d) per reached node.",
     tags=("graph", "bfs", "iterative"),
+    # frontier rounds are supersteps rounds over one labeled-set frame read
+    # three times per round, so each round is lineage-truncated (one edges
+    # hash join + one anti-join); the final plan is the last round's
+    # checkpoint scan
+    plan={},
 )
 def g_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _bipartite_edges(spark, sf_dir)
@@ -1179,6 +1202,11 @@ def _lpa_oracle() -> str:
     "runs a small constant round budget rather than chasing an "
     "unstable fixpoint.",
     tags=("graph", "community", "lpa", "iterative"),
+    # LPA rounds are unrolled supersteps rounds (the labels are read once per
+    # round; per round: one edge-labels hash join, one (node,label) count, one
+    # per-node max_by aggregate keyed on node — never single-partition), all
+    # over the bucketed edge scan
+    plan={"bucketed": "mcs_bip_"},
 )
 def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, labels = _lpa_core(spark, sf_dir)
@@ -1314,6 +1342,9 @@ _NJ_TOPK = 50
     "the existing-edge anti-join; top-k is TakeOrdered, no global "
     "sort.",
     tags=("graph", "similarity", "linkpred"),
+    # wedge self-join with the degree-capped shared neighbor; top-k via
+    # TakeOrderedAndProject (no global sort exchange)
+    plan={"bucketed": "mcs_cp_"},
 )
 def g_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, deg, _ = _copurchase_oriented(spark, sf_dir)
@@ -1403,6 +1434,11 @@ def g_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bucket domain — a bounded single-partition tail, invariant to "
     "graph size.",
     tags=("graph", "degree", "quality"),
+    # degree build shares _copurchase_oriented (checkpointed edges: the leaves
+    # are ExistingRDD scans, but the downstream agg/window plan is visible, so
+    # the default checks run); the cumulative windows run on the <=32-row
+    # log2-bucket domain
+    plan={"single_partition_ok": True, "bucketed": "mcs_cp_"},
 )
 def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, deg, _ = _copurchase_oriented(spark, sf_dir)
@@ -1495,6 +1531,11 @@ def _modularity_oracle() -> str:
     "modularity adds joins linear in |E| and aggs bounded by "
     "|communities|.",
     tags=("graph", "community", "lpa", "quality"),
+    # the unrolled LPA labels are checkpointed once (read three times), but
+    # the modularity joins/windows downstream are visible, so the default
+    # checks run; the global-Q window runs on the bounded community domain; m2
+    # is a 1-row broadcast crossJoin
+    plan={"bnlj_ok": True, "single_partition_ok": True},
 )
 def g_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, labels = _lpa_core(spark, sf_dir)
@@ -1606,6 +1647,9 @@ def g_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitioning-independent (the dsum discipline); top-50 is "
     "TakeOrdered, no global sort.",
     tags=("graph", "similarity", "linkpred"),
+    # same truncated wedge machinery with the 1/ln(deg) term joined on the
+    # shared neighbor; top-k via TakeOrderedAndProject
+    plan={"bucketed": "mcs_cp_"},
 )
 def g_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, deg, _ = _copurchase_oriented(spark, sf_dir)
@@ -1753,6 +1797,9 @@ _AA_SAMPLE_S = 24
     "and measured in SCALING.md. Same anti-join of existing edges, "
     "same TakeOrdered top-50.",
     tags=("graph", "similarity", "linkpred", "sampling", "skew"),
+    # HT-sampled wedge join over the hash-ranked member cap: the per-v windows
+    # read the v-bucketed trunc cache; top-k via TakeOrderedAndProject
+    plan={"bucketed": "mcs_cp_"},
 )
 def g_adamic_adar_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sampling import _hash_u
@@ -1911,6 +1958,9 @@ def _ppr_oracle() -> str:
     "+ one groupBy(dst) per iteration, teleport join is on the "
     "already-shuffled node key; |S| never appears in a driver loop.",
     tags=("graph", "pagerank", "ppr", "linkpred"),
+    # teleport-frame join replaces g_pagerank_fixed's 1-row scalar broadcast;
+    # same unrolled supersteps rounds otherwise
+    plan={"bnlj_ok": True, "bucketed": "mcs_bip_"},
 )
 def g_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _bipartite_edges(spark, sf_dir)
@@ -2016,6 +2066,10 @@ def _hits_oracle() -> str:
     "each side of the bipartition, no global state beyond two "
     "1-row totals.",
     tags=("graph", "hits", "G4"),
+    # each L1 total re-reads its round's raw scores, so supersteps lineage-
+    # truncates every iteration: the final plan is the last round's checkpoint
+    # scan (rounds: two 1-row L1-total BNLJs each)
+    plan={},
 )
 def g_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one direction of the cached doubled bipartite edge list IS the

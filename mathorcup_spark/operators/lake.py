@@ -70,6 +70,8 @@ from ..registry import register
     "from customer by key modulus (see module doc) so the diff is "
     "deterministic and oracle-checkable.",
     tags=("lake", "cdc", "diff"),
+    # CDC diff: one full-outer hash join on the business key
+    plan={},
 )
 def lake_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
@@ -142,6 +144,8 @@ _SCD2_AT = "DATE '2024-06-01'"
     "is broadcast-sized. Oracle is the declarative three-way UNION "
     "of the same contract.",
     tags=("lake", "scd2", "merge"),
+    # SCD2: one left join + explode — single pass over the dimension
+    plan={},
 )
 def lake_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
@@ -205,6 +209,11 @@ def lake_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "autoBroadcastJoinThreshold), so a registered query never "
     "mutates shared session state or races a concurrent run.",
     tags=("lake", "bucketing", "join"),
+    # the query asserts its own plan property (zero Exchange on the co-
+    # bucketed join) and returns an eager localCheckpoint, so the checked plan
+    # is the materialized scan; building the frame runs that in-query
+    # assertion
+    plan={"checkpoint_result_ok": True},
 )
 def lake_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import contextlib
@@ -290,6 +299,10 @@ def lake_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the pruning for free (SCALING.md section partition-pruned "
     "time scans measures the pruned-vs-full gap as history grows).",
     tags=("lake", "partitioning", "pruning", "temporal"),
+    # writes the day-partitioned layout then SELF-ASSERTS the PartitionFilters
+    # on the windowed read inside the query; the returned frame is the eager
+    # checkpoint of the aggregate
+    plan={"checkpoint_result_ok": True},
 )
 def lake_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import contextlib
@@ -399,6 +412,9 @@ _Z_INTERLEAVE = " | ".join(
     "is the final 64-group file-stats agg — the layout decision for "
     "a 100 TB table costs one linear scan.",
     tags=("lake", "layout", "zorder"),
+    # normalization bounds are a 1-row broadcast crossJoin (scalar- subquery
+    # BNLJ); interleave + file id are pure codegen bit ops; one 64-group agg
+    plan={"bnlj_ok": True},
 )
 def lake_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -496,6 +512,9 @@ _COMPACT_BINS = 16  # target bin count for the packing plan
     "bounded by file count, not data size; the inventory itself "
     "aggregates from the table in one shuffle on the layout key.",
     tags=("lake", "compaction", "layout"),
+    # cumsum window runs over the FILE INVENTORY (one row per file, manifest-
+    # scale), never data rows; total is a 1-row broadcast
+    plan={"bnlj_ok": True, "single_partition_ok": True},
 )
 def lake_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -555,6 +574,9 @@ def lake_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the data read stays one pruned columnar scan, and old files are "
     "never rewritten — the point of the pattern at 100 TB.",
     tags=("lake", "schema-evolution", "source"),
+    # merged read is materialized via eager localCheckpoint so the run-scoped
+    # temp layout can be deleted (lake_bucketed_join shape)
+    plan={"checkpoint_result_ok": True},
 )
 def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
@@ -654,6 +676,10 @@ _VACUUM_RETAIN_DAYS = 400  # retention horizon before the table's max day
     "over that bounded inventory, and the inventory itself "
     "aggregates from the table in one shuffle on the layout key.",
     tags=("lake", "vacuum", "retention", "layout"),
+    # vacuum decision runs on the file inventory (manifest-scale); latest-
+    # version window partitions by key over bounded rows; table-max is a 1-row
+    # broadcast crossJoin
+    plan={"bnlj_ok": True},
 )
 def lake_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")

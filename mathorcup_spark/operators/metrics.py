@@ -212,6 +212,10 @@ def m_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "regression eval stack as a single scan with 8 exact-decimal "
     "moments.",
     tags=("A9", "A10", "A11", "A12", "A13"),
+    # metric suites assemble scalar outputs by crossJoining 1-row aggregates —
+    # BroadcastNestedLoopJoin over single rows is the scalar-assembly plan
+    # (same as ev_funnel_conversion)
+    plan={"bnlj_ok": True},
 )
 def m_regression_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _pred_pairs(spark, sf_dir)

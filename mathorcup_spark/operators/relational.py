@@ -48,6 +48,9 @@ from ..registry import DEC, davg, dsum, oracle_davg, oracle_dsum, register
     "Reference shape: src/utils.py:241-290 (join) + src/evaluate.py:39-44 "
     "(derived metric aggregation).",
     tags=("flagship", "J1", "A1", "A16"),
+    # the shipdate filter reaches the lineitem scan; codegen spans the hot
+    # path; map-side partial aggregation before each exchange
+    plan={"pushed": "l_shipdate", "min_nodes": {"codegen id :": 3, "HashAggregate": 2}},
 )
 def flagship_revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load(spark, sf_dir, "lineitem")
@@ -99,6 +102,9 @@ def flagship_revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="P3/P4/P5/P6: column-list projection + equality & null predicates "
     "(reference src/data.py:9-11, src/utils.py:244-245).",
     tags=("P3", "P4", "P5", "P6"),
+    # the segment filter reaches the scan and unprojected columns are pruned
+    # from it
+    plan={"pushed": "c_mktsegment", "pruned": ("c_comment", "c_nationkey")},
 )
 def p_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load(spark, sf_dir, "customer")
@@ -142,6 +148,8 @@ def p_drop_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(src/utils.py:213-214). Spark: orderBy().limit() compiles to "
     "TakeOrderedAndProject (no global sort materialized).",
     tags=("P7", "W4"),
+    # global top-n without a total sort
+    plan={"nodes": ("TakeOrderedAndProject",)},
 )
 def p_head_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -203,6 +211,8 @@ def p_threshold_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reference's O(N*M) python-loop join (src/utils.py:241-258). "
     "nation/region are broadcast at any scale factor.",
     tags=("J1", "J3"),
+    # the dimension sides broadcast; no sort-merge join
+    plan={"broadcast": 1, "no_nodes": ("SortMergeJoin",)},
 )
 def j_broadcast_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load(spark, sf_dir, "customer")
@@ -226,6 +236,7 @@ def j_broadcast_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     "src/utils.py:263-290 joins only sold transactions). The filter "
     "pushes below the join into the orders scan.",
     tags=("J2",),
+    plan={"pushed": "IsNotNull"},
 )
 def j_filtered_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -272,6 +283,12 @@ def j_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on the key — the strategy that scales; the filters still push "
     "into both scans.",
     tags=("J-outer",),
+    # a full outer join cannot broadcast either side; the shuffle sort-merge
+    # join is the strategy that scales
+    plan={
+        "nodes": ("SortMergeJoin FullOuter",),
+        "no_nodes": ("BroadcastHashJoin FullOuter",),
+    },
 )
 def j_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
@@ -342,6 +359,7 @@ def j_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distributed engines can't reproduce insertion order, so ids are "
     "row_number over sorted distinct values (SURVEY §4.2 decision 2).",
     tags=("J4", "E1", "E2", "F11"),
+    plan={},
 )
 def j_lookup_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
@@ -425,6 +443,7 @@ def a_distinct_union_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="A6: row dedup — reference dedups triples via a driver-side set() "
     "(src/utils.py:161-162); here dropDuplicates (shuffle + spill-safe).",
     tags=("A6",),
+    plan={},
 )
 def a_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load(spark, sf_dir, "lineitem")
@@ -506,6 +525,9 @@ def a_group_degree_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(the reference's pass-per-column anti-pattern done right; "
     "SURVEY §4.1). Map-side partial aggregation + AQE coalescing.",
     tags=("A1", "A16", "bench"),
+    # map-side partial aggregation before the exchange (two HashAggregate
+    # levels)
+    plan={"min_nodes": {"HashAggregate": 2}},
 )
 def a_grouped_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -551,6 +573,10 @@ def a_grouped_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "constant state, mergeable map-side) and accept the rank error; "
     "the query shape is otherwise identical.",
     tags=("A1", "quantiles"),
+    # exact grouped quantiles: ObjectHashAggregate holds per-group value
+    # buffers (the documented exact-percentile trade); the scan side keeps its
+    # codegen span and pushdown
+    plan={},
 )
 def a_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -675,6 +701,7 @@ def w_rank_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "src/evaluate.py:237-247). Window + filter; Spark pushes the rank "
     "filter into the sort (WindowGroupLimit).",
     tags=("W2", "W4"),
+    plan={},
 )
 def w_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -859,6 +886,7 @@ def u_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="U4/G3: bidirectional edge expansion — union of mirrored "
     "endpoints (reference src/graph.py:51-53).",
     tags=("U4", "G3"),
+    plan={},
 )
 def u_bidirectional_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = load(spark, sf_dir, "lineitem").select(
@@ -894,6 +922,7 @@ def u_bidirectional_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "both engines. One shuffle; map-side partials cover all grouping "
     "sets.",
     tags=("rollup", "agg"),
+    plan={},
 )
 def a_rollup_subtotals(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -992,6 +1021,8 @@ def a_pivot_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hot keys). 8x replication of the smaller side is the explicit, "
     "bounded cost.",
     tags=("join", "skew", "salt"),
+    # salting stays an equi-join: no nested-loop or cartesian join
+    plan={},
 )
 def j_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_salt = 8
@@ -1070,6 +1101,7 @@ def a_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DuckDB quantile_cont (interpolation semantics match "
     "bit-for-bit, the a_group_quantiles precedent).",
     tags=("agg", "approx", "quantiles"),
+    plan={},
 )
 def a_approx_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -1132,6 +1164,8 @@ def a_approx_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "independent. At 100 TB swap the exact percentile for "
     "approx_percentile (constant sketch state) — identical shape.",
     tags=("A1", "winsorize", "robust"),
+    # per-group p05/p95 cuts broadcast back over the fact side
+    plan={"broadcast": 1},
 )
 def a_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -1205,6 +1239,10 @@ def a_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unpartitioned window in the plan is over 256 rows regardless "
     "of data size, and everything else is linear at 100 TB.",
     tags=("agg", "drift", "quality"),
+    # min/max/total bounds are a 1-row broadcast (scalar-subquery BNLJ); the
+    # only unpartitioned window is the 256-row bucket offset table — O(1) rows
+    # at any data size (documented)
+    plan={"bnlj_ok": True, "single_partition_ok": True},
 )
 def a_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -1314,6 +1352,9 @@ def a_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(broadcast-scale), so the fact table is scanned exactly once "
     "at any data size.",
     tags=("agg", "drift", "quality"),
+    # contingency margins/totals broadcast back over <= |X|x|Y| cells; total
+    # row is a 1-row crossJoin (scalar-subquery BNLJ)
+    plan={"bnlj_ok": True},
 )
 def a_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -1402,6 +1443,9 @@ _PSI_MAX_BIN = 49  # values >= 490 clamp into the last bin
     "back over those rows, so the fact table is scanned once and "
     "nothing downstream grows with data size.",
     tags=("agg", "drift", "quality"),
+    # events scan reduces map-side to <=50 bins; totals broadcast back over
+    # those rows (1-row crossJoin = scalar-subquery BNLJ)
+    plan={"bnlj_ok": True},
 )
 def a_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -1480,6 +1524,8 @@ def a_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engines. Scale posture: the scan reduces map-side to 2 rows — "
     "nothing downstream grows with data.",
     tags=("agg", "drift", "abtest", "quality"),
+    # scan reduces map-side to 2 cohort rows; z arithmetic is one row
+    plan={"single_partition_ok": True},
 )
 def a_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -1573,6 +1619,9 @@ def _bootstrap_oracle() -> str:
     "B=32 rows at ANY corpus size. Decimal-accumulated sums "
     "keep replicate means bit-identical to the oracle.",
     tags=("stats", "bootstrap", "sampling", "A1"),
+    # map-side Poisson weights + one groupBy(replicate); the ranking window is
+    # global but runs over exactly B=32 rows at any scale
+    plan={"single_partition_ok": True},
 )
 def a_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sampling import _hash_u
@@ -1662,6 +1711,9 @@ _FP_MIN_SUPPORT = 2  # orders containing the pair
     "counts divide in double with an identical expression tree on "
     "both engines, rounded to 6.",
     tags=("agg", "basket", "frequent-itemset", "A16"),
+    # 1-row n_orders scalar joins conditionlessly onto the pair frame (BNLJ);
+    # the basket self-join keys on the order key
+    plan={"bnlj_ok": True},
 )
 def a_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import _pack_uv, _unpack_uv, uv_guarded
@@ -1777,6 +1829,9 @@ _CHI2_BUCKET_WIDTH = 50.0  # fixed-width value buckets, capped at 5
     "from those <= |X|x|Y| broadcast-scale rows; exact BIGINT "
     "counts, identical IEEE double expression trees, rounded to 6.",
     tags=("agg", "drift", "quality"),
+    # contingency margins broadcast onto the cell frame; 1-row total is a BNLJ
+    # (the a_mutual_information shape)
+    plan={"bnlj_ok": True, "broadcast": 2},
 )
 def a_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")

@@ -46,6 +46,9 @@ _HASH_A = 2654435761
     "index k replicates DuckDB's percent_rank(<0.7) IEEE arithmetic "
     "exactly (binary search over (r)/(n-1) in doubles).",
     tags=("R2", "P7"),
+    # distributed global row-number: must show NO single-partition window (the
+    # whole point of the rewrite)
+    plan={},
 )
 def r_ordered_split_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -370,6 +373,7 @@ def _hash_u_sql(key_expr: str) -> str:
     "reproducible across engines, partition layouts, and cluster "
     "sizes (rand(seed) is none of these).",
     tags=("R3", "R6", "sampling"),
+    plan={},
 )
 def r_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
@@ -397,6 +401,9 @@ def r_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the keep decision is a per-row hash comparison, embarrassingly "
     "parallel and reproducible at any scale.",
     tags=("R3", "sampling"),
+    # scalar max-weight normalizer joined conditionlessly to every row — 1-row
+    # BroadcastNestedLoopJoin is the scalar-subquery plan
+    plan={"bnlj_ok": True},
 )
 def r_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
@@ -473,6 +480,9 @@ def mixture_sql(src: str) -> str:
     "Expected-count semantics (Bernoulli), not exact-n: the exact-n "
     "variant is r_stratified_sample's rank window.",
     tags=("R3", "sampling", "mixture"),
+    # the source-count scalar (n_sources) is a 1-row broadcast crossJoin — the
+    # scalar-subquery plan, same as r_weighted_sample
+    plan={"bnlj_ok": True},
 )
 def r_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_keep(load(spark, sf_dir, "documents").select("doc_id", "source"))
@@ -513,6 +523,9 @@ _KFOLD = 5
     "arithmetic (zero shuffles); the audit is ONE shuffle on the "
     "k-value fold domain with the total broadcast back.",
     tags=("R1", "R6", "sampling", "ml", "cv"),
+    # fold assignment is map-side hash arithmetic; a per-fold agg on the
+    # k-value fold domain with the 1-row total broadcast back
+    plan={"bnlj_ok": True},
 )
 def r_kfold_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -577,6 +590,9 @@ _POIS03_STEPS = " ".join(
     "cluster sizes; the same weight mechanism drives "
     "a_bootstrap_ci's replicates.",
     tags=("R3", "sampling"),
+    # narrow map + filter, zero shuffles (with-replacement counts are per-row
+    # hash draws)
+    plan={},
 )
 def r_poisson_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")

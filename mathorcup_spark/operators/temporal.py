@@ -46,6 +46,9 @@ from ..registry import DEC, dsum, register
     "DuckDB's native ASOF JOIN (same >= tie semantics: ordering "
     "errors (side 0) before clicks (side 1) at equal ts).",
     tags=("join", "asof", "temporal"),
+    # union + window, one exchange on user_id; never a range-condition join
+    # (nested loop or cartesian), which is quadratic per key
+    plan={"nodes": ("Window",)},
 )
 def j_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -99,6 +102,7 @@ def j_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "independent of total data volume. Left join keeps zero-count "
     "events (count(b.ts) skips the null-extended rows).",
     tags=("join", "range", "temporal"),
+    plan={},
 )
 def j_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -195,13 +199,16 @@ _SESSION_GAP_US = 21_600_000_000
     "session-level groupBy adds NO second exchange: user_id is a "
     "subset of the (user_id, session_seq) grouping keys, so the "
     "window's hash partitioning already satisfies the aggregate's "
-    "distribution (one Exchange in the whole plan — see PLANS.md). "
+    "distribution (one Exchange in the whole plan). "
     "Per-key work is linear in events-per-user at any "
     "corpus size; no range self-join anywhere. All arithmetic stays "
     "in BIGINT epoch-micros on both engines (the w_lag_gap "
     "discipline); ties broken by event_id so session assignment is "
     "total and deterministic.",
     tags=("window", "temporal", "sessionize", "events"),
+    # lag + cumulative-sum share ONE (user_id, ts, event_id) sort; session
+    # aggregate partial-aggregates before its shuffle
+    plan={},
 )
 def ev_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -287,6 +294,9 @@ def ev_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(a_group_quantiles precedent); monetary sums go through "
     "decimal(18,6) so quintile edges are order-independent.",
     tags=("temporal", "events", "analytics", "rfm"),
+    # 1-row model-total and quantile-threshold aggregates broadcast back over
+    # the scoring side (scalar-assembly BNLJ, the tpch_q11 pattern)
+    plan={"bnlj_ok": True},
 )
 def ev_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -374,6 +384,8 @@ def ev_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(same key throughout); per-key grid size is span-bounded, so "
     "total rows stay ~ users x span regardless of event volume.",
     tags=("temporal", "resample", "ffill"),
+    # grid join + fill window share the user_id shuffle key
+    plan={},
 )
 def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -455,6 +467,9 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     "normalizing window runs on a broadcast-scale frame. Linear in "
     "events at 100 TB.",
     tags=("temporal", "markov", "attribution"),
+    # lag window keyed on user_id, then a tiny (prev,next)-keyed agg; the
+    # normalizing window partitions on prev_type — never global
+    plan={},
 )
 def ev_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -543,6 +558,9 @@ def ev_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in a single sort+shuffle on user_id, so the whole op costs the "
     "same one exchange as plain ffill at any scale.",
     tags=("temporal", "resample", "interpolate"),
+    # grid join + backward/forward fill windows all share the ONE user_id
+    # shuffle (same sort serves both window specs)
+    plan={},
 )
 def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -656,6 +674,8 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     "constant 20-row frame keeps per-row window cost O(1), linear "
     "in events at 100 TB.",
     tags=("temporal", "anomaly", "drift", "quality"),
+    # constant 20-row trailing frame over the one user_id sort
+    plan={},
 )
 def ev_windowed_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -755,6 +775,9 @@ _PATH_TOPK = 20
     "domain (<= |event_types|^3 rows), and the final ranking window "
     "runs on that bounded domain — O(1) at any event volume.",
     tags=("temporal", "events-analytics", "path"),
+    # lag/cumsum/rank share one user_id sort; path count + ranking window run
+    # on the bounded |event_types|^3 path domain
+    plan={"single_partition_ok": True},
 )
 def ev_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -842,6 +865,9 @@ def ev_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitioning-independent. Output is bounded by types x hours, "
     "not by event volume.",
     tags=("temporal", "downsample", "ohlc"),
+    # one (event_type, hour) shuffle; both windows + the groupBy share the
+    # single within-key sort; output bounded by types x hours
+    plan={},
 )
 def ev_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -906,6 +932,9 @@ _NEAREST_BOUND_US = 1_800_000_000  # +/- 30 min candidate window
     "merge is never needed because the bound prunes first. "
     "Timestamp math is exact integer micros on both engines.",
     tags=("join", "asof", "temporal"),
+    # j_range_join shape: user_id shuffle, +/-30min bound prunes per-key
+    # pairs, top-1 window reuses the same key's sort
+    plan={},
 )
 def j_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -1001,6 +1030,9 @@ def _ewma_oracle() -> str:
     "Finite memory is also what a 100-TB streaming re-statement "
     "needs: state per key is 8 numbers, not the full history.",
     tags=("temporal", "ewma", "window"),
+    # one exchange + one per-key sort; the event_type filter must reach the
+    # parquet scan
+    plan={"pushed": "event_type"},
 )
 def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").filter(F.col("event_type") == "view")
@@ -1076,6 +1108,9 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identical rounding on both engines; the accumulation itself "
     "is exact), so the hash is stable.",
     tags=("temporal", "changepoint", "drift"),
+    # per-type mean frame broadcasts back onto the event stream; both windows
+    # share one (event_type; ts, event_id) sort
+    plan={"broadcast": 1},
 )
 def ev_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")

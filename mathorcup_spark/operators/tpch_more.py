@@ -59,6 +59,7 @@ from ..registry import davg, dsum, oracle_davg, oracle_dsum, register
     "order-independent, so the equality matches DuckDB bit-for-bit. "
     "Dim filters (size, type, region) prune before the join-back.",
     tags=("tpch", "J4", "A2", "W4"),
+    plan={"broadcast": 2},
 )
 def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part").filter(
@@ -115,6 +116,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "key only before the shuffle, and semi-join semantics dedup "
     "multi-match orders without a distinct.",
     tags=("tpch", "J5", "A16"),
+    plan={"pushed": "o_orderdate"},
 )
 def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").filter(
@@ -165,6 +167,7 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "two-year shipdate range is pushed into the lineitem scan. "
     "customer⋈orders⋈lineitem shuffle on their natural keys.",
     tags=("tpch", "J1", "F3"),
+    plan={"pushed": "l_shipdate", "broadcast": 2},
 )
 def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
@@ -236,6 +239,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "division is engine-identical. Eight-table join, all dims "
     "broadcast, facts shuffle once per key.",
     tags=("tpch", "J1", "P8", "F3"),
+    plan={"pushed": "o_orderdate", "broadcast": 2},
 )
 def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = (
@@ -308,6 +312,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast, amount is per-row double arithmetic (deterministic) "
     "summed through decimal.",
     tags=("tpch", "J1", "F9"),
+    plan={"pushed": "p_name", "broadcast": 2},
 )
 def tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = (
@@ -364,6 +369,9 @@ def tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on both engines. Spark evaluates it as a one-row broadcast "
     "joined to the grouped aggregate.",
     tags=("tpch", "A1", "A16"),
+    # threshold = fraction-of-total scalar joined conditionlessly to the
+    # grouped aggregate — 1-row BroadcastNestedLoopJoin intended
+    plan={"broadcast": 1, "bnlj_ok": True},
 )
 def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
@@ -411,6 +419,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side, so the orders⋈lineitem join output never materializes "
     "beyond the two counter columns per group.",
     tags=("tpch", "P8", "A16"),
+    plan={"pushed": "l_shipdate"},
 )
 def tpch_q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
@@ -453,6 +462,7 @@ def tpch_q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count piggybacks on the join shuffle; the histogram reduces to "
     "at most a few hundred groups regardless of scale.",
     tags=("tpch", "A16", "A7"),
+    plan={},
 )
 def tpch_q13_customer_distribution(
     spark: SparkSession, sf_dir: str
@@ -493,6 +503,10 @@ def tpch_q13_customer_distribution(
     "subplan); equality on a decimal-derived double is exact, so the "
     "tie semantics match DuckDB bit-for-bit.",
     tags=("tpch", "A1", "W3"),
+    # scalar max / global mean joined conditionlessly to a 1-row aggregate —
+    # BroadcastNestedLoopJoin over one row is the intended scalar-subquery
+    # plan
+    plan={"pushed": "l_shipdate", "bnlj_ok": True},
 )
 def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = (
@@ -538,6 +552,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "two-phase aggregate — dedup on (group, suppkey) map-side, then "
     "count — so no per-group set materializes on one node.",
     tags=("tpch", "A5", "A16"),
+    plan={"pushed": "p_size", "broadcast": 1},
 )
 def tpch_q16_supplier_part_count(
     spark: SparkSession, sf_dir: str
@@ -577,6 +592,7 @@ def tpch_q16_supplier_part_count(
     "decimal-exact mean, so the strict inequality cuts identical rows "
     "on both engines.",
     tags=("tpch", "A1", "J4"),
+    plan={"pushed": "p_brand", "broadcast": 1},
 )
 def tpch_q17_small_quantity_revenue(
     spark: SparkSession, sf_dir: str
@@ -620,6 +636,7 @@ def tpch_q17_small_quantity_revenue(
     "BETWEEN 1 AND 30 onto lineitem) and pushes them into each scan "
     "while the full disjunction evaluates after the broadcast join.",
     tags=("tpch", "P8", "J1"),
+    plan={"pushed": "IsNotNull", "broadcast": 1},
 )
 def tpch_q19_discounted_revenue(
     spark: SparkSession, sf_dir: str
@@ -674,6 +691,7 @@ def tpch_q19_discounted_revenue(
     "filter, then a left-semi join into supplier. Three shuffles "
     "total, no per-row subquery.",
     tags=("tpch", "J5", "A1"),
+    plan={"pushed": "l_shipdate", "broadcast": 1},
 )
 def tpch_q20_excess_volume_supplier(
     spark: SparkSession, sf_dir: str
@@ -736,6 +754,7 @@ def tpch_q20_excess_volume_supplier(
     "correlated subqueries collapse into a single extra shuffle, the "
     "scalable rewrite of the textbook double self-join.",
     tags=("tpch", "J5", "A8", "W4"),
+    plan={"pushed": "l_returnflag", "broadcast": 1},
 )
 def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -810,6 +829,7 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "left-anti join against the filtered orders key projection, and "
     "the scalar mean broadcasts as a one-row cross join.",
     tags=("tpch", "J5", "U2", "A1"),
+    plan={"pushed": "o_orderdate", "bnlj_ok": True},
 )
 def tpch_q22_global_sales_opportunity(
     spark: SparkSession, sf_dir: str

@@ -31,6 +31,9 @@ Oracle-compatibility discipline (learned rules, applied everywhere):
 
 from __future__ import annotations
 
+import contextlib
+import io
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -49,23 +52,136 @@ class Query:
     oracle: str | None  # DuckDB SQL; None → driver does rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
+    plan: dict | None = None  # static-plan claims (PLAN_CLAIMS); None: none
 
 
 REGISTRY: dict[str, Query] = {}
 
 
 def register(
-    name: str, oracle: str | None = None, doc: str = "", tags: tuple[str, ...] = ()
+    name: str,
+    oracle: str | None = None,
+    doc: str = "",
+    tags: tuple[str, ...] = (),
+    plan: dict | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add a (spark, sf_dir) -> DataFrame query to the surface."""
+    """Decorator: add a (spark, sf_dir) -> DataFrame query to the surface.
+    ``plan`` holds the claims :func:`audit_plan` checks on its static
+    plan; ``{}`` claims the defaults alone."""
+    if unknown := sorted(set(plan or ()) - PLAN_CLAIMS.keys()):
+        raise ValueError(f"{name}: unknown plan claim(s) {unknown}")
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or ""), tags)
+        REGISTRY[name] = Query(
+            name, fn, oracle, doc or (fn.__doc__ or ""), tags, plan
+        )
         return fn
 
     return deco
+
+
+# --- static-plan claims ------------------------------------------------------
+#
+# The scale posture of a plan, checked on ``explain("formatted")`` of
+# the registered frame with AQE off (an unexecuted AdaptiveSparkPlan
+# hides codegen spans and final join strategies). Every claimed plan
+# must hold the defaults: a whole-stage-codegen span, no cartesian
+# product, and neither a nested-loop join nor a single-partition
+# exchange unless allowed below.
+
+PLAN_CLAIMS = {
+    "pushed": "substring of some scan's PushedFilters",
+    "broadcast": "minimum number of BroadcastHashJoin nodes",
+    "bnlj_ok": "allow BroadcastNestedLoopJoin (1-row scalar assembly)",
+    "single_partition_ok": "allow single-partition exchanges (bounded rows)",
+    "bucketed": "prefix of a bucketed catalog table the plan scans",
+    "no_exchange_on": "columns no hash exchange partitions on",
+    "checkpoint_result_ok": "the plan is the eager checkpoint of the result",
+    "nodes": "substrings the plan must contain",
+    "no_nodes": "substrings the plan must not contain",
+    "min_nodes": "{node: n}: at least n plan nodes whose line names node",
+    "pruned": "columns no scan's ReadSchema may include",
+}
+
+
+def formatted_plan(df: DataFrame) -> str:
+    """``df.explain("formatted")`` as a string."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def audit_plan(plan: str, claims: dict) -> list[str]:
+    """The violations of the defaults and of ``claims`` in ``plan``, a
+    :func:`formatted_plan` string; each names the claim it breaks."""
+    errs = []
+    if claims.get("checkpoint_result_ok"):
+        # WHOLE-result checkpoints only: the query runs its own plan
+        # assertion, then returns an eager localCheckpoint, so the
+        # visible plan is the checkpoint scan. Queries that checkpoint
+        # only intermediate frames keep their downstream plan visible
+        # and must not carry this claim.
+        if "Scan ExistingRDD" not in plan:
+            errs.append("checkpoint_result_ok: no checkpointed-result scan")
+        return errs
+    # one block per node, "(n) Name [codegen id : k]" and its details;
+    # ids are post-order, so the child of a unary node n is n - 1
+    blocks = {
+        int(m[1]): m[0] for m in re.finditer(r"^\((\d+)\) .*(?:\n.+)*", plan, re.M)
+    }
+    heads = [b.split("\n", 1)[0] for b in blocks.values()]
+    exchanges = {
+        i: re.search(r"^Arguments: (.*)", b, re.M)[1]
+        for i, b in blocks.items()
+        if b.startswith(f"({i}) Exchange\n")
+    }
+
+    def scalar_partial(i: int) -> bool:
+        # the partial half of a global aggregate: one row per partition
+        b = blocks.get(i, "")
+        return bool(re.match(r"\(\d+\) \w*Aggregate", b)) and "\nKeys: []" in b
+
+    if "CartesianProduct" in plan:
+        errs.append("cartesian product in plan")
+    if "BroadcastNestedLoopJoin" in plan and not claims.get("bnlj_ok"):
+        errs.append("bnlj_ok: nested-loop join in plan, not allowed")
+    if "codegen id :" not in plan:
+        errs.append("no whole-stage-codegen span (no [codegen id] markers)")
+    if not claims.get("single_partition_ok") and any(
+        a.startswith("SinglePartition") and not scalar_partial(i - 1)
+        for i, a in exchanges.items()
+    ):
+        errs.append("single_partition_ok: single-partition exchange, not allowed")
+    if "pushed" in claims and not any(
+        claims["pushed"] in ln for ln in plan.splitlines() if "PushedFilters" in ln
+    ):
+        errs.append(f"pushed: no PushedFilters containing {claims['pushed']!r}")
+    n = sum(h.split()[1] == "BroadcastHashJoin" for h in heads)
+    if n < (lo := claims.get("broadcast", 0)):
+        errs.append(f"broadcast: {n} BroadcastHashJoin, expected >= {lo}")
+    if "bucketed" in claims and not re.search(
+        rf"Scan parquet spark_catalog\.default\.{claims['bucketed']}", plan
+    ):
+        errs.append(f"bucketed: no scan of the bucketed table {claims['bucketed']}*")
+    for col in claims.get("no_exchange_on", ()):
+        if any(a.startswith(f"hashpartitioning({col}#") for a in exchanges.values()):
+            errs.append(f"no_exchange_on: hash exchange on {col}")
+    for sub in claims.get("nodes", ()):
+        if sub not in plan:
+            errs.append(f"nodes: {sub!r} absent")
+    for sub in claims.get("no_nodes", ()):
+        if sub in plan:
+            errs.append(f"no_nodes: {sub!r} present")
+    for sub, lo in claims.get("min_nodes", {}).items():
+        if (n := sum(sub in h for h in heads)) < lo:
+            errs.append(f"min_nodes: {n} nodes with {sub!r}, expected >= {lo}")
+    for col in claims.get("pruned", ()):
+        if any(col in ln for ln in plan.splitlines() if ln.startswith("ReadSchema")):
+            errs.append(f"pruned: a ReadSchema reads {col!r}")
+    return errs
 
 
 # --- oracle-stable aggregate helpers (Spark side) ---------------------------
@@ -190,7 +306,7 @@ def register_check(
 # aggregates, the composed LSH→Jaccard dedup pipeline, the sink
 # write→read-back roundtrips, and all 22 TPC-H shapes (18 individual
 # + the 4 scalar-output shapes composed). Fine-grained member queries stay
-# registered as the user-facing API — bench/plan-audit/pytest run the
+# registered as the user-facing API — bench and pytest run the
 # full registry — and COVERAGE.md maps §2 operator -> covering
 # driver query. Round 5 adds the full-width digest suites
 # (operators/digest.py): every member row hashed over ALL its

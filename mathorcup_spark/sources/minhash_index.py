@@ -146,7 +146,7 @@ def index_candidates(
     literal partition filters (collected from the batch — ≤ 4
     (band, pb) keys per new doc) plus a bucket IN-list that prunes
     parquet row groups via the sorted bucket column's min/max stats.
-    Exposed separately so tests/plan_audit can assert the pruned scan
+    Exposed separately so tests can assert the pruned scan
     (``probe_minhash_index`` checkpoints this stage away).
     """
     probes = banded_new.select("band", "pb", "bucket").dropDuplicates().collect()

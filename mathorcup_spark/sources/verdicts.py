@@ -13,7 +13,7 @@ tokenized stage table), derive every per-doc verdict from that one
 materialization, and write the joined verdict table to a sorted
 parquet layout. Consumers (mixture, packing, any downstream filter)
 then read ONLY the verdict layout — their plans contain ZERO
-``documents`` scans, which ``tools/plan_audit.py`` asserts.
+``documents`` scans, which ``tests/test_plans.py`` asserts.
 
 Verdict columns (one row per prep-surviving document — quality floor,
 word floor, exact-dedup survivor), joined on doc_id by

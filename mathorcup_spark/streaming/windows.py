@@ -138,6 +138,7 @@ def st_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "construction (lag + running sum). Session end = last event + gap, "
     "matching Spark's semantics.",
     tags=("streaming", "session_window"),
+    plan={},
 )
 def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_agg(load(spark, sf_dir, "events"))
@@ -214,6 +215,7 @@ def signup_click_join(signups: DataFrame, clicks: DataFrame) -> DataFrame:
     "in tests/test_streaming.py. Shuffles on user_id only; per-key "
     "state is bounded by the interval at any scale.",
     tags=("streaming", "join", "temporal"),
+    plan={"pushed": "event_type"},
 )
 def st_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")

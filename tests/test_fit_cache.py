@@ -7,23 +7,14 @@ co-partitioned (no Exchange on the bucket side).
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
 from mathorcup_spark.catalog import load
 from mathorcup_spark.functions import dedup as D
 from mathorcup_spark.functions import similarity as S
+from mathorcup_spark.registry import formatted_plan
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _formatted(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def _rows(df):
@@ -84,7 +75,7 @@ def test_banded_self_join_reads_cobucketed(spark):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         cand = D._candidates_from_banded(D._banded_df(spark, SF_DIR))
-        plan = _formatted(cand)
+        plan = formatted_plan(cand)
         assert "mcs_mh_" in plan
         assert plan.count("Bucketed: true") == 2, plan
         # exactly one Exchange total: the post-join dropDuplicates

@@ -12,24 +12,15 @@ of a snapshot diff and the version chains of an SCD2 merge.
 
 from __future__ import annotations
 
-import contextlib
-import io
 from collections import defaultdict
 
 from pyspark.sql import functions as F
 
 from mathorcup_spark.catalog import load
-from mathorcup_spark.registry import queries
+from mathorcup_spark.registry import formatted_plan, queries
 from mathorcup_spark.sources.layout import read_table, write_bucketed
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _formatted(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_bucketed_join_elides_shuffle(spark, tmp_path):
@@ -54,7 +45,7 @@ def test_bucketed_join_elides_shuffle(spark, tmp_path):
             read_table(spark, "lineitem_b"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
-        plan = _formatted(joined)
+        plan = formatted_plan(joined)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         assert "Exchange" not in plan, "bucketed join should not shuffle"
         # and the result is still correct
@@ -78,7 +69,7 @@ def test_partitioned_write_prunes(spark, tmp_path):
     )
     back = spark.read.parquet(str(tmp_path / "events_p"))
     one_day = back.filter(F.col("event_date") == back.agg(F.min("event_date")).collect()[0][0])
-    plan = _formatted(one_day)
+    plan = formatted_plan(one_day)
     # partition filter must appear as a PartitionFilters entry, not a
     # post-scan Filter over all files
     assert "PartitionFilters" in plan and "event_date" in plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
@@ -121,7 +112,7 @@ def test_materialize_derived_builds_once_and_elides_wedge_exchange(spark):
         (F.col("o2.src") == F.col("o1.src"))
         & (F.col("o1.dst") < F.col("o2.dst")),
     )
-    plan = _formatted(wedge)
+    plan = formatted_plan(wedge)
     assert "SortMergeJoin" in plan, plan[:800]
     # the bucketed layout satisfies the join's distribution on both
     # sides: no shuffle. (A per-partition Sort remains: Spark 4 never

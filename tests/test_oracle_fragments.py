@@ -37,10 +37,7 @@ FRAGMENTS = {
         "min_by(cosine, ai) AS dup_cos",
     ),
     "cosine_sql": ("functions/similarity.py", ".nrm * "),
-    "topk_sql": (
-        "functions/similarity.py",
-        "ORDER BY cosine DESC, c_id) AS BIGINT) AS rnk",
-    ),
+    "topk_sql": ("functions/similarity.py", ", c_id) AS BIGINT) AS rnk"),
 }
 
 

@@ -6,86 +6,127 @@ broadcast where a side is small, pushdown/pruning at the scan,
 whole-stage codegen in the hot path, no global single-partition sort
 for top-n. A regression here is invisible to the oracle harness (the
 answer stays right) but catastrophic at scale, which is why the plan
-shape itself is under test.
+shape itself is under test. Each query's claims sit on its
+registration (``@register(..., plan={...})``) and
+``registry.audit_plan`` checks them.
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from mathorcup_spark import registry
+from tests.conftest import REPO
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name: str) -> str:
-    df = registry.queries()[name](spark, SF_DIR)
-    # collect() this exact DataFrame first: with AQE the executed plan
-    # is only final (re-planned joins, codegen `*(n)` markers) after
-    # the plan itself has run — count() would execute a different plan
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
+def _claimed() -> list[str]:
+    registry._bootstrap()
+    return [q.name for q in registry.REGISTRY.values() if q.plan is not None]
 
 
-def test_dimension_join_broadcasts(spark):
-    plan = _plan(spark, "j_broadcast_inner")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+@pytest.fixture
+def static_spark(spark):
+    """The session with AQE off, restored afterwards: an unexecuted
+    AdaptiveSparkPlan hides codegen spans and final join strategies."""
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield spark
+    spark.conf.set(key, saved)
 
 
-def test_filter_and_projection_reach_scan(spark):
-    plan = _plan(spark, "p_project_filter")
-    assert "PushedFilters" in plan
-    assert "c_mktsegment" in plan.split("PushedFilters")[1][:200]
-    # column pruning: the scan schema must not include unprojected cols
-    read_schema = plan.split("ReadSchema")[1][:300]
-    assert "c_comment" not in read_schema and "c_nationkey" not in read_schema
+@pytest.mark.parametrize("name", _claimed())
+def test_plan_claims(static_spark, name):
+    """Every ``plan=`` claim of a registration holds on its static plan."""
+    q = registry.REGISTRY[name]
+    plan = registry.formatted_plan(q.fn(static_spark, SF_DIR))
+    errs = registry.audit_plan(plan, q.plan)
+    assert not errs, f"{name}: {errs}\n{plan[:4000]}"
 
 
-def test_flagship_filter_pushed_and_codegen(spark):
-    plan = _plan(spark, "flagship_revenue_by_priority")
-    # `*(n)` prefixes mark whole-stage-codegen spans in the final plan
-    assert plan.count("*(") >= 3
-    # the shipdate filter reaches the lineitem parquet scan
-    assert "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters")[1][:300]
-
-
-def test_global_topn_avoids_total_sort(spark):
-    plan = _plan(spark, "p_head_slice")
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_asof_join_is_single_shuffle_window(spark):
-    """The as-of join must stay union + window — one exchange on
-    user_id — and never degrade to a join with a range condition
-    (BroadcastNestedLoopJoin / CartesianProduct), which is quadratic
-    per key."""
-    plan = _plan(spark, "j_asof_join")
-    assert "Window" in plan
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-
-
-def test_salted_join_no_nested_loop(spark):
-    plan = _plan(spark, "j_salted_skew_join")
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-
-
-def test_lsh_ann_never_cross_joins(spark):
-    """The whole point of the LSH path: candidate generation is an
-    equi-join on (table, bucket), never an all-pairs product."""
-    plan = _plan(spark, "sim_lsh_ann")
-    assert "Cartesian" not in plan
-
-
-@pytest.mark.parametrize(
-    "name", ["flagship_revenue_by_priority", "a_grouped_multi_agg"]
+# a two-node plan that holds every default, and per claim key the
+# claims and a plan that break it
+_SCAN = (
+    "(1) Scan parquet \nPushedFilters: [IsNotNull(a)]\n"
+    "ReadSchema: struct<a:int>\n\n(2) Filter [codegen id : 1]\n"
+    "Input [1]: [a#1]\n"
 )
-def test_aggregates_have_partial_stage(spark, name):
-    """Map-side partial aggregation before the exchange (two
-    HashAggregate levels) — the thing that keeps a 100 TB groupBy
-    from shuffling raw rows."""
-    plan = _plan(spark, name)
-    assert plan.count("HashAggregate") >= 2
+
+
+def _exchange(args: str) -> str:
+    return f"\n(3) Exchange\nInput [1]: [a#1]\nArguments: {args}, [plan_id=1]\n"
+
+
+_BROKEN = {
+    "pushed": ({"pushed": "b"}, _SCAN),
+    "broadcast": ({"broadcast": 1}, _SCAN),
+    "bnlj_ok": ({}, _SCAN + "\n(3) BroadcastNestedLoopJoin [codegen id : 1]\n"),
+    "single_partition_ok": ({}, _SCAN + _exchange("SinglePartition")),
+    "bucketed": ({"bucketed": "mcs_cp_"}, _SCAN),
+    "no_exchange_on": (
+        {"no_exchange_on": ("a",)},
+        _SCAN + _exchange("hashpartitioning(a#1, 4)"),
+    ),
+    "checkpoint_result_ok": ({"checkpoint_result_ok": True}, _SCAN),
+    "nodes": ({"nodes": ("Window",)}, _SCAN),
+    "no_nodes": ({"no_nodes": ("Filter",)}, _SCAN),
+    "min_nodes": ({"min_nodes": {"codegen id :": 2}}, _SCAN),
+    "pruned": ({"pruned": ("a",)}, _SCAN),
+}
+
+
+def test_each_plan_claim_fails_by_name():
+    """The checker reports a broken claim under the claim's own key,
+    and a scalar aggregate's single-partition exchange is no global
+    sort."""
+    assert _BROKEN.keys() == registry.PLAN_CLAIMS.keys()
+    assert registry.audit_plan(_SCAN, {}) == []
+    scalar = _SCAN.replace("(2) Filter", "(2) HashAggregate") + "Keys: []\n"
+    assert registry.audit_plan(scalar + _exchange("SinglePartition"), {}) == []
+    for key, (claims, plan) in _BROKEN.items():
+        errs = registry.audit_plan(plan, claims)
+        assert errs and all(e.startswith(f"{key}:") for e in errs), (key, errs)
+
+
+def test_unknown_plan_claim_raises():
+    """A misspelt claim fails at registration instead of claiming nothing."""
+    with pytest.raises(ValueError, match="pushd"):
+        registry.register("misspelt_claim", plan={"pushd": "l_shipdate"})
+    assert "misspelt_claim" not in registry.REGISTRY
+
+
+def test_no_session_config_mutation():
+    """No query may flip shared-session config: a ``spark.conf.set``
+    under ``mathorcup_spark/`` would perturb concurrently running
+    queries in the same session. catalog.py's nanosAsLong is the one
+    sanctioned site: a constant, idempotent reader setting, equivalent
+    to session init."""
+    pkg = REPO / "mathorcup_spark"
+    hits = [
+        f"{p.relative_to(pkg)}:{i}: {ln.strip()}"
+        for p in pkg.rglob("*.py")
+        if p.name != "catalog.py"
+        for i, ln in enumerate(p.read_text().splitlines(), 1)
+        if "spark.conf.set" in ln and not ln.lstrip().startswith("#")
+    ]
+    assert hits == []
+
+
+def test_bpe_round_plan(static_spark):
+    """t_bpe_train returns a driver-built merge table, so its plan at
+    scale is the pair count each merge round repeats: the defaults
+    hold, and it shuffles at most twice (vocab groupBy, pair groupBy)."""
+    from mathorcup_spark.functions.text import bpe_pair_counts_of, bpe_vocab_from
+
+    plan = registry.formatted_plan(
+        bpe_pair_counts_of(bpe_vocab_from(static_spark, SF_DIR))
+    )
+    assert registry.audit_plan(plan, {}) == []
+    assert len(re.findall(r"^Arguments: hashpartitioning", plan, re.M)) <= 2
 
 
 def test_runtime_bloom_filter_semi_join_reduction(spark):
@@ -141,15 +182,6 @@ def test_runtime_bloom_filter_semi_join_reduction(spark):
                 spark.conf.set(k, v)
 
 
-def test_full_outer_join_uses_shuffle_strategy(spark):
-    """A full outer join cannot broadcast either side (both sides'
-    unmatched rows must surface) — the plan must be the shuffle
-    sort-merge join, which is also the strategy that scales."""
-    plan = _plan(spark, "j_full_outer")
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    assert "BroadcastHashJoin FullOuter" not in plan
-
-
 def test_bench_printed_line_is_pinned_and_fits():
     """The one-line bench JSON's `queries` dict must be a STABLE set
     across rounds (judge r11 item 1): every pinned name is a headline
@@ -185,17 +217,10 @@ def test_bench_times_full_result_from_status_store(spark):
     assert r["jobs"] >= 1
 
 
-def test_verdict_consumer_reads_only_the_layout(spark):
+def test_verdict_consumer_reads_only_the_layout(static_spark, tmp_path):
     """consume_verdicts over a written verdict table (the back half of
     corpus_pipeline_v3/v4/v5) scans the layout and never the
-    documents, with no single-partition exchange or cartesian product:
-    the four claims tools/plan_audit.py's verdict-consumer audit
-    makes."""
-    import contextlib
-    import io
-    import shutil
-    import tempfile
-
+    documents, and its static plan holds the defaults."""
     from mathorcup_spark.catalog import load
     from mathorcup_spark.functions.corpus import consume_verdicts
     from mathorcup_spark.sources.verdicts import (
@@ -203,21 +228,14 @@ def test_verdict_consumer_reads_only_the_layout(spark):
         write_verdict_table,
     )
 
-    out = tempfile.mkdtemp(prefix="plans_verdicts_")
-    try:
-        write_verdict_table(spark, load(spark, SF_DIR, "documents"), out)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            consume_verdicts(spark, read_verdict_table(spark, out)).explain(
-                "formatted"
-            )
-        plan = buf.getvalue()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    assert "documents" not in plan
-    assert out in plan
-    assert "Exchange SinglePartition" not in plan
-    assert "CartesianProduct" not in plan
+    out = str(tmp_path / "verdicts")
+    write_verdict_table(static_spark, load(static_spark, SF_DIR, "documents"), out)
+    plan = registry.formatted_plan(
+        consume_verdicts(static_spark, read_verdict_table(static_spark, out))
+    )
+    # the mixture's source count is a 1-row scalar BNLJ, as in v2/v3
+    claims = {"nodes": (out,), "no_nodes": ("documents",), "bnlj_ok": True}
+    assert registry.audit_plan(plan, claims) == []
 
 
 def test_default_driver_heap_fits_the_machine(spark):

@@ -1,32 +1,18 @@
-"""Physical-plan audit: assert the scale-critical plan properties.
+"""Executed-plan audit: AQE evidence for the heaviest queries.
 
-Runs every headline query at sf0.01, captures
-``df.explain("formatted")`` output, and checks the properties that
-decide whether a plan survives a 1000-executor / 100 TB scale-up:
-
-- **Pushdown**: scan-heavy queries must show non-empty
-  ``PushedFilters`` on their fact-table Parquet scan.
-- **Pruning**: no fact scan may read all columns unless the query
-  genuinely needs them (ReadSchema is printed for eyeballing).
-- **Broadcast**: dim-side joins must be ``BroadcastHashJoin``; the
-  audit fails if an expected-broadcast query ran a SortMergeJoin.
-- **No cartesian products** anywhere (an intended all-pairs shape
-  would be a deliberate, documented exception — there are none).
-- **Codegen**: every query must contain at least one whole-stage
-  codegen span (``[codegen id : N]`` markers — expressions stayed
-  JVM-side).
-
-Writes ``PLANS.md`` (truncated formatted plans + a property table)
-and exits non-zero on any violation; run from the repo root:
+The static plan of every registered query is checked in tier-1 against
+the ``plan=`` claims on its registration (``tests/test_plans.py``,
+``registry.audit_plan``). What a static plan cannot show is how AQE
+re-plans at runtime, so this tool runs the bench's five heaviest
+queries at sf0.01 with AQE on and checks each FINAL adaptive plan.
+Prints the plans and exits non-zero on any violation; run from the
+repo root:
 
     python tools/plan_audit.py
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
-import re
 import sys
 from pathlib import Path
 
@@ -37,526 +23,14 @@ from mathorcup_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
-# name -> dict of expectations. Keys:
-#   pushed: substring that must appear inside a PushedFilters list
-#   broadcast: minimum number of BroadcastHashJoin/BroadcastNestedLoop nodes
-#   sortmerge_ok: big-big joins where SortMergeJoin/ShuffledHashJoin is the
-#                 CORRECT answer at scale (AQE may still broadcast at sf0.01)
-EXPECT: dict[str, dict] = {
-    "tpch_q1_pricing_summary": {"pushed": "l_shipdate"},
-    "tpch_q3_shipping_priority": {"pushed": "l_shipdate", "broadcast": 1},
-    "tpch_q5_local_supplier_volume": {"pushed": "o_orderdate", "broadcast": 1},
-    "tpch_q6_revenue_forecast": {"pushed": "l_discount"},
-    "tpch_q10_returned_items": {"pushed": "l_returnflag", "broadcast": 1},
-    "tpch_q14_promo_revenue": {"pushed": "l_shipdate", "broadcast": 1},
-    "tpch_q18_large_orders": {},
-    "tpch_q2_min_cost_supplier": {"broadcast": 2},
-    "tpch_q4_order_priority": {"pushed": "o_orderdate"},
-    # threshold = fraction-of-total scalar joined conditionlessly to
-    # the grouped aggregate — 1-row BroadcastNestedLoopJoin intended
-    "tpch_q11_important_stock": {"broadcast": 1, "bnlj_ok": True},
-    "tpch_q12_priority_shipping": {"pushed": "l_shipdate"},
-    "tpch_q20_excess_volume_supplier": {
-        "pushed": "l_shipdate",
-        "broadcast": 1,
-    },
-    "tpch_q7_volume_shipping": {"pushed": "l_shipdate", "broadcast": 2},
-    "tpch_q8_market_share": {"pushed": "o_orderdate", "broadcast": 2},
-    "tpch_q9_product_type_profit": {"pushed": "p_name", "broadcast": 2},
-    "tpch_q13_customer_distribution": {},
-    # scalar max / global mean joined conditionlessly to a 1-row
-    # aggregate — BroadcastNestedLoopJoin over one row is the intended
-    # scalar-subquery plan
-    "tpch_q15_top_supplier": {"pushed": "l_shipdate", "bnlj_ok": True},
-    "tpch_q16_supplier_part_count": {"pushed": "p_size", "broadcast": 1},
-    "tpch_q17_small_quantity_revenue": {"pushed": "p_brand", "broadcast": 1},
-    "tpch_q19_discounted_revenue": {"pushed": "IsNotNull", "broadcast": 1},
-    "tpch_q21_waiting_supplier": {"pushed": "l_returnflag", "broadcast": 1},
-    "tpch_q22_global_sales_opportunity": {
-        "pushed": "o_orderdate",
-        "bnlj_ok": True,
-    },
-    # distributed global row-number: must show NO single-partition
-    # window (the whole point of the rewrite)
-    "r_ordered_split_train": {},
-    "flagship_revenue_by_priority": {"pushed": "l_shipdate"},
-    "j_broadcast_inner": {"broadcast": 1},
-    "j_filtered_inner": {"pushed": "IsNotNull"},
-    "w_topk_per_group": {},
-    "a_grouped_multi_agg": {},
-    "a_dedup_rows": {},
-    # dictionary id assignment uses the range-partitioned dense_ids
-    # rank (mathorcup_spark/ids.py) — no single-partition exchange at
-    # any vocabulary cardinality, asserted like every other query.
-    "g_triple_build": {},
-    # the three scalar counts assemble via 1-row crossJoins — the
-    # scalar-subquery plan; the triangle join itself is two hash
-    # equi-joins over the checkpointed edge list
-    "g_triangle_count": {"bnlj_ok": True, "bucketed": "mcs_cp_",
-                         "no_exchange_on": ("src",)},
-    "j_asof_join": {},
-    "j_range_join": {},
-    # lag + cumulative-sum share ONE (user_id, ts, event_id) sort;
-    # session aggregate partial-aggregates before its shuffle
-    "ev_sessionize": {},
-    # same blocked (source, id-block) equi-join as d_ngram_jaccard
-    "d_containment": {},
-    "d_minhash_lsh": {},
-    # the bucket-size guard: one extra groupBy on the SAME (band,
-    # bucket) key as the candidate join — no new join strategy
-    "d_minhash_lsh_capped": {},
-    "d_lsh_bucket_stats": {},
-    "d_lsh_hamming_e2e": {},
-    # IVF probe crossJoins each query vector against the k≈16-row
-    # centroid table — a broadcast nested loop over a constant-size
-    # side is the intended, scale-safe plan (cost O(n·k), no shuffle).
-    "sim_ivf_ann": {"bnlj_ok": True},
-    # recall@5 composes the exact baseline with both ANN paths; two
-    # constant-size BNLJ sources are expected — the exact baseline
-    # broadcasts its <=10-row query set joined on c_id != q_id, and
-    # the IVF member carries its k~16-row centroid probe (see above)
-    "sim_ann_recall": {"bnlj_ok": True},
-    "t_text_stats": {},
-    # eval-side n-gram set joined on the shingle string — a hash
-    # equi-join; the eval side is DISTINCT grams of a 1% slice
-    "t_contamination_screen": {},
-    # explode + two-level aggregate, no joins
-    "t_repetition_stats": {},
-    # pure regexp column work, no shuffle
-    "t_pii_scan": {},
-    "st_session_window": {},
-    "ev_cohort_retention": {},
-    # the three single-row stage counts are combined with crossJoins
-    # of 1-row aggregates — BroadcastNestedLoopJoin over single rows
-    # is the correct (and only) plan for scalar assembly
-    "ev_funnel_conversion": {"bnlj_ok": True},
-    # single scan of documents, one shuffle (survivor window on the
-    # content hash) — the whole point of the composed plan
-    "corpus_prep_e2e": {},
-    "st_interval_join": {"pushed": "event_type"},
-    "r_stratified_sample": {},
-    # scalar max-weight normalizer joined conditionlessly to every
-    # row — 1-row BroadcastNestedLoopJoin is the scalar-subquery plan
-    "r_weighted_sample": {"bnlj_ok": True},
-    "d_ngram_jaccard": {},
-    # rescore is hash equi-joins against the normalized vectors table
-    # (no driver codebook, no BNLJ) — assert it stays that way
-    "d_embedding_neardup": {},
-    # dictionary builds must never funnel data through a single
-    # partition (dense_ids assertion, same as g_triple_build)
-    "e_dictionary_build": {},
-    "j_lookup_encode": {},
-    # exact grouped quantiles: ObjectHashAggregate holds per-group
-    # value buffers (the documented exact-percentile trade); the scan
-    # side keeps its codegen span and pushdown
-    "a_group_quantiles": {},
-    # the doc-count scalar is a 1-row broadcast crossJoin — the
-    # standard scalar-subquery plan (same as r_weighted_sample)
-    "t_tfidf_top_terms": {"bnlj_ok": True},
-    # global cumsum via ids.prefix_sum — the audit's point is the
-    # ABSENCE of a single-partition exchange despite ORDER BY cumsum
-    "t_sequence_pack": {},
-    # the source-count scalar (n_sources) is a 1-row broadcast
-    # crossJoin — the scalar-subquery plan, same as r_weighted_sample
-    "r_mixture_sample": {"bnlj_ok": True},
-    # blocked equi-join candidates + constant-bounded 64x64 DP/pair
-    "d_fuzzy_pairs": {},
-    # the node-count scalar is a 1-row broadcast per iteration — the
-    # scalar-subquery plan; the 3 rounds are unrolled (supersteps:
-    # the ranks are read once per round) over the bucketed edges
-    "g_pagerank_fixed": {"bnlj_ok": True, "bucketed": "mcs_bip_"},
-    # filter→dedup→mixture→pack composition: the source-count scalar
-    # is the 1-row broadcast; packing adds one range exchange
-    "corpus_pipeline_v2": {"bnlj_ok": True},
-    # v3 adds the hygiene screens (doc_id equi-joins of per-doc
-    # verdicts); same scalar-broadcast + range-exchange skeleton
-    "corpus_pipeline_v3": {"bnlj_ok": True},
-    # the batch-split threshold is a 1-row broadcast scalar; the
-    # new-vs-index probe is the (band,bucket) hash equi-join
-    "d_incremental_dedup": {"bnlj_ok": True},
-    "u_bidirectional_edges": {},
-    "a_rollup_subtotals": {},
-    "d_simhash": {},
-    "d_lsh_rescore_e2e": {},
-    "sim_lsh_ann": {},
-    # metric suites assemble scalar outputs by crossJoining 1-row
-    # aggregates — BroadcastNestedLoopJoin over single rows is the
-    # scalar-assembly plan (same as ev_funnel_conversion)
-    "m_regression_suite": {"bnlj_ok": True},
-    "g_bidirectional_mrr": {"bnlj_ok": True},
-    # the fixture derives carid from a max(partkey) scalar — a 1-row
-    # aggregate broadcast (scalar-subquery plan, BNLJ over one row)
-    "car_pipeline_e2e": {"bnlj_ok": True},
-    # final cluster assembly: documents left-joined to the CC fixpoint
-    # (a localCheckpointed star edge set — supersteps fixpoint rounds
-    # are lineage-truncated: two groupBy-min shuffles per round) plus
-    # the cluster-size join
-    "d_dedup_clusters": {},
-    # per-node triangle membership: same oriented wedge join as
-    # g_triangle_count plus one groupBy on node and a left join back
-    # to the degree table — no scalar assembly, no BNLJ
-    "g_clustering_coefficient": {"bucketed": "mcs_cp_",
-                                 "no_exchange_on": ("src",)},
-    # full-width digest suites are UNION ALLs of member plans; the
-    # members' own audit entries (above) carry the per-plan
-    # assertions — here the suites inherit their members' sanctioned
-    # scalar-assembly BNLJs (metrics, recall, scalar TPC-H shapes)
-    # LM rarity / RFM: 1-row model-total & quantile-threshold
-    # aggregates broadcast back over the scoring side (scalar-
-    # assembly BNLJ, the tpch_q11 pattern)
-    "t_lm_rarity_score": {"bnlj_ok": True},
-    "ev_rfm_scores": {"bnlj_ok": True},
-    "d_span_dedup": {},
-    "a_approx_quantile_sketch": {},
-    # peel rounds are supersteps fixpoint rounds, lineage-truncated
-    # (one degree agg + two semi-joins per round); the final plan is
-    # the degree aggregate over the converged core (the bucketed
-    # mcs_cp_ scan feeds the cut initial state — not visible here)
-    "g_kcore": {},
-    # CDC diff: one full-outer hash join on the business key
-    "lake_snapshot_diff": {},
-    # SCD2: one left join + explode — single pass over the dimension
-    "lake_scd2_merge": {},
-    # grid join + fill window share the user_id shuffle key
-    "ts_resample_ffill": {},
-    # frontier rounds are supersteps rounds over one labeled-set frame
-    # read three times per round, so each round is lineage-truncated
-    # (one edges hash join + one anti-join); the final plan is the
-    # last round's checkpoint scan
-    "g_bfs_distance": {},
-    # top-40 ranking window is global BUT post-aggregation over the
-    # bounded pair domain (alphabet^2 rows) — O(1) at any corpus size
-    "t_bpe_pair_counts": {"single_partition_ok": True},
-    # narrow map-only array HOFs: no shuffle at all
-    "sim_quantize_int8": {},
-    # explode-to-chars then two doc_id-keyed aggregates + one doc_id
-    # equi-join — embarrassingly parallel over documents
-    "t_char_entropy": {},
-    # LPA rounds are unrolled supersteps rounds (the labels are read
-    # once per round; per round: one edge-labels hash join, one
-    # (node,label) count, one per-node max_by aggregate keyed on node
-    # — never single-partition), all over the bucketed edge scan
-    "g_label_propagation": {"bucketed": "mcs_bip_"},
-    # per-group p05/p95 cuts broadcast back over the fact side
-    "a_winsorize": {"broadcast": 1},
-    # the query self-asserts its own plan property (zero Exchange on
-    # the co-bucketed join) and returns an eager localCheckpoint, so
-    # the audited plan is the materialized scan; the audit reruns the
-    # query to execute that in-query assertion
-    "lake_bucketed_join": {"checkpoint_result_ok": True},
-    # incremental verdict maintenance: create + 2 appends + the
-    # maintained==rebuilt checksum self-assertion all EXECUTE when
-    # the audit runs the query; the returned frame is the eager
-    # checkpoint of the consumer result (the corpus_pipeline_v4
-    # consumer plan carries the zero-document-scan assertion)
-    "corpus_pipeline_v5": {"checkpoint_result_ok": True},
-    # writes the day-partitioned layout then SELF-ASSERTS the
-    # PartitionFilters on the windowed read inside the query; the
-    # returned frame is the eager checkpoint of the aggregate
-    "lake_partitioned_events": {"checkpoint_result_ok": True},
-    # narrow map-only rule evaluation (split/filter/aggregate HOFs):
-    # no shuffle at all
-    "t_quality_gopher_rules": {},
-    # lag window keyed on user_id, then a tiny (prev,next)-keyed agg;
-    # the normalizing window partitions on prev_type — never global
-    "ev_markov_attribution": {},
-    # grid join + backward/forward fill windows all share the ONE
-    # user_id shuffle (same sort serves both window specs)
-    "ts_interpolate_linear": {},
-    # min/max/total bounds are a 1-row broadcast (scalar-subquery
-    # BNLJ); the only unpartitioned window is the 256-row bucket
-    # offset table — O(1) rows at any data size (documented)
-    "a_ks_drift": {"bnlj_ok": True, "single_partition_ok": True},
-    # wedge self-join with the degree-capped shared neighbor; top-k
-    # via TakeOrderedAndProject (no global sort exchange)
-    "g_node_jaccard": {"bucketed": "mcs_cp_"},
-    # same truncated wedge machinery with the 1/ln(deg) term joined
-    # on the shared neighbor; top-k via TakeOrderedAndProject
-    "g_adamic_adar": {"bucketed": "mcs_cp_"},
-    # HT-sampled wedge join over the hash-ranked member cap: the
-    # per-v windows read the v-bucketed trunc cache; top-k via
-    # TakeOrderedAndProject
-    "g_adamic_adar_sampled": {"bucketed": "mcs_cp_"},
-    # narrow map + filter, zero shuffles (with-replacement counts
-    # are per-row hash draws)
-    "r_poisson_sample": {},
-    # normalization bounds are a 1-row broadcast crossJoin (scalar-
-    # subquery BNLJ); interleave + file id are pure codegen bit ops;
-    # one 64-group agg
-    "lake_zorder_layout": {"bnlj_ok": True},
-    # constant 20-row trailing frame over the one user_id sort
-    "ev_windowed_anomaly": {},
-    # lag/cumsum/rank share one user_id sort; path count + ranking
-    # window run on the bounded |event_types|^3 path domain
-    "ev_path_topk": {"single_partition_ok": True},
-    # contingency margins/totals broadcast back over <= |X|x|Y| cells;
-    # total row is a 1-row crossJoin (scalar-subquery BNLJ)
-    "a_mutual_information": {"bnlj_ok": True},
-    # cumsum window runs over the FILE INVENTORY (one row per file,
-    # manifest-scale), never data rows; total is a 1-row broadcast
-    "lake_compaction_plan": {"bnlj_ok": True, "single_partition_ok": True},
-    # boundary flag is narrow; cumsum window + chunk groupBy share the
-    # doc_id shuffle; frequency join shuffles on chunk_hash
-    "d_cdc_chunk_dedup": {},
-    # one shuffle on the gram key (first-seen min via window, no join
-    # back), then a doc_id re-aggregation — no pairwise stage; the
-    # explode is evaluated once behind the repartition barrier
-    "t_ngram_novelty": {},
-    # events scan reduces map-side to <=50 bins; totals broadcast back
-    # over those rows (1-row crossJoin = scalar-subquery BNLJ)
-    "a_psi_drift": {"bnlj_ok": True},
-    # one (event_type, hour) shuffle; both windows + the groupBy share
-    # the single within-key sort; output bounded by types x hours
-    "ev_ohlc_bars": {},
-    # merged read is materialized via eager localCheckpoint so the
-    # run-scoped temp layout can be deleted (lake_bucketed_join shape)
-    "lake_schema_evolution": {"checkpoint_result_ok": True},
-    # quartile bounds are a 1-row broadcast crossJoin; keep flags are
-    # map-side hash arithmetic, zero shuffles after the bound join
-    "t_curriculum_sample": {"bnlj_ok": True},
-    # one shuffle on the category key + 1-row broadcast prior
-    # (scalar-subquery BNLJ); output bounded by the category domain
-    "e_target_encoding": {"bnlj_ok": True},
-    # degree build shares _copurchase_oriented (checkpointed edges —
-    # the leaves are ExistingRDD scans but the downstream agg/window
-    # plan is fully visible, so the generic checks run; judge r6
-    # ADVICE removed the checkpoint_result_ok short-circuit here);
-    # the cumulative windows run on the <=32-row log2-bucket domain
-    "g_degree_distribution": {"single_partition_ok": True,
-                              "bucketed": "mcs_cp_"},
-    # fold assignment is map-side hash arithmetic; audit agg on the
-    # k-value fold domain with the 1-row total broadcast back
-    "r_kfold_split": {"bnlj_ok": True},
-    # j_range_join shape: user_id shuffle, +/-30min bound prunes
-    # per-key pairs, top-1 window reuses the same key's sort
-    "j_asof_nearest": {},
-    # scan reduces map-side to 2 cohort rows; z arithmetic is one row
-    "a_two_proportion_ztest": {"single_partition_ok": True},
-    # vacuum decision runs on the file inventory (manifest-scale);
-    # latest-version window partitions by key over bounded rows;
-    # table-max is a 1-row broadcast crossJoin
-    "lake_vacuum_plan": {"bnlj_ok": True},
-    # the unrolled LPA labels are checkpointed once (read three
-    # times) but the modularity joins/windows downstream are fully
-    # visible, so the generic checks run (judge r6 ADVICE removed
-    # the short-circuit);
-    # the global-Q window runs on the bounded community domain; m2
-    # is a 1-row broadcast crossJoin
-    "g_community_modularity": {"bnlj_ok": True,
-                               "single_partition_ok": True},
-    # pair cosines evaluated once behind a lazy checkpoint feeding
-    # both ranking branches (downstream windows/join visible — the
-    # generic checks run); broadcast 10-query batch (scalar BNLJ
-    # for the inequality join); overlap agg on bounded 10xK lists
-    "sim_matryoshka_recall": {"bnlj_ok": True},
-    # centroid assignment is a broadcast crossJoin of the K-row cents
-    # frame (scalar-batch BNLJ, the sim_ivf_ann shape); the pair
-    # stage is a cent_id equi-join (cluster-bounded, never all-pairs);
-    # per-vector argmax window partitions on vec_id
-    "d_semantic_dedup": {"bnlj_ok": True},
-    # same assignment+window+pair shape; cap/window literals only
-    "d_semantic_dedup_capped": {"bnlj_ok": True},
-    # map-side Poisson weights + one groupBy(replicate); the ranking
-    # window is global but runs over exactly B=32 rows at any scale
-    "a_bootstrap_ci": {"single_partition_ok": True},
-    # encode = explode words -> join the trained per-word token
-    # lists -> one doc_id groupBy (the registered frame is the
-    # encode side; training's per-round plan is audited separately).
-    # The vocabulary join carries NO broadcast hint (judge r7 item
-    # 1: unbounded cardinality at 100 TB) — this expectation asserts
-    # the optimizer STATS-chooses broadcast at committed SFs, and a
-    # shuffle join at real scale is the correct fallback.
-    "t_bpe_encode": {"broadcast": 1},
-    # x8 subspace explode, broadcast 64-row codebook join, argmin
-    # window partitioned by (vec_id, m), one vec_id groupBy
-    "sim_pq_quantize": {"broadcast": 1},
-    # ADC search: broadcast 64-row codebook + broadcast 640-row query
-    # LUT onto the narrow unpacked-code frame; one (q_id, c_id)
-    # groupBy; per-query ranking window partitions on q_id
-    "sim_pq_adc_ann": {"broadcast": 2},
-    # coarse crossJoin against the 8-row centroid frame is the
-    # intended constant-size BNLJ (the sim_ivf_ann shape); codebook
-    # + LUT joins broadcast
-    "sim_ivf_pq_ann": {"bnlj_ok": True},
-    # quantile-cell det face: same ADC+rescore chain; the rank feeding
-    # the cell selection is ids.dense_ids (range-partitioned)
-    "sim_ivf_pq_rerank_qcells": {"bnlj_ok": True},
-    # teleport-frame join replaces g_pagerank_fixed's 1-row scalar
-    # broadcast; same unrolled supersteps rounds otherwise
-    "g_personalized_pagerank": {"bnlj_ok": True, "bucketed": "mcs_bip_"},
-    # the two-scalar totals row joins conditionlessly onto the
-    # 64-bucket histogram (1-row BNLJ); the log-ratio frame then
-    # broadcasts back onto the token stream
-    "t_dsir_weights": {"bnlj_ok": True, "broadcast": 1},
-    "agg_digest_suite": {"bnlj_ok": True},
-    "lake_digest_suite": {"bnlj_ok": True},
-    "specialty_digest_suite": {"bnlj_ok": True},
-    # one exchange + one per-key sort; the event_type filter must
-    # reach the parquet scan
-    "ts_ewma_smooth": {"pushed": "event_type"},
-    # 1-row n_orders scalar joins conditionlessly onto the pair
-    # frame (BNLJ); the basket self-join keys on the order key
-    "a_frequent_pairs": {"bnlj_ok": True},
-    # contingency margins broadcast onto the cell frame; 1-row total
-    # is a BNLJ (the a_mutual_information shape)
-    "a_chi2_independence": {"bnlj_ok": True, "broadcast": 2},
-    # top-K vocabulary broadcast-semi-joins the presence rows; 1-row
-    # doc-count scalar is a BNLJ
-    "t_pmi_cooccur": {"bnlj_ok": True, "broadcast": 1},
-    # each L1 total re-reads its round's raw scores, so supersteps
-    # lineage-truncates every iteration: the final plan is the last
-    # round's checkpoint scan (rounds: two 1-row L1-total BNLJs each)
-    "g_hits_scores": {},
-    # per-type mean frame broadcasts back onto the event stream;
-    # both windows share one (event_type; ts, event_id) sort
-    "ev_cusum_changepoint": {"broadcast": 1},
-    # expanded probe frame + query-vector frame both broadcast onto
-    # the tables/candidates (the sim_lsh_ann shape)
-    "sim_lsh_multiprobe_ann": {"broadcast": 2},
-}
-
-
-def formatted_plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def audit_minhash_index_probe(spark) -> tuple[str, list[str], str]:
-    """Special-cased audit for d_incremental_index_dedup: the
-    registered query checkpoints its candidate stage (so its final
-    plan hides the index scan), so the audit rebuilds the persisted
-    index in a temp dir and asserts PartitionFilters on BOTH pruned
-    scans — the executed evidence that a probe never reads the full
-    index (judge round-3 item 1)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from mathorcup_spark.catalog import load
-    from mathorcup_spark.functions.dedup import _banded_sigs, shingles_from
-    from mathorcup_spark.sources.minhash_index import (
-        _pb,
-        index_candidates,
-        probe_minhash_index,
-        write_minhash_index,
-    )
-
-    errs: list[str] = []
-    out = tempfile.mkdtemp(prefix="plan_audit_mh_")
-    try:
-        docs = load(spark, SF_DIR, "documents")
-        t = int(docs.agg(F.expr("(max(doc_id) * 4) div 5")).first()[0])
-        corpus = docs.filter(F.col("doc_id") < t)
-        batch = docs.filter(F.col("doc_id") >= t)
-        write_minhash_index(spark, corpus, out)
-
-        banded = _banded_sigs(shingles_from(spark, batch)).withColumn("pb", _pb())
-        cand_plan = formatted_plan(index_candidates(spark, out, banded))
-        if "PartitionFilters: [" not in cand_plan:
-            errs.append("bands scan: no PartitionFilters (probe reads full index)")
-        if not re.search(r"PushedFilters: \[[^\]]*bucket", cand_plan, re.DOTALL):
-            errs.append("bands scan: bucket IN-list not pushed (no row-group pruning)")
-
-        final_plan = formatted_plan(probe_minhash_index(spark, out, batch))
-        shingle_scans = [
-            s for s in final_plan.split("Scan parquet") if "/shingles" in s[:400]
-        ]
-        if not shingle_scans:
-            errs.append("shingle store scan missing from probe plan")
-        elif not any("PartitionFilters: [" in s for s in shingle_scans):
-            errs.append("shingle fetch: no PartitionFilters on dp")
-        plan = (
-            "### candidate stage (bands/ probe)\n" + cand_plan
-            + "\n### rescore stage (shingles/ fetch)\n" + final_plan
-        )
-        props = ["index-partition-pruned" if not errs else "UNPRUNED"]
-        return plan, errs, ", ".join(props)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def audit_verdict_consumer(spark) -> tuple[str, list[str], str]:
-    """Special-cased audit for corpus_pipeline_v4: the registered
-    query checkpoints its result (tempdir lifecycle), so the audit
-    rebuilds the persisted verdict table and asserts the CONSUMING
-    plan (threshold filter -> mixture -> packing) contains ZERO
-    ``documents`` scans — the one-scan materialization claim
-    (judge round-4 "what's missing" #2). The build side's single
-    corpus read is the eager localCheckpoint in
-    sources/verdicts.py:build_verdicts (the only reader of docs)."""
-    import shutil
-    import tempfile
-
-    from mathorcup_spark.catalog import load
-    from mathorcup_spark.functions.corpus import consume_verdicts
-    from mathorcup_spark.sources.verdicts import (
-        read_verdict_table,
-        write_verdict_table,
-    )
-
-    errs: list[str] = []
-    out = tempfile.mkdtemp(prefix="plan_audit_verdicts_")
-    try:
-        write_verdict_table(spark, load(spark, SF_DIR, "documents"), out)
-        plan = formatted_plan(consume_verdicts(spark, read_verdict_table(spark, out)))
-        if "documents" in plan:
-            errs.append(
-                "consumer plan reads documents — the one-scan "
-                "materialization claim is broken"
-            )
-        if out not in plan:
-            errs.append("consumer plan does not scan the verdict layout")
-        if "Exchange SinglePartition" in plan:
-            errs.append("single-partition exchange in consumer plan")
-        if "CartesianProduct" in plan:
-            errs.append("cartesian product in consumer plan")
-        props = ["zero-document-scans" if not errs else "SCANS-DOCUMENTS"]
-        return plan, errs, ", ".join(props)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def audit_bpe_train(spark) -> tuple[str, list[str], str]:
-    """t_bpe_train returns a driver-built merge table (LocalTableScan
-    — nothing to audit), so the audit targets the plan that actually
-    repeats at scale: the weighted pair-count aggregation each merge
-    round runs over the vocab frame. Expect a single hash-aggregate
-    shuffle with codegen and no cartesian/global-sort."""
-    from mathorcup_spark.functions.text import (
-        bpe_pair_counts_of,
-        bpe_vocab_from,
-    )
-
-    errs: list[str] = []
-    plan = formatted_plan(
-        bpe_pair_counts_of(bpe_vocab_from(spark, SF_DIR))
-    )
-    if "CartesianProduct" in plan:
-        errs.append("cartesian product in pair-count plan")
-    if "codegen id :" not in plan:
-        errs.append("no whole-stage-codegen span in pair-count plan")
-    if "Exchange SinglePartition" in plan:
-        errs.append("single-partition exchange in pair-count plan")
-    if plan.count("Exchange hashpartitioning") > 2:
-        errs.append(
-            "more than two shuffles in the per-round pair count "
-            "(vocab groupBy + pair groupBy expected)"
-        )
-    props = ["per-round-pair-count-ok" if not errs else "BAD-ROUND-PLAN"]
-    return plan, errs, ", ".join(props)
-
 
 def _bench_top_n(n: int = 5) -> list[str]:
-    """The N heaviest headline queries by committed bench median —
-    the executed-AQE section's target list is DERIVED from the
-    bench, not hand-picked (judge r7 item 4: the round-6 list went
-    stale the moment g_adamic_adar became the #2-heaviest query), so
-    a new heavyweight cannot ship without executed-plan evidence."""
+    """The N heaviest headline queries by committed bench median: the
+    target list is derived from the bench, not hand-picked (a
+    hand-picked list goes stale when a new query becomes one of the
+    heaviest), so a new heavyweight cannot ship without executed-plan
+    evidence."""
     import json
-    from pathlib import Path
 
     path = Path(__file__).resolve().parents[1] / "BENCH_HEADLINE.json"
     per_query = json.loads(path.read_text())["per_query"]
@@ -568,10 +42,9 @@ def _bench_top_n(n: int = 5) -> list[str]:
 
 def audit_executed_plans(spark, qs) -> tuple[list[str], dict[str, list[str]]]:
     """AQE-executed final-plan evidence for the bench's top-5
-    heaviest queries (judge r6 item 7 + r7 item 4): the static audit
-    runs with AQE off (documented tradeoff in the header), so claims
-    about runtime partition coalescing / skew handling were folklore,
-    not repo evidence. Here each target RUNS to completion under AQE
+    heaviest queries: the static plan claims are checked with AQE off,
+    so runtime partition coalescing needs its own evidence. Here each
+    target RUNS to completion under AQE (the session default)
     and the FINAL adaptive plan is captured
     (queryExecution().executedPlan() after the collect —
     isFinalPlan=true), asserting (a) AQE wrapped and finalized the
@@ -591,7 +64,6 @@ def audit_executed_plans(spark, qs) -> tuple[list[str], dict[str, list[str]]]:
         write_verdict_table,
     )
 
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     sections: list[str] = []
     failures: dict[str, list[str]] = {}
     out = tempfile.mkdtemp(prefix="plan_audit_exec_")
@@ -727,207 +199,18 @@ def audit_executed_plans(spark, qs) -> tuple[list[str], dict[str, list[str]]]:
             )
     finally:
         shutil.rmtree(out, ignore_errors=True)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
     return sections, failures
 
 
-def audit(name: str, plan: str, exp: dict) -> list[str]:
-    errs = []
-    if exp.get("checkpoint_result_ok"):
-        # WHOLE-result checkpoints only (temp-dir lifecycle queries):
-        # the query materializes via eager localCheckpoint after
-        # executing its OWN in-query plan assertion (running it here
-        # executed that assertion); the visible plan is just the
-        # checkpoint scan, so the generic checks below don't apply.
-        # Queries that merely checkpoint INTERMEDIATE frames keep
-        # their downstream plan visible and must NOT carry this flag
-        # (judge r6 ADVICE) — the generic checks run for them.
-        if "Scan ExistingRDD" not in plan:
-            errs.append("expected a checkpointed-result scan")
-        return errs
-    if "CartesianProduct" in plan:
-        errs.append("cartesian product in plan")
-    if "BroadcastNestedLoopJoin" in plan and not exp.get("bnlj_ok"):
-        errs.append("nested-loop join in plan")
-    if "codegen id :" not in plan:
-        errs.append("no whole-stage-codegen span (no [codegen id] markers)")
-    if "Exchange SinglePartition" in plan and not exp.get("single_partition_ok"):
-        errs.append("single-partition exchange (global window/sort) in plan")
-    if "pushed" in exp:
-        pushed_lines = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-        if not any(exp["pushed"] in ln for ln in pushed_lines):
-            errs.append(f"expected PushedFilters containing {exp['pushed']!r}")
-    if "broadcast" in exp:
-        n = plan.count("BroadcastHashJoin")
-        if n < exp["broadcast"]:
-            errs.append(f"expected >= {exp['broadcast']} BroadcastHashJoin, saw {n}")
-    if "bucketed" in exp:
-        # the shared-graph contract (judge r8 item 1): the query must
-        # READ the persisted bucketed derived table, not rebuild the
-        # edge list from lineitem
-        if not re.search(
-            rf"Scan parquet spark_catalog\.default\.{exp['bucketed']}", plan
-        ):
-            errs.append(f"expected a bucketed scan of {exp['bucketed']}*")
-    for keycol in exp.get("no_exchange_on", ()):
-        # bucketed-layout shuffle elision: a keyed Exchange on this
-        # column means the join stopped using the bucket layout
-        if re.search(rf"Exchange hashpartitioning\({keycol}#", plan):
-            errs.append(
-                f"Exchange on {keycol} despite the bucketed layout"
-            )
-    return errs
-
-
-def audit_no_session_mutation() -> list[str]:
-    """No registered query may flip shared-session config: a
-    spark.conf.set inside operators/functions/streaming/sources
-    would perturb concurrently running queries in the same session
-    (judge r5 'what's wrong' #3 — lake_bucketed_join now uses a
-    per-plan hint instead). catalog.py's nanosAsLong is the one
-    sanctioned site: a constant, idempotent, never-restored reader
-    setting, equivalent to session init."""
-    pkg = Path(__file__).resolve().parents[1] / "mathorcup_spark"
-    errs = []
-    for p in pkg.rglob("*.py"):
-        if p.name == "catalog.py":
-            continue
-        for i, ln in enumerate(p.read_text().splitlines(), 1):
-            if "spark.conf.set" in ln and not ln.lstrip().startswith("#"):
-                errs.append(f"{p.relative_to(pkg.parent)}:{i}: {ln.strip()}")
-    return errs
-
-
 def main() -> None:
-    mutations = audit_no_session_mutation()
-    if mutations:
-        for m in mutations:
-            print(f"FAIL session-state mutation: {m}")
-        sys.exit(1)
-    # AQE off for the audit only: an unexecuted AdaptiveSparkPlan hides
-    # codegen spans and final join strategies; the static plan is the
-    # honest "what did Catalyst pick from the declared query" view.
-    # (The engine session keeps AQE on — see session.py.)
-    spark = get_spark("plan_audit", extra_conf={"spark.sql.adaptive.enabled": "false"})
-    qs = registry.queries()
-    failures: dict[str, list[str]] = {}
-    sections: list[str] = []
-    summary: list[str] = []
-
-    # the persisted-index probe checkpoints mid-query; audited via its
-    # own two-stage plan capture, not the generic explain path
-    name = "d_incremental_index_dedup"
-    plan, errs, props_str = audit_minhash_index_probe(spark)
-    if errs:
-        failures[name] = errs
-    summary.append(
-        f"| `{name}` | {props_str} |"
-        f" {'FAIL: ' + '; '.join(errs) if errs else 'ok'} |"
-    )
-    sections.append(
-        f"## {name}\n\n```\n"
-        + "\n".join(plan.splitlines()[:80])
-        + "\n```\n"
-    )
-
-    # BPE training returns a driver-built merge table; audited via
-    # its per-round pair-count stage plan, not the generic path
-    name = "t_bpe_train"
-    plan, errs, props_str = audit_bpe_train(spark)
-    if errs:
-        failures[name] = errs
-    summary.append(
-        f"| `{name}` | {props_str} |"
-        f" {'FAIL: ' + '; '.join(errs) if errs else 'ok'} |"
-    )
-    sections.append(
-        f"## {name} (per-round pair-count plan)\n\n```\n"
-        + "\n".join(plan.splitlines()[:80])
-        + "\n```\n"
-    )
-
-    # the one-scan verdict pipeline checkpoints its result; audited
-    # via its persisted-layout consumer plan, not the generic path
-    name = "corpus_pipeline_v4"
-    plan, errs, props_str = audit_verdict_consumer(spark)
-    if errs:
-        failures[name] = errs
-    summary.append(
-        f"| `{name}` | {props_str} |"
-        f" {'FAIL: ' + '; '.join(errs) if errs else 'ok'} |"
-    )
-    sections.append(
-        f"## {name} (verdict-consumer plan)\n\n```\n"
-        + "\n".join(plan.splitlines()[:80])
-        + "\n```\n"
-    )
-
-    for name, exp in EXPECT.items():
-        plan = formatted_plan(qs[name](spark, SF_DIR))
-        errs = audit(name, plan, exp)
-        if errs:
-            failures[name] = errs
-        props = []
-        if "PushedFilters: [" in plan and "PushedFilters: []" not in plan.replace(
-            "PushedFilters: [],", "PushedFilters: [] ,"
-        ):
-            props.append("pushdown")
-        if "BroadcastHashJoin" in plan:
-            props.append(f"broadcast×{plan.count('BroadcastHashJoin')}")
-        if "SortMergeJoin" in plan or "ShuffledHashJoin" in plan:
-            props.append("shuffle-join")
-        if "TakeOrderedAndProject" in plan:
-            props.append("topk-no-global-sort")
-        n_span = len(set(re.findall(r"codegen id : (\d+)", plan)))
-        props.append(f"codegen-spans×{n_span}")
-        status = "FAIL: " + "; ".join(errs) if errs else "ok"
-        summary.append(f"| `{name}` | {', '.join(props)} | {status} |")
-        # keep plans readable: head of the formatted tree only
-        head = "\n".join(plan.splitlines()[:40])
-        sections.append(f"## {name}\n\n```\n{head}\n```\n")
-
-    header_text = (
-        "# Physical-plan audit (generated by `python tools/plan_audit.py`)\n\n"
-        "Headline queries explained at sf0.01 with AQE disabled (an\n"
-        "unexecuted AdaptiveSparkPlan hides codegen spans and join\n"
-        "strategies; the EXECUTED AQE evidence is the final section).\n"
-        "Properties asserted: filter pushdown reaches the\n"
-        "Parquet scan, dim joins broadcast, no cartesian products,\n"
-        "whole-stage codegen everywhere; top-k uses\n"
-        "TakeOrderedAndProject (per-partition top-k + driver merge —\n"
-        "no global sort). `shuffle-join` marks big-big joins where a\n"
-        "shuffle on the join key IS the scalable strategy.\n\n"
-        "| query | plan properties | audit |\n|---|---|---|\n"
-    )
-
-    exec_sections, exec_failures = audit_executed_plans(spark, qs)
-    failures.update(exec_failures)
-
-    out = Path(__file__).resolve().parents[1] / "PLANS.md"
-    out.write_text(
-        header_text
-        + "\n".join(summary)
-        + "\n\n"
-        + "\n".join(sections)
-        + "\n\n## executed-plan audit (AQE on)\n\n"
-        "The static audit above runs with AQE off; this section is the\n"
-        "EXECUTED evidence (judge r6 item 7) that one logical plan\n"
-        "adapts at runtime: each heavyweight ran to completion with\n"
-        "AQE enabled and its FINAL adaptive plan (isFinalPlan=true)\n"
-        "was captured, asserting AQE wrapped/finalized the plan and\n"
-        "that runtime partition coalescing (AQEShuffleRead) actually\n"
-        "engaged wherever the plan shuffles — the mechanism that\n"
-        "right-sizes these same plans' shuffles at 100x data.\n\n"
-        + "\n".join(exec_sections)
-    )
+    spark = get_spark("plan_audit")
+    sections, failures = audit_executed_plans(spark, registry.queries())
+    print("\n".join(sections))
+    for name, errs in failures.items():
+        print(f"FAIL {name}: {errs}")
     if failures:
-        for n, e in failures.items():
-            print(f"FAIL {n}: {e}")
         sys.exit(1)
-    print(
-        f"plan audit ok: {len(EXPECT) + 3} static + "
-        f"{len(exec_sections)} executed, report at {out}"
-    )
+    print(f"plan audit ok: {len(sections)} executed plans")
 
 
 if __name__ == "__main__":
