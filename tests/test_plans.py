@@ -48,6 +48,36 @@ def test_plan_claims(static_spark, name):
     assert not errs, f"{name}: {errs}\n{plan[:4000]}"
 
 
+def _executed_plan(spark, name: str) -> str:
+    df = registry.queries()[name](spark, SF_DIR)
+    # collect() this exact DataFrame first: with AQE the executed plan
+    # is only final (re-planned joins, codegen `*(n)` markers) after
+    # the plan itself has run — count() would execute a different plan
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_flagship_filter_pushed_and_codegen(spark):
+    """The flagship's claims hold on the plan AQE finally runs, not
+    only on the static one."""
+    plan = _executed_plan(spark, "flagship_revenue_by_priority")
+    # `*(n)` prefixes mark whole-stage-codegen spans in the final plan
+    assert plan.count("*(") >= 3
+    # the shipdate filter reaches the lineitem parquet scan
+    assert "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters")[1][:300]
+
+
+@pytest.mark.parametrize(
+    "name", ["flagship_revenue_by_priority", "a_grouped_multi_agg"]
+)
+def test_aggregates_have_partial_stage(spark, name):
+    """Map-side partial aggregation before the exchange (two
+    HashAggregate levels) survives AQE re-planning — the thing that
+    keeps a 100 TB groupBy from shuffling raw rows."""
+    plan = _executed_plan(spark, name)
+    assert plan.count("HashAggregate") >= 2
+
+
 # a two-node plan that holds every default, and per claim key the
 # claims and a plan that break it
 _SCAN = (
